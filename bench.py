@@ -118,9 +118,7 @@ def main() -> None:
     # the first pipeline query isn't charged for it.
     from omniengine_spark.pipeline import omni as _omni
 
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _omni._DELTA_ARRAY_CACHE:
-        _omni._DELTA_ARRAY_CACHE[app_id] = _omni._build_delta_array()
+    _omni._delta_array(spark)
 
     # Python DataSource runtime bootstrap (plan-time and task-time
     # datasource workers are separate fresh Python processes on first

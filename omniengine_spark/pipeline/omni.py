@@ -49,11 +49,12 @@ block range is re-running the stages over its partitions (X2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from omniengine_spark.functions import scale_base_units
+from omniengine_spark.sources.catalog import session_memo
 
 # Decoded Omni tx (the reference's gettransaction_MP JSON, S2) —
 # one struct per tx, recipients/subsends arrays for the 1→N types.
@@ -243,10 +244,10 @@ def _build_delta_array() -> F.Column:
     """Build the per-txtype delta-array expression (see
     ``expand_deltas``).  Pure function of column NAMES — the returned
     Column is unresolved and reusable across any DataFrame carrying
-    the RAW_TX_SCHEMA fields, so it is built once per process
-    (``_DELTA_ARRAY_CACHE``): constructing it costs thousands of py4j
-    round trips (~2 s), which eight registered plans would otherwise
-    each pay.
+    the RAW_TX_SCHEMA fields, so it is built once per session
+    (``_delta_array``): constructing it costs thousands of py4j round
+    trips (~2 s), which eight registered plans would otherwise each
+    pay.
     """
     zero = F.lit(0).cast(_DEC)
 
@@ -553,11 +554,9 @@ def _build_delta_array() -> F.Column:
     return expanded
 
 
-# Keyed by SparkContext applicationId: a Column is a py4j handle into
-# the JVM, so a cached one outliving its gateway (session cycled in
-# the same Python process) would raise opaque py4j errors.  Same
-# invalidation rule as catalog._ensure_package_shipped.
-_DELTA_ARRAY_CACHE: dict[str, F.Column] = {}
+def _delta_array(spark: SparkSession) -> F.Column:
+    """The session's memoized ``_build_delta_array`` expression."""
+    return session_memo(spark, "delta-array", None, _build_delta_array)
 
 
 def expand_deltas(txs: DataFrame) -> DataFrame:
@@ -574,11 +573,7 @@ def expand_deltas(txs: DataFrame) -> DataFrame:
     still resolves — null-only columns are constant-folded by
     Catalyst, they cost nothing at scale.
     """
-    app_id = txs.sparkSession.sparkContext.applicationId
-    if app_id not in _DELTA_ARRAY_CACHE:
-        _DELTA_ARRAY_CACHE.clear()  # drop handles into dead gateways
-        _DELTA_ARRAY_CACHE[app_id] = _build_delta_array()
-    expanded = _DELTA_ARRAY_CACHE[app_id]
+    expanded = _delta_array(txs.sparkSession)
 
     missing = [
         field

@@ -17,6 +17,7 @@ from omniengine_spark.pipeline import (
 )
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
+from omniengine_spark.sources.catalog import session_memo
 
 
 def _tx_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -25,45 +26,20 @@ def _tx_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Construction memo for the shared tx→serial→delta chain: four plans
-# (omni_balance_pipeline, omni_genesis_fold, x7b_consensus_hash,
-# omni_incremental_lifecycle) each rebuild the identical ~15-select
-# expand_deltas(stamp_serials_distributed(_tx_stream(...))) plan —
-# ~0.5 s of py4j round trips per build.  Same contract as the
-# ``load_table`` memo (sources/catalog.py): an UNEXECUTED logical
-# plan, no rows held, keyed on session id + the events file identity,
-# so nothing persists across sessions or input changes.
-_DELTAS_MEMO: dict[tuple, DataFrame] = {}
-_TXS_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _memo_key(spark: SparkSession, sf_dir: str) -> tuple | None:
-    from omniengine_spark.sources.catalog import _path_sig
-
-    sig = _path_sig(f"{sf_dir}/events.parquet")
-    if sig is None:
-        return None
-    return (spark.sparkContext.applicationId, sf_dir, sig)
-
-
 def _stamped_txs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    if key is not None and key in _TXS_MEMO:
-        return _TXS_MEMO[key]
-    df = stamp_serials_distributed(_tx_stream(spark, sf_dir))
-    if key is not None:
-        _TXS_MEMO[key] = df
-    return df
+    # the tx→serial→delta chain is shared by four plans and costs
+    # ~0.5 s of py4j round trips per build: memoize the unexecuted plan
+    return session_memo(
+        spark, "stamped-txs", f"{sf_dir}/events.parquet",
+        lambda: stamp_serials_distributed(_tx_stream(spark, sf_dir)),
+    )
 
 
 def _stamped_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _memo_key(spark, sf_dir)
-    if key is not None and key in _DELTAS_MEMO:
-        return _DELTAS_MEMO[key]
-    df = expand_deltas(_stamped_txs(spark, sf_dir))
-    if key is not None:
-        _DELTAS_MEMO[key] = df
-    return df
+    return session_memo(
+        spark, "stamped-deltas", f"{sf_dir}/events.parquet",
+        lambda: expand_deltas(_stamped_txs(spark, sf_dir)),
+    )
 
 
 def _tx_projection(ev: DataFrame) -> DataFrame:

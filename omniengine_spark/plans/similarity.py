@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from omniengine_spark.operators import similarity as S
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import fan_out, load_table
+from omniengine_spark.sources.catalog import session_memo
 
 _N_QUERIES = 20  # first N vec_ids serve as the query set
 _K = 5
@@ -433,28 +434,6 @@ _PQ_RANK_SQL = f"""
     FROM ranked WHERE rank <= {_K}"""
 
 
-# ---------------------------------------------------------------------------
-# Session-lifetime trained-artifact caches: the PQ codes and the
-# IVF-PQ coarse assignment are INDEX state — built once per
-# (application, dataset content), persisted, and served from by every
-# later call, the production build-once/query-many split (bench.py
-# reports the two phases separately for these plans).  clearCache()
-# drops the storage, not the entry; the next cold caller
-# re-materializes through the storageLevel check.
-# ---------------------------------------------------------------------------
-_TRAINED_CACHE: dict[tuple, object] = {}
-
-
-def _dataset_key(spark: SparkSession, sf_dir: str, what: str) -> tuple:
-    from omniengine_spark.sources.sinks import dataset_fingerprint
-
-    return (
-        what,
-        spark.sparkContext.applicationId,
-        dataset_fingerprint(sf_dir, "embeddings.parquet"),
-    )
-
-
 def _repersist(*frames: DataFrame) -> None:
     from pyspark import StorageLevel
 
@@ -470,12 +449,11 @@ def _ivfpq_coarse_cached(
     """Full-corpus coarse assignment for IVF-PQ — (vec_id, cluster,
     arank) with the PQ seed vectors doubling as IVF centroids (cosine
     on raw vectors — scale-invariant, same as the oracle) — persisted
-    once per corpus."""
+    once per corpus.  clearCache() drops the storage, not the memo
+    entry; the next caller re-materializes it."""
     from pyspark.sql import Window
 
-    key = _dataset_key(spark, sf_dir, "ivfpq-coarse")
-    ranked = _TRAINED_CACHE.get(key)
-    if ranked is None:
+    def build() -> DataFrame:
         emb = fan_out(load_table(spark, sf_dir, "embeddings"))
         h = F.conv(
             F.substring(
@@ -502,26 +480,32 @@ def _ivfpq_coarse_cached(
         wa = Window.partitionBy("vec_id").orderBy(
             F.col("csim").desc(), F.col("cluster").asc()
         )
-        ranked = (
+        return (
             asg.withColumn("arank", F.row_number().over(wa))
             .select("vec_id", "cluster", "arank")
         )
-        _TRAINED_CACHE[key] = ranked
+
+    ranked = session_memo(
+        spark, "ivfpq-coarse", f"{sf_dir}/embeddings.parquet", build
+    )
     _repersist(ranked)
     return ranked
 
 
 def _pq_index_cached(spark: SparkSession, sf_dir: str):
-    """(nv, seeds_sub, codes) of the seeded PQ index, persisted."""
-    key = _dataset_key(spark, sf_dir, "pq-index")
-    idx = _TRAINED_CACHE.get(key)
-    if idx is None:
+    """(nv, seeds_sub, codes) of the seeded PQ index, persisted (same
+    lifetime as ``_ivfpq_coarse_cached``)."""
+
+    def build():
         emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-        idx = S.pq_build_index(
+        return S.pq_build_index(
             emb, "vec_id", "embedding",
             n_codewords=_PQ_K, m=_PQ_M, dim=64,
         )
-        _TRAINED_CACHE[key] = idx
+
+    idx = session_memo(
+        spark, "pq-index", f"{sf_dir}/embeddings.parquet", build
+    )
     # seeds_sub is tiny (K·M rows) but recomputing it re-runs the
     # md5-orderBy seed selection over the corpus every serve call —
     # persist all three so serving truly touches only index frames

@@ -19,7 +19,6 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
-import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,51 +26,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from omniengine_spark.sources import stream_table
+from omniengine_spark.sources.sinks import stream_checkpoint_dir
 
 _SINK_COUNTER = itertools.count()
-
-
-def stream_checkpoint_dir(label: str) -> str:
-    """Checkpoint dir for a FINITE drain whose checkpoint is already
-    ephemeral (the memory-sink availableNow jobs previously ran on
-    Spark's auto-created temp checkpoint, deleted at stop — no
-    cross-run recovery was ever claimed).
-
-    Default: RAM-backed (``/dev/shm``) when available.  The state
-    store and offset/commit WALs fsync per partition per micro-batch;
-    on the bench host those fsyncs are the dominant per-batch fixed
-    cost (measured: symmetricHashJoin state commit ~2 s/batch on
-    disk), and for a checkpoint that is deleted on stop, durability
-    of the backing dir buys nothing.  Deployments that need restart
-    recovery set ``SPARK_GRAFT_STREAM_CHECKPOINT`` to a durable
-    location (HDFS/S3/local disk) — that env var wins over the
-    default, and the caller keeps the delete-on-success behavior the
-    temp checkpoint always had.
-    """
-    base = os.environ.get("SPARK_GRAFT_STREAM_CHECKPOINT")
-    if not base:
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    if not base:
-        import tempfile
-
-        base = tempfile.gettempdir()
-    # a failed drain skips its rmtree — prune siblings whose owner pid
-    # is dead so crashed runs can't accumulate RAM-backed checkpoints
-    # (same dead-owner contract as sources.sinks.scratch_dir)
-    import re
-
-    from omniengine_spark.sources.sinks import _pid_alive
-
-    try:
-        for entry in os.scandir(base):
-            m = re.match(r"omni-ckpt-p(\d+)-", entry.name)
-            if m and not _pid_alive(int(m.group(1))):
-                shutil.rmtree(entry.path, ignore_errors=True)
-    except OSError:
-        pass
-    return os.path.join(
-        base, f"omni-ckpt-p{os.getpid()}-{label}-{uuid.uuid4().hex[:12]}"
-    )
 
 
 @contextmanager
@@ -86,6 +43,11 @@ def _stream_state_partitions(spark: SparkSession):
     (5 committed stores per micro-batch cost more than the data);
     on a cluster set ``SPARK_GRAFT_STREAM_PARTITIONS`` ≈ 2-3× executor
     cores so state shards spread and rescale headroom exists.
+
+    The pin sets SESSION-global conf: a plan built on another thread
+    while a stream starts sees the pinned count, and two overlapping
+    pins can restore each other's value.  A session must be driven
+    from one thread.
     """
     n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
     old = spark.conf.get("spark.sql.shuffle.partitions")

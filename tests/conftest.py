@@ -13,22 +13,10 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 from omniengine_spark.session import get_spark  # noqa: E402
+from omniengine_spark.sources.catalog import TABLES  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
-
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
 
 
 @pytest.fixture(scope="session")
@@ -42,7 +30,7 @@ def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB connection with the warehouse tables registered as views,
     mirroring the driver's oracle setup."""
     con = duckdb.connect()
-    for t in TABLE_NAMES:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )

@@ -1,25 +1,32 @@
-"""Round-12 construction memos and write distribution.
+"""Session state: the memo store, the scratch-dir allocator, and the
+partition-distributed write layout.
 
-The memos reuse UNEXECUTED logical plans only — these tests pin the
-three properties that keep that safe: same-session/same-file hits,
-file-identity invalidation (a rewritten table must never be served a
-stale plan), and zero result caching (actions recompute from parquet).
-Plus the partition-distributed write layout (one file per partition
-value).
+The memo store reuses UNEXECUTED logical plans and session-built
+artifacts — these tests pin the properties that keep that safe and
+bounded: same-session/same-file hits, file-identity invalidation (a
+rewritten table replaces its entry and is never served a stale plan),
+a new application id dropping every entry, zero result caching
+(actions recompute from parquet), and persisted artifacts released by
+clearCache.  The allocator tests pin its one pruning rule.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
+import time
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
+from omniengine_spark.sources import sinks
 from omniengine_spark.sources.catalog import (
-    _RAW_SCHEMA_MEMO,
-    _TABLE_MEMO,
-    _path_sig,
+    _SESSION_MEMO,
     load_table,
+    path_signature,
+    session_memo,
 )
 
 from .conftest import SF_SMOKE
@@ -63,11 +70,67 @@ def test_memo_holds_plans_not_results(spark):
 def test_path_sig_changes_with_content(tmp_path):
     p = tmp_path / "x.parquet"
     p.write_bytes(b"aaaa")
-    s1 = _path_sig(str(p))
+    s1 = path_signature(str(p))
     p.write_bytes(b"bbbbbbbb")
-    s2 = _path_sig(str(p))
+    s2 = path_signature(str(p))
     assert s1 is not None and s2 is not None and s1 != s2
-    assert _path_sig(str(tmp_path / "missing")) is None
+    assert path_signature(str(tmp_path / "missing")) is None
+    # directories are signed recursively: a change two levels down
+    # (a partition file) changes the signature
+    leaf = tmp_path / "ds" / "k=1" / "part-0.parquet"
+    leaf.parent.mkdir(parents=True)
+    leaf.write_bytes(b"aaaa")
+    d1 = path_signature(str(tmp_path / "ds"))
+    leaf.write_bytes(b"bbbbbbbb")
+    assert path_signature(str(tmp_path / "ds")) != d1
+
+
+def test_rewrites_replace_memo_entries(spark, tmp_path):
+    src = tmp_path / "t.parquet"
+    spark.range(2).toPandas().to_parquet(src)
+    prev = load_table(spark, str(tmp_path), "t")
+    n_entries = len(_SESSION_MEMO)
+    for n in (3, 5, 7):  # rewrite in place three times
+        os.remove(src)
+        spark.range(n).toPandas().to_parquet(src)
+        df = load_table(spark, str(tmp_path), "t")
+        assert df is not prev  # a stale plan is never served
+        assert df.count() == n
+        assert len(_SESSION_MEMO) == n_entries  # replaced, not added
+        prev = df
+
+
+def test_new_application_id_clears_every_entry(spark):
+    load_table(spark, SF_SMOKE, "region")
+    saved = dict(_SESSION_MEMO)
+    assert len(saved) >= 2
+    other = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-other")
+    )
+    try:
+        assert session_memo(other, "probe", None, lambda: 1) == 1
+        assert list(_SESSION_MEMO) == [("probe", None)]
+        # and back: the live session drops the foreign entry too
+        assert session_memo(spark, "probe", None, lambda: 2) == 2
+        assert list(_SESSION_MEMO) == [("probe", None)]
+    finally:
+        _SESSION_MEMO.clear()
+        _SESSION_MEMO.update(saved)
+
+
+def test_trained_artifacts_released_by_clear_cache(spark):
+    from omniengine_spark.plans import QUERIES
+
+    def persistent_rdds() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    spark.catalog.clearCache()
+    baseline = persistent_rdds()
+    for name in ("sim_pq_ann_topk", "sim_ivfpq_ann_topk"):
+        QUERIES[name](spark, SF_SMOKE).collect()
+    assert persistent_rdds() > baseline  # the index frames persisted
+    spark.catalog.clearCache()
+    assert persistent_rdds() == baseline
 
 
 def test_stamped_deltas_memo_and_equivalence(spark):
@@ -114,3 +177,56 @@ def test_write_partitioned_one_file_per_partition(spark, tmp_path):
     assert back.filter("k = 3").count() == 50
     assert back.filter("k = 2").count() == 1000 // 7 + (1 if 2 < 1000 % 7 else 0)
     shutil.rmtree(out, ignore_errors=True)
+
+
+def _dead_pid() -> int:
+    p = subprocess.Popen([sys.executable, "-c", "pass"])
+    p.wait()
+    return p.pid
+
+
+def _aged_dir(path, hours: float):
+    path.mkdir()
+    t = time.time() - hours * 3600
+    os.utime(path, (t, t))
+    return path
+
+
+def test_scratch_allocator_prunes_old_dead_owned_siblings(
+    tmp_path, monkeypatch
+):
+    monkeypatch.setattr(sinks, "_SCRATCH", tmp_path)
+    dead = _dead_pid()
+    old_dead = _aged_dir(tmp_path / f"p{dead}-old", 3)
+    young_dead = _aged_dir(tmp_path / f"p{dead}-young", 0.5)
+    old_live = _aged_dir(tmp_path / f"p{os.getpid()}-live", 3)
+    foreign = _aged_dir(tmp_path / "keep-me", 3)
+
+    path = sinks.scratch_dir("new")
+    assert path.startswith(str(tmp_path / f"p{os.getpid()}-new-"))
+    assert not old_dead.exists()
+    assert young_dead.exists() and old_live.exists() and foreign.exists()
+
+    # allocating a stable dir prunes by the same rule
+    old_dead = _aged_dir(tmp_path / f"p{dead}-old", 3)
+    assert sinks.stable_scratch_dir("idx") == str(
+        tmp_path / f"p{os.getpid()}-idx"
+    )
+    assert not old_dead.exists()
+    assert young_dead.exists() and old_live.exists() and foreign.exists()
+
+
+def test_checkpoint_allocator_leaves_foreign_names(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CHECKPOINT", str(tmp_path))
+    dead = _dead_pid()
+    old_dead = _aged_dir(tmp_path / f"omni-ckpt-p{dead}-q", 3)
+    # a shared base (/dev/shm) holds other programs' entries, including
+    # ones that look like this allocator's other naming
+    foreign = [
+        _aged_dir(tmp_path / f"p{dead}-q", 3),
+        _aged_dir(tmp_path / f"other-ckpt-p{dead}-q", 3),
+    ]
+    path = sinks.stream_checkpoint_dir("q")
+    assert path.startswith(str(tmp_path / f"omni-ckpt-p{os.getpid()}-q-"))
+    assert not old_dead.exists()
+    assert all(f.exists() for f in foreign)

@@ -527,7 +527,15 @@ def test_lsh_index_query_prunes_partition_dirs(spark):
         n_tables=4, n_act=n_act, n_probes=2, k=5,
         shard_bits=4, dim=64,
     )
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    # the scan's Location is abbreviated to maxMetadataStringLength
+    # (100) chars, which cuts "entries" from any longer checkout path
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
     entry_scans = [
         ln for ln in plan.splitlines()
         if "FileScan" in ln and "entries" in ln

@@ -22,11 +22,10 @@ from pathlib import Path
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
 
+from omniengine_spark.sources.catalog import TABLES as _CATALOG  # noqa: E402
+
 SF = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = list(_CATALOG)
 
 
 def canon(df):

@@ -49,9 +49,7 @@ def main() -> None:
     load_table(spark, sf_dir, "region").count()
     from omniengine_spark.pipeline import omni as _omni
 
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _omni._DELTA_ARRAY_CACHE:
-        _omni._DELTA_ARRAY_CACHE[app_id] = _omni._build_delta_array()
+    _omni._delta_array(spark)
 
     names = args or sorted(QUERIES)
     out: dict[str, dict] = {}
