@@ -238,38 +238,32 @@ def s13b_corrupt_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s20_stats_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planning-time FILE skipping over the versioned warehouse (the
-    Delta/Iceberg data-skipping layer): the commit range-partitions
-    events by day into 16 files and scrapes per-file min/max footer
-    stats into the version's ``_stats.json``; the week-window read
-    then intersects the interval against the manifested ranges and
-    hands Spark ONLY the surviving files — at 100 TB the listing and
+    Delta/Iceberg data-skipping layer): the week-window scan prunes
+    the shared ``_events_book`` (16 ts-ranged files with per-file
+    footer min/max in each version's ``_stats.json``) on ``ts`` over
+    [2024-01-08, 2024-01-15) UTC, so Spark is handed ONLY the files
+    whose range intersects the window — at 100 TB the listing and
     footer phase itself shrinks, which partition pruning (dir names)
     and row-group stats (post-open) cannot do.  Replaces the
     reference's btree range indexes (``omni_db_schema.psql:101-117``,
     e.g. the TxBlockNumber scans at ``sql.py:266-276``) at the file
-    level.  Skipping is advisory — the exact filter still runs, so
-    the result is stats-invariant; tests/test_warehouse.py asserts
-    the file count actually dropped."""
+    level.  Skipping is advisory — the exact day filter still runs on
+    ``to_date(ts)``, so the result is stats-invariant; the plan-shape
+    test pins the executed scan to the kept files."""
     import datetime as dt
 
-    from omniengine_spark.sources.sinks import scratch_dir
-    from omniengine_spark.sources.versioned import commit, read_version
+    from omniengine_spark.sources.versioned import read_version
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
+    path = _events_book(spark, sf_dir)  # pins session tz UTC
+    lo, hi = dt.date(2024, 1, 8), dt.date(2024, 1, 14)
+    window = (
+        dt.datetime.combine(lo, dt.time.min, tzinfo=dt.timezone.utc),
+        dt.datetime.combine(hi, dt.time.max, tzinfo=dt.timezone.utc),
+    )
+    pruned = read_version(spark, path, prune={"ts": window}).select(
         F.to_date("ts").alias("day"),
-        "user_id",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    path = scratch_dir("warehouse-s20")
-    commit(
-        ev.repartitionByRange(16, "day"),
-        path,
-        "events book, day-ranged layout",
-        stats_cols=["day"],
-    )
-    lo, hi = dt.date(2024, 1, 8), dt.date(2024, 1, 14)
-    pruned = read_version(spark, path, prune={"day": (lo, hi)})
     return (
         pruned.filter(
             (F.col("day") >= F.lit(lo)) & (F.col("day") <= F.lit(hi))

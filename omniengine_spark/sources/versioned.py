@@ -43,7 +43,14 @@ Properties:
   ``vacuum`` retires it;
 - migration history travels in the manifest: ``commit`` records a
   description per version, so schema patches (``sources.migrate``)
-  and reorg rewrites are the same audit trail.
+  and reorg rewrites are the same audit trail;
+- the manifest entry also carries the version's DATA schema (the
+  committed frame's columns minus ``partition_cols``, all nullable),
+  so ``read_version`` hands Spark the schema instead of inferring it
+  from a parquet footer, which would fire a job while the plan is
+  built.  Partition columns are not stored: Spark still infers them
+  from the ``col=value`` paths, types included.  Entries without a
+  schema (legacy manifests) keep the inferred read.
 
 At 100 TB you retire old versions with ``vacuum`` (keep-last-K) —
 storage cost is per-version deltas only when commits rewrite
@@ -64,6 +71,7 @@ import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # legacy single-file manifest (pre-CAS tables): read-only fallback
 _MANIFEST = "_manifest.json"
@@ -540,6 +548,7 @@ def _publish_version(
     version: int,
     description: str,
     base_version: int | None = None,
+    schema: dict | None = None,
 ) -> None:
     """CAS-loop the claimed version into the manifest log.  Losers of
     a sequence race re-read the winner's manifest and re-apply their
@@ -548,6 +557,8 @@ def _publish_version(
     entry = {"version": version, "description": description}
     if base_version is not None:
         entry["base"] = base_version
+    if schema is not None:
+        entry["schema"] = schema
     while True:
         manifest, seq = _load_manifest_seq(path)
         if any(e["version"] == version for e in manifest["versions"]):
@@ -631,7 +642,15 @@ def commit(
         (final / _STATS).write_text(
             json.dumps(_scrape_stats(final, stats_cols))
         )
-    _publish_version(path, version, description, base_version)
+    data_fields = [
+        T.StructField(f.name, f.dataType, True, f.metadata)
+        for f in df.schema.fields
+        if f.name not in (partition_cols or [])
+    ]
+    _publish_version(
+        path, version, description, base_version,
+        T.StructType(data_fields).jsonValue(),
+    )
     return version
 
 
@@ -648,6 +667,20 @@ def _version_dirs(path: str, manifest: dict, v: int) -> list[str]:
         chain.append(str(Path(path) / f"v={cur}"))
         cur = by_ver[cur].get("base")
     return chain[::-1]
+
+
+def _stored_schema(manifest: dict, v: int) -> T.StructType | None:
+    """The data schema version ``v``'s chain recorded at commit, or
+    None (infer from the files) when an entry of the chain carries
+    none or the entries disagree."""
+    by_ver = {e["version"]: e for e in manifest["versions"]}
+    schemas, cur = [], v
+    while cur is not None:
+        schemas.append(by_ver[cur].get("schema"))
+        cur = by_ver[cur].get("base")
+    if schemas[0] is None or any(s != schemas[0] for s in schemas):
+        return None
+    return T.StructType.fromJson(schemas[0])
 
 
 def read_version(
@@ -671,29 +704,32 @@ def read_version(
     planning-phase cost that partition pruning and row-group stats
     cannot avoid (dirs committed without ``stats_cols`` still list).
     The caller must still apply the actual filter (skipping is file-
-    granular); files without stats are always read."""
+    granular); files without stats are always read.
+
+    Every branch reads with the manifest's stored data schema when
+    the chain carries one, so building the frame fires no Spark job."""
     manifest = _load_manifest(path)
     v = manifest["current"] if version is None else version
     dirs = _version_dirs(path, manifest, v)
+    schema = _stored_schema(manifest, v)
+    reader = spark.read if schema is None else spark.read.schema(schema)
     if prune:
         kept, _total = pruned_files(path, prune, version=v)
         if not kept:
             # every file skipped: preserve schema via an empty frame
-            return spark.read.option("basePath", path).parquet(
+            return reader.option("basePath", path).parquet(
                 *dirs
             ).drop("v").limit(0)
-        return spark.read.option("basePath", path).parquet(
-            *kept
-        ).drop("v")
+        return reader.option("basePath", path).parquet(*kept).drop("v")
     if len(dirs) == 1:
-        return spark.read.parquet(dirs[0])
+        return reader.parquet(dirs[0])
     # multi-dir chain: anchor partition discovery at the table root
     # so a partitionBy layout (e.g. cluster=) stays ONE partition
     # column across all delta dirs — one relation, so dynamic
     # partition pruning still prunes the union.  The version dirs
     # themselves parse as a synthetic ``v`` partition column, dropped
     # here (a DATA column named ``v`` is therefore reserved).
-    return spark.read.option("basePath", path).parquet(*dirs).drop("v")
+    return reader.option("basePath", path).parquet(*dirs).drop("v")
 
 
 def vacuum(

@@ -26,6 +26,12 @@ def spark():
     s.stop()
 
 
+def next_job_id(spark) -> int:
+    """Id the session's next Spark job will get: the difference across
+    a call is the number of jobs the call fired."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """DuckDB connection with the warehouse tables registered as views,
     mirroring the driver's oracle setup."""

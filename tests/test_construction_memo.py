@@ -29,7 +29,7 @@ from omniengine_spark.sources.catalog import (
     session_memo,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, next_job_id
 
 
 def test_load_table_memo_hits_same_session(spark):
@@ -154,6 +154,60 @@ def test_stamped_deltas_memo_and_equivalence(spark):
     assert sorted(a.columns) == cols
     diff = a.select(*cols).exceptAll(fresh.select(*cols))
     assert diff.isEmpty()
+
+
+def test_genesis_csv_written_once_per_customer_file(spark, tmp_path):
+    """``synthetic_genesis`` writes its CSV once per ``customer.parquet``
+    signature: a second call fires no job and reads the same CSV, and
+    after the file is rewritten in place the next call writes a new
+    CSV whose balances equal a fresh build (never the stale ones)."""
+    import pandas as pd
+
+    from omniengine_spark.sources.genesis import (
+        _write_genesis_csv,
+        read_genesis_csv,
+        synthetic_genesis,
+    )
+
+    def balances(df):
+        return sorted(df.collect())
+
+    src = tmp_path / "customer.parquet"
+    shutil.copy(f"{SF_SMOKE}/customer.parquet", src)
+    sf = str(tmp_path)
+    first = synthetic_genesis(spark, sf)
+    old = balances(first)
+
+    before = next_job_id(spark)
+    second = synthetic_genesis(spark, sf)
+    assert next_job_id(spark) == before
+    assert second.inputFiles() == first.inputFiles()
+    assert balances(second) == old
+
+    cust = pd.read_parquet(src)
+    cust["c_acctbal"] = cust["c_acctbal"] + 1.0
+    os.remove(src)
+    cust.to_parquet(src)
+    third = synthetic_genesis(spark, sf)
+    assert set(third.inputFiles()).isdisjoint(first.inputFiles())
+    fresh = read_genesis_csv(spark, _write_genesis_csv(spark, sf))
+    assert balances(third) == balances(fresh) != old
+
+
+def test_serve_plans_fire_no_build_jobs_when_warm(spark):
+    """Every plan of the benchmark's ``serve`` workload, called a
+    second time on the same data, builds its frame without a Spark
+    job: artifacts, memos and versioned reads are all settled by the
+    first call, so the action is the only job source."""
+    from omniengine_spark.plans import QUERIES
+    from perfbench.workloads import WORKLOADS
+
+    for name in WORKLOADS["serve"].plans:
+        QUERIES[name](spark, SF_SMOKE).collect()
+        before = next_job_id(spark)
+        df = QUERIES[name](spark, SF_SMOKE)
+        assert next_job_id(spark) == before, name
+        df.collect()
 
 
 def test_write_partitioned_one_file_per_partition(spark, tmp_path):

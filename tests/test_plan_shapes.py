@@ -424,8 +424,9 @@ def test_shuffle_bytes_ratchet():
 
 def test_pruned_day_range_family_skips_files(spark):
     """Round-10 ask #4 — the j9b pattern spread across the day-range
-    family: a5b (trailing-week daily stats) and w8b (per-user 7-day
-    spend) serve from the SAME shared events book, each reading
+    family: a5b (trailing-week daily stats), w8b (per-user 7-day
+    spend) and s20 (a fixed week's daily totals) serve from the SAME
+    shared events book, each reading
     exactly the files its window's footer-stat intersection keeps —
     strictly fewer than the book holds.  Anchors come from the stats
     manifest (no scan); correctness vs the full-scan statement is the
@@ -466,6 +467,21 @@ def test_pruned_day_range_family_skips_files(spark):
     )
     assert 0 < len(kept) < total
     assert norm(w8b.inputFiles()) == norm(kept)
+
+    # s20: the fixed week [2024-01-08, 2024-01-15) UTC
+    s20 = QUERIES["s20_stats_skipping_scan"](spark, SF_SMOKE)
+    kept, total = pruned_files(
+        path,
+        {
+            "ts": (
+                dt.datetime(2024, 1, 8, tzinfo=dt.timezone.utc),
+                dt.datetime(2024, 1, 15, tzinfo=dt.timezone.utc)
+                - dt.timedelta(microseconds=1),
+            )
+        },
+    )
+    assert 0 < len(kept) < total
+    assert norm(s20.inputFiles()) == norm(kept)
 
 
 def test_x1c_resume_reads_only_new_files(spark):

@@ -19,7 +19,7 @@ from omniengine_spark.sources.sinks import (
     write_partitioned,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, next_job_id
 
 
 def _events_with_day(spark):
@@ -1013,3 +1013,95 @@ def test_compact_clustered_keeps_pruning_tight(spark, tmp_path):
     assert 0 < len(kept) <= 3
     # content survived the clustered rewrite
     assert V.read_version(spark, tbl).count() == n_days * 8
+
+
+def test_read_version_schema_from_manifest(spark, tmp_path):
+    """Each manifest entry carries its version's data schema, so
+    ``read_version`` builds its frame without a schema-inference job.
+    For a snapshot, a delta chain, a partitioned table, a pruned read
+    and an all-skipped pruned read, the schema (partition column
+    types included, ``v`` dropped) and the rows equal those of the
+    inferred read of the same dirs or files; with the entries'
+    schemas stripped the read falls back to inference and still
+    matches."""
+    import datetime as dt
+    import json
+    from decimal import Decimal
+
+    from omniengine_spark.sources import versioned as V
+
+    rows = [
+        (
+            i,
+            f"addr{i % 7}",
+            Decimal(i) / 4,
+            dt.date(2024, 1, 1) + dt.timedelta(days=i % 20),
+            dt.datetime(2024, 1, 1, 6) + dt.timedelta(hours=i),
+            [float(i), float(-i)],
+            i % 4,
+        )
+        for i in range(200)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "k long not null, addr string, amt decimal(18,2), day date,"
+        " ts timestamp, vec array<double>, cluster long",
+    )
+    snap, chain, part = (str(tmp_path / n) for n in ("snap", "chain", "part"))
+    V.commit(df, snap, "snapshot")
+    v1 = V.commit(df.filter("k < 120"), chain, "base")
+    V.commit(df.filter("k >= 120"), chain, "delta", base_version=v1)
+    V.commit(
+        df.repartitionByRange(5, "day"),
+        part,
+        "partitioned",
+        partition_cols=["cluster"],
+        stats_cols=["day"],
+    )
+
+    def inferred(path, files):
+        reader = spark.read.option("basePath", path)
+        return reader.parquet(*files).drop("v")
+
+    lo, hi = dt.date(2024, 1, 3), dt.date(2024, 1, 5)
+    kept, total = V.pruned_files(part, {"day": (lo, hi)})
+    assert 0 < len(kept) < total
+    cases = [
+        (lambda: V.read_version(spark, snap),
+         lambda: spark.read.parquet(f"{snap}/v=1")),
+        (lambda: V.read_version(spark, chain),
+         lambda: inferred(chain, [f"{chain}/v=1", f"{chain}/v=2"])),
+        (lambda: V.read_version(spark, part),
+         lambda: spark.read.parquet(f"{part}/v=1")),
+        (lambda: V.read_version(spark, part, prune={"day": (lo, hi)}),
+         lambda: inferred(part, kept)),
+        (lambda: V.read_version(
+            spark, part, prune={"day": (dt.date(2030, 1, 1), None)}),
+         lambda: inferred(part, [f"{part}/v=1"]).limit(0)),
+    ]
+    for got_fn, want_fn in cases:
+        before = next_job_id(spark)
+        got = got_fn()
+        got_schema = got.schema
+        assert next_job_id(spark) == before  # no build-time job
+        want = want_fn()
+        assert got_schema == want.schema
+        assert "v" not in got.columns
+        assert sorted(got.collect()) == sorted(want.collect())
+    assert dict(V.read_version(spark, part).dtypes)["cluster"] == "int"
+
+    # legacy entries (no schema): the inferred read, same answers
+    for name in ("snap", "chain", "part"):
+        seq_file = max(
+            (tmp_path / name).glob("_manifest.*.json"),
+            key=lambda p: int(p.name.split(".")[1]),
+        )
+        manifest = json.loads(seq_file.read_text())
+        assert all("schema" in e for e in manifest["versions"])
+        for e in manifest["versions"]:
+            del e["schema"]
+        seq_file.write_text(json.dumps(manifest))
+    for got_fn, want_fn in cases:
+        got, want = got_fn(), want_fn()
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
