@@ -4,11 +4,12 @@
 Prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is materialized by collecting an xxhash64 checksum over
-every output column — count() alone lets Catalyst prune
-projection-only work (the timing would measure a parquet row count,
-not the plan), while the checksum forces every output expression to
-evaluate; only one aggregate row reaches the driver.
+Each query run is one ``tools.measure.run_measured`` call: build the
+plan, then collect an xxhash64 checksum over every output column —
+count() alone lets Catalyst prune projection-only work (the timing
+would measure a parquet row count, not the plan), while the checksum
+forces every output expression to evaluate; only one aggregate row
+reaches the driver.
 
 Timing semantics (round 10):
 
@@ -41,7 +42,9 @@ the fixed-work calibration so cross-round comparisons survive the
 ~7x box-speed swings), ``timing_semantics`` version tag, top-15
 queries + ``_fast_bucket``.  The FULL per-query record — every
 timing, build/serve phase split, per-run probe ratio, rerun
-attempt — is written to ``tools/bench_full.json``.
+attempt — is written to ``tools/bench_full.json``, with each plan's
+last timed run under ``runs``: build_s, action_s, jobs, stages,
+tasks, shuffle-write and spill MB, and the (bit_xor, count) checksum.
 """
 
 from __future__ import annotations
@@ -95,6 +98,18 @@ def compact_line(base: dict, timings: dict[str, float]) -> str:
             return line
 
 
+def _detail_record(rec: dict) -> dict:
+    """The detail file's per-plan layer split, from one measured run."""
+    out = {k: round(rec[k], 3) for k in ("build_s", "action_s")}
+    out.update({k: rec[k] for k in ("jobs", "stages", "tasks")})
+    out.update({
+        k: round(rec[k], 4)
+        for k in ("shuffle_write_mb", "memory_spill_mb", "disk_spill_mb")
+    })
+    out["checksum"] = list(rec["checksum"])
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # a "0.1" from ".../sf0.1"
@@ -103,49 +118,13 @@ def main() -> None:
     from omniengine_spark.plans import QUERIES
     from omniengine_spark.plans.registry import ARTIFACT_PLANS
     from omniengine_spark.session import get_spark
+    from tools.measure import run_measured, warm_session
 
     spark = get_spark(app_name="omniengine-bench")
 
-    # Warm the JVM / codegen / parquet reader paths once so the first
-    # measured query isn't charged for session startup.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from omniengine_spark.sources import load_table
-
-    load_table(spark, sf_dir, "region").count()
-
-    # Engine init, not query work: build the memoized per-txtype
-    # delta-array expression (thousands of py4j calls) once here so
-    # the first pipeline query isn't charged for it.
-    from omniengine_spark.pipeline import omni as _omni
-
-    _omni._delta_array(spark)
-
-    # Python DataSource runtime bootstrap (plan-time and task-time
-    # datasource workers are separate fresh Python processes on first
-    # use, ~8 s of interpreter+pyspark imports): engine init, not
-    # query work — warm it with a one-row throwaway source so the
-    # feed-connector plan measures the connector, not the runtime.
-    from pyspark.sql.datasource import DataSource, DataSourceReader
-
-    class _WarmReader(DataSourceReader):
-        def read(self, partition):
-            yield (1,)
-
-    class _WarmSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "bench_warm_src"
-
-        def schema(self):
-            return "x int"
-
-        def reader(self, schema):
-            return _WarmReader()
-
-    spark.dataSource.register(_WarmSource)
-    spark.read.format("bench_warm_src").load().count()
-
-    from pyspark.sql import functions as F
+    # Engine start-up (JVM, codegen, parquet readers, delta-array
+    # expression, Python DataSource runtime) is not query work.
+    warm_session(spark, sf_dir)
 
     def calibrate() -> float:
         """Fixed single-thread CPU work (~0.55s at build time with one
@@ -169,32 +148,33 @@ def main() -> None:
 
     calib_before = calibrate()
 
-    def run_once(fn, clear: bool) -> tuple[float, float]:
+    records: dict[str, dict] = {}
+
+    def run_once(name: str, clear: bool) -> tuple[float, float]:
         """(probe_sec, run_sec).  ``clear`` drops all cached frames
-        first — cold semantics; warm runs keep artifact caches."""
+        first — cold semantics; warm runs keep artifact caches.  The
+        plan's layer split is kept, so ``records`` ends up holding each
+        plan's last timed run."""
         if clear:
             spark.catalog.clearCache()
         p = probe()
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-        return p, time.perf_counter() - t0
+        rec = run_measured(spark, QUERIES[name], sf_dir, clear=False)
+        records[name] = _detail_record(rec)
+        return p, rec["total_s"]
 
     timings: dict[str, float] = {}
     run_probes: dict[str, list[float]] = {}
     phases: dict[str, dict[str, float]] = {}
     is_artifact: dict[str, bool] = {}
-    for name, fn in sorted(QUERIES.items()):
+    for name in sorted(QUERIES):
         art = name in ARTIFACT_PLANS
         is_artifact[name] = art
         if art:
             # cold run trains/commits the artifact; two warm runs
             # measure steady-state serving
-            p0, cold = run_once(fn, clear=True)
-            p1, s1 = run_once(fn, clear=False)
-            p2, s2 = run_once(fn, clear=False)
+            p0, cold = run_once(name, clear=True)
+            p1, s1 = run_once(name, clear=False)
+            p2, s2 = run_once(name, clear=False)
             serve = min(s1, s2)
             timings[name] = round(serve, 3)
             run_probes[name] = [p1, p2]
@@ -207,8 +187,8 @@ def main() -> None:
             # best-of-2 cold: a single contended run can spike 7-15x
             # on a shared sandbox; run 2 also reuses codegen + parquet
             # footers, the steady state a real cluster job sees
-            p1, t1 = run_once(fn, clear=True)
-            p2, t2 = run_once(fn, clear=True)
+            p1, t1 = run_once(name, clear=True)
+            p2, t2 = run_once(name, clear=True)
             timings[name] = round(min(t1, t2), 3)
             run_probes[name] = [p1, p2]
 
@@ -231,12 +211,11 @@ def main() -> None:
         ratio = min(run_probes[name]) / probe_ref
         if ratio <= _BUSY_RATIO and name not in top_slow:
             continue
-        fn = QUERIES[name]
         was = dt
         attempts = []
         n_extra = _MAX_RERUNS if ratio > _BUSY_RATIO else 1
         for _ in range(n_extra):
-            p, t = run_once(fn, clear=not is_artifact[name])
+            p, t = run_once(name, clear=not is_artifact[name])
             attempts.append(round(t, 3))
             run_probes[name].append(p)
             if t < dt:
@@ -322,6 +301,7 @@ def main() -> None:
         "phases": phases,
         "reruns": reruns,
         "timings": dict(sorted(timings.items(), key=lambda kv: -kv[1])),
+        "runs": dict(sorted(records.items())),
     }
     detail_file = (Path(_REPO) / detail_rel).resolve()
     # env override is a convenience, not an escape hatch: refuse to

@@ -198,58 +198,6 @@ def offer_state_replay(
     return ordered_replay(slim, [key_col], order_cols, fold, schema)
 
 
-def frozen_balance_replay(
-    entries: DataFrame,
-    key_cols: Sequence[str] = ("address", "propertyid"),
-    order_col: str = "serial",
-) -> DataFrame:
-    """The frozen-funds rule (reference ``sql.py:1408-1414`` +
-    freeze/unfreeze txs 185/186, ``sql.py:2329-2372``), the one
-    balance behavior that is genuinely order-dependent:
-
-    * ``freeze``    → move the available balance to frozen; while
-      frozen, every delta lands in the frozen column
-    * ``unfreeze``  → frozen moves back to available
-    * ``delta``     → applied to available (or frozen while frozen)
-
-    Input rows: key_cols + order_col + ``kind`` ('delta' | 'freeze' |
-    'unfreeze') + ``delta_base_units`` (null for freeze/unfreeze).
-    Output: one row per key with (available, frozen) — the reference's
-    AddressBalances columns.
-    """
-    schema = T.StructType(
-        [T.StructField(k, T.StringType() if k == "address" else T.LongType())
-         for k in key_cols]
-        + [
-            T.StructField("available", T.LongType()),
-            T.StructField("frozen", T.LongType()),
-        ]
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        available, frozen, is_frozen = 0, 0, False
-        for kind, delta in zip(pdf["kind"], pdf["delta_base_units"]):
-            if kind == "freeze":
-                frozen += available
-                available = 0
-                is_frozen = True
-            elif kind == "unfreeze":
-                available += frozen
-                frozen = 0
-                is_frozen = False
-            else:
-                if is_frozen:
-                    frozen += int(delta)
-                else:
-                    available += int(delta)
-        out = {k: [pdf[k].iloc[0]] for k in key_cols}
-        out["available"] = [available]
-        out["frozen"] = [frozen]
-        return pd.DataFrame(out)
-
-    return ordered_replay(entries, list(key_cols), [order_col], fold, schema)
-
-
 def full_balance_replay(
     entries: DataFrame,
     key_cols: Sequence[str] = ("address", "propertyid"),

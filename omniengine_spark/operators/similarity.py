@@ -240,168 +240,6 @@ def cosine_pair_join(
     )
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 1,
-) -> DataFrame:
-    """Assign each vector to its ``nprobe`` nearest centroids (by
-    cosine) — one Arrow-batched gemm per batch against the broadcast
-    centroid matrix.  nprobe=1 builds the index; nprobe>1 probes it.
-    Output: (id, cluster, rank) with rank 0 = nearest.
-    """
-    # a tiny corpus can seed fewer centroids than nprobe — clamp, or
-    # the executor kernel dies on mismatched array lengths
-    nprobe = min(nprobe, len(centroids))
-    spark = vectors.sparkSession
-    cids = np.array([c[0] for c in centroids], dtype=np.int64)
-    cmat = np.stack(
-        [np.asarray(c[1], dtype=np.float64) for c in centroids]
-    )
-    cmat /= np.linalg.norm(cmat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((cids, cmat))
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cluster", T.LongType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c_ids, c_mat = bc.value
-        for pdf in batches:
-            a = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            a /= np.linalg.norm(a, axis=1, keepdims=True)
-            sims = a @ c_mat.T
-            # deterministic top-nprobe: sort by (-sim, centroid id)
-            order = np.lexsort((c_ids[None, :].repeat(len(a), 0), -sims))
-            top = order[:, :nprobe]
-            n = len(a)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy().repeat(nprobe),
-                    "cluster": c_ids[top].ravel(),
-                    "rank": np.tile(
-                        np.arange(nprobe, dtype=np.int32), n
-                    ),
-                }
-            )
-
-    return vectors.select(id_col, vec_col).mapInPandas(
-        assign, schema=schema
-    )
-
-
-def ivf_build_centroids(
-    vectors: DataFrame,
-    k: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Deterministic IVF coarse quantizer: seed with the k vectors of
-    smallest xxhash64(id) (a deterministic sample), refine with
-    ``iters`` Lloyd passes.  Assignment is the gemm kernel above;
-    the centroid update is one groupBy over exploded components —
-    both fully distributed, only k·d floats ever reach the driver.
-    """
-    seeds = (
-        vectors.select(id_col, vec_col)
-        .withColumn("h", F.xxhash64(F.col(id_col)))
-        .orderBy("h", id_col)
-        .limit(k)
-        .collect()
-    )
-    centroids = [
-        (i, list(map(float, r[vec_col]))) for i, r in enumerate(seeds)
-    ]
-    for _ in range(iters):
-        assigned = ivf_assign(vectors, centroids, id_col, vec_col, 1)
-        comp = (
-            vectors.select(id_col, vec_col)
-            .join(assigned.select(id_col, "cluster"), id_col)
-            .select(
-                "cluster",
-                F.posexplode_outer(F.col(vec_col)).alias("dim", "x"),
-            )
-        )
-        means = (
-            comp.groupBy("cluster", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "m"))
-                ).alias("dm")
-            )
-            .select(
-                "cluster",
-                F.transform("dm", lambda s: s["m"]).alias("centroid"),
-            )
-            .collect()
-        )
-        by_cluster = {r["cluster"]: list(r["centroid"]) for r in means}
-        centroids = [
-            (cid, by_cluster.get(cid, vec)) for cid, vec in centroids
-        ]
-    return centroids
-
-
-def ivf_ann_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_clusters: int = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-) -> DataFrame:
-    """IVF approximate top-k: search only the inverted lists of the
-    query's ``nprobe`` nearest centroids.  Work per query drops from
-    O(N) to O(N·nprobe/n_clusters); recall is tunable via nprobe.
-    """
-    centroids = ivf_build_centroids(
-        vectors, n_clusters, iters, id_col, vec_col
-    )
-    lists = ivf_assign(vectors, centroids, id_col, vec_col, 1).select(
-        F.col(id_col).alias("nbr_id"), "cluster"
-    )
-    v = vectors.select(
-        F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("nbr_vec")
-    ).join(lists, "nbr_id")
-    probes = ivf_assign(queries, centroids, id_col, vec_col, nprobe).select(
-        F.col(id_col).alias("query_id"), "cluster"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    ).join(probes, "query_id")
-    scored = (
-        q.join(v, "cluster")
-        .filter(F.col("query_id") != F.col("nbr_id"))
-        .select(
-            "query_id",
-            "nbr_id",
-            cosine(F.col("query_vec"), F.col("nbr_vec")).alias("score"),
-        )
-        .dropDuplicates(["query_id", "nbr_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "rank", "score")
-    )
-
-
 def deterministic_planes(
     seed: int, n_planes: int, dim: int
 ) -> list[list[float]]:
@@ -443,10 +281,8 @@ def ivf_ann_topk_portable(
     md5-hash of their id — no Lloyd averaging, so no float-accumulation
     ordering to diverge between engines; assignment, probing, and
     rescoring are all codegen cosine folds whose doubles are
-    bit-identical to a SQL oracle's sequential evaluation.  The
-    kmeans-refined gemm variant (``ivf_ann_topk``) is the recall/perf
-    path; this is the exactly-checkable one — same inverted-list +
-    probe machinery, different quantizer.
+    bit-identical to a SQL oracle's sequential evaluation, which is
+    what makes the approximate result exactly oracle-checkable.
 
     Scale: the seed selection is a global top-``n_clusters``
     (TakeOrderedAndProject, k·d floats broadcast back); assignment is

@@ -14,6 +14,7 @@ if str(REPO) not in sys.path:
 
 from omniengine_spark.session import get_spark  # noqa: E402
 from omniengine_spark.sources.catalog import TABLES  # noqa: E402
+from tools.measure import next_job_id  # noqa: E402,F401
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -24,12 +25,6 @@ def spark():
     s = get_spark(app_name="omniengine-tests", shuffle_partitions=8)
     yield s
     s.stop()
-
-
-def next_job_id(spark) -> int:
-    """Id the session's next Spark job will get: the difference across
-    a call is the number of jobs the call fired."""
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -444,7 +444,8 @@ def test_pipeline_invariants_seeded(spark, seed):
 
 
 def _frozen_model(entries):
-    """Reference fold for frozen_balance_replay: (available, frozen)."""
+    """Reference fold for the freeze rule of full_balance_replay:
+    (available, frozen)."""
     available, frozen, is_frozen = 0, 0, False
     for kind, delta in entries:
         if kind == "freeze":
@@ -470,7 +471,7 @@ def test_frozen_rule_invariants_seeded(spark, seed):
     where freezes land), and freezing must be idempotent-safe."""
     import random
 
-    from omniengine_spark.operators.replay import frozen_balance_replay
+    from omniengine_spark.operators.replay import full_balance_replay
 
     rng = random.Random(1000 + seed)
     rows, models = [], {}
@@ -486,16 +487,17 @@ def test_frozen_rule_invariants_seeded(spark, seed):
                 entries.append(("delta", rng.randint(-500, 500)))
         models[f"a{key}"] = entries
         for i, (kind, d) in enumerate(entries):
-            rows.append((f"a{key}", 1, i, kind, d))
+            rows.append((f"a{key}", 1, i, kind, d, 0, 0))
     df = spark.createDataFrame(
         rows,
         "address string, propertyid long, serial long, kind string, "
-        "delta_base_units long",
+        "delta_base_units long, delta_reserved long, delta_accepted long",
     )
-    got = {
-        r["address"]: (r["available"], r["frozen"])
-        for r in frozen_balance_replay(df).collect()
-    }
+    out = full_balance_replay(df).collect()
+    got = {r["address"]: (r["available"], r["frozen"]) for r in out}
+    for r in out:
+        # no reserved/accepted deltas in: freezing must not invent any
+        assert r["reserved"] == r["accepted"] == 0, (seed, r["address"])
     for addr, entries in models.items():
         want = _frozen_model(entries)
         assert got[addr] == want, (seed, addr)

@@ -212,7 +212,7 @@ def test_serials_are_dense_and_ordered(spark):
 def test_frozen_balance_rule(spark):
     """Reference sql.py:1408-1414: freezing moves available→frozen;
     credits while frozen accrue frozen; unfreeze restores."""
-    from omniengine_spark.operators.replay import frozen_balance_replay
+    from omniengine_spark.operators.replay import full_balance_replay
 
     rows = [
         # (address, propertyid, serial, kind, delta)
@@ -227,12 +227,13 @@ def test_frozen_balance_rule(spark):
         ("carol", 31, 9, "delta", 7),
     ]
     df = spark.createDataFrame(
-        rows, ["address", "propertyid", "serial", "kind",
-               "delta_base_units"]
+        [(*r, 0, 0) for r in rows],
+        "address string, propertyid long, serial long, kind string, "
+        "delta_base_units long, delta_reserved long, delta_accepted long",
     )
     got = {
         (r["address"], r["propertyid"]): (r["available"], r["frozen"])
-        for r in frozen_balance_replay(df).collect()
+        for r in full_balance_replay(df).collect()
     }
     assert got == {
         ("alice", 31): (100 + 40 - 10 + 5, 0),

@@ -8,60 +8,45 @@ locally before a round ends.
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 import pytest
 
 from omniengine_spark.plans import ORACLES, QUERIES
+from tools.driver_sim import canon, frames_match
 
 from .conftest import SF_CORRECT
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    """Sort columns by name, then rows by all columns — the driver's
-    order-insensitive comparison."""
-    df = df.reindex(sorted(df.columns), axis=1)
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
-def _assert_frames_equal(spark_pd: pd.DataFrame, duck_pd: pd.DataFrame, name: str):
-    assert len(spark_pd) == len(duck_pd), (
-        f"{name}: row count {len(spark_pd)} != oracle {len(duck_pd)}"
-    )
-    assert sorted(spark_pd.columns) == sorted(duck_pd.columns), (
-        f"{name}: columns {sorted(spark_pd.columns)} != "
-        f"oracle {sorted(duck_pd.columns)}"
-    )
-    a, b = _canon(spark_pd), _canon(duck_pd)
-    # The driver's value-hash is dtype-sensitive: DuckDB HUGEINT sums
-    # surface as float64 while Spark returns int64, hashing differently
-    # even when every value is equal (round-1 lesson — 11 plans failed
-    # only on this).  Enforce pandas dtype equality column-by-column.
-    def _canon_dtype(dt) -> str:
-        s = str(dt)
-        # Driver evidence (r1): f2/x1 hash-matched with spark
-        # datetime64[ns] vs duckdb datetime64[us], so timestamp unit
-        # is normalized by the driver; int64-vs-float64 is NOT.
-        return "datetime64" if s.startswith("datetime64") else s
-
+def _frame_problems(spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> list:
+    """``driver_sim.frames_match`` — rows, columns, dtype with the
+    timestamp unit normalized (the gate's value-hash is
+    dtype-sensitive: DuckDB HUGEINT sums surface as float64 while
+    Spark returns int64, so CAST the oracle aggregate, see VERDICT
+    r1), values — plus one check it leaves out: a None on one side and
+    a NaN on the other in the same cell is a mismatch here."""
+    problems = frames_match(spark_pd, duck_pd)
+    if problems:
+        return problems
+    a, b = canon(spark_pd), canon(duck_pd)
     for col in a.columns:
-        assert _canon_dtype(a[col].dtype) == _canon_dtype(b[col].dtype), (
-            f"{name}.{col}: spark dtype {a[col].dtype} != "
-            f"oracle dtype {b[col].dtype} (driver hash is dtype-sensitive; "
-            f"CAST the oracle aggregate, see VERDICT r1)"
-        )
-    for col in a.columns:
-        av, bv = a[col].tolist(), b[col].tolist()
-        for i, (x, y) in enumerate(zip(av, bv)):
-            if isinstance(x, float) and isinstance(y, float):
-                if math.isnan(x) and math.isnan(y):
-                    continue
-                assert x == y, (
-                    f"{name}.{col}[{i}]: {x!r} != {y!r} (Δ={x - y!r})"
-                )
-            else:
-                assert x == y, f"{name}.{col}[{i}]: {x!r} != {y!r}"
+        a_none = a[col].map(lambda v: v is None)
+        b_none = b[col].map(lambda v: v is None)
+        n = int((a[col].isna() & b[col].isna() & (a_none != b_none)).sum())
+        if n:
+            problems.append(f"{col}: {n} None vs NaN mismatches")
+    return problems
+
+
+def test_parity_comparator_rejects():
+    """The comparator still rejects a dtype difference, None vs NaN,
+    and a single differing value."""
+    base = pd.DataFrame({"k": [1, 2], "v": [1.5, 2.5], "s": ["x", None]})
+    assert _frame_problems(base, base.copy()) == []
+    assert _frame_problems(base, base.astype({"k": "float64"}))
+    nan = base.copy()
+    nan["s"] = pd.Series(["x", float("nan")], dtype=object)
+    assert _frame_problems(base, nan)
+    assert _frame_problems(base, base.assign(v=[1.5, 2.75]))
 
 
 ORACLE_NAMES = sorted(ORACLES)
@@ -72,7 +57,8 @@ def test_oracle_parity(spark, duck, name):
     q = QUERIES[name]
     spark_pd = q(spark, SF_CORRECT).toPandas()
     duck_pd = duck.execute(ORACLES[name]).fetchdf()
-    _assert_frames_equal(spark_pd, duck_pd, name)
+    problems = _frame_problems(spark_pd, duck_pd)
+    assert not problems, f"{name}: {'; '.join(problems)}"
 
 
 def test_all_queries_have_runnable_plans(spark):

@@ -385,7 +385,8 @@ def test_shuffle_bytes_ratchet():
     the build when a plan starts shuffling more than it used to —
     re-record tools/shuffle_census.json deliberately if the growth is
     intended.  Runs in a subprocess because the census needs its own
-    UI-enabled SparkSession."""
+    JVM: the recorded figures were taken with 32 shuffle partitions,
+    and the shared test session runs 8."""
     import json
     import subprocess
     import sys

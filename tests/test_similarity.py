@@ -29,31 +29,6 @@ def _recall(approx, exact):
     return hits / total
 
 
-def test_ivf_recall_and_determinism(spark):
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    queries = emb.orderBy("vec_id").limit(N_QUERIES)
-    exact = _topk_sets(
-        S.brute_force_topk(emb, queries, "vec_id", "embedding", k=K)
-    )
-    run1 = S.ivf_ann_topk(
-        emb, queries, "vec_id", "embedding", k=K, n_clusters=16, nprobe=4
-    )
-    approx = _topk_sets(run1)
-    # every query answered with k candidates
-    assert set(approx) == set(exact)
-    assert all(len(v) == K for v in approx.values())
-    # pinned floor on the fixed corpus (random vectors are the hardest
-    # case for IVF; observed ~0.5+ with nprobe=4 of 16)
-    assert _recall(approx, exact) >= 0.35
-    # deterministic: a second run returns the identical result
-    run2 = S.ivf_ann_topk(
-        emb, queries, "vec_id", "embedding", k=K, n_clusters=16, nprobe=4
-    )
-    assert sorted(map(tuple, run1.collect())) == sorted(
-        map(tuple, run2.collect())
-    )
-
-
 def test_lsh_ann_subset_of_universe(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     out = S.lsh_ann_topk(emb, "vec_id", "embedding", k=K, n_planes=8)

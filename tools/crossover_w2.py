@@ -22,7 +22,6 @@ import argparse
 import json
 import shutil
 import sys
-import time
 from pathlib import Path
 
 import numpy as np
@@ -70,15 +69,11 @@ def main() -> None:
     from omniengine_spark.operators.skew import (
         chunked_running_sum, probe_running_sum_strategy)
     from omniengine_spark.session import get_spark
+    from tools.measure import run_measured
 
     spark = get_spark(app_name="crossover-w2", shuffle_partitions=32)
     spark.range(1000).selectExpr("sum(id)").collect()
     _D = "decimal(18,4)"
-
-    def hash_action(df) -> None:
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
 
     def plain(ev):
         from pyspark.sql import Window
@@ -114,11 +109,16 @@ def main() -> None:
             ev.agg(F.count("*")).collect()
             times = {}
             for name, builder in (("plain", plain), ("chunked", chunked)):
-                hash_action(builder(ev))  # warm this plan shape
-                times[name] = min(
-                    _timed(hash_action, builder(ev))
-                    for _ in range(args.runs)
-                )
+                def action_s() -> float:
+                    # the checksum collect only: both branches build
+                    # lazily, so the build is not part of the race
+                    return run_measured(
+                        spark, lambda _s, _p: builder(ev), str(f),
+                        clear=False,
+                    )["action_s"]
+
+                action_s()  # warm this plan shape
+                times[name] = min(action_s() for _ in range(args.runs))
             # which branch would the auto probe pick?  Read the
             # decision from the probe itself — inferring it from
             # optimized-plan text ("Join" substring) breaks the moment
@@ -146,12 +146,6 @@ def main() -> None:
     Path(args.out).write_text(json.dumps(
         {"shares": SHARES, "rows": ROWS, "grid": grid}, indent=1))
     print(f"wrote {args.out}")
-
-
-def _timed(fn, *a) -> float:
-    t0 = time.perf_counter()
-    fn(*a)
-    return time.perf_counter() - t0
 
 
 if __name__ == "__main__":

@@ -30,8 +30,6 @@ import argparse
 import json
 import os
 import sys
-import time
-import urllib.request
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -45,8 +43,6 @@ ZORDER = {
 
 
 def build_layout(spark, raw: str, out: Path, n_files: int) -> None:
-    from pyspark.sql import functions as F
-
     from omniengine_spark.operators.layout import write_zordered
     from omniengine_spark.sources import load_table
     from omniengine_spark.sources.catalog import TABLES
@@ -78,69 +74,22 @@ def main() -> None:
     ap.add_argument("--skip-build", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from omniengine_spark.plans import QUERIES
     from omniengine_spark.session import get_spark
+    from tools.measure import node_metrics, run_measured
 
     spark = get_spark(
         app_name="layout-bench",
         shuffle_partitions=32,
         extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
             # pruning is file/row-group level: keep files small enough
             # that one file != the whole table
             "spark.sql.files.maxPartitionBytes": "16m",
         },
     )
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
     layout = Path(args.layout)
     if not args.skip_build:
         build_layout(spark, args.raw, layout, args.files)
-
-    def _sql_ids() -> set[int]:
-        # the /sql listing paginates (default length 20): page through
-        # explicitly or later executions silently vanish from deltas
-        ids: set[int] = set()
-        offset = 0
-        while True:
-            url = (f"{ui}/api/v1/applications/{app}/sql"
-                   f"?offset={offset}&length=200")
-            with urllib.request.urlopen(url) as r:
-                page = json.load(r)
-            ids.update(e["id"] for e in page)
-            if len(page) < 200:
-                return ids
-            offset += 200
-
-    _UNITS = {"B": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30,
-              "TiB": 2**40}
-
-    def _parse_size(v: str) -> float:
-        # "10.3 MiB" (sometimes "total (min, med, max)" multi-line —
-        # first line carries the total)
-        head = v.splitlines()[0].strip()
-        num, unit = head.split()[:2]
-        return float(num.replace(",", "")) * _UNITS[unit]
-
-    def _scan_bytes(sql_id: int) -> tuple[float, int, int]:
-        url = f"{ui}/api/v1/applications/{app}/sql/{sql_id}?details=true"
-        with urllib.request.urlopen(url) as r:
-            d = json.load(r)
-        size = files = rows = 0
-        for n in d.get("nodes", []):
-            if not n["nodeName"].startswith("Scan"):
-                continue
-            for m in n["metrics"]:
-                if m["name"] == "size of files read":
-                    size += _parse_size(m["value"])
-                elif m["name"] == "number of files read":
-                    files += int(m["value"].replace(",", ""))
-                elif m["name"] == "number of output rows":
-                    rows += int(m["value"].replace(",", ""))
-        return size, files, rows
 
     def run(name: str, sf_dir: str) -> tuple[float, float, int, int]:
         # Pruning metric: the scan nodes' "number of output rows" —
@@ -152,20 +101,16 @@ def main() -> None:
         # fully skipped, and stage-level inputBytes under-reports
         # vectorized local-fs reads ~1000x.  Rows materialized is the
         # honest IO-skipping figure; size/files are recorded context.
-        seen = _sql_ids()
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-        wall = time.perf_counter() - t0
+        # Read from the action's executed plan (AQE stages and
+        # subqueries included).
+        m = run_measured(spark, QUERIES[name], sf_dir, clear=False)
         size = files = rows = 0
-        for sid in _sql_ids() - seen:
-            s, f, rws = _scan_bytes(sid)
-            size += s
-            files += f
-            rows += rws
-        return wall, size / 1e6, files, rows
+        for node, metrics in node_metrics(m["action_df"]):
+            if node.startswith("Scan"):
+                size += metrics.get("filesSize", 0)
+                files += metrics.get("numFiles", 0)
+                rows += metrics.get("numOutputRows", 0)
+        return m["total_s"], size / 1e6, files, rows
 
     names = sorted(k for k in QUERIES if k.startswith("sql_q"))
     rows = []

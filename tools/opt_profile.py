@@ -2,7 +2,8 @@
 """Optimization-round profiler: per-plan build/action timing + plan dump.
 
 For each named plan (default: all), in ONE session with the bench's
-semantics (clearCache before each cold run, xxhash64-checksum action):
+warm-up and semantics (clearCache before each cold run, one
+``tools.measure.run_measured`` call per run):
 
     build_sec   — fn(spark, sf_dir) wall time (plan construction; any
                   eager localCheckpoint/artifact build runs here)
@@ -21,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -37,19 +37,13 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import functions as F
-
     from omniengine_spark.plans import QUERIES
     from omniengine_spark.plans.registry import ARTIFACT_PLANS
     from omniengine_spark.session import get_spark
-    from omniengine_spark.sources import load_table
+    from tools.measure import run_measured, warm_session
 
     spark = get_spark(app_name="opt-profile")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    load_table(spark, sf_dir, "region").count()
-    from omniengine_spark.pipeline import omni as _omni
-
-    _omni._delta_array(spark)
+    warm_session(spark, sf_dir)
 
     names = args or sorted(QUERIES)
     out: dict[str, dict] = {}
@@ -59,39 +53,22 @@ def main() -> None:
         dump_dir.mkdir(parents=True, exist_ok=True)
         suffix = Path(dump).name
     for name in names:
-        fn = QUERIES[name]
         art = name in ARTIFACT_PLANS
         rec = {"runs": [], "build": [], "action": []}
         n_runs = 3 if art else 2
         for i in range(n_runs):
-            clear = (i == 0) if art else True
-            if clear:
-                spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{name} run{i}")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            df.select(
-                F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-            ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-            t2 = time.perf_counter()
-            rec["build"].append(round(t1 - t0, 3))
-            rec["action"].append(round(t2 - t1, 3))
-            rec["runs"].append(round(t2 - t0, 3))
+            r = run_measured(
+                spark, QUERIES[name], sf_dir, clear=(i == 0) if art else True
+            )
+            rec["build"].append(round(r["build_s"], 3))
+            rec["action"].append(round(r["action_s"], 3))
+            rec["runs"].append(round(r["total_s"], 3))
             if i == 0 and dump_dir is not None:
-                try:
-                    plan_txt = df._jdf.queryExecution().explainString(
-                        spark._jvm.org.apache.spark.sql.execution
-                        .ExplainMode.fromString("formatted")
-                    )
-                except Exception:
-                    import contextlib
-                    import io
-
-                    buf = io.StringIO()
-                    with contextlib.redirect_stdout(buf):
-                        df.explain("formatted")
-                    plan_txt = buf.getvalue()
+                plan_txt = r["df"]._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution
+                    .ExplainMode.fromString("formatted")
+                )
                 (dump_dir / f"{name}_{suffix}.txt").write_text(plan_txt)
         rec["best"] = (
             min(rec["runs"][1:]) if art else min(rec["runs"])

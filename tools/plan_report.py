@@ -120,7 +120,7 @@ def main() -> None:
                 "",
                 f"## Shuffle-bytes census (tools/shuffle_census.py @ {sfd})",
                 "",
-                "Measured data movement per plan (UI REST metrics).",
+                "Measured data movement per plan (status-store stage counters).",
                 "Seconds hide movement; the ratchet test",
                 "(tests/test_plan_shapes.py) fails a plan whose write",
                 "bytes grow past 1.5× + 8 MB of this record.",

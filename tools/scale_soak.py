@@ -38,7 +38,6 @@ import argparse
 import json
 import math
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -82,30 +81,58 @@ DEFAULT_PLANS = [
 ]
 
 
-def measure_one(name: str, small: str, big: str, runs: int) -> dict:
-    """Warm-up + best-of-``runs`` at both rungs for one plan, in THIS
-    process's session."""
-    from pyspark.sql import functions as F
-
-    from omniengine_spark.plans import QUERIES
+def _session():
     from omniengine_spark.session import get_spark
 
     spark = get_spark(app_name="scale-soak", shuffle_partitions=32)
     spark.range(1000).selectExpr("sum(id)").collect()
+    return spark
+
+
+def measure_one(spark, name: str, small: str, big: str, runs: int) -> dict:
+    """Warm-up + best-of-``runs`` at both rungs for one plan, in
+    ``spark``'s session."""
+    from omniengine_spark.plans import QUERIES
+    from tools.measure import run_measured
 
     def run(sf_dir: str) -> float:
-        spark.catalog.clearCache()  # no cross-run persist() reuse
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-        return time.perf_counter() - t0
+        # build INSIDE the timer: iterative plans (connected
+        # components) execute jobs eagerly during construction;
+        # clear=True: no cross-run persist() reuse
+        return run_measured(spark, QUERIES[name], sf_dir, clear=True)[
+            "total_s"
+        ]
 
     run(small)  # warm codegen/readers for this plan shape
     t_small = min(run(small) for _ in range(runs))
     t_big = min(run(big) for _ in range(runs))
     return {"t_small": t_small, "t_big": t_big}
+
+
+def measure_fresh(name: str, small: str, big: str, runs: int) -> dict | None:
+    """``measure_one`` in a subprocess, i.e. its own JVM; None if the
+    child failed."""
+    import subprocess
+
+    cmd = [
+        sys.executable, __file__,
+        "--small", small, "--big", big,
+        "--runs", str(runs),
+        "--measure-one", name,
+    ]
+    proc = subprocess.run(cmd, capture_output=True, text=True)
+    line = next(
+        (
+            ln for ln in proc.stdout.splitlines()
+            if ln.startswith("SOAK_RESULT ")
+        ),
+        None,
+    )
+    if line is None:
+        print(f"{name}: FAILED\n{proc.stderr[-2000:]}",
+              file=sys.stderr, flush=True)
+        return None
+    return json.loads(line[len("SOAK_RESULT "):])
 
 
 def main() -> None:
@@ -128,101 +155,40 @@ def main() -> None:
 
     if args.measure_one:
         # child mode: print one JSON line with the timings
-        r = measure_one(args.measure_one, small, big, args.runs)
+        r = measure_one(_session(), args.measure_one, small, big, args.runs)
         print("SOAK_RESULT " + json.dumps(r), flush=True)
         return
 
-    names = args.plans or DEFAULT_PLANS
-
-    if args.fresh:
-        import subprocess
-
-        rows = []
-        for name in names:
-            cmd = [
-                sys.executable, __file__,
-                "--small", small, "--big", big,
-                "--runs", str(args.runs),
-                "--measure-one", name,
-            ]
-            proc = subprocess.run(
-                cmd, capture_output=True, text=True
-            )
-            line = next(
-                (
-                    ln for ln in proc.stdout.splitlines()
-                    if ln.startswith("SOAK_RESULT ")
-                ),
-                None,
-            )
-            if line is None:
-                print(f"{name}: FAILED\n{proc.stderr[-2000:]}",
-                      file=sys.stderr, flush=True)
-                continue
-            r = json.loads(line[len("SOAK_RESULT "):])
-            exp = math.log(r["t_big"] / r["t_small"]) / math.log(ratio)
-            rows.append({
-                "plan": name,
-                "t_small": round(r["t_small"], 2),
-                "t_big": round(r["t_big"], 2),
-                "exponent": round(exp, 2),
-            })
-            print(
-                f"{name:32s} {r['t_small']:6.2f}s -> "
-                f"{r['t_big']:6.2f}s   e={exp:+.2f}",
-                flush=True,
-            )
-        out = Path(args.out)
-        out.write_text(json.dumps(
-            {"small": small, "big": big, "ratio": ratio,
-             "fresh_jvm_per_plan": True, "rows": rows},
-            indent=1,
-        ))
-        print(f"wrote {out}")
-        return
-
-    from pyspark.sql import functions as F
-
     from omniengine_spark.plans import QUERIES
-    from omniengine_spark.session import get_spark
-    spark = get_spark(app_name="scale-soak", shuffle_partitions=32)
-    spark.range(1000).selectExpr("sum(id)").collect()
 
-    def run(name: str, sf_dir: str) -> float:
-        # build INSIDE the timer: iterative plans (connected
-        # components) execute jobs eagerly during construction
-        spark.catalog.clearCache()  # no cross-run persist() reuse
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-        return time.perf_counter() - t0
-
+    spark = None if args.fresh else _session()
     rows = []
-    for name in names:
+    for name in args.plans or DEFAULT_PLANS:
         if name not in QUERIES:
             print(f"skip {name}: not registered", file=sys.stderr)
             continue
-        run(name, small)  # warm codegen/readers for this plan shape
-        t_small = min(run(name, small) for _ in range(args.runs))
-        t_big = min(run(name, big) for _ in range(args.runs))
-        exp = math.log(t_big / t_small) / math.log(ratio)
-        rows.append(
-            {
-                "plan": name,
-                "t_small": round(t_small, 2),
-                "t_big": round(t_big, 2),
-                "exponent": round(exp, 2),
-            }
-        )
+        if args.fresh:
+            r = measure_fresh(name, small, big, args.runs)
+            if r is None:
+                continue
+        else:
+            r = measure_one(spark, name, small, big, args.runs)
+        exp = math.log(r["t_big"] / r["t_small"]) / math.log(ratio)
+        rows.append({
+            "plan": name,
+            "t_small": round(r["t_small"], 2),
+            "t_big": round(r["t_big"], 2),
+            "exponent": round(exp, 2),
+        })
         print(
-            f"{name:32s} {t_small:6.2f}s -> {t_big:6.2f}s   e={exp:+.2f}",
+            f"{name:32s} {r['t_small']:6.2f}s -> "
+            f"{r['t_big']:6.2f}s   e={exp:+.2f}",
             flush=True,
         )
+    fresh = {"fresh_jvm_per_plan": True} if args.fresh else {}
     out = Path(args.out)
     out.write_text(json.dumps(
-        {"small": small, "big": big, "ratio": ratio, "rows": rows},
+        {"small": small, "big": big, "ratio": ratio, **fresh, "rows": rows},
         indent=1,
     ))
     print(f"wrote {out}")

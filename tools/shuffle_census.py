@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Shuffle-bytes cost model: execute the bench-dominant plans and
 record how many bytes each one actually moves (shuffle write + read,
-plus spill), from the Spark UI REST API.
+plus spill), from the stage counters of ``tools.measure.run_measured``
+(the status store; no Spark UI).
 
 Seconds hide data movement — a plan can get "faster" while starting
 to shuffle 10× the bytes (the thing that bites first on a real
@@ -24,8 +25,6 @@ from __future__ import annotations
 
 import json
 import sys
-import time
-import urllib.request
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -34,21 +33,10 @@ sys.path.insert(0, str(_REPO))
 from tools.scale_soak import DEFAULT_PLANS  # noqa: E402
 
 
-def stage_metrics(ui: str, app: str) -> dict[int, dict]:
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:
-        stages = json.load(r)
-    return {
-        (s["stageId"], s["attemptId"]): s
-        for s in stages
-    }
-
-
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from omniengine_spark.plans import QUERIES
     from omniengine_spark.session import get_spark
+    from tools.measure import run_measured
 
     args = sys.argv[1:]
     check = "--check" in args
@@ -56,47 +44,18 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     names = args[1:] or DEFAULT_PLANS
 
-    spark = get_spark(
-        app_name="shuffle-census",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            # keep every stage of the run: eviction would corrupt the
-            # per-plan delta accounting
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
+    spark = get_spark(app_name="shuffle-census", shuffle_partitions=32)
 
     def run(name: str) -> dict:
-        seen = set(stage_metrics(ui, app))
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-        wall = time.perf_counter() - t0
-        new = {
-            k: s for k, s in stage_metrics(ui, app).items()
-            if k not in seen
-        }
+        m = run_measured(spark, QUERIES[name], sf_dir, clear=False)
         return {
             "plan": name,
-            "sec": round(wall, 2),
-            "shuffle_write_mb": round(
-                sum(s["shuffleWriteBytes"] for s in new.values()) / 1e6, 2
-            ),
-            "shuffle_read_mb": round(
-                sum(s["shuffleReadBytes"] for s in new.values()) / 1e6, 2
-            ),
-            "spill_mb": round(
-                sum(s["diskBytesSpilled"] for s in new.values()) / 1e6, 2
-            ),
-            "input_mb": round(
-                sum(s["inputBytes"] for s in new.values()) / 1e6, 2
-            ),
-            "n_stages": len(new),
+            "sec": round(m["total_s"], 2),
+            "shuffle_write_mb": round(m["shuffle_write_mb"], 2),
+            "shuffle_read_mb": round(m["shuffle_read_mb"], 2),
+            "spill_mb": round(m["disk_spill_mb"], 2),
+            "input_mb": round(m["input_mb"], 2),
+            "n_stages": m["stages"],
         }
 
     rows = []

@@ -29,8 +29,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
-import urllib.request
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -50,11 +48,6 @@ DEFAULT_PLANS = [
 ]
 
 
-def _get(url: str):
-    with urllib.request.urlopen(url) as r:
-        return json.load(r)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--uniform", default=".localdata/sf1")
@@ -63,39 +56,15 @@ def main() -> None:
     ap.add_argument("plans", nargs="*")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from omniengine_spark.plans import QUERIES
     from omniengine_spark.session import get_spark
+    from tools.measure import run_measured, stages, task_quantiles
 
-    spark = get_spark(
-        app_name="skew-soak",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
-    base = f"{ui}/api/v1/applications/{app}"
+    spark = get_spark(app_name="skew-soak", shuffle_partitions=32)
     spark.range(1000).selectExpr("sum(id)").collect()
 
-    def stages() -> dict:
-        return {
-            (s["stageId"], s["attemptId"]): s
-            for s in _get(f"{base}/stages?status=complete")
-        }
-
     def run(name: str, sf_dir: str) -> dict:
-        seen = set(stages())
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-        wall = time.perf_counter() - t0
-        new = {k: s for k, s in stages().items() if k not in seen}
+        m = run_measured(spark, QUERIES[name], sf_dir, clear=False)
         # Straggler ratio = max/median of per-task SHUFFLE-READ
         # RECORDS on the heaviest shuffle stage.  Records, not time:
         # at this scale reducer tasks are sub-second, so time ratios
@@ -103,16 +72,13 @@ def main() -> None:
         # UNIFORM keys); record counts are deterministic and directly
         # expose the key distribution a 1000-executor run would
         # straggle on.  Scan stages are excluded by construction
-        # (no shuffle read).
+        # (no shuffle read).  Ties go to the later stage.
         best = None
-        for (sid, att), s in new.items():
-            if s["numCompleteTasks"] < 4 or s["shuffleReadBytes"] <= 0:
+        for sd in reversed(stages(spark, *m["job_ids"])):
+            if sd.numCompleteTasks() < 4 or sd.shuffleReadBytes() <= 0:
                 continue
-            q = _get(
-                f"{base}/stages/{sid}/{att}/taskSummary"
-                f"?quantiles=0.0,0.5,1.0"
-            )
-            rec = q.get("shuffleReadMetrics", {}).get("readRecords")
+            q = task_quantiles(spark, sd, [0.0, 0.5, 1.0])
+            rec = q["readRecords"] if q else None
             if not rec:
                 continue
             mx, md = rec[2], max(rec[1], 1.0)
@@ -120,11 +86,11 @@ def main() -> None:
                 best = {
                     "max_records": mx,
                     "ratio": round(mx / md, 2),
-                    "n_tasks": s["numCompleteTasks"],
+                    "n_tasks": sd.numCompleteTasks(),
                     "max_ms": q["executorRunTime"][2],
                 }
         return {
-            "sec": round(wall, 2),
+            "sec": round(m["total_s"], 2),
             "straggler": best["ratio"] if best else None,
             "bottleneck_max_records": best["max_records"] if best else None,
             "bottleneck_max_ms": best["max_ms"] if best else None,

@@ -33,8 +33,6 @@ import json
 import math
 import os
 import sys
-import time
-import urllib.request
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -61,12 +59,6 @@ DOMINANT = [
 ]
 
 
-def stage_metrics(ui: str, app: str) -> dict:
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:
-        return {(s["stageId"], s["attemptId"]): s for s in json.load(r)}
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mem", default="8g")
@@ -80,25 +72,15 @@ def main() -> None:
     # must land before the JVM exists — get_spark reads it at build
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = args.mem
 
-    from pyspark.sql import functions as F
-
     from omniengine_spark.plans import QUERIES
     from omniengine_spark.session import get_spark
+    from tools.measure import run_measured
 
-    spark = get_spark(
-        app_name="spill-soak",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
+    spark = get_spark(app_name="spill-soak", shuffle_partitions=32)
     assert spark.conf.get("spark.driver.memory") == args.mem, (
         "heap not constrained — a pre-existing session would "
         "invalidate the whole measurement"
     )
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
     spark.range(1000).selectExpr("sum(id)").collect()
 
     def run(name: str, sf_dir: str) -> tuple[float, dict]:
@@ -106,24 +88,11 @@ def main() -> None:
         # (persist()-based plans hit CacheManager plan-matching, so a
         # warm-up run would hand the measured run a hot edge cache on
         # the small rung only — inflating the exponent)
-        spark.catalog.clearCache()
-        seen = set(stage_metrics(ui, app))
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        df.select(
-            F.xxhash64(*[F.col(c) for c in df.columns]).alias("_h")
-        ).agg(F.expr("bit_xor(_h)"), F.count("_h")).collect()
-        wall = time.perf_counter() - t0
-        new = [
-            s for k, s in stage_metrics(ui, app).items() if k not in seen
-        ]
-        return wall, {
-            "disk_spill_mb": round(
-                sum(s["diskBytesSpilled"] for s in new) / 1e6, 2),
-            "mem_spill_mb": round(
-                sum(s["memoryBytesSpilled"] for s in new) / 1e6, 2),
-            "shuffle_write_mb": round(
-                sum(s["shuffleWriteBytes"] for s in new) / 1e6, 2),
+        m = run_measured(spark, QUERIES[name], sf_dir, clear=True)
+        return m["total_s"], {
+            "disk_spill_mb": round(m["disk_spill_mb"], 2),
+            "mem_spill_mb": round(m["memory_spill_mb"], 2),
+            "shuffle_write_mb": round(m["shuffle_write_mb"], 2),
         }
 
     names = args.plans or DOMINANT

@@ -3,12 +3,13 @@
 
 Self-contained: synthesizes a 20M-row day-ranged events book (180
 days, 96 range-partitioned files), commits it with
-``stats_cols=["day"]``, then answers the same 7-day window aggregate
-two ways — a full snapshot read vs a ``prune={day: (lo, hi)}`` read —
-and records wall time, scan input bytes (Spark UI REST), and the
-kept/total file count from ``pruned_files``.  Each phase runs twice
-(the second run shows the warm-cache floor); the build is reused
-across invocations.
+``stats_cols=["day"]``, then reads the same 7-day window two ways — a
+full snapshot read vs a ``prune={day: (lo, hi)}`` read — as one
+``tools.measure.run_measured`` run each, and records wall time, scan
+input bytes (the run's stage counters), the window's row count (the
+checksum count), and the kept/total file count from ``pruned_files``.
+Each phase runs twice (the second run shows the warm-cache floor);
+the build is reused across invocations.
 
 Usage: python tools/stats_skip.py [n_rows] [n_files]
 Writes tools/stats_skip.json.
@@ -20,7 +21,6 @@ import datetime as dt
 import json
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -30,37 +30,16 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from omniengine_spark.session import get_spark  # noqa: E402
 from omniengine_spark.sources import versioned as V  # noqa: E402
+from tools.measure import run_measured  # noqa: E402
 
 DAYS = 180
 WINDOW = (dt.date(2024, 3, 1), dt.date(2024, 3, 7))
 
 
-def stage_input_bytes(ui: str, app: str, seen: set) -> tuple[int, set]:
-    url = f"{ui}/api/v1/applications/{app}/stages?status=complete"
-    with urllib.request.urlopen(url) as r:
-        stages = json.load(r)
-    keys = {(s["stageId"], s["attemptId"]) for s in stages}
-    new_bytes = sum(
-        s["inputBytes"]
-        for s in stages
-        if (s["stageId"], s["attemptId"]) not in seen
-    )
-    return new_bytes, keys
-
-
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 96
-    spark = get_spark(
-        app_name="stats-skip",
-        shuffle_partitions=32,
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-        },
-    )
-    sc = spark.sparkContext
-    ui, app = sc.uiWebUrl, sc.applicationId
+    spark = get_spark(app_name="stats-skip", shuffle_partitions=32)
 
     path = str(_REPO / ".localdata" / f"stats_skip_{n_rows}_{n_files}")
     if V.current_version(path) == 0:
@@ -87,28 +66,20 @@ def main() -> None:
     kept, total = V.pruned_files(path, {"day": (lo, hi)})
 
     def run(pruned: bool) -> dict:
-        seen: set = set()
-        _, seen = stage_input_bytes(ui, app, seen)
-        t0 = time.perf_counter()
-        df = V.read_version(
-            spark, path, prune={"day": (lo, hi)} if pruned else None
-        )
-        out = (
-            df.filter(
+        def window(spark, path: str):
+            df = V.read_version(
+                spark, path, prune={"day": (lo, hi)} if pruned else None
+            )
+            return df.filter(
                 (F.col("day") >= F.lit(lo)) & (F.col("day") <= F.lit(hi))
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("cents").alias("cents"),
-            )
-            .collect()[0]
-        )
-        wall = time.perf_counter() - t0
-        ib, _ = stage_input_bytes(ui, app, seen)
+            ).select("cents")
+
+        # the checksum's count is the window's row count
+        m = run_measured(spark, window, path, clear=False)
         return {
-            "sec": round(wall, 3),
-            "input_mb": round(ib / 1e6, 2),
-            "rows": out["n"],
+            "sec": round(m["total_s"], 3),
+            "input_mb": round(m["input_mb"], 2),
+            "rows": m["checksum"][1],
         }
 
     # interleave cold/warm: full, pruned, full, pruned
