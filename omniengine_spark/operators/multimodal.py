@@ -134,34 +134,6 @@ def _bin_shift(bins: int) -> int:
     return 8 - bins.bit_length() + 1
 
 
-def byte_histogram_features(media: DataFrame, bins: int = 16) -> DataFrame:
-    """(doc_id, feat: array<float>) — a deterministic stand-in for an
-    embedding model: L1-normalized byte histogram, Arrow-batched."""
-    shift = _bin_shift(bins)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("feat", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                hist = np.bincount(arr >> shift, minlength=bins).astype(
-                    np.float32
-                )
-                total = hist.sum()
-                feats.append(hist / total if total else hist)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].to_numpy(), "feat": feats}
-            )
-
-    return media.mapInPandas(featurize, schema=schema)
-
-
 def byte_histogram_scalars(media: DataFrame, bins: int = 16) -> DataFrame:
     """(doc_id, bin_00..bin_NN) — the byte histogram as per-bin integer
     count columns instead of one array column.
@@ -170,8 +142,7 @@ def byte_histogram_scalars(media: DataFrame, bins: int = 16) -> DataFrame:
     every output column, which requires hashable scalars — an
     ``array<float>`` column crashes it (round-1 lesson).  Integer
     counts also dodge float-normalization comparisons entirely, so the
-    plan is exactly oracle-checkable.  Same Arrow-batched mapInPandas
-    plumbing as the array variant."""
+    plan is exactly oracle-checkable.  Arrow-batched via mapInPandas."""
     shift = _bin_shift(bins)
     fields = [T.StructField("doc_id", T.LongType())]
     names = [f"bin_{i:02d}" for i in range(bins)]

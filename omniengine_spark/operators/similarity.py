@@ -303,55 +303,6 @@ def ivf_ann_topk_portable(
     )
 
 
-def hyperplane_bucket_expr(
-    vec_col: str, n_planes: int, seed: int, dim: int
-) -> Column:
-    """The bucket id as a pure Column: bit i = sign(v · h_i) with
-    ``deterministic_planes`` literals baked in — no broadcast state,
-    no per-element hash evaluation in an interpreted HOF lambda (a
-    measured 13× trap), reproducible on any engine."""
-    planes = deterministic_planes(seed, n_planes, dim)
-
-    def plane_bit(plane: int) -> Column:
-        lit_plane = F.array(*[F.lit(c) for c in planes[plane]])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                lit_plane,
-                lambda x, h: x.cast("double") * h,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(
-            dot >= 0, F.shiftleft(F.lit(1).cast("long"), plane)
-        ).otherwise(F.lit(0).cast("long"))
-
-    bucket = plane_bit(0)
-    for p in range(1, n_planes):
-        bucket = bucket.bitwiseOR(plane_bit(p))
-    return bucket
-
-
-def hyperplane_lsh_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
-    """Random-hyperplane signature per vector (see
-    ``hyperplane_bucket_expr``)."""
-    return df.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        hyperplane_bucket_expr(vec_col, n_planes, seed, dim).alias(
-            "bucket"
-        ),
-    )
-
-
 def adaptive_planes_sql(
     count_col: str = "cnt", occupancy: int = 64, floor_bits: int = 4
 ) -> str:
@@ -470,7 +421,7 @@ def lsh_ann_topk(
     # the p_bits plane dots land in an array column FIRST, so each
     # fold runs once per (vector, table) and both the bucket bits AND
     # the probe margins derive from the same stored doubles (the bit
-    # is dot >= 0, exactly hyperplane_bucket_expr's test)
+    # is dot >= 0)
     dotted = vectors.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("vec"),

@@ -1,17 +1,26 @@
 """The one measured-run path (``tools/measure.py``) and the tools built
 on it: counters read from the status store with the Spark UI off, a
-checksum that does not depend on partitioning, and every tool module
-importable."""
+checksum that does not depend on partitioning, the fresh-process phase
+protocol, no tool timing or spawning phases by itself, and every tool
+module importable."""
 
 from __future__ import annotations
 
 import importlib
+import re
 from pathlib import Path
 
 import pytest
 
 from omniengine_spark.plans import QUERIES
-from tools.measure import next_job_id, node_metrics, run_measured
+from tools.ann_recall import recall
+from tools.measure import (
+    measured,
+    next_job_id,
+    node_metrics,
+    run_measured,
+    run_phase,
+)
 
 from .conftest import SF_SMOKE
 
@@ -76,10 +85,70 @@ def test_checksum_stable_across_runs_and_partitionings(spark, name):
     assert len(set(sums)) == 1, sums
 
 
-@pytest.mark.parametrize(
-    "module",
-    sorted(p.stem for p in (Path(__file__).parents[1] / "tools").glob("*.py")),
-)
+_REPO = Path(__file__).parents[1]
+_TOOLS = sorted((_REPO / "tools").glob("*.py"))
+
+
+def test_run_phase_returns_the_child_record_with_loadavg(tmp_path):
+    child = tmp_path / "child.py"
+    child.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(_REPO)!r})\n"
+        "from tools.measure import phase_result\n"
+        "print('noise')\n"
+        "phase_result({'phase': sys.argv[2], 'argv': sys.argv[3:],\n"
+        "              'df': object()})\n"
+    )
+    rec = run_phase(str(child), "ingest", ["--lo", "7"])
+    assert rec["phase"] == "ingest"
+    assert rec["argv"] == ["--lo", "7"]
+    assert "df" not in rec
+    assert rec["loadavg"] >= 0
+
+
+def test_run_phase_raises_with_the_stderr_tail(tmp_path):
+    child = tmp_path / "child.py"
+    child.write_text(
+        "import sys\n"
+        "print('started')\n"
+        "sys.exit('boom: the child died before its result line')\n"
+    )
+    with pytest.raises(RuntimeError, match="boom: the child died"):
+        run_phase(str(child), "build", [])
+
+
+def test_measured_counts_the_jobs_of_a_write(spark, tmp_path):
+    out = str(tmp_path / "t.parquet")
+    rec = measured(
+        spark, lambda: spark.range(1000).write.mode("overwrite").parquet(out)
+    )
+    assert rec["jobs"] >= 1
+    assert rec["output_mb"] > 0
+    assert rec["total_s"] > 0
+    assert rec["result"] is None
+
+
+def test_recall_of_an_empty_exact_set_is_zero():
+    assert recall({1: {2}}, {}) == 0.0
+    assert recall({}, {1: {2, 3}}) == 0.0
+    assert recall({1: {2}}, {1: {2, 3}}) == 0.5
+
+
+def test_tools_time_and_spawn_phases_only_through_measure():
+    """Timers, the phase-result line and session builders live in
+    ``tools/measure.py`` only."""
+    pattern = re.compile(
+        r"perf_counter|PHASE_RESULT|SOAK_RESULT|def _spark\b|def _session\b"
+    )
+    found = {
+        p.name: sorted(set(pattern.findall(p.read_text())))
+        for p in _TOOLS
+        if p.name != "measure.py"
+    }
+    assert not {k: v for k, v in found.items() if v}
+
+
+@pytest.mark.parametrize("module", [p.stem for p in _TOOLS])
 def test_tool_module_imports(module):
     """Every tool guards ``main()``, so importing one runs nothing; a
     broken import after code moves between tools fails here."""

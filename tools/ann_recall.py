@@ -10,6 +10,8 @@ behavior — more planes means smaller buckets and a different
 recall/scan-fraction trade at every rung.  This tool measures the
 actual curve and records it; tests/test_similarity.py pins per-scale
 floors from it (skip-if-absent for rungs whose data isn't generated).
+Each plan is one ``run_measured`` run (``sec`` is its total); the
+top-k sets for recall are collected after it, untimed.
 
 Usage:
     python tools/ann_recall.py [sf_dir ...]     # default: the ladder
@@ -20,11 +22,12 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
+
+from tools.measure import run_measured, tool_session  # noqa: E402
 
 DEFAULT_DIRS = [
     "/root/testdata/sf0.01",
@@ -52,16 +55,14 @@ def recall(approx: dict, exact: dict) -> float:
     for qid, nbrs in exact.items():
         total += len(nbrs)
         hits += len(nbrs & approx.get(qid, set()))
-    return hits / total
+    return hits / total if total else 0.0
 
 
 def main() -> None:
     from omniengine_spark.plans import QUERIES
-    from omniengine_spark.session import get_spark
 
     dirs = sys.argv[1:] or DEFAULT_DIRS
-    spark = get_spark(app_name="ann-recall", shuffle_partitions=32)
-    spark.range(1000).selectExpr("sum(id)").collect()
+    spark = tool_session("ann-recall")
 
     out_path = _REPO / "tools" / "ann_recall.json"
     blob = json.loads(out_path.read_text()) if out_path.exists() else {}
@@ -74,11 +75,13 @@ def main() -> None:
         )
         row = {}
         for name in ANN_PLANS:
-            t0 = time.perf_counter()
-            r = recall(topk_sets(QUERIES[name](spark, sf_dir)), exact)
+            m = run_measured(spark, QUERIES[name], sf_dir, clear=False)
+            r = recall(topk_sets(m["df"]), exact)
             row[name] = {
                 "recall_at_5": round(r, 3),
-                "sec": round(time.perf_counter() - t0, 2),
+                "sec": round(m["total_s"], 2),
+                "build_s": round(m["build_s"], 2),
+                "jobs": m["jobs"],
             }
             print(f"{sf_dir:24s} {name:22s} recall@5={r:.3f}", flush=True)
         blob[sf_dir] = row

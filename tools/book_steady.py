@@ -20,10 +20,11 @@ production anyway):
   query    in one JVM, run the trailing-24 h aggregate twice —
            PRUNED first (anchor from stats_minmax metadata, files
            from the manifest intersection; cold cache), then FULL
-           (read_version, no prune) — and assert the two results are
-           EXACTLY equal (skipping is advisory; a wrong drop would
-           show up here, not just in unit tests).  Pruned runs first
-           so the full scan cannot pre-warm the window's pages for it.
+           (read_version, no prune) — each a ``run_measured`` run
+           — and assert the two result checksums are equal (skipping
+           is advisory; a wrong drop would show up here, not just in
+           unit tests).  Pruned runs first so the full scan cannot
+           pre-warm the window's pages for it.
 
 After ingest 5: versioned.compact(cluster_by=["ts"]) + vacuum — the
 squash must neither lose the stats manifest (round-11 default) nor
@@ -49,14 +50,20 @@ import datetime as dt
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
+
+from tools.measure import (  # noqa: E402
+    measured,
+    phase_result,
+    run_measured,
+    run_phase,
+    tool_session,
+)
 
 EPOCH = dt.datetime(2024, 1, 1)
 SPAN_DAYS = 30           # one sf0.1 events copy spans ~Jan 1-30
@@ -66,17 +73,10 @@ N_INGESTS = 10
 COMPACT_AFTER = 5
 FILES_PER_SLAB = 12      # ~7.5 days per file, both seed and slabs
 BASE_FILES = 24
+APP = "book-steady"
 
 
-def _spark():
-    from omniengine_spark.session import get_spark
-
-    spark = get_spark(app_name="book-steady", shuffle_partitions=32)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    return spark
-
-
-def phase_gen(sf: str, data: str, r: int, dup: int) -> float:
+def phase_gen(sf: str, data: str, r: int, dup: int) -> dict:
     """Materialize the replicated events table as plain parquet — the
     'upstream feed' the book ingests from.  R copies shifted +30 d
     each stretch the TIME axis (archive growth); ``dup`` copies per
@@ -87,11 +87,10 @@ def phase_gen(sf: str, data: str, r: int, dup: int) -> float:
 
     from omniengine_spark.sources import load_table
 
-    spark = _spark()
+    spark = tool_session(APP)
     ev = load_table(spark, sf, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    t0 = time.perf_counter()
     copies = (
         ev.crossJoin(spark.range(r).select(F.col("id").alias("copy")))
         .crossJoin(spark.range(dup).select(F.col("id").alias("dup")))
@@ -110,10 +109,11 @@ def phase_gen(sf: str, data: str, r: int, dup: int) -> float:
             "value",
         )
     )
-    copies.repartitionByRange(r * 2, "ts").write.mode(
-        "overwrite"
-    ).parquet(data)
-    return time.perf_counter() - t0
+    return measured(
+        spark,
+        lambda: copies.repartitionByRange(r * 2, "ts")
+        .write.mode("overwrite").parquet(data),
+    )
 
 
 def _slab(spark, data: str, lo_day: int, hi_day: int):
@@ -127,55 +127,52 @@ def _slab(spark, data: str, lo_day: int, hi_day: int):
     )
 
 
-def phase_base(data: str, root: str) -> float:
+def phase_base(data: str, root: str) -> dict:
     from omniengine_spark.sources import versioned as V
 
-    spark = _spark()
+    spark = tool_session(APP)
     slab = _slab(spark, data, 0, BASE_DAYS)
-    t0 = time.perf_counter()
-    V.commit(
+    return measured(spark, lambda: V.commit(
         slab.repartitionByRange(BASE_FILES, "ts"),
         root,
         "base",
         stats_cols=["ts"],
-    )
-    return time.perf_counter() - t0
+    ))
 
 
-def phase_ingest(data: str, root: str, lo_day: int) -> float:
+def phase_ingest(data: str, root: str, lo_day: int) -> dict:
     from omniengine_spark.sources import versioned as V
 
-    spark = _spark()
+    spark = tool_session(APP)
     slab = _slab(spark, data, lo_day, lo_day + SLAB_DAYS)
-    t0 = time.perf_counter()
-    V.commit(
+    return measured(spark, lambda: V.commit(
         slab.repartitionByRange(FILES_PER_SLAB, "ts"),
         root,
         f"slab d{lo_day}",
         base_version=V.current_version(root),
         stats_cols=["ts"],
-    )
-    return time.perf_counter() - t0
+    ))
 
 
-def phase_compact(data: str, root: str) -> float:
+def phase_compact(data: str, root: str) -> dict:
     from omniengine_spark.sources import versioned as V
 
-    spark = _spark()
-    t0 = time.perf_counter()
-    V.compact(spark, root, "clustered squash", cluster_by=["ts"])
-    V.vacuum(root, keep_last=1)
-    return time.perf_counter() - t0
+    def squash():
+        V.compact(spark, root, "clustered squash", cluster_by=["ts"])
+        V.vacuum(root, keep_last=1)
+
+    spark = tool_session(APP)
+    return measured(spark, squash)
 
 
 def phase_query(data: str, root: str) -> dict:
     """Trailing-24 h by event_type: pruned (metadata anchor + file
-    skipping) FIRST, then full scan; exact result equality asserted."""
+    skipping) FIRST, then full scan; equal result checksums asserted."""
     from pyspark.sql import functions as F
 
     from omniengine_spark.sources import versioned as V
 
-    spark = _spark()  # get_spark pins session tz UTC (session.py)
+    spark = tool_session(APP)  # get_spark pins session tz UTC (session.py)
 
     # warm the parquet reader / codegen / agg pathway on a throwaway
     # 1-row table so the FIRST timed query isn't charged for JVM
@@ -196,65 +193,56 @@ def phase_query(data: str, root: str) -> dict:
     finally:
         shutil.rmtree(warm, ignore_errors=True)
 
-    def agg(df, anchor_naive):
-        return (
-            df.filter(
-                F.col("ts") > F.lit(anchor_naive - dt.timedelta(days=1))
-            )
-            .groupBy("event_type")
-            .agg(
-                F.sum(F.col("value").cast("decimal(18,4)")).alias("v"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-
-    t0 = time.perf_counter()
     rng = V.stats_minmax(root, "ts")
     assert rng is not None, "anchor must come from the manifest"
-    anchor = rng[1]
-    window_lo = anchor - dt.timedelta(days=1)
-    pruned_df = V.read_version(spark, root, prune={"ts": (window_lo, None)})
-    pruned_rows = sorted(
-        map(tuple, agg(pruned_df, anchor.replace(tzinfo=None)).collect())
-    )
-    t_pruned = time.perf_counter() - t0
-    # hot repeat: footers/pages cached, planning amortized — the
-    # serve-many steady state, where fixed JVM/FS bring-up (which
-    # dominates BOTH cold numbers at this data size) divides out
-    t0 = time.perf_counter()
-    agg(pruned_df, anchor.replace(tzinfo=None)).collect()
-    t_pruned_hot = time.perf_counter() - t0
+    window_lo = rng[1] - dt.timedelta(days=1)
+
+    def window(prune):
+        def fn(spark, root):
+            return (
+                V.read_version(spark, root, prune=prune)
+                .filter(F.col("ts") > F.lit(window_lo.replace(tzinfo=None)))
+                .groupBy("event_type")
+                .agg(
+                    F.sum(F.col("value").cast("decimal(18,4)")).alias("v"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+            )
+
+        return fn
+
+    # the hot repeat re-runs the built frame: footers/pages cached,
+    # planning amortized — the serve-many steady state, where fixed
+    # JVM/FS bring-up (which dominates BOTH cold numbers at this data
+    # size) divides out
+    pruned = run_measured(spark, window({"ts": (window_lo, None)}), root,
+                          clear=False)
+    pruned_hot = run_measured(spark, lambda s, d: pruned["df"], root,
+                              clear=False)
 
     kept, total = V.pruned_files(root, {"ts": (window_lo, None)})
     kept_mb = sum(os.path.getsize(f) for f in kept) / 1e6
     all_files, _ = V.pruned_files(root, {})
     total_mb = sum(os.path.getsize(f) for f in all_files) / 1e6
 
-    full_df = V.read_version(spark, root)
-    t0 = time.perf_counter()
-    full_rows = sorted(
-        map(
-            tuple,
-            agg(full_df, anchor.replace(tzinfo=None)).collect(),
-        )
-    )
-    t_full = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    agg(full_df, anchor.replace(tzinfo=None)).collect()
-    t_full_hot = time.perf_counter() - t0
-    assert pruned_rows == full_rows and pruned_rows, (
-        f"pruned result diverged: {len(pruned_rows)} vs {len(full_rows)}"
+    full = run_measured(spark, window(None), root, clear=False)
+    full_hot = run_measured(spark, lambda s, d: full["df"], root,
+                            clear=False)
+    assert pruned["checksum"] == full["checksum"] and pruned["checksum"][1], (
+        f"pruned result diverged: {pruned['checksum']} vs {full['checksum']}"
     )
     return {
-        "pruned_sec": round(t_pruned, 2),
-        "pruned_hot_sec": round(t_pruned_hot, 3),
-        "full_sec": round(t_full, 2),
-        "full_hot_sec": round(t_full_hot, 3),
+        "pruned_sec": round(pruned["total_s"], 2),
+        "pruned_hot_sec": round(pruned_hot["total_s"], 3),
+        "full_sec": round(full["total_s"], 2),
+        "full_hot_sec": round(full_hot["total_s"], 3),
+        "pruned_input_mb": round(pruned["input_mb"], 2),
+        "full_input_mb": round(full["input_mb"], 2),
         "kept_files": len(kept),
         "total_files": total,
         "kept_mb": round(kept_mb, 2),
         "total_mb": round(total_mb, 2),
-        "groups": len(pruned_rows),
+        "groups": pruned["checksum"][1],
         "equal": True,
     }
 
@@ -274,74 +262,47 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.phase:
-        res = {
+        phase_result({
             "gen": lambda: phase_gen(args.sf, args.data, args.r, args.dup),
             "base": lambda: phase_base(args.data, args.root),
             "ingest": lambda: phase_ingest(args.data, args.root, args.lo),
             "compact": lambda: phase_compact(args.data, args.root),
             "query": lambda: phase_query(args.data, args.root),
-        }[args.phase]()
-        if not isinstance(res, dict):
-            res = {"t": res}
-        print(f"PHASE_RESULT {json.dumps(res)}", flush=True)
+        }[args.phase]())
         return
 
     data = tempfile.mkdtemp(prefix="book-steady-data-")
     root = tempfile.mkdtemp(prefix="book-steady-root-")
+    argv = ["--sf", args.sf, "--r", str(args.r), "--dup", str(args.dup),
+            "--data", data, "--root", root]
 
-    def run_phase(phase: str, lo: int | None = None) -> dict:
-        load = os.getloadavg()[0]
-        cmd = [
-            sys.executable, __file__,
-            "--sf", args.sf, "--r", str(args.r), "--dup", str(args.dup),
-            "--phase", phase, "--data", data, "--root", root,
-        ]
-        if lo is not None:
-            cmd += ["--lo", str(lo)]
-        proc = subprocess.run(cmd, capture_output=True, text=True)
-        line = next(
-            (
-                ln for ln in proc.stdout.splitlines()
-                if ln.startswith("PHASE_RESULT ")
-            ),
-            None,
-        )
-        if line is None:
-            sys.exit(f"{phase} FAILED\n{proc.stderr[-3000:]}")
-        res = json.loads(line[len("PHASE_RESULT "):])
-        res["loadavg"] = round(load, 2)
-        shown = res.get("t", res.get("pruned_sec"))
-        print(f"{phase:8s} lo={lo} {shown}  (load {load:.1f})", flush=True)
+    def phase(name: str, lo: int | None = None) -> dict:
+        res = run_phase(__file__, name,
+                        argv if lo is None else argv + ["--lo", str(lo)])
+        shown = res.get("pruned_sec", res.get("total_s"))
+        print(f"{name:8s} lo={lo} {shown}  (load {res['loadavg']:.1f})",
+              flush=True)
         return res
 
     try:
-        t_gen = run_phase("gen")["t"]
-        t_base = run_phase("base")["t"]
+        t_gen = phase("gen")["total_s"]
+        t_base = phase("base")["total_s"]
         steps = []
         t_compact = None
         for i in range(N_INGESTS):
             lo = BASE_DAYS + i * SLAB_DAYS
-            ing = run_phase("ingest", lo=lo)
+            ing = phase("ingest", lo=lo)
             if i + 1 == COMPACT_AFTER:
-                t_compact = run_phase("compact")["t"]
-            q = run_phase("query")
+                t_compact = phase("compact")["total_s"]
+            q = phase("query")
             steps.append(
                 {
                     "step": i + 1,
                     "archive_days": lo + SLAB_DAYS,
                     "compacted": i + 1 >= COMPACT_AFTER,
-                    "ingest_sec": round(ing["t"], 2),
-                    **{
-                        k: q[k]
-                        for k in (
-                            "pruned_sec", "pruned_hot_sec",
-                            "full_sec", "full_hot_sec",
-                            "kept_files", "total_files",
-                            "kept_mb", "total_mb",
-                            "groups", "equal",
-                        )
-                    },
-                    "loadavg": q["loadavg"],
+                    "ingest_sec": round(ing["total_s"], 2),
+                    "ingest_output_mb": round(ing["output_mb"], 2),
+                    **q,
                 }
             )
     finally:

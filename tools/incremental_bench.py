@@ -17,6 +17,10 @@ Production runs `build` once and `ingest` per crawl shard, so the
 claim to verify is  t_ingest ≪ t_oneshot  (the shard here is ~10% of
 the corpus by construction; at a real 0.1% shard the gap widens —
 ingest cost is shard-proportional plus candidate traffic).
+``ingest`` and ``oneshot`` return the pair set, so they are
+``run_measured`` runs (the checksum collect forces every pair);
+``build`` is ``measured``.  Each phase's record — wall time, Spark
+counters and, for the pair sets, the checksum — is under ``phases``.
 
 Usage:
     python tools/incremental_bench.py [--data .localdata/rv25]
@@ -27,83 +31,64 @@ from __future__ import annotations
 
 import argparse
 import json
-import subprocess
 import sys
 import tempfile
-import time
 from fractions import Fraction
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
 
+from tools.measure import (  # noqa: E402
+    measured,
+    phase_result,
+    run_measured,
+    run_phase,
+    tool_session,
+)
+
 MOD, REM = 10, 7
 PARAMS = dict(n=3, num_hashes=128, band_rows=4)
 
 
-def _spark():
-    from omniengine_spark.session import get_spark
-
-    spark = get_spark(app_name="inc-bench", shuffle_partitions=32)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    return spark
-
-
 def _docs(spark, data: str):
-    from pyspark.sql import functions as F
-
     from omniengine_spark.sources import fan_out, load_table
 
-    docs = fan_out(load_table(spark, data, "documents"))
-    return (
-        docs,
-        docs.filter(F.col("doc_id") % MOD != REM),
-        docs.filter(F.col("doc_id") % MOD == REM),
-    )
+    return fan_out(load_table(spark, data, "documents"))
 
 
-def phase_build(data: str, root: str) -> float:
+def _in_shard():
+    from pyspark.sql import functions as F
+
+    return F.col("doc_id") % MOD == REM
+
+
+def phase_build(spark, data: str, root: str) -> dict:
     from omniengine_spark.operators import minhash_index as MI
 
-    spark = _spark()
-    _, corpus, _ = _docs(spark, data)
-    t0 = time.perf_counter()
-    MI.build_index(
+    corpus = _docs(spark, data).filter(~_in_shard())
+    return measured(spark, lambda: MI.build_index(
         spark, root, corpus, "doc_id", "text",
         threshold=Fraction(4, 5), tag="bench base", **PARAMS,
-    )
-    return time.perf_counter() - t0
+    ))
 
 
-def phase_ingest(data: str, root: str) -> float:
+def phase_ingest(spark, data: str, root: str) -> dict:
     from omniengine_spark.operators import minhash_index as MI
 
-    spark = _spark()
-    _, _, shard = _docs(spark, data)
-    t0 = time.perf_counter()
-    pairs = MI.ingest_shard(
-        spark, root, shard, "doc_id", "text",
+    return run_measured(spark, lambda spark, data: MI.ingest_shard(
+        spark, root, _docs(spark, data).filter(_in_shard()), "doc_id", "text",
         threshold=Fraction(4, 5), tag="bench +shard", **PARAMS,
-    )
-    n = pairs.count()
-    dt = time.perf_counter() - t0
-    print(f"ingest pairs={n}", file=sys.stderr)
-    return dt
+    ), data, clear=False)
 
 
-def phase_oneshot(data: str) -> float:
+def phase_oneshot(spark, data: str) -> dict:
     from omniengine_spark.operators import dedup as D
 
-    spark = _spark()
-    docs, _, _ = _docs(spark, data)
-    t0 = time.perf_counter()
-    n = D.minhash_lsh_pairs(
-        docs, "doc_id", "text",
+    return run_measured(spark, lambda spark, data: D.minhash_lsh_pairs(
+        _docs(spark, data), "doc_id", "text",
         threshold=Fraction(4, 5), **PARAMS,
-    ).count()
-    dt = time.perf_counter() - t0
-    print(f"oneshot pairs={n}", file=sys.stderr)
-    return dt
+    ), data, clear=False)
 
 
 def main() -> None:
@@ -117,34 +102,20 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.phase:
-        dt = {
-            "build": lambda: phase_build(args.data, args.root),
-            "ingest": lambda: phase_ingest(args.data, args.root),
-            "oneshot": lambda: phase_oneshot(args.data),
-        }[args.phase]()
-        print(f"PHASE_RESULT {json.dumps({'t': dt})}", flush=True)
+        spark = tool_session("inc-bench")
+        phase_result({
+            "build": lambda: phase_build(spark, args.data, args.root),
+            "ingest": lambda: phase_ingest(spark, args.data, args.root),
+            "oneshot": lambda: phase_oneshot(spark, args.data),
+        }[args.phase]())
         return
 
     root = tempfile.mkdtemp(prefix="incbench-")
-    times = {}
+    times, runs = {}, {}
     for phase in ("build", "ingest", "oneshot"):
-        cmd = [
-            sys.executable, __file__,
-            "--data", args.data, "--phase", phase, "--root", root,
-        ]
-        proc = subprocess.run(cmd, capture_output=True, text=True)
-        line = next(
-            (
-                ln for ln in proc.stdout.splitlines()
-                if ln.startswith("PHASE_RESULT ")
-            ),
-            None,
-        )
-        if line is None:
-            sys.exit(f"{phase} FAILED\n{proc.stderr[-3000:]}")
-        times[phase] = round(
-            json.loads(line[len("PHASE_RESULT "):])["t"], 2
-        )
+        runs[phase] = run_phase(__file__, phase,
+                                ["--data", args.data, "--root", root])
+        times[phase] = round(runs[phase]["total_s"], 2)
         print(f"{phase:8s} {times[phase]:7.2f}s", flush=True)
 
     out = {
@@ -158,6 +129,7 @@ def main() -> None:
         "ingest_over_oneshot": round(
             times["ingest"] / times["oneshot"], 3
         ),
+        "phases": runs,
         "note": (
             "build runs once per corpus; ingest is the per-shard "
             "steady state. The shard is ~10% of the corpus here; "

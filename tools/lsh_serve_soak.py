@@ -25,11 +25,13 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
+
+from tools.ann_recall import recall, topk_sets  # noqa: E402
+from tools.measure import measured, run_measured  # noqa: E402
 
 DEFAULT_RUNGS = [
     "/root/testdata/sf0.01",
@@ -49,21 +51,6 @@ SHARD_BITS = 4
 # index), so the artifact records the skip explicitly instead of
 # re-paying it every soak
 ONESHOT_CAP = 5_000
-
-
-def topk_sets(df) -> dict:
-    out: dict = {}
-    for r in df.collect():
-        out.setdefault(r["query_id"], set()).add(r["nbr_id"])
-    return out
-
-
-def recall(approx: dict, exact: dict) -> float:
-    hits = total = 0
-    for qid, nbrs in exact.items():
-        total += len(nbrs)
-        hits += len(nbrs & approx.get(qid, set()))
-    return hits / total if total else 0.0
 
 
 def main() -> None:
@@ -86,9 +73,10 @@ def main() -> None:
         n = emb.count()
         queries = emb.orderBy("vec_id").limit(N_QUERIES)
 
-        t0 = time.time()
-        entries, n_act = _lsh_index_tables(spark, rung, base_only=False)
-        build_s = time.time() - t0
+        build = measured(
+            spark, lambda: _lsh_index_tables(spark, rung, base_only=False)
+        )
+        entries, n_act = build["result"]
 
         def served():
             return AI.lsh_query_index(
@@ -97,12 +85,8 @@ def main() -> None:
                 shard_bits=SHARD_BITS, dim=64,
             )
 
-        t0 = time.time()
-        serve_rows = served().count()
-        serve_cold_s = time.time() - t0
-        t0 = time.time()
-        served().count()
-        serve_warm_s = time.time() - t0
+        cold = run_measured(spark, lambda s, d: served(), rung, clear=False)
+        warm = run_measured(spark, lambda s, d: served(), rung, clear=False)
 
         # candidate volume: the scored join BEFORE distinct/rank —
         # the honest cost currency (each row = one exact rescore +
@@ -130,10 +114,11 @@ def main() -> None:
         )
 
         if n <= ONESHOT_CAP:
-            t0 = time.time()
-            oneshot = QUERIES["sim_lsh_ann_topk"](spark, rung)
-            oneshot_sets = topk_sets(oneshot)
-            oneshot_s = round(time.time() - t0, 2)
+            oneshot = run_measured(
+                spark, QUERIES["sim_lsh_ann_topk"], rung, clear=False
+            )
+            oneshot_sets = topk_sets(oneshot["df"])
+            oneshot_s = round(oneshot["total_s"], 2)
         else:
             oneshot_sets, oneshot_s = None, None
 
@@ -146,10 +131,13 @@ def main() -> None:
             "rung": rung,
             "n_vectors": n,
             "n_act": n_act,
-            "build_s": round(build_s, 2),
-            "serve_cold_s": round(serve_cold_s, 2),
-            "serve_warm_s": round(serve_warm_s, 2),
-            "serve_rows": serve_rows,
+            "build_s": round(build["total_s"], 2),
+            "build_jobs": build["jobs"],
+            "build_output_mb": round(build["output_mb"], 2),
+            "serve_cold_s": round(cold["total_s"], 2),
+            "serve_warm_s": round(warm["total_s"], 2),
+            "serve_jobs": cold["jobs"],
+            "serve_rows": cold["checksum"][1],
             "candidates": candidates,
             "candidates_per_query": round(candidates / N_QUERIES, 1),
             "kept_dirs": kept_dirs,

@@ -24,10 +24,19 @@ the clock stops, so they need no Spark UI (``spark.ui.enabled=false``
 is fine).  Job ids rise by one per job within a SparkContext, so the
 jobs fired between two reads of the next id belong to the run in
 between — provided one thread drives the session.  MB are 10^6 bytes.
+
+The tools time nothing themselves: a phase that builds a frame uses
+``run_measured``, a side-effect phase (a commit, an ingest, a
+compaction) uses ``measured``, and a phase that needs its own JVM runs
+through ``run_phase``, whose child reports with ``phase_result``.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
 import time
 
 from pyspark.sql import functions as F
@@ -145,6 +154,61 @@ def run_measured(spark, fn, sf_dir: str, *, clear: bool) -> dict:
         "df": df,
         "action_df": action_df,
     }
+
+
+def measured(spark, fn) -> dict:
+    """Run the side-effect phase ``fn()``: ``total_s`` is its wall
+    time, the counters are those of the jobs it fired, ``result`` is
+    what it returned."""
+    lo = next_job_id(spark)
+    t0 = time.perf_counter()
+    result = fn()
+    total_s = time.perf_counter() - t0
+    return {
+        "total_s": total_s,
+        **counters(spark, lo, next_job_id(spark)),
+        "result": result,
+    }
+
+
+def tool_session(app_name: str):
+    """The tools' session: ``get_spark`` at 32 shuffle partitions,
+    with one tiny job so the first measured phase is not charged for
+    JVM start-up."""
+    from omniengine_spark.session import get_spark
+
+    spark = get_spark(app_name=app_name, shuffle_partitions=32)
+    spark.range(1000).selectExpr("sum(id)").collect()
+    return spark
+
+
+_PHASE = "PHASE_RESULT "
+
+
+def phase_result(rec: dict) -> None:
+    """Child side of ``run_phase``: print the phase's record (its
+    frames and return value dropped) as the one result line."""
+    drop = ("df", "action_df", "result")
+    out = {k: v for k, v in rec.items() if k not in drop}
+    print(_PHASE + json.dumps(out), flush=True)
+
+
+def run_phase(script: str, phase: str, argv: list[str]) -> dict:
+    """Parent side: run ``script --phase <phase> <argv>`` in a fresh
+    Python process (its own JVM) and return its ``phase_result``
+    record, with the 1-minute ``loadavg`` taken at its start.  Raises
+    with the child's stderr tail when it printed no result line."""
+    load = os.getloadavg()[0]
+    proc = subprocess.run(
+        [sys.executable, script, "--phase", phase, *argv],
+        capture_output=True, text=True,
+    )
+    for line in proc.stdout.splitlines():
+        if line.startswith(_PHASE):
+            return {**json.loads(line[len(_PHASE):]),
+                    "loadavg": round(load, 2)}
+    raise RuntimeError(f"phase {phase} of {script} failed (exit "
+                       f"{proc.returncode}):\n{proc.stderr[-3000:]}")
 
 
 def _iter(scala_iterable):

@@ -30,6 +30,16 @@ state + old-gen pressure penalize whichever rung runs last, and the
 big rung always runs last.  Exponents quoted for the 100 TB story
 should come from --fresh runs; the shared-session mode remains for
 quick relative checks.
+
+Each row also records ``t_big_first``, the first big-rung run.  An
+artifact plan pays its index build there (once per process and
+dataset) and only serves from the index after it, so the build-vs-
+serve split of a persisted index is a pair of rows:
+``sim_ivf_index_query`` (t_big_first = build + serve, t_big = serve)
+against ``sim_ivf_ann_topk`` (the one-shot path), and
+``dedup_semantic_incremental`` against ``dedup_semantic_prune``.
+``tools/ivf_amortize.json`` and ``tools/seminc_bench.json`` hold the
+rv-scale measurements of the same splits.
 """
 
 from __future__ import annotations
@@ -42,6 +52,13 @@ from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
+
+from tools.measure import (  # noqa: E402
+    phase_result,
+    run_measured,
+    run_phase,
+    tool_session,
+)
 
 SMALL = "/root/testdata/sf0.01"
 BIG = "/root/testdata/sf0.1"
@@ -81,19 +98,11 @@ DEFAULT_PLANS = [
 ]
 
 
-def _session():
-    from omniengine_spark.session import get_spark
-
-    spark = get_spark(app_name="scale-soak", shuffle_partitions=32)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    return spark
-
-
 def measure_one(spark, name: str, small: str, big: str, runs: int) -> dict:
     """Warm-up + best-of-``runs`` at both rungs for one plan, in
-    ``spark``'s session."""
+    ``spark``'s session.  ``t_big_first`` is the first big-rung run:
+    the one that pays an artifact plan's index build for that data."""
     from omniengine_spark.plans import QUERIES
-    from tools.measure import run_measured
 
     def run(sf_dir: str) -> float:
         # build INSIDE the timer: iterative plans (connected
@@ -105,34 +114,8 @@ def measure_one(spark, name: str, small: str, big: str, runs: int) -> dict:
 
     run(small)  # warm codegen/readers for this plan shape
     t_small = min(run(small) for _ in range(runs))
-    t_big = min(run(big) for _ in range(runs))
-    return {"t_small": t_small, "t_big": t_big}
-
-
-def measure_fresh(name: str, small: str, big: str, runs: int) -> dict | None:
-    """``measure_one`` in a subprocess, i.e. its own JVM; None if the
-    child failed."""
-    import subprocess
-
-    cmd = [
-        sys.executable, __file__,
-        "--small", small, "--big", big,
-        "--runs", str(runs),
-        "--measure-one", name,
-    ]
-    proc = subprocess.run(cmd, capture_output=True, text=True)
-    line = next(
-        (
-            ln for ln in proc.stdout.splitlines()
-            if ln.startswith("SOAK_RESULT ")
-        ),
-        None,
-    )
-    if line is None:
-        print(f"{name}: FAILED\n{proc.stderr[-2000:]}",
-              file=sys.stderr, flush=True)
-        return None
-    return json.loads(line[len("SOAK_RESULT "):])
+    t_big = [run(big) for _ in range(runs)]
+    return {"t_small": t_small, "t_big": min(t_big), "t_big_first": t_big[0]}
 
 
 def main() -> None:
@@ -146,30 +129,31 @@ def main() -> None:
         "--fresh", action="store_true",
         help="one subprocess (fresh JVM) per plan measurement",
     )
-    ap.add_argument(
-        "--measure-one", default=None, help=argparse.SUPPRESS
-    )
+    ap.add_argument("--phase", default=None, help=argparse.SUPPRESS)
     ap.add_argument("plans", nargs="*")
     args = ap.parse_args()
     small, big, ratio = args.small, args.big, args.ratio
 
-    if args.measure_one:
-        # child mode: print one JSON line with the timings
-        r = measure_one(_session(), args.measure_one, small, big, args.runs)
-        print("SOAK_RESULT " + json.dumps(r), flush=True)
+    if args.phase:
+        # child mode: the phase is the plan name
+        phase_result(measure_one(tool_session("scale-soak"), args.phase,
+                                 small, big, args.runs))
         return
 
     from omniengine_spark.plans import QUERIES
 
-    spark = None if args.fresh else _session()
+    spark = None if args.fresh else tool_session("scale-soak")
+    argv = ["--small", small, "--big", big, "--runs", str(args.runs)]
     rows = []
     for name in args.plans or DEFAULT_PLANS:
         if name not in QUERIES:
             print(f"skip {name}: not registered", file=sys.stderr)
             continue
         if args.fresh:
-            r = measure_fresh(name, small, big, args.runs)
-            if r is None:
+            try:
+                r = run_phase(__file__, name, argv)
+            except RuntimeError as exc:
+                print(exc, file=sys.stderr, flush=True)
                 continue
         else:
             r = measure_one(spark, name, small, big, args.runs)
@@ -178,6 +162,7 @@ def main() -> None:
             "plan": name,
             "t_small": round(r["t_small"], 2),
             "t_big": round(r["t_big"], 2),
+            "t_big_first": round(r["t_big_first"], 2),
             "exponent": round(exp, 2),
         })
         print(

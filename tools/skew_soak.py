@@ -57,11 +57,14 @@ def main() -> None:
     args = ap.parse_args()
 
     from omniengine_spark.plans import QUERIES
-    from omniengine_spark.session import get_spark
-    from tools.measure import run_measured, stages, task_quantiles
+    from tools.measure import (
+        run_measured,
+        stages,
+        task_quantiles,
+        tool_session,
+    )
 
-    spark = get_spark(app_name="skew-soak", shuffle_partitions=32)
-    spark.range(1000).selectExpr("sum(id)").collect()
+    spark = tool_session("skew-soak")
 
     def run(name: str, sf_dir: str) -> dict:
         m = run_measured(spark, QUERIES[name], sf_dir, clear=False)

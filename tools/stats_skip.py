@@ -20,7 +20,6 @@ from __future__ import annotations
 import datetime as dt
 import json
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
@@ -30,7 +29,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from omniengine_spark.session import get_spark  # noqa: E402
 from omniengine_spark.sources import versioned as V  # noqa: E402
-from tools.measure import run_measured  # noqa: E402
+from tools.measure import measured, run_measured  # noqa: E402
 
 DAYS = 180
 WINDOW = (dt.date(2024, 3, 1), dt.date(2024, 3, 7))
@@ -51,14 +50,13 @@ def main() -> None:
             ).alias("day"),
             (F.col("id") * 7 % 10_000).alias("cents"),
         )
-        t0 = time.perf_counter()
-        V.commit(
+        build = measured(spark, lambda: V.commit(
             df.repartitionByRange(n_files, "day"),
             path,
             "day-ranged events book",
             stats_cols=["day"],
-        )
-        build_s = round(time.perf_counter() - t0, 2)
+        ))
+        build_s = round(build["total_s"], 2)
     else:
         build_s = None  # reused from a prior run
 

@@ -34,6 +34,8 @@ from pathlib import Path
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
 
+from tools.measure import run_measured  # noqa: E402
+
 DEFAULT_PLANS = ["x9_stream_balance_fold", "x12_stream_timer_expiry"]
 
 
@@ -122,17 +124,17 @@ def main() -> None:
                 print(f"skip {name}: not registered", file=sys.stderr)
                 continue
             batches.clear()
-            t0 = time.perf_counter()
-            out_rows = QUERIES[name](spark, str(staged)).count()
-            wall = time.perf_counter() - t0
+            m = run_measured(spark, QUERIES[name], str(staged), clear=False)
+            wall = m["total_s"]
             real = [b for b in batches if b["rows"] > 0 and b["ms"]]
             rows = sum(b["rows"] for b in real)
             durs = sorted(b["ms"] for b in real)
             r = {
                 "plan": name,
                 "input_rows": rows,
-                "out_rows": out_rows,
+                "out_rows": m["checksum"][1],
                 "wall_sec": round(wall, 2),
+                "jobs": m["jobs"],
                 "rows_per_sec": round(rows / wall, 0),
                 "n_batches": len(real),
                 "batch_ms_p50": statistics.median(durs) if durs else None,

@@ -38,16 +38,20 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
-import subprocess
 import sys
 import tempfile
-import time
 from fractions import Fraction
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(_REPO))
+
+from tools.measure import (  # noqa: E402
+    measured,
+    phase_result,
+    run_phase,
+    tool_session,
+)
 
 MOD = 10
 BASE_REMS = tuple(range(5))
@@ -57,71 +61,52 @@ PARAMS = dict(n=3, num_hashes=128, band_rows=4)
 THRESH = Fraction(4, 5)
 
 
-def _spark():
-    from omniengine_spark.session import get_spark
-
-    spark = get_spark(app_name="stream-steady", shuffle_partitions=32)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    return spark
-
-
 def _docs(spark, data: str):
     from omniengine_spark.sources import fan_out, load_table
 
     return fan_out(load_table(spark, data, "documents"))
 
 
-def phase_build(data: str, root: str) -> float:
+def phase_build(spark, data: str, root: str) -> dict:
     from pyspark.sql import functions as F
 
     from omniengine_spark.operators import minhash_index as MI
 
-    spark = _spark()
-    docs = _docs(spark, data)
-    base = docs.filter((F.col("doc_id") % MOD).isin(*BASE_REMS))
-    t0 = time.perf_counter()
-    MI.build_index(
+    base = _docs(spark, data).filter((F.col("doc_id") % MOD).isin(*BASE_REMS))
+    return measured(spark, lambda: MI.build_index(
         spark, root, base, "doc_id", "text",
         threshold=THRESH, tag="base", **PARAMS,
-    )
-    return time.perf_counter() - t0
+    ))
 
 
-def phase_batch(data: str, root: str, rem: int) -> float:
+def phase_batch(spark, data: str, root: str, rem: int) -> dict:
     from pyspark.sql import functions as F
 
     from omniengine_spark.operators import minhash_index as MI
 
-    spark = _spark()
-    docs = _docs(spark, data)
-    shard = docs.filter(F.col("doc_id") % MOD == rem)
-    t0 = time.perf_counter()
-    MI.ingest_shard(
+    shard = _docs(spark, data).filter(F.col("doc_id") % MOD == rem)
+    return measured(spark, lambda: MI.ingest_shard(
         spark, root, shard, "doc_id", "text",
         threshold=THRESH, tag=f"base +b{rem}", **PARAMS,
-    )
-    return time.perf_counter() - t0
+    ))
 
 
-def phase_compact(data: str, root: str) -> float:
+def phase_compact(spark, root: str) -> dict:
     from omniengine_spark.operators import minhash_index as MI
     from omniengine_spark.sources import versioned as V
 
-    spark = _spark()
-    t0 = time.perf_counter()
-    MI.compact_index(spark, root)
-    for path in MI.index_paths(root):
-        V.vacuum(path, keep_last=1)
-    return time.perf_counter() - t0
+    def squash():
+        MI.compact_index(spark, root)
+        for path in MI.index_paths(root):
+            V.vacuum(path, keep_last=1)
+
+    return measured(spark, squash)
 
 
-def phase_equality(data: str, root: str) -> float:
+def phase_equality(spark, data: str, root: str) -> dict:
     from omniengine_spark.operators import dedup as D
     from omniengine_spark.operators import minhash_index as MI
     from omniengine_spark.sources import versioned as V
-
-    spark = _spark()
-    docs = _docs(spark, data)
 
     def pair_set(df):
         return {
@@ -129,18 +114,17 @@ def phase_equality(data: str, root: str) -> float:
             for r in df.collect()
         }
 
-    t0 = time.perf_counter()
-    final = pair_set(V.read_version(spark, MI.index_paths(root)[1]))
-    one_shot = pair_set(
-        D.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=THRESH, **PARAMS
+    def check():
+        final = pair_set(V.read_version(spark, MI.index_paths(root)[1]))
+        one_shot = pair_set(D.minhash_lsh_pairs(
+            _docs(spark, data), "doc_id", "text", threshold=THRESH, **PARAMS
+        ))
+        assert final == one_shot and final, (
+            f"stream loop diverged: {len(final)} vs {len(one_shot)} pairs"
         )
-    )
-    assert final == one_shot and final, (
-        f"stream loop diverged: {len(final)} vs {len(one_shot)} pairs"
-    )
-    print(f"equality OK pairs={len(final)}", file=sys.stderr)
-    return time.perf_counter() - t0
+        print(f"equality OK pairs={len(final)}", file=sys.stderr)
+
+    return measured(spark, check)
 
 
 def main() -> None:
@@ -155,62 +139,55 @@ def main() -> None:
     args = ap.parse_args()
 
     if args.phase:
-        dt = {
-            "build": lambda: phase_build(args.data, args.root),
-            "batch": lambda: phase_batch(args.data, args.root, args.rem),
-            "compact": lambda: phase_compact(args.data, args.root),
-            "equality": lambda: phase_equality(args.data, args.root),
-        }[args.phase]()
-        print(f"PHASE_RESULT {json.dumps({'t': dt})}", flush=True)
+        spark = tool_session("stream-steady")
+        phase_result({
+            "build": lambda: phase_build(spark, args.data, args.root),
+            "batch": lambda: phase_batch(
+                spark, args.data, args.root, args.rem
+            ),
+            "compact": lambda: phase_compact(spark, args.root),
+            "equality": lambda: phase_equality(spark, args.data, args.root),
+        }[args.phase]())
         return
 
     root = tempfile.mkdtemp(prefix="stream-steady-")
+    argv = ["--data", args.data, "--root", root]
 
-    def run_phase(phase: str, rem: int | None = None) -> tuple[float, float]:
-        load = os.getloadavg()[0]
-        cmd = [
-            sys.executable, __file__,
-            "--data", args.data, "--phase", phase, "--root", root,
-        ]
-        if rem is not None:
-            cmd += ["--rem", str(rem)]
-        proc = subprocess.run(cmd, capture_output=True, text=True)
-        line = next(
-            (
-                ln for ln in proc.stdout.splitlines()
-                if ln.startswith("PHASE_RESULT ")
-            ),
-            None,
-        )
-        if line is None:
-            sys.exit(f"{phase} FAILED\n{proc.stderr[-3000:]}")
-        t = round(json.loads(line[len("PHASE_RESULT "):])["t"], 2)
-        label = phase if rem is None else f"{phase} rem={rem}"
-        print(f"{label:14s} {t:8.2f}s  (load {load:.1f})", flush=True)
-        return t, round(load, 2)
+    def phase(name: str, rem: int | None = None) -> dict:
+        res = run_phase(__file__, name,
+                        argv if rem is None else argv + ["--rem", str(rem)])
+        res["total_s"] = round(res["total_s"], 2)
+        label = name if rem is None else f"{name} rem={rem}"
+        print(f"{label:14s} {res['total_s']:8.2f}s  "
+              f"(load {res['loadavg']:.1f})", flush=True)
+        return res
 
     from omniengine_spark.operators import minhash_index as MI
     from omniengine_spark.sources import versioned as V
 
-    t_build, load_build = run_phase("build")
+    t_build = phase("build")["total_s"]
     epath = MI.index_paths(root)[0]
     batches = []
     t_compact = None
     for i, rem in enumerate(BATCH_REMS, start=1):
         chain = len(V.version_history(epath))
-        t, load = run_phase("batch", rem)
+        res = phase("batch", rem)
         batches.append(
             {
                 "batch": i,
-                "sec": t,
+                "sec": res["total_s"],
                 "entries_chain_len": chain,
                 "corpus_pct_indexed": 50 + (i - 1) * 10,
-                "loadavg": load,
+                "loadavg": res["loadavg"],
+                "jobs": res["jobs"],
+                "tasks": res["tasks"],
+                "input_mb": round(res["input_mb"], 2),
+                "shuffle_write_mb": round(res["shuffle_write_mb"], 2),
             }
         )
         if i == COMPACT_AFTER:
-            t_compact, _ = run_phase("compact")
-    t_eq, _ = run_phase("equality")
+            t_compact = phase("compact")["total_s"]
+    t_eq = phase("equality")["total_s"]
 
     secs = [b["sec"] for b in batches]
     out = {
