@@ -24,6 +24,25 @@ from pyspark.sql import functions as F
 # fact-table sums, scale 4 preserves cents×discount products.
 _MONEY = "decimal(25,4)"
 
+# The plans' money conventions, each defined once.  Oracle SQL spells
+# the same rules, so a plan and its oracle round identically:
+# currency and quantities as DECIMAL(18,4), ledger base units as
+# DECIMAL(19,0), and event values as whole cents, ROUND(value*100)
+# cast to BIGINT.
+DEC_18_4 = "decimal(18,4)"
+DEC_19_0 = "decimal(19,0)"
+CENTS_SQL = "CAST(ROUND(value*100) AS BIGINT)"
+
+
+def dec_18_4(c: str) -> Column:
+    """Column ``c`` as an exact ``DEC_18_4``."""
+    return F.col(c).cast(DEC_18_4)
+
+
+def cents() -> Column:
+    """Event ``value`` in BIGINT cents: the Spark side of ``CENTS_SQL``."""
+    return F.round(F.col("value") * 100).cast("long")
+
 
 def money(col: Column | str) -> Column:
     """Cast a currency-ish column to an exact decimal intermediate."""
@@ -48,8 +67,8 @@ def scale_base_units(amount: Column, divisible: Column) -> Column:
     # not quietly differ on the sign it might someday see.)
     truncated = F.when(dec >= 0, F.floor(dec)).otherwise(F.ceil(dec))
     return (
-        F.when(divisible, (dec * F.lit(100000000)).cast("decimal(19,0)"))
-        .otherwise(truncated.cast("decimal(19,0)"))
+        F.when(divisible, (dec * F.lit(100000000)).cast(DEC_19_0))
+        .otherwise(truncated.cast(DEC_19_0))
     )
 
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DEC = "decimal(19,0)"
+from omniengine_spark.functions.scalars import DEC_19_0
 
 # serial offset for synthetic expiry events: far above any real tx
 # serial so the ordered folds place credits after the accepts they
@@ -42,9 +42,9 @@ def _expiry_rows(accepts: DataFrame, sign: int) -> DataFrame:
     amount_accepted, amount_paid, expire_block, offer_state."""
     remaining = (
         F.col("amount_accepted") - F.coalesce(F.col("amount_paid"), F.lit(0))
-    ).cast(_DEC)
+    ).cast(DEC_19_0)
     sale_ended = F.col("offer_state").isin("replaced", "cancelled")
-    s = F.lit(sign).cast(_DEC)
+    s = F.lit(sign).cast(DEC_19_0)
     return accepts.filter(remaining > 0).select(
         F.concat(
             F.lit("expiry:"), F.col("accept_id").cast("string")
@@ -57,12 +57,12 @@ def _expiry_rows(accepts: DataFrame, sign: int) -> DataFrame:
         # balance out of reserve (sql.py:568-575); still active → only
         # the accepted tally drops (sql.py:576-582)
         F.when(sale_ended, s * remaining)
-        .otherwise(F.lit(0).cast(_DEC))
+        .otherwise(F.lit(0).cast(DEC_19_0))
         .alias("delta_base_units"),
         F.when(sale_ended, -s * remaining)
-        .otherwise(F.lit(0).cast(_DEC))
+        .otherwise(F.lit(0).cast(DEC_19_0))
         .alias("delta_reserved"),
-        (-s * remaining).cast(_DEC).alias("delta_accepted"),
+        (-s * remaining).cast(DEC_19_0).alias("delta_accepted"),
         F.lit("delta").alias("kind"),
         F.lit("accept_expired" if sign > 0 else "accept_unexpired").alias(
             "role"

@@ -27,7 +27,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 def merge_upsert(
@@ -59,35 +58,3 @@ def merge_upsert(
         source.select(*keys).distinct(), keys, "left_anti"
     )
     return untouched.unionByName(survivors)
-
-
-def merge_columns(
-    target: DataFrame,
-    source: DataFrame,
-    keys: Sequence[str],
-    update_cols: Sequence[str],
-) -> DataFrame:
-    """Partial-update MERGE: matched rows take only ``update_cols``
-    from the source and keep every other target column (the
-    AddressStats shape — ``sql.py:1648-1656`` updates three columns
-    of a wider row).  Unmatched source rows insert as-is; unmatched
-    target rows survive."""
-    keys = list(keys)
-    upd = set(update_cols)
-    src_renamed = source.select(
-        *keys,
-        *[F.col(c).alias(f"_src_{c}") for c in source.columns if c not in keys],
-    )
-    matched = target.join(src_renamed, keys).select(
-        *keys,
-        *[
-            (F.col(f"_src_{c}") if c in upd else F.col(c)).alias(c)
-            for c in target.columns
-            if c not in keys
-        ],
-    )
-    inserts = source.join(target.select(*keys).distinct(), keys, "left_anti")
-    untouched = target.join(
-        source.select(*keys).distinct(), keys, "left_anti"
-    )
-    return untouched.unionByName(matched).unionByName(inserts)

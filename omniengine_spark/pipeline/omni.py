@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from omniengine_spark.functions import scale_base_units
+from omniengine_spark.functions.scalars import DEC_19_0
 from omniengine_spark.sources.catalog import session_memo
 
 # Decoded Omni tx (the reference's gettransaction_MP JSON, S2) —
@@ -237,7 +238,6 @@ _DELTA_STRUCT = (
     "delta_accepted:decimal(19,0),kind:string,role:string>"
 )
 _DELTA_ARR = f"array<{_DELTA_STRUCT}>"
-_DEC = "decimal(19,0)"
 
 
 def _build_delta_array() -> F.Column:
@@ -249,7 +249,7 @@ def _build_delta_array() -> F.Column:
     trips (~2 s), which eight registered plans would otherwise each
     pay.
     """
-    zero = F.lit(0).cast(_DEC)
+    zero = F.lit(0).cast(DEC_19_0)
 
     def rows(*structs: F.Column) -> F.Column:
         return F.array(*structs)
@@ -258,9 +258,9 @@ def _build_delta_array() -> F.Column:
         return F.struct(
             addr.alias("address"),
             pid_c.cast("bigint").alias("propertyid"),
-            avail.cast(_DEC).alias("delta_base_units"),
-            resv.cast(_DEC).alias("delta_reserved"),
-            acc.cast(_DEC).alias("delta_accepted"),
+            avail.cast(DEC_19_0).alias("delta_base_units"),
+            resv.cast(DEC_19_0).alias("delta_reserved"),
+            acc.cast(DEC_19_0).alias("delta_accepted"),
             F.lit(kind).alias("kind"),
             F.lit(role).alias("role"),
         )
@@ -269,7 +269,7 @@ def _build_delta_array() -> F.Column:
         return F.when(cond, arr).otherwise(F.array().cast(_DELTA_ARR))
 
     amt = _base_units(F.col("amount"), F.col("divisible"))
-    neg = (-amt).cast(_DEC)
+    neg = (-amt).cast(DEC_19_0)
     pid = F.col("propertyid")
     sender = F.col("sending_address")
     ref = F.col("reference_address")
@@ -325,8 +325,8 @@ def _build_delta_array() -> F.Column:
         recips,
         zero,
         lambda acc, r: (
-            acc + _base_units(r["amount"], F.col("divisible")).cast(_DEC)
-        ).cast(_DEC),
+            acc + _base_units(r["amount"], F.col("divisible")).cast(DEC_19_0)
+        ).cast(DEC_19_0),
     )
     # test-ecosystem membership per reference getEcosystem
     # (omniutils.py:14-17): pid 2 (TOMNI itself) or the 2147483651..
@@ -705,7 +705,7 @@ def expand_btc_deltas(btc_txs: DataFrame) -> DataFrame:
     (the s2b plan's shape).
     """
     carry = [c for c in ("block", "serial") if c in btc_txs.columns]
-    zero = F.lit(0).cast(_DEC)
+    zero = F.lit(0).cast(DEC_19_0)
     credits = btc_txs.select(
         "txid", *carry, F.explode_outer("vout").alias("o")
     ).filter(F.col("o.address").isNotNull()).select(
@@ -713,7 +713,7 @@ def expand_btc_deltas(btc_txs: DataFrame) -> DataFrame:
         *carry,
         F.col("o.address").alias("address"),
         F.lit(0).cast("bigint").alias("propertyid"),
-        F.col("o.value_sat").cast(_DEC).alias("delta_base_units"),
+        F.col("o.value_sat").cast(DEC_19_0).alias("delta_base_units"),
         zero.alias("delta_reserved"),
         zero.alias("delta_accepted"),
         F.lit("delta").alias("kind"),
@@ -731,7 +731,7 @@ def expand_btc_deltas(btc_txs: DataFrame) -> DataFrame:
         *carry,
         F.col("src_address").alias("address"),
         F.lit(0).cast("bigint").alias("propertyid"),
-        (-F.col("value_sat")).cast(_DEC).alias("delta_base_units"),
+        (-F.col("value_sat")).cast(DEC_19_0).alias("delta_base_units"),
         zero.alias("delta_reserved"),
         zero.alias("delta_accepted"),
         F.lit("delta").alias("kind"),
@@ -752,20 +752,20 @@ def genesis_deltas(snapshot: DataFrame) -> DataFrame:
     snapshot as the opening balance, while the plain groupBy fold is
     order-insensitive anyway.  One narrow projection, no shuffle.
     """
-    zero = F.lit(0).cast(_DEC)
+    zero = F.lit(0).cast(DEC_19_0)
     return snapshot.select(
         F.lit("genesis").alias("txid"),
         F.lit(0).cast("long").alias("block"),
         F.lit(-1).cast("long").alias("serial"),
         F.col("address"),
         F.col("propertyid").cast("long").alias("propertyid"),
-        F.coalesce(F.col("available").cast(_DEC), zero).alias(
+        F.coalesce(F.col("available").cast(DEC_19_0), zero).alias(
             "delta_base_units"
         ),
-        F.coalesce(F.col("reserved").cast(_DEC), zero).alias(
+        F.coalesce(F.col("reserved").cast(DEC_19_0), zero).alias(
             "delta_reserved"
         ),
-        F.coalesce(F.col("accepted").cast(_DEC), zero).alias(
+        F.coalesce(F.col("accepted").cast(DEC_19_0), zero).alias(
             "delta_accepted"
         ),
         F.lit("delta").alias("kind"),
@@ -778,7 +778,7 @@ def build_balances(deltas: DataFrame) -> DataFrame:
     (address, propertyid) — the whole of ``updateBalance`` as one
     partial-aggregated groupBy."""
     return deltas.groupBy("address", "propertyid").agg(
-        F.sum("delta_base_units").cast("decimal(19,0)").alias("balance"),
+        F.sum("delta_base_units").cast(DEC_19_0).alias("balance"),
         F.count(F.lit(1)).alias("n_deltas"),
         F.max("serial").alias("last_serial"),
     )
@@ -864,41 +864,5 @@ def with_after_balances(deltas: DataFrame) -> DataFrame:
     )
     return deltas.withColumn(
         "after_balance",
-        F.sum("delta_base_units").over(w).cast("decimal(19,0)"),
-    )
-
-
-def with_full_after_balances(deltas: DataFrame) -> DataFrame:
-    """``finalizeAfterBalances`` (``sql.py:1658-1662``) for all four
-    reference columns: every delta row gets the post-tx running
-    available/reserved/accepted balances in serial order — ONE window
-    (one shuffle on the entity key) shared by the three sums.
-
-    The frozen after-column is intentionally absent here: it is only
-    meaningful under the order-dependent diversion rule, which is
-    ``full_balance_replay``'s job; rows of marker-bearing keys should
-    be read through ``build_full_balances`` instead.
-    """
-    w = (
-        Window.partitionBy("address", "propertyid")
-        # same tiebreak rationale as with_after_balances
-        .orderBy(
-            "serial", "role", "delta_base_units",
-            "delta_reserved", "delta_accepted",
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        deltas.withColumn(
-            "after_available",
-            F.sum("delta_base_units").over(w).cast("decimal(19,0)"),
-        )
-        .withColumn(
-            "after_reserved",
-            F.sum("delta_reserved").over(w).cast("decimal(19,0)"),
-        )
-        .withColumn(
-            "after_accepted",
-            F.sum("delta_accepted").over(w).cast("decimal(19,0)"),
-        )
+        F.sum("delta_base_units").over(w).cast(DEC_19_0),
     )

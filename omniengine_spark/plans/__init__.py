@@ -17,13 +17,10 @@ from omniengine_spark.plans import domain  # noqa: E402,F401
 from omniengine_spark.plans import streaming_plans  # noqa: E402,F401
 from omniengine_spark.plans import multimodal_plans  # noqa: E402,F401
 from omniengine_spark.plans import filesource_plans  # noqa: E402,F401
-from omniengine_spark.plans import coverage_plans  # noqa: E402,F401
 from omniengine_spark.plans import pipeline_plans  # noqa: E402,F401
 from omniengine_spark.plans import sql_plans  # noqa: E402,F401
 from omniengine_spark.plans import dex_plans  # noqa: E402,F401
-from omniengine_spark.plans import extended  # noqa: E402,F401
 from omniengine_spark.plans import docpipe  # noqa: E402,F401
-from omniengine_spark.plans import coverage2_plans  # noqa: E402,F401
 from omniengine_spark.plans import quality  # noqa: E402,F401
 from omniengine_spark.plans import serving  # noqa: E402,F401
 from omniengine_spark.plans import ranking  # noqa: E402,F401

@@ -1,4 +1,5 @@
-"""Dedup plans over ``documents`` (operators in operators/dedup.py).
+"""Dedup plans over ``documents`` (operators in operators/dedup.py),
+and the exact embedding-cosine near-dup join over ``embeddings``.
 
 Oracles are the all-pairs exact formulations in DuckDB — the Spark
 side must reproduce them exactly while using the scalable algorithm
@@ -14,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omniengine_spark.operators import dedup as D
+from omniengine_spark.operators.similarity import cosine_pair_join
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import fan_out, load_table
 
@@ -1129,4 +1131,33 @@ def dedup_substring_cut(
                 " ", F.transform(kept, lambda x: x["tok"])
             ).alias("clean_text"),
         )
+    )
+
+
+# --------------------------------------------------------------------
+# North star — embedding-cosine similar pairs (τ=0.4 on this random-vector corpus; the same operator IS the near-dup dedup at τ≈0.95 on real embeddings), exact: BLAS
+# blocked-matmul candidate generation (broadcast normalized reference
+# matrix, Arrow-batched probe stream) + exact sequential-fold verify,
+# so the result is bit-identical to the oracle's O(N²) loop at gemm
+# speed.  The LSH-bucketed variant for beyond-memory scale is
+# sim_lsh_ann_topk.
+# --------------------------------------------------------------------
+@query(
+    "dedup_embedding_cosine",
+    oracle="""
+    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+           list_dot_product(a.v, b.v)
+             / (sqrt(list_dot_product(a.v, a.v))
+                * sqrt(list_dot_product(b.v, b.v))) AS cos_sim
+    FROM e a JOIN e b ON a.vec_id < b.vec_id
+    WHERE list_dot_product(a.v, b.v)
+            / (sqrt(list_dot_product(a.v, a.v))
+               * sqrt(list_dot_product(b.v, b.v))) >= 0.4
+    """,
+)
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    return cosine_pair_join(
+        emb, "vec_id", "embedding", threshold=0.4
     )

@@ -1,8 +1,9 @@
 """Driver-facing plans for the round-2 txtype families: DEx-1
 offer/accept/payment with block-height expiry (reference
-``sql.py:537-794``, ``1904-2030``), MetaDEx cancels
-(``sql.py:2129-2166``), crowdsale participation with the reference
-bonus formula (``csvtools.py:205-256``), freeze/unfreeze at volume
+``sql.py:537-794``, ``1904-2030``), MetaDEx trades (D5,
+``sql.py:2032-2166``) and cancels (``sql.py:2129-2166``), crowdsale
+participation with the reference bonus formula
+(``csvtools.py:205-256``), freeze/unfreeze at volume
 (``sql.py:2329-2372`` + ``1408-1414``), the Bitcoin-side UTXO delta
 expansion (``sql.py:1671-1719``), pending-tx union
 (``sql.py:361-455``), AddressStats (``sql.py:1644-1656``), STO fee
@@ -20,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from omniengine_spark.functions.scalars import CENTS_SQL, cents
 from omniengine_spark.operators.dex import accept_expiry_deltas
 from omniengine_spark.pipeline import (
     build_balances,
@@ -31,16 +33,13 @@ from omniengine_spark.pipeline import (
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
 
-def _cents() -> F.Column:
-    return F.round(F.col("value") * 100).cast("long")
-
 
 def _day() -> F.Column:
     return (F.unix_timestamp("ts") / 86400).cast("long")
 
-# DuckDB equivalents (epoch_us floor-division mirrors unix_timestamp
-# truncation for positive timestamps)
-_SQL_CENTS = "CAST(ROUND(value*100) AS BIGINT)"
+
+# DuckDB equivalent of _day() (epoch_us floor-division mirrors
+# unix_timestamp truncation for positive timestamps)
 _SQL_DAY = "epoch_us(ts) // 86400000000"
 
 
@@ -65,7 +64,7 @@ def _union_txs(*frames: DataFrame) -> DataFrame:
     oracle=f"""
     WITH sign AS (
       SELECT event_id, user_id,
-             {_SQL_CENTS} AS a,
+             {CENTS_SQL} AS a,
              {_SQL_DAY} AS d,
              'b' || CAST(event_id % 50 AS VARCHAR) AS buyer,
              'u' || CAST(user_id AS VARCHAR) AS seller,
@@ -81,7 +80,7 @@ def _union_txs(*frames: DataFrame) -> DataFrame:
     ), offers AS (
       SELECT 'u' || CAST(user_id AS VARCHAR) AS address,
              user_id % 5 AS pid,
-             SUM({_SQL_CENTS}) AS off
+             SUM({CENTS_SQL}) AS off
       FROM events WHERE event_type = 'view' GROUP BY user_id
     ), contrib AS (
       SELECT address, pid, -off AS avail, off AS resv, 0 AS acc
@@ -105,7 +104,7 @@ def d4_dex_accept_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     sign = ev.filter(F.col("event_type") == "signup").select(
         "event_id",
         "user_id",
-        _cents().alias("a"),
+        cents().alias("a"),
         _day().alias("d"),
         F.concat(F.lit("b"), (F.col("event_id") % 50).cast("string")).alias(
             "buyer"
@@ -124,7 +123,7 @@ def d4_dex_accept_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     offers = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.sum(_cents()).alias("off"))
+        .agg(F.sum(cents()).alias("off"))
         .select(
             F.concat(F.lit("o"), F.col("user_id").cast("string")).alias(
                 "txid"
@@ -211,7 +210,7 @@ def d4_dex_accept_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT 'e' || CAST(event_id AS VARCHAR) AS txid,
              event_id,
              'u' || CAST(user_id AS VARCHAR) AS address,
-             {_SQL_CENTS} AS cents, ts
+             {CENTS_SQL} AS cents, ts
       FROM events WHERE event_type = 'signup'
     ), tip AS (SELECT MAX(ts) AS t FROM base)
     SELECT txid, CAST(event_id AS BIGINT) AS serial, address, cents,
@@ -237,7 +236,7 @@ def x3b_pending_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("u"), F.col("user_id").cast("string")).alias(
                 "address"
             ),
-            _cents().alias("cents"),
+            cents().alias("cents"),
             "ts",
         )
     )
@@ -279,7 +278,7 @@ def x3b_pending_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH part AS (
       SELECT 'u' || CAST(user_id AS VARCHAR) AS participant,
-             {_SQL_CENTS} AS a,
+             {CENTS_SQL} AS a,
              epoch_us(ts) // 1000000 AS sec
       FROM events WHERE event_type = 'purchase'
     ), dl AS (SELECT MAX(sec) AS deadline FROM part),
@@ -315,7 +314,7 @@ def d6b_crowdsale_reference_bonus(
             F.concat(F.lit("u"), F.col("user_id").cast("string")).alias(
                 "participant"
             ),
-            _cents().alias("a"),
+            cents().alias("a"),
             F.unix_timestamp("ts").alias("sec"),
         )
     )
@@ -368,7 +367,7 @@ def d6b_crowdsale_reference_bonus(
     "d7c_freeze_pipeline",
     oracle=f"""
     WITH s AS (
-      SELECT user_id, user_id % 5 AS pid, SUM({_SQL_CENTS}) AS total
+      SELECT user_id, user_id % 5 AS pid, SUM({CENTS_SQL}) AS total
       FROM events WHERE event_type = 'purchase'
       GROUP BY user_id
     ), rows_ AS (
@@ -407,7 +406,7 @@ def d7c_freeze_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (F.col("user_id") % 5).cast("long").alias("propertyid"),
         F.lit(False).alias("divisible"),
-        _cents().cast("string").alias("amount"),
+        cents().cast("string").alias("amount"),
     )
     frozen_users = (
         ev.select("user_id").distinct().filter(F.col("user_id") % 7 == 0)
@@ -461,7 +460,7 @@ def d7c_freeze_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH v AS (
       SELECT user_id, user_id % 5 AS pid,
-             SUM({_SQL_CENTS}) AS vs
+             SUM({CENTS_SQL}) AS vs
       FROM events WHERE event_type = 'view' GROUP BY user_id
     ), c AS (
       SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
@@ -496,12 +495,12 @@ def d5c_metadex_cancels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(False).alias("divisible"),
         (F.col("user_id") % 3 + 5).cast("long").alias("propertyid_desired"),
         F.lit(False).alias("divisible_desired"),
-        _cents().cast("string").alias("amount_forsale"),
+        cents().cast("string").alias("amount_forsale"),
     )
     views_per_user = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.sum(_cents()).alias("vs"))
+        .agg(F.sum(cents()).alias("vs"))
     )
     clickers = (
         ev.filter(F.col("event_type") == "click")
@@ -549,7 +548,7 @@ def d5c_metadex_cancels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "s2b_btc_utxo_balances",
     oracle=f"""
     WITH p AS (
-      SELECT user_id, event_id, {_SQL_CENTS} AS cents,
+      SELECT user_id, event_id, {CENTS_SQL} AS cents,
              COUNT(*) OVER (PARTITION BY user_id) AS cnt
       FROM events WHERE event_type = 'purchase'
     )
@@ -566,7 +565,7 @@ def s2b_btc_utxo_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             "event_id",
-            _cents().alias("cents"),
+            cents().alias("cents"),
             F.concat(F.lit("e"), F.col("event_id").cast("string")).alias(
                 "txid"
             ),
@@ -726,7 +725,7 @@ def a16_sto_fee_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pid 2 (TOMNI, test ecosystem) for user_id % 5 == 2
         (F.lit(3) + F.col("user_id") % 5).cast("long")
     )
-    ev = ev.withColumn("a", _cents())
+    ev = ev.withColumn("a", cents())
     txs = ev.select(
         F.concat(F.lit("s"), F.col("event_id").cast("string")).alias("txid"),
         _day().alias("block"),
@@ -738,7 +737,7 @@ def a16_sto_fee_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         pid.cast("long").alias("propertyid"),
         F.lit(False).alias("divisible"),
-        _cents().cast("string").alias("amount"),
+        cents().cast("string").alias("amount"),
         F.array(
             F.struct(
                 F.lit("r1").alias("address"),
@@ -775,8 +774,8 @@ def a16_sto_fee_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH o AS (
       SELECT user_id % 5 AS pid_s, user_id % 3 + 5 AS pid_d,
-             {_SQL_CENTS} + 1 AS total,
-             event_id % ({_SQL_CENTS} + 2) AS avail,
+             {CENTS_SQL} + 1 AS total,
+             event_id % ({CENTS_SQL} + 2) AS avail,
              event_id % 1000 + 1 AS amountdesired
       FROM events WHERE event_type = 'view'
     ), t AS (
@@ -814,8 +813,8 @@ def a17_market_effective_price(
     o = ev.select(
         (F.col("user_id") % 5).cast("long").alias("pid_s"),
         (F.col("user_id") % 3 + 5).cast("long").alias("pid_d"),
-        (_cents() + 1).alias("total"),
-        (F.col("event_id") % (_cents() + 2)).alias("avail0"),
+        (cents() + 1).alias("total"),
+        (F.col("event_id") % (cents() + 2)).alias("avail0"),
         (F.col("event_id") % 1000 + 1).alias("amountdesired"),
     ).select(
         "pid_s",
@@ -869,7 +868,7 @@ def a17_market_effective_price(
     oracle=f"""
     WITH sign AS (
       SELECT event_id, user_id,
-             {_SQL_CENTS} AS a,
+             {CENTS_SQL} AS a,
              {_SQL_DAY} AS d,
              'u' || CAST(user_id AS VARCHAR) AS seller,
              user_id % 5 AS pid
@@ -884,7 +883,7 @@ def a17_market_effective_price(
     ), offers AS (
       SELECT 'u' || CAST(user_id AS VARCHAR) AS seller,
              user_id % 5 AS pid,
-             SUM({_SQL_CENTS}) AS off
+             SUM({CENTS_SQL}) AS off
       FROM events WHERE event_type = 'view' GROUP BY user_id
     ), acc AS (
       SELECT seller, pid,
@@ -914,7 +913,7 @@ def d3b_offer_book(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     sign = ev.filter(F.col("event_type") == "signup").select(
         "event_id",
-        _cents().alias("a"),
+        cents().alias("a"),
         _day().alias("d"),
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias(
             "seller"
@@ -933,7 +932,7 @@ def d3b_offer_book(spark: SparkSession, sf_dir: str) -> DataFrame:
     offers = (
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.sum(_cents()).alias("off"))
+        .agg(F.sum(cents()).alias("off"))
         .select(
             F.concat(F.lit("u"), F.col("user_id").cast("string")).alias(
                 "seller"
@@ -973,3 +972,99 @@ def d3b_offer_book(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(expiries)
     )
     return offer_book_replay(events)
+
+
+# --------------------------------------------------------------------
+# D5 — MetaDEx trade expansion, oracle-checked.  Each type-25 tx
+# carries its pre-computed match list (reference omni_gettrade, S7);
+# expand_deltas emits 4 double-entry rows per match
+# (sql.py:2032-2166 insertMatch semantics).  The tx stream is derived
+# deterministically from events (purchase → one-match trade) and the
+# oracle restates the expansion + net-position fold in SQL, proving
+# the pipeline's type-25 branch value-for-value — the golden tests
+# cover edge shapes, this covers volume.
+# --------------------------------------------------------------------
+@query(
+    "d5_metadex_net_positions",
+    oracle="""
+    WITH tx AS (
+      SELECT
+        'u' || CAST(user_id AS VARCHAR) AS seller,
+        'm' || CAST(user_id % 97 AS VARCHAR) AS buyer,
+        user_id % 5 AS pid,
+        user_id % 3 + 5 AS pid_d,
+        CASE WHEN user_id % 2 = 0
+             THEN CAST(CAST(value AS DECIMAL(38,8)) * 100000000 AS BIGINT)
+             ELSE CAST(FLOOR(CAST(value AS DECIMAL(38,8))) AS BIGINT)
+             END AS sold_units,
+        CASE WHEN user_id % 3 = 0
+             THEN CAST(CAST(value AS DECIMAL(38,8)) * 100000000 AS BIGINT)
+             ELSE CAST(FLOOR(CAST(value AS DECIMAL(38,8))) AS BIGINT)
+             END AS recv_units
+      FROM events WHERE event_type = 'purchase'
+    ), deltas AS (
+      SELECT seller AS address, pid AS propertyid, -sold_units AS delta FROM tx
+      UNION ALL
+      SELECT seller, pid_d, recv_units FROM tx
+      UNION ALL
+      SELECT buyer, pid, sold_units FROM tx
+      UNION ALL
+      SELECT buyer, pid_d, -recv_units FROM tx
+    )
+    SELECT address, propertyid,
+           CAST(SUM(delta) AS BIGINT) AS net_units,
+           COUNT(*) AS n_deltas
+    FROM deltas
+    GROUP BY address, propertyid
+    """,
+)
+def d5_metadex_net_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type") == "purchase"
+    )
+    user = F.col("user_id")
+    amount_str = F.col("value").cast("decimal(38,8)").cast("string")
+    txs = ev.select(
+        F.concat(F.lit("t"), F.col("event_id").cast("string")).alias("txid"),
+        (F.unix_timestamp("ts") / 86400).cast("long").alias("block"),
+        F.col("event_id").alias("position_in_block"),
+        F.lit(25).cast("int").alias("type_int"),
+        F.lit(True).alias("valid"),
+        F.concat(F.lit("u"), user.cast("string")).alias("sending_address"),
+        F.lit(None).cast("string").alias("reference_address"),
+        (user % 5).alias("propertyid"),
+        (user % 2 == 0).alias("divisible"),
+        F.lit(None).cast("string").alias("amount"),
+        F.lit(None)
+        .cast("array<struct<address:string,amount:string>>")
+        .alias("recipients"),
+        F.lit(None)
+        .cast(
+            "array<struct<propertyid:bigint,divisible:boolean,"
+            "amount:string>>"
+        )
+        .alias("subsends"),
+        (user % 3 + 5).cast("long").alias("propertyid_desired"),
+        (user % 3 == 0).alias("divisible_desired"),
+        F.array(
+            F.struct(
+                F.concat(F.lit("m"), (user % 97).cast("string")).alias(
+                    "address"
+                ),
+                amount_str.alias("amount_sold"),
+                amount_str.alias("amount_received"),
+            )
+        ).alias("matches"),
+    )
+    deltas = expand_deltas(stamp_serials_distributed(txs))
+    # net position = available + reserved: under the reference's
+    # reserve semantics (sql.py:2032-2127) the sold amount leaves the
+    # maker's reserve while the taker is credited available; their sum
+    # is the economic position and matches the oracle's single-column
+    # restatement exactly.
+    return deltas.groupBy("address", "propertyid").agg(
+        F.sum(
+            F.col("delta_base_units") + F.col("delta_reserved")
+        ).cast("long").alias("net_units"),
+        F.count(F.lit(1)).alias("n_deltas"),
+    )

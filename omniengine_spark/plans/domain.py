@@ -1,7 +1,8 @@
 """Domain plans: the reference engine's core ledger / state-machine /
 scalar shapes re-expressed over the harness star schema.
 
-Each plan cites the reference site it re-expresses (SURVEY §2 ids).
+Each plan cites the reference site it re-expresses (SURVEY §2 ids),
+from the D1 ledger to the F9/D8 tx-class classifier.
 The decimal discipline from ``plans/relational.py`` applies: exact
 DECIMAL intermediates for money, double only at the surface, so every
 result is bit-stable under any partitioning and matches the DuckDB
@@ -13,11 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from omniengine_spark.functions.scalars import DEC_18_4
 from omniengine_spark.operators import replay as R
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
-
-_D = "decimal(18,4)"
 
 
 # --------------------------------------------------------------------
@@ -48,7 +48,7 @@ _D = "decimal(18,4)"
 )
 def d1_double_entry_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    amt = F.col("o_totalprice").cast(_D)
+    amt = F.col("o_totalprice").cast(DEC_18_4)
     deltas = orders.select(
         F.inline(
             F.array(
@@ -120,8 +120,8 @@ def d2_pro_rata_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         "l_orderkey",
         "l_linenumber",
-        F.col("l_quantity").cast(_D).alias("q"),
-        F.col("o_totalprice").cast(_D).alias("pot"),
+        F.col("l_quantity").cast(DEC_18_4).alias("q"),
+        F.col("o_totalprice").cast(DEC_18_4).alias("pot"),
     )
     w_all = Window.partitionBy("l_orderkey")
     shared = base.select(
@@ -504,13 +504,15 @@ def x3_pending_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a7_market_ticker(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_suppkey").agg(
-        F.sum(F.col("l_quantity").cast(_D)).cast("double").alias("supply"),
+        F.sum(F.col("l_quantity").cast(DEC_18_4))
+        .cast("double")
+        .alias("supply"),
         F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias(
             "best_ask"
         ),
         (
-            F.sum(F.col("l_extendedprice").cast(_D)).cast("double")
-            / F.sum(F.col("l_quantity").cast(_D)).cast("double")
+            F.sum(F.col("l_extendedprice").cast(DEC_18_4)).cast("double")
+            / F.sum(F.col("l_quantity").cast(DEC_18_4)).cast("double")
         ).alias("vwap"),
         F.count(F.lit(1)).alias("n_lines"),
     )
@@ -601,7 +603,7 @@ def a5_daily_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(_D)).cast("double").alias("day_value"),
+        F.sum(F.col("value").cast(DEC_18_4)).cast("double").alias("day_value"),
     )
     w = Window.orderBy("day")
     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -650,7 +652,7 @@ def a5_daily_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f1_scalar_gauntlet(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
-    price_dec = F.col("p_retailprice").cast(_D)
+    price_dec = F.col("p_retailprice").cast(DEC_18_4)
     hex8 = F.substring(F.md5("p_name"), 1, 8)
     return part.select(
         "p_partkey",
@@ -767,4 +769,55 @@ def f5b_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("k").alias("min_k"),
         F.max("k").alias("max_k"),
         F.count(F.when(F.col("m").isNull(), 1)).alias("n_missing_field"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# F9/D8 — tx-class classifier over vout script arrays
+# (omniutils.py:31-62).  Every synthetic tx carries a pubkeyhash
+# output; docs with even ids add a nulldata payload and user_id%3==0
+# adds a bare-multisig output, so the when-chain's precedence
+# (C before B before A) is what the oracle checks.
+# ---------------------------------------------------------------------------
+@query(
+    "f9_txclass",
+    oracle="""
+    WITH c AS (
+      SELECT CASE WHEN event_id % 2 = 0 THEN 'C'
+                  WHEN user_id % 3 = 0 THEN 'B'
+                  ELSE 'A' END AS tx_class
+      FROM events
+    )
+    SELECT tx_class, COUNT(*) AS n_txs
+    FROM c GROUP BY tx_class
+    """,
+)
+def f9_txclass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from omniengine_spark.pipeline.omni import classify_tx
+
+    ev = load_table(spark, sf_dir, "events")
+    out = lambda st: F.struct(  # noqa: E731
+        F.lit(0).cast("bigint").alias("n"),
+        F.lit("x").alias("address"),
+        F.lit(1).cast("bigint").alias("value_sat"),
+        F.lit(st).alias("script_type"),
+    )
+    base = F.array(out("pubkeyhash"))
+    with_ms = F.when(
+        F.col("user_id") % 3 == 0, F.concat(base, F.array(out("multisig")))
+    ).otherwise(base)
+    vout = F.when(
+        F.col("event_id") % 2 == 0,
+        F.concat(with_ms, F.array(out("nulldata"))),
+    ).otherwise(with_ms)
+    btc = ev.select(
+        F.concat(F.lit("e"), F.col("event_id").cast("string")).alias(
+            "txid"
+        ),
+        vout.alias("vout"),
+    )
+    return (
+        classify_tx(btc)
+        .groupBy("tx_class")
+        .agg(F.count(F.lit(1)).alias("n_txs"))
     )

@@ -1,7 +1,12 @@
-"""File-format round-trip plans (S13/S16): the plan writes the data
-out through the sink, reads it back through the source, and the
-oracle aggregates the original parquet — equal results prove the
-round trip is lossless.
+"""Source and sink plans.  The file-format round trips (S13/S16)
+write the data out through the sink, read it back through the
+source, and the oracle aggregates the original parquet — equal
+results prove the round trip is lossless.
+
+The same discipline covers the other adapters: the HTTP rate and fee
+normalizers (S9-S12, and the S9b feed connector), the warehouse sink
+with dynamic partition overwrite (S14), time-travel reads over
+versioned commits (S19), and CDC snapshot diffs (X16).
 """
 
 from __future__ import annotations
@@ -9,9 +14,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from omniengine_spark.functions.scalars import CENTS_SQL, DEC_18_4
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
-from omniengine_spark.sources.sinks import csv_roundtrip, json_roundtrip
+from omniengine_spark.sources.http import (
+    fees_frame,
+    normalize_fee_estimates,
+    normalize_fiat_rates,
+    rates_frame,
+)
+from omniengine_spark.sources.sinks import (
+    csv_roundtrip,
+    jdbc_publish,
+    json_roundtrip,
+    read_warehouse,
+    scratch_dir,
+    write_partitioned,
+)
 
 
 @query(
@@ -96,7 +115,6 @@ def s17_schema_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         migrate,
         rename_column,
     )
-    from omniengine_spark.sources.sinks import scratch_dir
 
     path = scratch_dir("migrate-wh")
     orders = load_table(spark, sf_dir, "orders").select(
@@ -148,7 +166,6 @@ def s18_zorder_pointscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats — tests/test_layout.py proves the footer bounding boxes are
     tight on both dimensions, which no single-column sort achieves."""
     from omniengine_spark.operators.layout import write_zordered
-    from omniengine_spark.sources.sinks import scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -184,7 +201,6 @@ def s13b_corrupt_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanner needs the same tolerance without sacrificing the audit
     trail.  The fixture derives from orders: every 100th orderkey is
     written as a non-numeric line, the rest as (orderkey, cents)."""
-    from omniengine_spark.sources.sinks import scratch_dir
 
     o = load_table(spark, sf_dir, "orders")
     lines = o.select(
@@ -399,7 +415,7 @@ def j9b_trailing_24h_pruned(
         )
         .groupBy("event_type")
         .agg(
-            F.sum(F.col("value").cast("decimal(18,4)"))
+            F.sum(F.col("value").cast(DEC_18_4))
             .cast("double")
             .alias("vol_24h"),
             F.count(F.lit(1)).alias("n_24h"),
@@ -445,7 +461,6 @@ def s21_jdbc_serving_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mode="overwrite"`` commits one transaction PER PARTITION and a
     racing reader can observe k-of-4 partition subsets
     (tests/test_warehouse.py pins the swap's atomicity)."""
-    from omniengine_spark.sources.sinks import jdbc_publish, scratch_dir
 
     base = scratch_dir("jdbc-serve")
     # derby.log (and any relative DB path) lands in the scratch dir,
@@ -528,7 +543,7 @@ def a5b_daily_stats_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("day", "ts").alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)"))
+            F.sum(F.col("value").cast(DEC_18_4))
             .cast("double")
             .alias("day_value"),
         )
@@ -580,7 +595,7 @@ def w8b_trailing_7d_spend_pruned(
         )
         .groupBy("user_id")
         .agg(
-            F.sum(F.col("value").cast("decimal(18,4)"))
+            F.sum(F.col("value").cast(DEC_18_4))
             .cast("double")
             .alias("spend_7d"),
             F.count(F.lit(1)).alias("n_7d"),
@@ -729,7 +744,6 @@ def s21b_jdbc_parallel_read(
     writers on table locks but handles concurrent READ cursors fine —
     the parallel scan is real even single-node, and against Postgres
     it is the same calls with a URL swap."""
-    from omniengine_spark.sources.sinks import jdbc_publish, scratch_dir
 
     base = scratch_dir("jdbc-serve-par")
     spark._jvm.System.setProperty("derby.system.home", base)
@@ -780,3 +794,374 @@ def s21b_jdbc_parallel_read(
         numPartitions=4,
         properties=props,
     )
+
+
+# ---------------------------------------------------------------------------
+# S9/S10 — HTTP rate source normalization + broadcast rate join
+# (reference updateBTC, updatePrices.py:113-138; rate join
+# SQLstatements.md:15-43).  The "HTTP response" is a fixture derived
+# from the nation dim on the driver — exactly where the reference's
+# fetch runs — with one malformed entry (no `last`) that the
+# normalizer must skip.  Rates stay OUT of the float aggregate: cents
+# are summed as BIGINT per nation first, the rate scales the single
+# aggregated value.
+# ---------------------------------------------------------------------------
+@query(
+    "s9_http_rate_join",
+    oracle="""
+    WITH bal AS (
+      SELECT c_nationkey AS nationkey,
+             CAST(SUM(CAST(ROUND(c_acctbal*100) AS BIGINT)) AS BIGINT)
+               AS sum_cents,
+             COUNT(*) AS n_customers
+      FROM customer GROUP BY c_nationkey
+    )
+    SELECT n.n_name AS currency,
+           b.sum_cents,
+           b.n_customers,
+           CAST(ROUND(b.sum_cents * ((n.n_nationkey*17 + 3) / 8.0))
+                AS BIGINT) AS fiat_cents
+    FROM nation n JOIN bal b ON b.nationkey = n.n_nationkey
+    WHERE n.n_nationkey <> 0
+    """,
+)
+def s9_http_rate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    nations = load_table(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name"
+    ).collect()  # 25-row dim: the driver-side "HTTP fetch"
+    payload = {
+        r["n_name"]: (
+            {}  # malformed entry the normalizer must skip
+            if r["n_nationkey"] == 0
+            else {"last": (r["n_nationkey"] * 17 + 3) / 8.0}
+        )
+        for r in nations
+    }
+    rates = rates_frame(
+        spark, normalize_fiat_rates(payload, "fixture", 1_700_000_000)
+    ).join(
+        spark.createDataFrame(
+            [(r["n_nationkey"], r["n_name"]) for r in nations],
+            "nationkey long, n_name string",
+        ),
+        F.col("quote") == F.col("n_name"),
+    )
+    bal = (
+        load_table(spark, sf_dir, "customer")
+        .groupBy(F.col("c_nationkey").alias("nationkey"))
+        .agg(
+            F.sum(F.round(F.col("c_acctbal") * 100).cast("long"))
+            .cast("long")
+            .alias("sum_cents"),
+            F.count(F.lit(1)).alias("n_customers"),
+        )
+    )
+    return bal.join(F.broadcast(rates), "nationkey").select(
+        F.col("quote").alias("currency"),
+        "sum_cents",
+        "n_customers",
+        F.round(F.col("sum_cents") * F.col("rate"))
+        .cast("long")
+        .alias("fiat_cents"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# S11/S12 — fee-estimate union + averaging (updateFees.py:27-93) and
+# the supply source's single-value normalization (sql.py:1460-1467).
+# Two provider payloads normalize to tier rows, union, and average
+# per tier — the oracle re-states the normalized rows as VALUES, so
+# equality pins the normalizer's output row-for-row.
+# ---------------------------------------------------------------------------
+@query(
+    "s11_fee_estimates",
+    oracle="""
+    SELECT tier,
+           CAST(CAST(AVG(fee_per_kb) AS DECIMAL(19,4)) AS BIGINT)
+             AS avg_fee,
+           COUNT(*) AS n_providers
+    FROM (VALUES
+      ('bitgo',   'fastestFee',  61), ('bitgo',   'halfHourFee', 31),
+      ('bitgo',   'hourFee',     11), ('bitgo',   'feePerKb', 12000),
+      ('mempool', 'fastestFee',  55), ('mempool', 'halfHourFee', 27),
+      ('mempool', 'hourFee',      9)
+    ) AS fees(provider, tier, fee_per_kb)
+    GROUP BY tier
+    """,
+)
+def s11_fee_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    bitgo = normalize_fee_estimates(
+        {
+            "fastestFee": 61,
+            "halfHourFee": 31,
+            "hourFee": 11,
+            "feePerKb": 12000,
+        },
+        "bitgo",
+    )
+    mempool = normalize_fee_estimates(
+        {"fastestFee": 55, "halfHourFee": 27, "hourFee": 9}, "mempool"
+    )
+    return (
+        fees_frame(spark, bitgo)
+        .unionByName(fees_frame(spark, mempool))
+        .groupBy("tier")
+        .agg(
+            F.avg("fee_per_kb")
+            .cast("decimal(19,4)")
+            .cast("long")
+            .alias("avg_fee"),
+            F.count(F.lit(1)).alias("n_providers"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# S14 — warehouse sink with dynamic partition overwrite.  Write all
+# events partitioned by event_type, then rewrite ONLY the 'purchase'
+# partition with doubled cents; reading the warehouse back must show
+# doubling in exactly that partition — proving the dynamic overwrite
+# replaced one partition and left the rest untouched.
+# ---------------------------------------------------------------------------
+@query(
+    "s14_warehouse_overwrite",
+    oracle=f"""
+    SELECT event_type,
+           COUNT(*) AS n,
+           CAST(SUM(CASE WHEN event_type = 'purchase'
+                         THEN 2 * {CENTS_SQL} ELSE {CENTS_SQL} END)
+                AS BIGINT) AS total_cents
+    FROM events
+    GROUP BY event_type
+    """,
+)
+def s14_warehouse_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        "event_type",
+    )
+    path = scratch_dir("warehouse-s14")
+    write_partitioned(ev, path, ["event_type"])
+    patched = ev.filter(F.col("event_type") == "purchase").withColumn(
+        "cents", F.col("cents") * 2
+    )
+    write_partitioned(patched, path, ["event_type"])
+    return (
+        read_warehouse(spark, path)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("cents").cast("long").alias("total_cents"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# X16 — CDC snapshot diff: classify every key as insert / update /
+# delete / unchanged between two versions of a state table — the
+# changelog the reference never materializes (its upsert CTEs mutate
+# in place and lose the before-image; a trigger keeps history for
+# ONE table, omni_db_triggers.psql:15-26).  Emitting the diff as
+# data is what feeds downstream incremental consumers (serving-cache
+# invalidation = the reference's Redis flush, cacher.py:12-36).
+# Shape: both snapshots shuffle once on the key; the full outer join
+# shares that partitioning; change classification is pure codegen.
+# v1 = balances over the first 10 days; v2 = all days, minus users
+# ending below a threshold (so genuine deletes exist).
+# ---------------------------------------------------------------------------
+@query(
+    "x16_cdc_snapshot_diff",
+    oracle="""
+    WITH v1 AS (
+      SELECT user_id,
+             CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM events
+      WHERE CAST(ts AS DATE)
+            <= (SELECT MIN(CAST(ts AS DATE)) + 10 FROM events)
+      GROUP BY user_id
+    ), v2_all AS (
+      SELECT user_id,
+             CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT)
+               AS cents
+      FROM events GROUP BY user_id
+    ), v2 AS (
+      SELECT * FROM v2_all WHERE cents >= 500000
+    )
+    SELECT COALESCE(v1.user_id, v2.user_id) AS user_id,
+           CASE WHEN v1.user_id IS NULL THEN 'insert'
+                WHEN v2.user_id IS NULL THEN 'delete'
+                WHEN v1.cents <> v2.cents THEN 'update'
+                ELSE 'unchanged' END AS change_type,
+           v1.cents AS old_cents,
+           v2.cents AS new_cents
+    FROM v1 FULL OUTER JOIN v2 ON v1.user_id = v2.user_id
+    WHERE v1.user_id IS NULL OR v2.user_id IS NULL
+       OR v1.cents <> v2.cents
+    """,
+)
+def x16_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.to_date("ts").alias("day"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    )
+    split = ev.agg(
+        F.date_add(F.min("day"), 10).alias("s")
+    ).collect()[0]["s"]
+    v1 = (
+        ev.filter(F.col("day") <= F.lit(split))
+        .groupBy("user_id")
+        .agg(F.sum("cents").cast("long").alias("cents"))
+    )
+    v2 = (
+        ev.groupBy("user_id")
+        .agg(F.sum("cents").cast("long").alias("cents"))
+        .filter(F.col("cents") >= 500_000)
+    )
+    a, b = v1.alias("a"), v2.alias("b")
+    joined = a.join(b, F.col("a.user_id") == F.col("b.user_id"), "full_outer")
+    change = (
+        F.when(F.col("a.user_id").isNull(), F.lit("insert"))
+        .when(F.col("b.user_id").isNull(), F.lit("delete"))
+        .when(F.col("a.cents") != F.col("b.cents"), F.lit("update"))
+        .otherwise(F.lit("unchanged"))
+    )
+    return joined.select(
+        F.coalesce(F.col("a.user_id"), F.col("b.user_id")).alias("user_id"),
+        change.alias("change_type"),
+        F.col("a.cents").alias("old_cents"),
+        F.col("b.cents").alias("new_cents"),
+    ).filter(F.col("change_type") != "unchanged")
+
+
+@query(
+    "s9b_feed_connector",
+    # Oracle replays the connector's deterministic fixture payloads
+    # as literal rows — cross-provider consolidation must agree.
+    oracle="""
+    WITH feed(source, base, quote, rate, asof_epoch) AS (
+      VALUES ('alpha','BTC','EUR',47000.0,1700000000),
+             ('alpha','BTC','JPY',7400000.0,1700000000),
+             ('alpha','BTC','USD',51000.0,1700000000),
+             ('beta','BTC','EUR',46900.0,1700000000),
+             ('beta','BTC','USD',50950.0,1700000000)
+    )
+    SELECT quote,
+           COUNT(*) AS n_providers,
+           MIN(rate) AS min_rate,
+           MAX(rate) AS max_rate,
+           MAX(rate) - MIN(rate) AS spread
+    FROM feed GROUP BY quote
+    """,
+)
+def s9b_feed_connector(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Rate consolidation through the registered Python DataSource
+    connector (``sources/feed_source.py``): one input partition per
+    provider, fetched executor-side, consolidated into per-currency
+    best/worst/spread — the reference's updatePrices cross-provider
+    reconciliation (``updatePrices.py:113-236``) as a pluggable
+    ``spark.read.format("omni_feed")`` scan.  ``load_table`` runs
+    first so the package zip is shipped before executors unpickle
+    the reader."""
+    load_table(spark, sf_dir, "nation")  # ships the package zip
+    from omniengine_spark.sources.feed_source import register
+
+    register(spark)
+    feed = spark.read.format("omni_feed").option("kind", "rates").load()
+    return feed.groupBy("quote").agg(
+        F.count(F.lit(1)).alias("n_providers"),
+        F.min("rate").alias("min_rate"),
+        F.max("rate").alias("max_rate"),
+        (F.max("rate") - F.min("rate")).alias("spread"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# S19 — time-travel reads over the versioned warehouse: "what did the
+# book say at block H" as a first-class scan.  Version 1 is the
+# balance book at a block cutoff, version 2 advances the tip, version
+# 3 is a schema migration (add a derived tier column) — all three
+# immutable, manifest-audited commits (sources/versioned.py).  The
+# plan diffs v1 against the migrated head across two snapshot reads;
+# the oracle restates both snapshots from the raw stream.  The
+# reference can only answer this by replaying its reorg undo
+# (sql.py:85-218) — here history is retained, not re-derived.
+# ---------------------------------------------------------------------------
+@query(
+    "s19_time_travel_diff",
+    oracle="""
+    WITH ev AS (
+      SELECT user_id, CAST(ts AS DATE) AS day,
+             CAST(ROUND(value*100) AS BIGINT) AS cents
+      FROM events
+    ), v1 AS (
+      SELECT user_id, CAST(SUM(cents) AS BIGINT) AS cents
+      FROM ev
+      WHERE day <= (SELECT MIN(day) + 14 FROM ev)
+      GROUP BY user_id
+    ), v3 AS (
+      SELECT user_id, CAST(SUM(cents) AS BIGINT) AS cents,
+             CAST(SUM(cents) // 1000000 AS BIGINT) AS tier
+      FROM ev GROUP BY user_id
+    )
+    SELECT COALESCE(v1.user_id, v3.user_id) AS user_id,
+           CASE WHEN v1.user_id IS NULL THEN 'insert'
+                WHEN v1.cents <> v3.cents THEN 'update'
+                ELSE 'unchanged' END AS change_type,
+           v1.cents AS old_cents,
+           v3.cents AS new_cents,
+           v3.tier AS new_tier
+    FROM v1 FULL OUTER JOIN v3 ON v1.user_id = v3.user_id
+    WHERE v1.user_id IS NULL OR v1.cents <> v3.cents
+    """,
+)
+def s19_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from omniengine_spark.sources.versioned import commit, read_version
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.to_date("ts").alias("day"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    )
+    split = ev.agg(
+        F.date_add(F.min("day"), 14).alias("s")
+    ).collect()[0]["s"]
+    book = lambda f: (  # noqa: E731
+        f.groupBy("user_id").agg(
+            F.sum("cents").cast("long").alias("cents")
+        )
+    )
+    path = scratch_dir("warehouse-s19")
+    commit(
+        book(ev.filter(F.col("day") <= F.lit(split))),
+        path,
+        f"balance book at block cutoff {split}",
+    )
+    commit(book(ev), path, "advance tip to head")
+    # schema patch as a commit: same audit trail as data rewrites
+    migrated = read_version(spark, path).withColumn(
+        "tier", (F.col("cents") / 1_000_000).cast("long")
+    )
+    commit(migrated, path, "schema v1: add tier column")
+
+    old = read_version(spark, path, version=1).alias("a")
+    new = read_version(spark, path).alias("b")  # head = v3
+    joined = old.join(
+        new, F.col("a.user_id") == F.col("b.user_id"), "full_outer"
+    )
+    change = (
+        F.when(F.col("a.user_id").isNull(), F.lit("insert"))
+        .when(F.col("a.cents") != F.col("b.cents"), F.lit("update"))
+        .otherwise(F.lit("unchanged"))
+    )
+    return joined.select(
+        F.coalesce(F.col("a.user_id"), F.col("b.user_id")).alias(
+            "user_id"
+        ),
+        change.alias("change_type"),
+        F.col("a.cents").alias("old_cents"),
+        F.col("b.cents").alias("new_cents"),
+        F.col("b.tier").alias("new_tier"),
+    ).filter(F.col("change_type") != "unchanged")

@@ -1,8 +1,13 @@
-"""Driver-facing omni-pipeline plan: a deterministic tx stream is
+"""Driver-facing omni-pipeline plans: a deterministic tx stream is
 derived from the events table (signup → fixed issuance type 50,
 purchase → simple send type 0), run through the real pipeline stages
 (stamp_serials → expand_deltas → build_balances), and the oracle
 re-states the expansion + fold declaratively in SQL.
+
+Around the pipeline sit its incremental-processing shapes: resume
+points (A1/A2), the consensus check against a snapshot (X7/§5), the
+per-run processing cap (T3), reorg as recompute (X2), the
+high-watermark batch (X1b) and incremental view maintenance (X15).
 """
 
 from __future__ import annotations
@@ -10,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from omniengine_spark.functions.scalars import CENTS_SQL
+from omniengine_spark.operators.reconcile import reconcile
 from omniengine_spark.pipeline import (
     build_balances,
     expand_deltas,
@@ -18,6 +25,11 @@ from omniengine_spark.pipeline import (
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
 from omniengine_spark.sources.catalog import session_memo
+from omniengine_spark.sources.sinks import (
+    read_warehouse,
+    scratch_dir,
+    write_partitioned,
+)
 
 
 def _tx_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -370,11 +382,6 @@ def omni_incremental_lifecycle(
     from omniengine_spark.operators.reconcile import per_block_consensus
     from omniengine_spark.pipeline import genesis_deltas
     from omniengine_spark.sources.genesis import synthetic_genesis
-    from omniengine_spark.sources.sinks import (
-        read_warehouse,
-        scratch_dir,
-        write_partitioned,
-    )
 
     deltas = _stamped_deltas(spark, sf_dir).select(
         "address",
@@ -504,4 +511,303 @@ def btc_wallet_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs from round one (halves the round count vs plain hops)
     return connected_components(
         nodes, star_edges.union(day_links), "address_id", jump_from=0
+    )
+
+
+# --------------------------------------------------------------------
+# A1/A2 — resume-point aggregates (reference max(blocknumber)+coalesce
+# resume, omniEngine.py:61-106; least(-1, min(serial)) pending serial,
+# sql.py:388).  One scalar row driving incremental batch boundaries.
+# --------------------------------------------------------------------
+@query(
+    "a1_resume_points",
+    oracle="""
+    SELECT COALESCE(MAX(event_id), 22111443) AS max_serial,
+           LEAST(-1, MIN(event_id)) AS next_pending_serial,
+           CAST(MAX(ts) AS TIMESTAMP) AS high_watermark
+    FROM events
+    """,
+)
+def a1_resume_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    return ev.agg(
+        F.coalesce(F.max("event_id"), F.lit(22111443)).alias("max_serial"),
+        F.least(F.lit(-1).cast("long"), F.min("event_id")).alias(
+            "next_pending_serial"
+        ),
+        F.max("ts").alias("high_watermark"),
+    )
+
+
+# --------------------------------------------------------------------
+# X7/§5 — consensus check: engine state vs oracle snapshot, full-outer
+# diff with per-key status (reference checkbalances_MP
+# sql.py:1205-1316).  The "snapshot" here is the pre-cutoff fold and
+# the "engine" is the full fold, so every status class appears.
+# --------------------------------------------------------------------
+@query(
+    "x7_consensus_check",
+    oracle="""
+    WITH anchor AS (SELECT MAX(ts) - INTERVAL 2 DAY AS cutoff FROM events),
+    engine AS (
+      SELECT user_id, SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents
+      FROM events WHERE event_type = 'purchase'
+      GROUP BY user_id
+    ),
+    oracle_snap AS (
+      SELECT user_id, SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents
+      FROM events, anchor
+      WHERE event_type = 'purchase' AND ts <= anchor.cutoff
+      GROUP BY user_id
+    )
+    SELECT COALESCE(e.user_id, o.user_id) AS user_id,
+           CAST(e.cents AS BIGINT) AS engine_cents,
+           CAST(o.cents AS BIGINT) AS oracle_cents,
+           CASE WHEN e.user_id IS NULL THEN 'missing_in_engine'
+                WHEN o.user_id IS NULL THEN 'missing_in_oracle'
+                WHEN e.cents <> o.cents THEN 'mismatch'
+                ELSE 'ok' END AS status
+    FROM engine e FULL OUTER JOIN oracle_snap o ON e.user_id = o.user_id
+    """,
+)
+def x7_consensus_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100).cast("long")
+    purchases = ev.filter(F.col("event_type") == "purchase")
+    engine = purchases.groupBy("user_id").agg(F.sum(cents).alias("cents"))
+    cutoff = ev.agg(
+        (F.max("ts") - F.expr("INTERVAL 2 DAY")).alias("cutoff")
+    )
+    oracle_snap = (
+        purchases.crossJoin(F.broadcast(cutoff))
+        .filter(F.col("ts") <= F.col("cutoff"))
+        .groupBy("user_id")
+        .agg(F.sum(cents).alias("cents"))
+    )
+    return reconcile(engine, oracle_snap, ["user_id"], ["cents"])
+
+
+# ---------------------------------------------------------------------------
+# T3 — incremental processing cap (sql.py:242-247: resume from a
+# high-watermark, process at most 25 000 blocks per run).  Pending
+# work = orders past the watermark date, deterministically ordered;
+# the capped batch aggregates to its resume bookkeeping row.
+# ---------------------------------------------------------------------------
+_T3_WATERMARK = "1995-06-01"
+_T3_CAP = 1000
+
+
+@query(
+    "t3_processing_cap",
+    oracle=f"""
+    WITH batch AS (
+      SELECT o_orderkey, o_orderdate
+      FROM orders
+      WHERE o_orderdate > DATE '{_T3_WATERMARK}'
+      ORDER BY o_orderdate, o_orderkey
+      LIMIT {_T3_CAP}
+    )
+    SELECT COUNT(*) AS n_processed,
+           MIN(o_orderkey) AS first_key,
+           MAX(o_orderkey) AS last_key,
+           CAST(floor(epoch(MAX(o_orderdate))) AS BIGINT)
+             AS new_watermark_epoch
+    FROM batch
+    """,
+)
+def t3_processing_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    batch = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderdate") > F.lit(_T3_WATERMARK).cast("date"))
+        .orderBy("o_orderdate", "o_orderkey")
+        .limit(_T3_CAP)
+    )
+    return batch.agg(
+        F.count(F.lit(1)).alias("n_processed"),
+        F.min("o_orderkey").alias("first_key"),
+        F.max("o_orderkey").alias("last_key"),
+        F.unix_timestamp(F.max("o_orderdate")).alias(
+            "new_watermark_epoch"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# X2 — reorg as recompute (reference undoes state imperatively,
+# sql.py:85-218; the engine overwrites partitions ≥ fork and
+# replays, SURVEY §7.0).  Block ranges ≥ the fork are first written
+# from a corrupted "orphaned chain" (cents off by one), then the
+# reorg recomputes those ranges from the true stream via dynamic
+# partition overwrite.  The oracle is the truth over the full
+# stream: equality proves convergence — corrupt partitions were
+# replaced, pre-fork partitions were never touched.
+# ---------------------------------------------------------------------------
+_X2_FORK = 2  # block ranges >= this get orphaned then replayed
+
+
+@query(
+    "x2_reorg_recompute",
+    oracle=f"""
+    SELECT event_id // 1000 AS block_range,
+           COUNT(*) AS n_events,
+           CAST(SUM({CENTS_SQL}) AS BIGINT) AS total_cents
+    FROM events
+    GROUP BY event_id // 1000
+    """,
+)
+def x2_reorg_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        (F.col("event_id") / F.lit(1000))
+        .cast("long")
+        .alias("block_range"),
+    )
+    fork = F.lit(_X2_FORK)
+    orphaned = ev.withColumn(
+        "cents",
+        F.when(
+            F.col("block_range") >= fork, F.col("cents") + 1
+        ).otherwise(F.col("cents")),
+    )
+    path = scratch_dir("warehouse-x2")
+    write_partitioned(orphaned, path, ["block_range"])
+    # reorg: recompute every range >= fork from the true stream
+    write_partitioned(
+        ev.filter(F.col("block_range") >= fork), path, ["block_range"]
+    )
+    return (
+        read_warehouse(spark, path)
+        # partition-column values are re-inferred as int on read
+        .withColumn("block_range", F.col("block_range").cast("long"))
+        .groupBy("block_range")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("cents").cast("long").alias("total_cents"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# X1b — incremental high-watermark batch, driver-checked (reference
+# resume loop, omniEngine.py:60-69 + A1 coalesce(max(...)) resume
+# points): batch 1 lands days ≤ split into the warehouse; batch 2
+# reads the warehouse's own max(day) watermark — exactly the
+# reference's `max(blocknumber)+1` — and appends only newer days.
+# The result proves incremental == one-shot over the same stream.
+# At scale each batch touches only its new day partitions; the
+# watermark read is a partition-pruned max over the partition column.
+# ---------------------------------------------------------------------------
+@query(
+    "x1b_incremental_batch",
+    oracle="""
+    SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT)
+             AS total_cents
+    FROM events
+    GROUP BY 1
+    """,
+)
+def x1b_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").select(
+        F.to_date("ts").alias("day"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    )
+    split = ev.agg(
+        F.date_add(F.min("day"), 10).alias("s")
+    ).collect()[0]["s"]
+
+    path = scratch_dir("warehouse-x1b")
+    write_partitioned(ev.filter(F.col("day") <= F.lit(split)), path, ["day"])
+
+    # resume point read back from the warehouse itself (A1)
+    watermark = (
+        read_warehouse(spark, path)
+        .agg(F.max(F.col("day").cast("date")).alias("w"))
+        .collect()[0]["w"]
+    )
+    write_partitioned(
+        ev.filter(F.col("day") > F.lit(watermark)), path, ["day"]
+    )
+
+    return (
+        read_warehouse(spark, path)
+        .withColumn(
+            "day", F.col("day").cast("date").cast("timestamp_ntz")
+        )
+        .groupBy("day")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("cents").cast("long").alias("total_cents"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# X15 — incremental view maintenance: the per-user rollup is updated
+# by MERGING aggregate state (old rollup rows are themselves valid
+# partials for sum/count/max) with the new batch's partials — raw
+# history is never rescanned.  This is the scalable form of the
+# reference's read-modify-write AddressBalances upsert
+# (sql.py:1320-1418): at 100 TB the merge touches |keys| rollup rows
+# + the new partition only, one shuffle on the key.  The oracle
+# states the rollup directly against all raw events, proving the
+# merge chain is lossless.
+# ---------------------------------------------------------------------------
+@query(
+    "x15_ivm_rollup_merge",
+    oracle="""
+    SELECT user_id,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT)
+             AS total_cents,
+           CAST(MAX(CAST(ROUND(value*100) AS BIGINT)) AS BIGINT)
+             AS max_cents
+    FROM events
+    GROUP BY user_id
+    """,
+)
+def x15_ivm_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.to_date("ts").alias("day"),
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+    )
+    split = ev.agg(
+        F.date_add(F.min("day"), 10).alias("s")
+    ).collect()[0]["s"]
+
+    def partials(df):
+        return df.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("cents").cast("long").alias("total_cents"),
+            F.max("cents").alias("max_cents"),
+        )
+
+    path = scratch_dir("warehouse-x15")
+    # v1: rollup over the historical prefix, materialized
+    write_partitioned(
+        partials(ev.filter(F.col("day") <= F.lit(split))), path, []
+    )
+
+    # v2: merge stored state with the new batch's partials — the
+    # stored rollup rows re-enter the same aggregation as partials
+    merged = (
+        read_warehouse(spark, path)
+        .select("user_id", "n_events", "total_cents", "max_cents")
+        .unionByName(partials(ev.filter(F.col("day") > F.lit(split))))
+        .groupBy("user_id")
+        .agg(
+            F.sum("n_events").cast("long").alias("n_events"),
+            F.sum("total_cents").cast("long").alias("total_cents"),
+            F.max("max_cents").cast("long").alias("max_cents"),
+        )
+    )
+    write_partitioned(merged, path, [])
+    return read_warehouse(spark, path).select(
+        "user_id",
+        F.col("n_events").cast("long").alias("n_events"),
+        "total_cents",
+        "max_cents",
     )

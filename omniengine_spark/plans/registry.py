@@ -29,9 +29,12 @@ def query(name: str, oracle: str | None = None, artifact: bool = False):
 
     ``artifact=True`` marks a plan whose run splits into a build phase
     (train/commit an index usable across runs) and a serve phase; the
-    bench measures them separately (see ``bench.py``)."""
+    bench measures them separately (see ``bench.py``).  A name can be
+    registered once: a second plan under it raises ``ValueError``."""
 
     def deco(fn: QueryFn) -> QueryFn:
+        if name in QUERIES:
+            raise ValueError(f"plan {name!r} is already registered")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

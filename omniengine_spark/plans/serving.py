@@ -19,12 +19,10 @@ from omniengine_spark.pipeline import (
     build_balances,
     expand_deltas,
     genesis_deltas,
-    stamp_serials_distributed,
 )
 from omniengine_spark.plans.pipeline_plans import (
     _stamped_deltas,
     _stamped_txs,
-    _tx_stream,
 )
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table

@@ -2,12 +2,17 @@
 queried through ``spark.sql`` — proving the full SQL surface (the
 reference's hand-written SQL strings, ``sql.py`` passim) works
 against the same warehouse with the same oracle discipline.
+
+Besides the TPC-H shapes (Q18 is A15/J13) it holds the subquery
+surface: correlated scalar subqueries and EXISTS + NOT EXISTS.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from omniengine_spark.functions.scalars import DEC_18_4, dec_18_4
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
 
@@ -1005,4 +1010,195 @@ def sql_q20_recent_volume_suppliers(
             li="v_lineitem", supp="v_supplier", nat="v_nation",
             part="v_part",
         )
+    )
+
+
+# --------------------------------------------------------------------
+# A15/J13 — TPC-H Q18 shape: aggregate, HAVING-filter the groups,
+# join the survivors back to their parent rows.  The reference's
+# closest pattern is the duplicate-name count threshold
+# (sql.py:1602-1624).  Scale shape: the groupBy shuffles lineitem
+# once on l_orderkey; the HAVING cuts the join input to a sliver, and
+# AQE converts the orders join to broadcast at runtime.
+# --------------------------------------------------------------------
+@query(
+    "sql_q18_large_orders",
+    oracle="""
+    SELECT
+      c_name,
+      o_orderkey,
+      o_totalprice,
+      o_orderdate,
+      CAST(CAST(q.sum_qty_dec AS VARCHAR) AS DOUBLE) AS sum_qty
+    FROM (
+      SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty_dec
+      FROM lineitem
+      GROUP BY l_orderkey
+      HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 300
+    ) q
+    JOIN orders   ON o_orderkey = q.l_orderkey
+    JOIN customer ON c_custkey  = o_custkey
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 20
+    """,
+)
+def sql_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(F.sum(dec_18_4("l_quantity")).alias("sum_qty_dec"))
+        .filter(F.col("sum_qty_dec") > 300)
+    )
+    return (
+        big.join(orders, big.l_orderkey == orders.o_orderkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .select(
+            "c_name",
+            "o_orderkey",
+            "o_totalprice",
+            "o_orderdate",
+            F.col("sum_qty_dec").cast("double").alias("sum_qty"),
+        )
+        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
+        .limit(20)
+    )
+
+
+# --------------------------------------------------------------------
+# SQL subquery surface: correlated scalar subqueries.  The reference
+# inlines every such lookup as a separate Python-side query per row
+# (e.g. per-property rate fetch sql.py:295 inside the txstats loop);
+# here Catalyst decorrelates both subqueries into aggregate+join.
+# The predicate is the avg-comparison rewritten decimal-exact:
+# bal > avg  ⟺  bal·n > sum, so no float avg crosses engines.
+# --------------------------------------------------------------------
+@query(
+    "sql_correlated_above_avg",
+    oracle="""
+    SELECT c_custkey, c_acctbal, c_nationkey
+    FROM customer c
+    WHERE CAST(c_acctbal AS DECIMAL(18,4))
+          * (SELECT COUNT(*) FROM customer c2
+             WHERE c2.c_nationkey = c.c_nationkey)
+          > (SELECT SUM(CAST(c2.c_acctbal AS DECIMAL(18,4)))
+             FROM customer c2 WHERE c2.c_nationkey = c.c_nationkey)
+    """,
+)
+def sql_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
+        "v_customer"
+    )
+    return spark.sql(
+        """
+        SELECT c_custkey, c_acctbal, c_nationkey
+        FROM v_customer c
+        WHERE CAST(c_acctbal AS DECIMAL(18,4))
+              * (SELECT COUNT(*) FROM v_customer c2
+                 WHERE c2.c_nationkey = c.c_nationkey)
+              > (SELECT SUM(CAST(c2.c_acctbal AS DECIMAL(18,4)))
+                 FROM v_customer c2 WHERE c2.c_nationkey = c.c_nationkey)
+        """
+    )
+
+
+# --------------------------------------------------------------------
+# SQL subquery surface: EXISTS + NOT EXISTS in one predicate
+# (churn shape: active in 1997, gone in 1998).  Catalyst plans the
+# pair as one semi and one anti join on o_custkey — two shuffles of
+# the pre-filtered orders slices, never a per-row probe like the
+# reference's existence checks (sql.py:382-384).
+# --------------------------------------------------------------------
+@query(
+    "sql_churned_customers",
+    oracle="""
+    SELECT c_custkey, c_name
+    FROM customer c
+    WHERE EXISTS (
+        SELECT 1 FROM orders o
+        WHERE o.o_custkey = c.c_custkey
+          AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+          AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00')
+      AND NOT EXISTS (
+        SELECT 1 FROM orders o
+        WHERE o.o_custkey = c.c_custkey
+          AND o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
+          AND o.o_orderdate <  TIMESTAMP '1999-01-01 00:00:00')
+    """,
+)
+def sql_churned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
+        "v_customer"
+    )
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    return spark.sql(
+        """
+        SELECT c_custkey, c_name
+        FROM v_customer c
+        WHERE EXISTS (
+            SELECT 1 FROM v_orders o
+            WHERE o.o_custkey = c.c_custkey
+              AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+              AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00')
+          AND NOT EXISTS (
+            SELECT 1 FROM v_orders o
+            WHERE o.o_custkey = c.c_custkey
+              AND o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
+              AND o.o_orderdate <  TIMESTAMP '1999-01-01 00:00:00')
+        """
+    )
+
+
+# --------------------------------------------------------------------
+# TPC-H Q14 shape: conditional-share aggregate over a fact⋈dim join
+# (promo revenue ratio for one ship month).  part is broadcast, so
+# the plan is scan→BHJ→one partial agg — a single wide shuffle of 2
+# numbers.  The ratio divides the two already-exact doubles, so it is
+# bit-identical across engines.
+# --------------------------------------------------------------------
+@query(
+    "sql_q14_promo_effect",
+    oracle="""
+    SELECT
+      CAST(CAST(SUM(CASE WHEN p_type = 'PROMO'
+            THEN CAST(l_extendedprice AS DECIMAL(18,4))
+                 * (CAST(1 AS DECIMAL(5,4)) - CAST(l_discount AS DECIMAL(5,4)))
+            ELSE CAST(0 AS DECIMAL(18,4)) END) AS VARCHAR) AS DOUBLE)
+        AS promo_revenue,
+      CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+                 * (CAST(1 AS DECIMAL(5,4)) - CAST(l_discount AS DECIMAL(5,4))))
+           AS VARCHAR) AS DOUBLE) AS total_revenue,
+      100.0 * CAST(CAST(SUM(CASE WHEN p_type = 'PROMO'
+            THEN CAST(l_extendedprice AS DECIMAL(18,4))
+                 * (CAST(1 AS DECIMAL(5,4)) - CAST(l_discount AS DECIMAL(5,4)))
+            ELSE CAST(0 AS DECIMAL(18,4)) END) AS VARCHAR) AS DOUBLE)
+        / CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))
+                 * (CAST(1 AS DECIMAL(5,4)) - CAST(l_discount AS DECIMAL(5,4))))
+             AS VARCHAR) AS DOUBLE) AS promo_pct
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
+      AND l_shipdate <  TIMESTAMP '1997-04-01 00:00:00'
+    """,
+)
+def sql_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp"))
+        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
+    )
+    part = F.broadcast(load_table(spark, sf_dir, "part"))
+    one = F.lit(1).cast("decimal(5,4)")
+    rev = dec_18_4("l_extendedprice") * (
+        one - F.col("l_discount").cast("decimal(5,4)")
+    )
+    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(
+        F.lit(0).cast(DEC_18_4)
+    )
+    agg = li.join(part, li.l_partkey == part.p_partkey).agg(
+        F.sum(promo).cast("double").alias("promo_revenue"),
+        F.sum(rev).cast("double").alias("total_revenue"),
+    )
+    return agg.withColumn(
+        "promo_pct",
+        100.0 * F.col("promo_revenue") / F.col("total_revenue"),
     )

@@ -1,4 +1,6 @@
-"""Window / ordered-computation plans (SURVEY §2.5 W1-W6, §2.6 T-shapes).
+"""Window / ordered-computation plans (SURVEY §2.5 W1-W6, §2.6 T-shapes),
+plus the W7 as-of join, the W8 RANGE-frame window and X8/J7b SCD2
+version history.
 
 The reference does all ordered work row-at-a-time in Python; here each
 shape is a Spark window spec, which the optimizer turns into one
@@ -12,11 +14,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from omniengine_spark.functions.scalars import epoch_us
+from omniengine_spark.functions.scalars import DEC_18_4, epoch_us
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
-
-_D = "decimal(18,4)"
 
 
 # --------------------------------------------------------------------
@@ -80,7 +80,7 @@ def w2_running_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "event_id",
         "user_id",
-        F.sum(F.col("value").cast(_D)).over(w).cast("double").alias(
+        F.sum(F.col("value").cast(DEC_18_4)).over(w).cast("double").alias(
             "running_value"
         ),
     )
@@ -110,7 +110,7 @@ def w2b_running_value_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev,
         key="user_id",
         order_cols=["ts", "event_id"],
-        value_col=F.col("value").cast(_D),
+        value_col=F.col("value").cast(DEC_18_4),
         chunk_col=F.date_trunc("day", F.col("ts")),
     )
     return out.select(
@@ -147,7 +147,7 @@ def w2c_running_value_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev,
         key="user_id",
         order_cols=["ts", "event_id"],
-        value_col=F.col("value").cast(_D),
+        value_col=F.col("value").cast(DEC_18_4),
         chunk_col=F.date_trunc("day", F.col("ts")),
     )
     return out.select(
@@ -600,5 +600,127 @@ def a21_activity_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("activity_score"),
         F.sum(F.when(F.col("age_d") < 7, 1).otherwise(0)).alias(
             "recent_events"
+        ),
+    )
+
+
+# --------------------------------------------------------------------
+# W7 — as-of join (the reference's "order by asof desc limit 1" rate
+# lookup, sql.py:282/295, done for ALL rows in one pass).  DuckDB has
+# native ASOF JOIN, which makes the oracle exact.
+# --------------------------------------------------------------------
+@query(
+    "w7_asof_join",
+    oracle="""
+    WITH p AS (
+      SELECT event_id, user_id, ts FROM events
+      WHERE event_type = 'purchase'
+    ), s AS (
+      SELECT event_id AS sid, user_id, ts FROM events
+      WHERE event_type = 'signup'
+    )
+    SELECT p.event_id, p.user_id, s.sid AS asof_signup_event
+    FROM p ASOF LEFT JOIN s
+      ON p.user_id = s.user_id AND p.ts >= s.ts
+    """,
+)
+def w7_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from omniengine_spark.operators.asof import as_of_join
+
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    signups = ev.filter(F.col("event_type") == "signup").select(
+        F.col("event_id").alias("signup_event"), "user_id", "ts"
+    )
+    out = as_of_join(
+        purchases,
+        signups,
+        key="user_id",
+        right_payload=("signup_event",),
+    )
+    return out.select(
+        "event_id",
+        "user_id",
+        F.col("asof_signup_event").alias("asof_signup_event"),
+    )
+
+
+# --------------------------------------------------------------------
+# X8/J7b — SCD2 history: the reference keeps ExchangeRatesHistory via
+# a database trigger copying the superseded row on every upsert
+# (omni_db_triggers.psql:15-26); PropertyHistory likewise.  Event-
+# sourced equivalent: each update row becomes a version with
+# [valid_from, valid_to) stamped by lead() per key — one partitioned
+# window, no trigger, replayable from the event stream.
+# --------------------------------------------------------------------
+@query(
+    "scd2_rate_history",
+    oracle="""
+    SELECT
+      user_id,
+      event_id AS version_id,
+      value AS rate,
+      ts AS valid_from,
+      COALESCE(
+        LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
+        TIMESTAMP '2200-01-01 00:00:00') AS valid_to,
+      LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+        AS is_current
+    FROM events
+    WHERE event_type = 'purchase'
+    """,
+)
+def scd2_rate_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type") == "purchase"
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    valid_to = F.lead("ts").over(w)
+    # Open-ended versions get a far-future sentinel instead of NULL so
+    # interval predicates (valid_from <= t < valid_to) need no
+    # null-branch, and the frame stays hash-comparable.
+    sentinel = F.lit("2200-01-01 00:00:00").cast("timestamp")
+    return ev.select(
+        "user_id",
+        F.col("event_id").alias("version_id"),
+        F.col("value").alias("rate"),
+        F.col("ts").alias("valid_from"),
+        F.coalesce(valid_to, sentinel).alias("valid_to"),
+        valid_to.isNull().alias("is_current"),
+    )
+
+
+# --------------------------------------------------------------------
+# W8 — RANGE-frame window: per-event trailing 7-day spend per user
+# (value-based frame; the reference only ever uses cumulative ROWS
+# frames, SURVEY §2.5 note).  The frame is expressed over epoch
+# micros so Spark's numeric rangeBetween matches the SQL INTERVAL
+# frame exactly; one shuffle on user_id.
+# --------------------------------------------------------------------
+@query(
+    "w8_trailing_7d_user_value",
+    oracle="""
+    SELECT event_id, user_id,
+           CAST(CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER (
+             PARTITION BY user_id ORDER BY ts
+             RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW)
+           AS VARCHAR) AS DOUBLE) AS spend_7d
+    FROM events
+    """,
+)
+def w8_trailing_7d_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = load_table(spark, sf_dir, "events")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(epoch_us("ts"))
+        .rangeBetween(-7 * 86_400_000_000, 0)
+    )
+    return ev.select(
+        "event_id",
+        "user_id",
+        F.sum(F.col("value").cast(DEC_18_4)).over(w).cast("double").alias(
+            "spend_7d"
         ),
     )

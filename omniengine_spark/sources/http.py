@@ -63,20 +63,6 @@ def normalize_fiat_rates(
     return rows
 
 
-def normalize_market_quote(
-    payload: dict, source: str, asof_epoch: int
-) -> list[tuple]:
-    """CMC-shaped [{symbol, price_btc}] → rate rows (reference
-    updateOMNISP, updatePrices.py:189-236)."""
-    rows = []
-    for entry in payload.get("data", []):
-        sym, price = entry.get("symbol"), entry.get("price_btc")
-        if sym is None or price is None:
-            continue
-        rows.append((source, sym, "BTC", float(price), asof_epoch))
-    return rows
-
-
 def normalize_fee_estimates(payload: dict, provider: str) -> list[tuple]:
     """BitGo/mempool-shaped fee maps → (provider, tier, fee) rows
     (reference updateFees.py:27-93)."""

@@ -15,14 +15,6 @@ FIAT_FIXTURE = {
     "GBP": {},
 }
 
-CMC_FIXTURE = {
-    "data": [
-        {"symbol": "OMNI", "price_btc": 0.00042},
-        {"symbol": "MAID", "price_btc": 0.0000091},
-        {"symbol": "NOPRICE"},
-    ]
-}
-
 FEE_FIXTURE = {"fastestFee": 52, "halfHourFee": 31, "hourFee": 18}
 BITGO_FIXTURE = {"feePerKb": 61440}
 
@@ -32,14 +24,6 @@ def test_fiat_normalizer_skips_malformed():
     assert rows == [
         ("avg", "BTC", "EUR", 59100.25, 1700000000),
         ("avg", "BTC", "USD", 64250.5, 1700000000),
-    ]
-
-
-def test_market_normalizer():
-    rows = H.normalize_market_quote(CMC_FIXTURE, "cmc", 1700000000)
-    assert rows == [
-        ("cmc", "OMNI", "BTC", 0.00042, 1700000000),
-        ("cmc", "MAID", "BTC", 9.1e-06, 1700000000),
     ]
 
 

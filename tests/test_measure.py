@@ -67,7 +67,16 @@ def test_node_metrics_reads_the_scan_of_the_action(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["omni_genesis_fold", "btc_wallet_clusters", "d7c_freeze_pipeline"]
+    "name",
+    [
+        "omni_genesis_fold",
+        "btc_wallet_clusters",
+        "d7c_freeze_pipeline",
+        "a10_salted_balance_fold",
+        "x15_ivm_rollup_merge",
+        "stats_countmin_heavy_hitters",
+        "j12_range_join",
+    ],
 )
 def test_checksum_stable_across_runs_and_partitionings(spark, name):
     """README: results are bit-stable under any partitioning."""

@@ -579,41 +579,6 @@ def test_btc_delta_expansion(spark):
     }
 
 
-def test_full_after_balances_telescope(spark):
-    """finalizeAfterBalances (sql.py:1658-1662) for all three
-    summable columns: each after_* is prev + delta per key in serial
-    order, and the last row equals the folded balance."""
-    from omniengine_spark.pipeline import build_full_balances
-    from omniengine_spark.pipeline.omni import with_full_after_balances
-
-    raw = spark.createDataFrame(DEX_FIXTURE, RAW_TX_SCHEMA)
-    deltas = expand_deltas(stamp_serials(raw))
-    stamped = with_full_after_balances(deltas)
-    rows = sorted(
-        stamped.collect(),
-        key=lambda r: (r["address"], r["propertyid"], r["serial"]),
-    )
-    run: dict[tuple, tuple] = {}
-    for r in rows:
-        key = (r["address"], r["propertyid"])
-        a, v, c = run.get(key, (0, 0, 0))
-        a += int(r["delta_base_units"])
-        v += int(r["delta_reserved"])
-        c += int(r["delta_accepted"])
-        assert (
-            int(r["after_available"]),
-            int(r["after_reserved"]),
-            int(r["after_accepted"]),
-        ) == (a, v, c)
-        run[key] = (a, v, c)
-    final = {
-        (r["address"], r["propertyid"]):
-            (r["available"], r["reserved"], r["accepted"])
-        for r in build_full_balances(deltas).collect()
-    }
-    assert run == final
-
-
 def test_genesis_csv_ingest(spark, tmp_path):
     """Reference-format genesis CSV (database/balances.csv header)
     reads with the declared schema; blank reserved/accepted/serial

@@ -135,8 +135,8 @@ def test_content_addressed_duplicates(spark):
     assert len({by_doc[i] for i in range(40)}) == 40
 
 
-def test_merge_columns_partial_update(spark):
-    from omniengine_spark.operators.merge import merge_columns, merge_upsert
+def test_merge_upsert_delete(spark):
+    from omniengine_spark.operators.merge import merge_upsert
     from pyspark.sql import functions as F
 
     target = spark.createDataFrame(
@@ -147,25 +147,14 @@ def test_merge_columns_partial_update(spark):
         [(2, "ZZ", 200), (4, "d", 40)],
         "k int, name string, bal int",
     )
-    out = {
-        r["k"]: (r["name"], r["bal"])
-        for r in merge_columns(target, source, ["k"], ["bal"]).collect()
-    }
-    # matched row 2: bal updated, name KEPT; row 4 inserted as-is
-    assert out == {
-        1: ("a", 10),
-        2: ("b", 200),
-        3: ("c", 30),
-        4: ("d", 40),
-    }
     # full-row merge with delete: row 2 deleted (bal >= 100), 4 inserted
-    out2 = {
+    out = {
         r["k"]: r["bal"]
         for r in merge_upsert(
             target, source, ["k"], delete_condition=F.col("bal") >= 100
         ).collect()
     }
-    assert out2 == {1: 10, 3: 30, 4: 40}
+    assert out == {1: 10, 3: 30, 4: 40}
 
 
 def test_connected_components_empty_pairs_short_circuits(spark):
