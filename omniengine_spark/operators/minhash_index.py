@@ -30,7 +30,7 @@ the full index state:
     ingest that contradicted the operator's purpose; now corpus
     shingle sets come from the persisted table pruned to candidates
     (tests/test_operators.py pins the pruning);
-  - three DELTA commits (``versioned.commit(base_version=...)``)
+  - three DELTA commits (``versioned.commit_once(delta=True)``)
     writing only shard-sized parquet, so shard N+1 sees shard N
     without any table ever being rewritten.
 
@@ -61,8 +61,7 @@ from omniengine_spark.operators.dedup import (
 )
 from omniengine_spark.sources.versioned import (
     DeltaConflictError,
-    commit,
-    current_version,
+    commit_once,
     read_version,
     version_history,
 )
@@ -84,15 +83,6 @@ def index_paths(root: str) -> tuple[str, str, str]:
     return f"{root}/{ENTRIES}", f"{root}/{PAIRS}", f"{root}/{SHINGLES}"
 
 
-def latest_tag(root: str) -> str | None:
-    """Description of the newest committed index state (None when the
-    index doesn't exist yet).  The three tables commit under one tag
-    per lifecycle step, so any one table's history identifies the
-    state; ``pairs`` is the output table, so it is the authority."""
-    hist = version_history(index_paths(root)[1])
-    return hist[-1]["description"] if hist else None
-
-
 def build_index(
     spark: SparkSession,
     root: str,
@@ -108,30 +98,36 @@ def build_index(
 ) -> None:
     """Corpus-ingest day: shingle + sign the corpus ONCE, self-dedup
     it, and persist all three index tables as version 1.  The one
-    full-corpus scan the lifecycle ever performs.
+    full-corpus scan the lifecycle ever performs; a table that already
+    holds ``tag`` is not rebuilt (``versioned.commit_once``).
 
     Shingles commit BEFORE entries — the visibility invariant every
     writer keeps (see ``ingest_shard``): a doc whose band entries are
     visible always has its shingle set visible, so a concurrent
     ingester's verify stage (which reads the shingles TIP) can never
     meet a candidate it cannot verify."""
-    entries = minhash_band_entries(
-        corpus, id_col, text_col, n, num_hashes, band_rows
-    )
-    shingles = hashed_shingle_docs(corpus, id_col, text_col, n)
     epath, ppath, spath = index_paths(root)
-    commit(shingles, spath, tag)
-    commit(entries, epath, tag)
-    pairs = _verify_jaccard(
-        band_candidates(
-            read_version(spark, epath),
-            read_version(spark, epath),
+    commit_once(
+        spath, tag, lambda: hashed_shingle_docs(corpus, id_col, text_col, n)
+    )
+    commit_once(
+        epath, tag,
+        lambda: minhash_band_entries(
+            corpus, id_col, text_col, n, num_hashes, band_rows
+        ),
+    )
+    commit_once(
+        ppath, tag,
+        lambda: _verify_jaccard(
+            band_candidates(
+                read_version(spark, epath),
+                read_version(spark, epath),
+                threshold,
+            ),
+            read_version(spark, spath),
             threshold,
         ),
-        read_version(spark, spath),
-        threshold,
     )
-    commit(pairs, ppath, tag)
 
 
 def _dir_bytes(path: str) -> int:
@@ -171,39 +167,23 @@ def _commit_shard_frames(
     base_entries_version) with the entries frame re-read from its
     just-written delta dir: parquet-backed frames carry accurate size
     stats, so the band join and verify semi-join can broadcast a
-    small shard instead of shuffling the corpus index.  Idempotent
-    per table: if this tag's delta already exists ANYWHERE in the
-    table's history (a crash-retry, or a conflict-retry after a
-    concurrent writer moved the tip) it is reused, never duplicated."""
+    small shard instead of shuffling the corpus index.  A delta that
+    already landed (crash-retry, conflict-retry) is reused, never
+    duplicated."""
     epath, _, spath = index_paths(root)
-
-    def _delta(path: str, frame_fn) -> tuple[DataFrame, int]:
-        mine = next(
-            (
-                e
-                for e in version_history(path)
-                if e["description"] == tag
-            ),
-            None,
-        )
-        if mine is not None:
-            ver, base = mine["version"], mine["base"]
-        else:
-            base = current_version(path)
-            ver = commit(frame_fn(), path, tag, base_version=base)
-        return spark.read.parquet(f"{path}/v={ver}"), base
-
-    _delta(
-        spath,
+    commit_once(
+        spath, tag,
         lambda: hashed_shingle_docs(shard, id_col, text_col, n),
+        delta=True,
     )
-    entries_pq, base_e = _delta(
-        epath,
+    mine = commit_once(
+        epath, tag,
         lambda: minhash_band_entries(
             shard, id_col, text_col, n, num_hashes, band_rows
         ),
+        delta=True,
     )
-    return entries_pq, base_e
+    return spark.read.parquet(f"{epath}/v={mine['version']}"), mine["base"]
 
 
 def _ingest_plan(
@@ -292,26 +272,19 @@ def ingest_shard(
     is verifiable; (2) the band join targets everything before THIS
     shard on the entries chain, so each cross pair is found exactly
     once — by whichever shard committed entries later."""
-    epath, ppath, spath = index_paths(root)
+    ppath = index_paths(root)[1]
+
+    def new_pairs() -> DataFrame:
+        entries_pq, base_e = _commit_shard_frames(
+            spark, root, shard, id_col, text_col,
+            n=n, num_hashes=num_hashes, band_rows=band_rows, tag=tag,
+        )
+        return _ingest_plan(spark, root, entries_pq, base_e, threshold)[1]
+
     last_err: Exception | None = None
     for _ in range(_MAX_CONFLICT_RETRIES):
-        if any(
-            e["description"] == tag for e in version_history(ppath)
-        ):
-            return read_version(spark, ppath)
         try:
-            entries_pq, base_e = _commit_shard_frames(
-                spark, root, shard, id_col, text_col,
-                n=n, num_hashes=num_hashes, band_rows=band_rows,
-                tag=tag,
-            )
-            _, new_pairs = _ingest_plan(
-                spark, root, entries_pq, base_e, threshold
-            )
-            commit(
-                new_pairs, ppath, tag,
-                base_version=current_version(ppath),
-            )
+            commit_once(ppath, tag, new_pairs, delta=True)
             return read_version(spark, ppath)
         except DeltaConflictError as err:
             last_err = err
@@ -327,6 +300,6 @@ def compact_index(spark: SparkSession, root: str) -> None:
     tag-based idempotency is unaffected by when compaction runs."""
     from omniengine_spark.sources.versioned import compact
 
-    tag = latest_tag(root)
+    tag = version_history(index_paths(root)[1])[-1]["description"]
     for path in index_paths(root):
         compact(spark, path, description=tag)

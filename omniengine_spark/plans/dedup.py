@@ -467,10 +467,7 @@ def dedup_incremental_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus build (one full scan, ever) runs once per dataset
     content fingerprint."""
     from omniengine_spark.operators import minhash_index as MI
-    from omniengine_spark.sources.sinks import (
-        dataset_fingerprint,
-        stable_scratch_dir,
-    )
+    from omniengine_spark.sources.sinks import artifact_root
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     corpus = docs.filter(
@@ -485,22 +482,12 @@ def dedup_incremental_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=thresh,
     )
 
-    # freshness keys on CONTENT (abs path + file stats), not basename
-    # + row count: two same-named count-equal datasets in one process
-    # must not reuse each other's persisted index
-    fp = dataset_fingerprint(sf_dir, "documents.parquet")
-    root = stable_scratch_dir(f"minhash-corpus-{fp}")
-    base_tag = f"minhash {_INC_HASHES}x{_INC_BAND_ROWS} corpus {fp}"
+    root = artifact_root("minhash-corpus", sf_dir, "documents.parquet")
+    base_tag = f"minhash {_INC_HASHES}x{_INC_BAND_ROWS} corpus"
     shard_tag = f"{base_tag} +shard{_INC_SHARD_REM}"
-
-    state = MI.latest_tag(root)
-    if state not in (base_tag, shard_tag):
-        MI.build_index(
-            spark, root, corpus, "doc_id", "text",
-            tag=base_tag, **params,
-        )
-    # idempotent: a replay whose shard is already the committed state
-    # returns the stored pairs without recomputing or re-committing
+    MI.build_index(
+        spark, root, corpus, "doc_id", "text", tag=base_tag, **params
+    )
     return MI.ingest_shard(
         spark, root, shard, "doc_id", "text", tag=shard_tag, **params
     )
@@ -508,6 +495,10 @@ def dedup_incremental_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from omniengine_spark.plans.similarity import (  # noqa: E402
     _MD5_ID_HASH as _SIM_MD5_ID_HASH,
+)
+from omniengine_spark.plans.similarity import (  # noqa: E402
+    _base_count,
+    _base_shard,
 )
 from omniengine_spark.plans.similarity import (  # noqa: E402
     _cos_sql as _sim_cos_sql,
@@ -583,91 +574,60 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     from omniengine_spark.operators import ann_index as AI
-    from omniengine_spark.sources.sinks import (
-        dataset_fingerprint,
-        stable_scratch_dir,
-    )
-    from omniengine_spark.sources.versioned import (
-        commit,
-        current_version,
-        read_version,
-        version_history,
-    )
+    from omniengine_spark.sources.sinks import artifact_root
+    from omniengine_spark.sources.versioned import commit_once, read_version
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    base = emb.filter(
-        F.col("vec_id") % _INC_SHARD_MOD != _INC_SHARD_REM
-    )
-    shard = emb.filter(
-        F.col("vec_id") % _INC_SHARD_MOD == _INC_SHARD_REM
-    )
-    k = max(_SEMI_K_FLOOR, math.ceil(math.sqrt(base.count() / 2.0)))
-    fp = dataset_fingerprint(sf_dir, "embeddings.parquet")
-    root = stable_scratch_dir(f"sem-inc-{fp}")
+    base, shard = _base_shard(emb)
+    root = artifact_root("sem-inc", sf_dir, "embeddings.parquet")
     cpath, lpath, dpath = (
         f"{root}/centroids", f"{root}/lists", f"{root}/drops",
     )
-    base_tag = f"sem-inc k={k} fp={fp}"
-    shard_tag = f"{base_tag} +shard{_INC_SHARD_REM}"
+    shard_tag = "base +shard"
 
-    def _tag(path: str) -> str | None:
-        hist = version_history(path)
-        return hist[-1]["description"] if hist else None
-
-    def _once(path: str, frame_fn, tag: str, delta: bool) -> int:
-        hist = version_history(path)
-        if hist and hist[-1]["description"] == tag:
-            return hist[-1]["version"]
-        return commit(
-            frame_fn(), path, tag,
-            base_version=current_version(path) if delta else None,
-        )
-
-    if _tag(dpath) not in (base_tag, shard_tag):
-        # corpus day: seed, assign, self-prune — the one full pass
-        _once(
-            cpath,
-            lambda: AI.seeded_centroids(base, "vec_id", "embedding", k),
-            base_tag, delta=False,
-        )
-        _once(
-            lpath,
-            lambda: AI.assign_lists(
-                base, read_version(spark, cpath), "vec_id", "embedding"
+    # corpus day: seed, assign, self-prune — the one full pass
+    commit_once(
+        cpath, "base",
+        lambda: AI.seeded_centroids(
+            base, "vec_id", "embedding",
+            max(
+                _SEMI_K_FLOOR,
+                math.ceil(math.sqrt(_base_count(spark, sf_dir, base) / 2.0)),
             ),
-            base_tag, delta=False,
-        )
-        _once(
-            dpath,
-            lambda: AI.in_cluster_drops(
-                read_version(spark, lpath),
-                read_version(spark, lpath),
-                _SEMI_TAU,
+        ),
+    )
+    commit_once(
+        lpath, "base",
+        lambda: AI.assign_lists(
+            base, read_version(spark, cpath), "vec_id", "embedding"
+        ),
+    )
+    commit_once(
+        dpath, "base",
+        lambda: AI.in_cluster_drops(
+            read_version(spark, lpath), read_version(spark, lpath), _SEMI_TAU
+        ),
+    )
+    # shard ingest: assign to FROZEN centroids, commit the lists
+    # delta, derive new drops from shard-touched pairs only
+    shard_lists = commit_once(
+        lpath, shard_tag,
+        lambda: AI.assign_lists(
+            shard, read_version(spark, cpath), "vec_id", "embedding"
+        ),
+        delta=True,
+    )
+    commit_once(
+        dpath, shard_tag,
+        lambda: AI.in_cluster_drops(
+            F.broadcast(
+                spark.read.parquet(f"{lpath}/v={shard_lists['version']}")
             ),
-            base_tag, delta=False,
-        )
-    if _tag(dpath) != shard_tag:
-        # shard ingest: assign to FROZEN centroids, commit the lists
-        # delta, derive new drops from shard-touched pairs only
-        lv = _once(
-            lpath,
-            lambda: AI.assign_lists(
-                shard, read_version(spark, cpath), "vec_id", "embedding"
-            ),
-            shard_tag, delta=True,
-        )
-        shard_lists = spark.read.parquet(f"{lpath}/v={lv}")
-        new_drops = AI.in_cluster_drops(
-            F.broadcast(shard_lists),
             read_version(spark, lpath),
             _SEMI_TAU,
-        )
-        stored = read_version(spark, dpath)
-        _once(
-            dpath,
-            lambda: new_drops.join(stored, "vec_id", "left_anti"),
-            shard_tag, delta=True,
-        )
+        ).join(read_version(spark, dpath), "vec_id", "left_anti"),
+        delta=True,
+    )
     lists = read_version(spark, lpath)
     drops = read_version(spark, dpath).withColumn("_d", F.lit(True))
     return (
@@ -734,10 +694,7 @@ def dedup_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from omniengine_spark.operators import minhash_index as MI
-    from omniengine_spark.sources.sinks import (
-        dataset_fingerprint,
-        stable_scratch_dir,
-    )
+    from omniengine_spark.sources.sinks import artifact_root
     from omniengine_spark.sources.versioned import (
         read_version,
         vacuum,
@@ -749,17 +706,13 @@ def dedup_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=3, num_hashes=_INC_HASHES, band_rows=_INC_BAND_ROWS,
         threshold=Fraction(4, 5),
     )
-    fp = dataset_fingerprint(sf_dir, "documents.parquet")
-    root = stable_scratch_dir(f"minhash-stream-{fp}")
-    base_tag = f"minhash {_INC_HASHES}x{_INC_BAND_ROWS} stream-corpus {fp}"
-
-    if MI.latest_tag(root) is None:
-        corpus = docs.filter(
-            F.col("doc_id") % _STREAM_MOD != _STREAM_REM
-        )
-        MI.build_index(
-            spark, root, corpus, "doc_id", "text", tag=base_tag, **params
-        )
+    root = artifact_root("minhash-stream", sf_dir, "documents.parquet")
+    base_tag = f"minhash {_INC_HASHES}x{_INC_BAND_ROWS} stream-corpus"
+    MI.build_index(
+        spark, root,
+        docs.filter(F.col("doc_id") % _STREAM_MOD != _STREAM_REM),
+        "doc_id", "text", tag=base_tag, **params,
+    )
 
     # the feed: stream docs written once as N files = N micro-batches
     # (hash-split on doc_id, so batch composition is deterministic;

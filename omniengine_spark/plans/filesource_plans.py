@@ -295,38 +295,27 @@ def s20_stats_skipping_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_book(spark: SparkSession, sf_dir: str) -> str:
-    """The events table as a stats-committed versioned book, built
-    once per (process, dataset content) — the persisted artifact the
-    pruned domain plans serve from, exactly as the IVF index plans
-    persist theirs (``plans/similarity.py:_ivf_index_tables``).  Day-
+    """The events table as a stats-committed versioned book, committed
+    once per process and input content (``versioned.commit_once``) —
+    the persisted artifact the pruned domain plans serve from.  Day-
     ranged layout (16 range partitions on ts) so file min/max windows
     are tight; ``stats_cols=["ts"]`` writes the skipping manifest."""
-    from omniengine_spark.sources.sinks import (
-        dataset_fingerprint,
-        stable_scratch_dir,
-    )
-    from omniengine_spark.sources.versioned import (
-        commit,
-        version_history,
-    )
+    from omniengine_spark.sources.sinks import artifact_root
+    from omniengine_spark.sources.versioned import commit_once
 
     # the book is written through load_table (UTC session, LTZ ts);
     # every pruned plan's timestamp literals and rendering must agree
     # with it even on a session whose tz nobody pinned yet — pin here,
     # the shared entry point
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    fp = dataset_fingerprint(sf_dir, "events.parquet")
-    path = stable_scratch_dir(f"events-book-{fp}")
-    tag = f"events day-ranged fp={fp}"
-    hist = version_history(path)
-    if not (hist and hist[-1]["description"] == tag):
-        ev = load_table(spark, sf_dir, "events")
-        commit(
-            ev.repartitionByRange(16, "ts"),
-            path,
-            tag,
-            stats_cols=["ts"],
-        )
+    path = artifact_root("events-book", sf_dir, "events.parquet")
+    commit_once(
+        path, "events day-ranged",
+        lambda: load_table(spark, sf_dir, "events").repartitionByRange(
+            16, "ts"
+        ),
+        stats_cols=["ts"],
+    )
     return path
 
 
@@ -609,55 +598,38 @@ def _events_incr_book(spark: SparkSession, sf_dir: str):
     between the two read from the version-1 stats manifest alone
     (``stats_minmax``: the reference's ``max(blocknumber)+1`` watermark
     at ``omniEngine.py:60-69``, answered with zero file opens).
-    Returns ``(path, watermark)``; built once per (process, dataset
-    content), the artifact contract of ``_events_book``."""
-    import datetime as dt
-
-    from omniengine_spark.sources.sinks import (
-        dataset_fingerprint,
-        stable_scratch_dir,
-    )
-    from omniengine_spark.sources.versioned import (
-        commit,
-        stats_minmax,
-        version_history,
-    )
+    Returns ``(path, watermark)``; both commits happen once per
+    process and input content (``versioned.commit_once``)."""
+    from omniengine_spark.sources.sinks import artifact_root
+    from omniengine_spark.sources.versioned import commit_once, stats_minmax
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    fp = dataset_fingerprint(sf_dir, "events.parquet")
-    path = stable_scratch_dir(f"events-incr-{fp}")
-    tag2 = f"events delta batch fp={fp}"
-    hist = version_history(path)
-    if not (hist and hist[-1]["description"] == tag2):
+    path = artifact_root("events-incr", sf_dir, "events.parquet")
+
+    def base_batch() -> DataFrame:
         ev = load_table(spark, sf_dir, "events")
         split = ev.agg(
             F.date_add(F.to_date(F.min("ts")), 10).alias("s")
         ).collect()[0]["s"]
         # day-ranged file layout inside each commit: pruning is
         # file-granular, so the base batch must span >1 file for the
-        # resume read to skip anything (same layout as _events_book)
-        base = commit(
-            ev.filter(F.to_date("ts") <= F.lit(split))
-            .repartitionByRange(8, "ts"),
-            path,
-            f"events base batch fp={fp}",
-            stats_cols=["ts"],
+        # resume read to skip anything
+        return ev.filter(F.to_date("ts") <= F.lit(split)).repartitionByRange(
+            8, "ts"
         )
-        # the A1 resume point, from planning-time metadata: max ts of
-        # everything committed so far — no scan of the base batch
-        watermark = stats_minmax(path, "ts", version=base)[1]
-        commit(
-            ev.filter(
-                F.col("ts") > F.lit(watermark.replace(tzinfo=None))
-            ).repartitionByRange(4, "ts"),
-            path,
-            tag2,
-            base_version=base,
-            stats_cols=["ts"],
-        )
-    else:
-        base = hist[-1]["base"]
-        watermark = stats_minmax(path, "ts", version=base)[1]
+
+    base = commit_once(path, "base batch", base_batch, stats_cols=["ts"])
+    # the A1 resume point, from planning-time metadata: max ts of
+    # everything committed so far — no scan of the base batch
+    watermark = stats_minmax(path, "ts", version=base["version"])[1]
+    commit_once(
+        path, "delta batch",
+        lambda: load_table(spark, sf_dir, "events")
+        .filter(F.col("ts") > F.lit(watermark.replace(tzinfo=None)))
+        .repartitionByRange(4, "ts"),
+        delta=True,
+        stats_cols=["ts"],
+    )
     return path, watermark
 
 

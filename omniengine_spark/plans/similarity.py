@@ -531,9 +531,9 @@ def sim_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-row-group input file would serialize it onto one core
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     queries = emb.orderBy("vec_id").limit(_N_QUERIES)
-    # COUNT(*)-derived shortlist depth (one bounded build-time action,
-    # cached per sf_dir — see _emb_count) — mirrors the oracle's
-    # greatest(floor, count(*) // div) exactly
+    # COUNT(*)-derived shortlist depth (a parquet-footer read — see
+    # _emb_count) — mirrors the oracle's greatest(floor, count(*) //
+    # div) exactly
     shortlist = max(
         _PQ_SHORTLIST, _emb_count(emb, sf_dir) // _PQ_SHORTLIST_DIV
     )
@@ -640,9 +640,25 @@ def sim_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 _IVF_IDX_K_FLOOR = 16
 _IVF_IDX_NPROBE = 4
-# the append plan freezes centroids to the BASE corpus (vec_id % 10
-# <> 7); the shard (% 10 = 7) is assigned to those frozen centroids
+# the append plans (and dedup_semantic_incremental) freeze their
+# quantizer to the BASE corpus (vec_id % 10 <> 7); the shard (% 10 = 7)
+# is assigned to it afterwards
 _IVF_APPEND_SHARD_MOD, _IVF_APPEND_SHARD_REM = 10, 7
+
+
+def _base_shard(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    in_shard = F.col("vec_id") % _IVF_APPEND_SHARD_MOD == _IVF_APPEND_SHARD_REM
+    return emb.filter(~in_shard), emb.filter(in_shard)
+
+
+def _base_count(spark: SparkSession, sf_dir: str, base: DataFrame) -> int:
+    """Row count of the base corpus ``base`` (``_base_shard``'s first
+    frame) that sizes a frozen quantizer: one count job per
+    embeddings file signature, shared by every plan that freezes to
+    the base."""
+    return session_memo(
+        spark, "base-count", f"{sf_dir}/embeddings.parquet", base.count
+    )
 
 
 def _ivf_idx_k(n_seed: int) -> int:
@@ -672,90 +688,51 @@ def _ivf_idx_k_sql(seed_filter: str = "") -> str:
 def _ivf_index_tables(
     spark: SparkSession, sf_dir: str, base_only: bool
 ) -> tuple[DataFrame, DataFrame]:
-    """Centroid + list tables of the persisted IVF index, building
-    and committing them first if this process hasn't yet (or if the
-    corpus changed size — the commit description carries the content
-    tag).  ``base_only`` freezes centroids to the base corpus and
-    appends the held-out shard assign-only, as a second table
-    version: reading CURRENT yields the appended snapshot, version 1
-    remains the pre-append index (time travel over index history)."""
-    from pathlib import Path
-
+    """Centroid + list tables of the persisted IVF index, committed
+    once per process and input content (``versioned.commit_once``).
+    ``base_only`` freezes centroids to the base corpus and appends the
+    held-out shard assign-only, as a second table version: reading
+    CURRENT yields the appended snapshot, version 1 remains the
+    pre-append index (time travel over index history)."""
     from omniengine_spark.operators import ann_index as AI
-    from omniengine_spark.sources.sinks import stable_scratch_dir
-    from omniengine_spark.sources.versioned import (
-        commit,
-        read_version,
-        version_history,
-    )
+    from omniengine_spark.sources.sinks import artifact_root
+    from omniengine_spark.sources.versioned import commit_once, read_version
 
     label = "ivf-append" if base_only else "ivf-index"
-    # freshness keys on CONTENT (abs path + file stats), not dir
-    # basename + row count: two same-named count-equal datasets in
-    # one process must not reuse each other's persisted index
-    from omniengine_spark.sources.sinks import dataset_fingerprint
-
-    fp = dataset_fingerprint(sf_dir, "embeddings.parquet")
-    root = stable_scratch_dir(f"{label}-{fp}")
+    root = artifact_root(label, sf_dir, "embeddings.parquet")
     cpath, lpath = f"{root}/centroids", f"{root}/lists"
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    n = _emb_count(emb, sf_dir)
-    base = emb.filter(
-        F.col("vec_id") % _IVF_APPEND_SHARD_MOD
-        != _IVF_APPEND_SHARD_REM
+    seed, shard = _base_shard(emb) if base_only else (emb, None)
+
+    def centroids() -> DataFrame:
+        n_seed = (
+            _base_count(spark, sf_dir, seed)
+            if base_only
+            else _emb_count(emb, sf_dir)
+        )
+        return AI.seeded_centroids(
+            seed, "vec_id", "embedding", _ivf_idx_k(n_seed)
+        )
+
+    commit_once(cpath, label, centroids)
+    commit_once(
+        lpath, f"{label} base" if base_only else label,
+        lambda: AI.assign_lists(seed, centroids(), "vec_id", "embedding"),
+        partition_cols=["cluster"],
     )
-    n_seed = _emb_count(base, f"{sf_dir}|base") if base_only else n
-    k = _ivf_idx_k(n_seed)
-    tag = f"{label} k={k} n={n} fp={fp}"
-
-    def _current(path: str) -> bool:
-        hist = version_history(path)
-        return bool(hist) and hist[-1]["description"] == tag
-
-    if not (_current(cpath) and _current(lpath)):
-        if base_only:
-            shard = emb.filter(
-                F.col("vec_id") % _IVF_APPEND_SHARD_MOD
-                == _IVF_APPEND_SHARD_REM
-            )
-            cents = AI.seeded_centroids(
-                base, "vec_id", "embedding", k
-            )
-            commit(cents, cpath, tag)
-            commit(
-                AI.assign_lists(base, cents, "vec_id", "embedding"),
-                lpath,
-                f"{label} base",
-                partition_cols=["cluster"],
-            )
-            # assign-only append against the PERSISTED centroids —
-            # the shard lands as a DELTA version over the base lists:
-            # the write is shard-sized, readers of CURRENT assemble
-            # base ∪ shard, and version 1 stays readable as the
-            # pre-append index (index time travel)
-            from omniengine_spark.sources.versioned import (
-                current_version,
-            )
-
-            pcents = read_version(spark, cpath)
-            commit(
-                AI.assign_lists(shard, pcents, "vec_id", "embedding"),
-                lpath,
-                tag,
-                partition_cols=["cluster"],
-                base_version=current_version(lpath),
-            )
-        else:
-            cents = AI.seeded_centroids(
-                emb, "vec_id", "embedding", k
-            )
-            commit(cents, cpath, tag)
-            commit(
-                AI.assign_lists(emb, cents, "vec_id", "embedding"),
-                lpath,
-                tag,
-                partition_cols=["cluster"],
-            )
+    if base_only:
+        # assign-only append against the PERSISTED centroids — the
+        # shard lands as a DELTA version over the base lists: the write
+        # is shard-sized, readers of CURRENT assemble base ∪ shard, and
+        # version 1 stays readable as the pre-append index
+        commit_once(
+            lpath, label,
+            lambda: AI.assign_lists(
+                shard, read_version(spark, cpath), "vec_id", "embedding"
+            ),
+            delta=True,
+            partition_cols=["cluster"],
+        )
     cents = read_version(spark, cpath)
     # the partition column comes back as the directory-key int type;
     # restore the logical long so downstream joins/output match
@@ -949,91 +926,64 @@ def _lsh_index_tables(
     spark: SparkSession, sf_dir: str, base_only: bool
 ) -> tuple[DataFrame, int]:
     """Entry table of the persisted LSH index (+ its frozen active-bit
-    count), building and committing it first if this process hasn't
-    yet (content-fingerprint freshness, same contract as
-    ``_ivf_index_tables``).  ``base_only`` freezes planes AND n_act to
-    the base corpus and appends the held-out shard as a DELTA version:
-    reading CURRENT yields the appended snapshot, version 1 remains
-    the pre-append index."""
+    count), committed once per process and input content (same
+    contract as ``_ivf_index_tables``).  ``base_only`` freezes planes
+    AND n_act to the base corpus and appends the held-out shard as a
+    DELTA version: reading CURRENT yields the appended snapshot,
+    version 1 remains the pre-append index."""
     from omniengine_spark.operators import ann_index as AI
-    from omniengine_spark.sources.sinks import (
-        dataset_fingerprint,
-        stable_scratch_dir,
-    )
-    from omniengine_spark.sources.versioned import (
-        commit,
-        current_version,
-        read_version,
-        version_history,
-    )
+    from omniengine_spark.sources.sinks import artifact_root
+    from omniengine_spark.sources.versioned import commit_once, read_version
 
     label = "lsh-append" if base_only else "lsh-index"
-    fp = dataset_fingerprint(sf_dir, "embeddings.parquet")
-    root = stable_scratch_dir(f"{label}-{fp}")
-    epath = f"{root}/entries"
+    epath = f"{artifact_root(label, sf_dir, 'embeddings.parquet')}/entries"
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
-    n = _emb_count(emb, sf_dir)
-    base = emb.filter(
-        F.col("vec_id") % _IVF_APPEND_SHARD_MOD
-        != _IVF_APPEND_SHARD_REM
+    seed, shard = _base_shard(emb) if base_only else (emb, None)
+    n_act = AI.lsh_active_bits(
+        _base_count(spark, sf_dir, seed)
+        if base_only
+        else _emb_count(emb, sf_dir),
+        _OCCUPANCY,
     )
-    n_seed = _emb_count(base, f"{sf_dir}|base") if base_only else n
-    n_act = AI.lsh_active_bits(n_seed, _OCCUPANCY)
-    tag = f"{label} bits={n_act} n={n} fp={fp}"
+    kw = dict(
+        n_tables=_N_TABLES,
+        n_act=n_act,
+        shard_bits=_LSH_SHARD_BITS,
+        dim=_DIM,
+    )
 
-    hist = version_history(epath)
-    if not (hist and hist[-1]["description"] == tag):
-        kw = dict(
-            n_tables=_N_TABLES,
-            n_act=n_act,
-            shard_bits=_LSH_SHARD_BITS,
-            dim=_DIM,
+    # one shuffle on the partition keys before the partitioned
+    # write: without it every write task holding rows for a dir
+    # emits a file there (measured 1293 files for 2000 rows at
+    # smoke — the small-files anti-pattern); hashed on (t, shard)
+    # each dir gets exactly one writer.  At warehouse scale the
+    # same call takes (n, cols) to target ~128 MB files per dir.
+    # The within-file sort orders row groups by bucket, so the
+    # serve path's pushed bucket IN-list skips row groups off
+    # tight footer stats (lsh_query_index prunes dirs AND row
+    # groups; unsorted files would leave every row-group range
+    # spanning the whole shard).
+    def ent(df: DataFrame) -> DataFrame:
+        return (
+            AI.lsh_entry_table(df, "vec_id", "embedding", **kw)
+            .repartition("t", "shard")
+            .sortWithinPartitions("t", "shard", "bucket")
         )
 
-        # one shuffle on the partition keys before the partitioned
-        # write: without it every write task holding rows for a dir
-        # emits a file there (measured 1293 files for 2000 rows at
-        # smoke — the small-files anti-pattern); hashed on (t, shard)
-        # each dir gets exactly one writer.  At warehouse scale the
-        # same call takes (n, cols) to target ~128 MB files per dir.
-        # The within-file sort orders row groups by bucket, so the
-        # serve path's pushed bucket IN-list skips row groups off
-        # tight footer stats (lsh_query_index prunes dirs AND row
-        # groups; unsorted files would leave every row-group range
-        # spanning the whole shard).
-        def ent(df: DataFrame) -> DataFrame:
-            return (
-                AI.lsh_entry_table(df, "vec_id", "embedding", **kw)
-                .repartition("t", "shard")
-                .sortWithinPartitions("t", "shard", "bucket")
-            )
-        if base_only:
-            shard = emb.filter(
-                F.col("vec_id") % _IVF_APPEND_SHARD_MOD
-                == _IVF_APPEND_SHARD_REM
-            )
-            commit(
-                ent(base),
-                epath,
-                f"{label} base",
-                partition_cols=["t", "shard"],
-            )
-            # assign-only append against the FROZEN planes + n_act:
-            # the shard lands as a delta version at |shard| cost
-            commit(
-                ent(shard),
-                epath,
-                tag,
-                partition_cols=["t", "shard"],
-                base_version=current_version(epath),
-            )
-        else:
-            commit(
-                ent(emb),
-                epath,
-                tag,
-                partition_cols=["t", "shard"],
-            )
+    tag = f"{label} bits={n_act}"
+    commit_once(
+        epath, f"{label} base" if base_only else tag,
+        lambda: ent(seed),
+        partition_cols=["t", "shard"],
+    )
+    if base_only:
+        # assign-only append against the FROZEN planes + n_act: the
+        # shard lands as a delta version at |shard| cost
+        commit_once(
+            epath, tag, lambda: ent(shard),
+            delta=True,
+            partition_cols=["t", "shard"],
+        )
     # partition columns come back as directory-key ints; restore the
     # logical types so joins/output match the build-side frames
     entries = (

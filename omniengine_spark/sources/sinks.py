@@ -75,6 +75,16 @@ def stable_scratch_dir(label: str) -> str:
     return _allocate(_SCRATCH, "", label)
 
 
+def artifact_root(label: str, sf_dir: str, *tables: str) -> str:
+    """Home of a persisted artifact built from ``tables`` of
+    ``sf_dir``: this process's stable scratch dir named by ``label``
+    and the input's ``dataset_fingerprint``.  The root names the input
+    content, so the tags committed under it need not."""
+    return stable_scratch_dir(
+        f"{label}-{dataset_fingerprint(sf_dir, *tables)}"
+    )
+
+
 def scratch_dir(label: str) -> str:
     """Fresh unique scratch directory under the repo (the stable name
     plus a uuid)."""

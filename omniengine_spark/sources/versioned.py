@@ -95,8 +95,7 @@ class DeltaConflictError(RuntimeError):
     full content); delta commits are NOT, so they get the lakehouse
     optimistic-concurrency rule: publish succeeds only if the base is
     still the tip, else this error.  Recovery is re-read the tip,
-    recompute the delta against it, commit again — see
-    ``minhash_index.ingest_shard``'s retry loop."""
+    recompute the delta against it, commit again."""
 
 
 def _manifest_log(path: str) -> list[tuple[int, Path]]:
@@ -617,10 +616,9 @@ def commit(
     would fork the chain and the loser's rows would silently vanish
     from the current content.  On conflict the claimed data dir
     becomes an orphan (age-gated ``vacuum`` sweep retires it); the
-    caller re-reads the tip, recomputes against it, and re-commits
-    (``minhash_index.ingest_shard`` shows the retry loop).  Snapshot
-    commits (no base) stay last-writer-wins: each carries its full
-    content, so concurrent snapshots cannot lose rows."""
+    caller re-reads the tip, recomputes against it, and re-commits.
+    Snapshot commits (no base) stay last-writer-wins: each carries its
+    full content, so concurrent snapshots cannot lose rows."""
     Path(path).mkdir(parents=True, exist_ok=True)
     if base_version is not None:
         known = {e["version"] for e in _load_manifest(path)["versions"]}
@@ -652,6 +650,44 @@ def commit(
         T.StructType(data_fields).jsonValue(),
     )
     return version
+
+
+def _tagged(path: str, tag: str) -> dict | None:
+    manifest = _load_manifest(path)
+    return next(
+        (
+            e
+            for e in manifest["versions"] + manifest.get("retired", [])
+            if e["description"] == tag
+        ),
+        None,
+    )
+
+
+def commit_once(
+    path: str, tag: str, build, *, delta: bool = False, **commit_kw
+) -> dict:
+    """Commit ``build()`` under description ``tag`` unless ``tag`` is
+    already committed; return the tag's manifest entry (``version``,
+    plus ``base`` for a delta).  The one build-once rule of persisted
+    artifacts.
+
+    A tag counts as committed when ANY manifest entry carries it: a
+    version anywhere in history, not only the tip, or one ``vacuum``
+    moved to ``retired``.  So a crash-retry or a conflict-retry reuses
+    a delta that already landed, a replay after ``compact`` + ``vacuum``
+    commits nothing, and no tag is committed twice.  A committed tag
+    skips ``build`` entirely: no frame is built, no job fires.
+    Otherwise ``build()`` goes through ``commit``; ``delta=True`` bases
+    it on the tip read after the frame is built, so a concurrent
+    writer that moves the tip still raises ``DeltaConflictError``."""
+    if _tagged(path, tag) is None:
+        commit(
+            build(), path, tag,
+            base_version=current_version(path) if delta else None,
+            **commit_kw,
+        )
+    return _tagged(path, tag)
 
 
 def _version_dirs(path: str, manifest: dict, v: int) -> list[str]:

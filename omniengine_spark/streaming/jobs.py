@@ -58,29 +58,53 @@ def _stream_state_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def _drain_memory_sink(
+    stream_df: DataFrame, output_mode: str, drain=None
+) -> DataFrame:
+    """Run ``stream_df`` into a fresh memory sink until drained and
+    return the drained rows as a batch DataFrame.
+
+    ``drain(query, sink_name)`` polls a live source until it is done;
+    without one the stream runs with the ``availableNow`` trigger to
+    the end of its input.  The query is then stopped, its checkpoint
+    deleted (a memory sink can never be resumed — the same lifecycle
+    the auto-created temp checkpoint had) and the sink's table
+    dropped: the returned frame holds the analyzed sink plan, not the
+    table name, so the rows live exactly as long as the frame and no
+    ``omni_stream_sink_*`` table accumulates in the session."""
+    spark = stream_df.sparkSession
+    name = f"omni_stream_sink_{next(_SINK_COUNTER)}"
+    ckpt = stream_checkpoint_dir(name)
+    writer = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+    )
+    if drain is None:
+        writer = writer.trigger(availableNow=True)
+    with _stream_state_partitions(spark):
+        q = writer.start()
+        try:
+            if drain is None:
+                q.awaitTermination()
+            else:
+                drain(q, name)
+        finally:
+            q.stop()
+            shutil.rmtree(ckpt, ignore_errors=True)
+    sink = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return sink
+
+
 def run_available_now(
     stream_df: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
     """Drain a finite stream into a memory sink; return it as a batch
     DataFrame.  availableNow processes all existing input in
     micro-batches then stops — the reference's catch-up-to-tip loop."""
-    name = f"omni_stream_sink_{next(_SINK_COUNTER)}"
-    ckpt = stream_checkpoint_dir(name)
-    with _stream_state_partitions(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # the drain finished: this checkpoint can never be resumed (the
-    # memory sink dies with the session), so reclaim it immediately —
-    # same lifecycle the auto-created temp checkpoint had
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return stream_df.sparkSession.table(name)
+    return _drain_memory_sink(stream_df, output_mode)
 
 
 def hourly_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -588,41 +612,27 @@ def socket_event_counts(
         F.sum("event_id").alias("sum_ids"),
     )
 
-    name = f"omni_stream_sink_{next(_SINK_COUNTER)}"
-    ckpt = stream_checkpoint_dir(name)
-    with _stream_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+    def drain(q, name: str) -> None:
+        # TCP delivery into the source buffer is asynchronous, so
+        # processAllAvailable alone can return before the tail arrived
+        # — poll until the sink holds exactly the served row count
+        deadline = time.monotonic() + 90
+        got = -1  # keep the timeout message raisable even if the
+        # deadline elapses before the first poll completes
         try:
-            # drain loop: TCP delivery into the source buffer is
-            # asynchronous, so processAllAvailable alone can return
-            # before the tail arrived — poll until the sink holds
-            # exactly the served row count
-            deadline = time.monotonic() + 90
-            got = -1  # keep the timeout message raisable even if the
-            # deadline elapses before the first poll completes
             while time.monotonic() < deadline:
                 q.processAllAvailable()
-                got = (
-                    spark.table(name)
-                    .agg(F.sum("n_events"))
-                    .collect()[0][0]
-                )
+                got = spark.table(name).agg(F.sum("n_events")).collect()[0][0]
                 if got == expected:
-                    break
+                    return
                 time.sleep(0.2)
-            else:
-                raise TimeoutError(
-                    f"socket stream drained {got}/{expected} rows"
-                )
+            raise TimeoutError(
+                f"socket stream drained {got}/{expected} rows"
+            )
         finally:
             drained.set()
-            q.stop()
-            srv.close()
-            shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+
+    try:
+        return _drain_memory_sink(agg, "complete", drain)
+    finally:
+        srv.close()

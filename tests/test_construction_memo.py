@@ -194,20 +194,54 @@ def test_genesis_csv_written_once_per_customer_file(spark, tmp_path):
     assert balances(third) == balances(fresh) != old
 
 
+def _manifest_seqs() -> dict[str, int]:
+    """Newest manifest sequence of every versioned table under this
+    process's scratch artifacts."""
+    out: dict[str, int] = {}
+    for m in sinks._SCRATCH.glob(f"p{os.getpid()}-*/**/_manifest.[0-9]*.json"):
+        seq = int(m.name.split(".")[1])
+        out[str(m.parent)] = max(out.get(str(m.parent), 0), seq)
+    return out
+
+
+# Build-job bounds of a warm call of each plan that exercises a
+# persisted-artifact build site (every other serve plan: 0).  The LSH
+# serve path collects the query batch's probed buckets at build time
+# (4 jobs at sf0.001); the append plan fires no more, since the base
+# count that sizes its frozen index is memoized per embeddings file.
+# The stream plan reads its feed's schema.
+_ARTIFACT_WARM_BUILD_JOBS = {
+    "sim_ivf_index_query": 0,
+    "sim_ivf_index_append": 0,
+    "sim_lsh_index_query": 4,
+    "sim_lsh_index_append": 4,
+    "s20_stats_skipping_scan": 0,
+    "x1c_incremental_pruned_resume": 0,
+    "dedup_incremental_shard": 0,
+    "dedup_semantic_incremental": 0,
+    "dedup_stream_ingest": 1,
+}
+
+
 def test_serve_plans_fire_no_build_jobs_when_warm(spark):
-    """Every plan of the benchmark's ``serve`` workload, called a
-    second time on the same data, builds its frame without a Spark
-    job: artifacts, memos and versioned reads are all settled by the
-    first call, so the action is the only job source."""
+    """Every plan of the benchmark's ``serve`` workload, and every
+    artifact plan, called a second time on the same data builds its
+    frame with no Spark job beyond its bound and advances no artifact
+    manifest: artifacts, memos and versioned reads are all settled by
+    the first call."""
     from omniengine_spark.plans import QUERIES
     from perfbench.workloads import WORKLOADS
 
-    for name in WORKLOADS["serve"].plans:
+    bounds = dict.fromkeys(WORKLOADS["serve"].plans, 0)
+    bounds.update(_ARTIFACT_WARM_BUILD_JOBS)
+    for name, bound in bounds.items():
         QUERIES[name](spark, SF_SMOKE).collect()
+        seqs = _manifest_seqs()
         before = next_job_id(spark)
         df = QUERIES[name](spark, SF_SMOKE)
-        assert next_job_id(spark) == before, name
+        assert next_job_id(spark) - before <= bound, name
         df.collect()
+        assert _manifest_seqs() == seqs, name
 
 
 def test_write_partitioned_one_file_per_partition(spark, tmp_path):

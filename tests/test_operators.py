@@ -478,7 +478,7 @@ def test_crash_between_table_commits_converges(spark, tmp_path, monkeypatch):
     )
     epath, ppath, spath = MI.index_paths(root)
 
-    real_commit = MI.commit
+    real_commit = V.commit
     armed = {"on": True}
 
     def die_after_shingles(df, path, description, **kw):
@@ -488,13 +488,13 @@ def test_crash_between_table_commits_converges(spark, tmp_path, monkeypatch):
             raise RuntimeError("injected death after shingles commit")
         return ver
 
-    monkeypatch.setattr(MI, "commit", die_after_shingles)
+    monkeypatch.setattr(V, "commit", die_after_shingles)
     with pytest.raises(RuntimeError, match="injected death"):
         MI.ingest_shard(
             spark, root, shard_a, "doc_id", "text",
             tag="base +A", **params,
         )
-    monkeypatch.setattr(MI, "commit", real_commit)
+    monkeypatch.setattr(V, "commit", real_commit)
 
     # (1) the index is readable mid-crash: A's shingle delta is the
     # shingles tip, entries/pairs still end at base
@@ -646,7 +646,7 @@ def test_minhash_index_two_shard_loop(spark, tmp_path):
     # snapshot (same tag, so replay idempotency holds), after which
     # vacuum retires the per-shard versions; content is unchanged
     MI.compact_index(spark, root)
-    assert MI.latest_tag(root) == "base +B"
+    assert V.version_history(ppath)[-1]["description"] == "base +B"
     assert _pair_set(
         MI.ingest_shard(
             spark, root, shard_b, "doc_id", "text",
@@ -710,10 +710,7 @@ def test_dedup_stream_ingest_plan(spark):
     from omniengine_spark.plans.registry import QUERIES
     from omniengine_spark.sources import load_table
     from omniengine_spark.sources import versioned as V
-    from omniengine_spark.sources.sinks import (
-        dataset_fingerprint,
-        stable_scratch_dir,
-    )
+    from omniengine_spark.sources.sinks import artifact_root
 
     sf = "/root/testdata/sf0.001"
     result = QUERIES["dedup_stream_ingest"](spark, sf)
@@ -729,8 +726,7 @@ def test_dedup_stream_ingest_plan(spark):
 
     # maintenance ran: one compacted snapshot serves; the retired
     # audit trail shows the corpus build plus >=2 stream batches
-    fp = dataset_fingerprint(sf, "documents.parquet")
-    root = stable_scratch_dir(f"minhash-stream-{fp}")
+    root = artifact_root("minhash-stream", sf, "documents.parquet")
     ppath = MI.index_paths(root)[1]
     assert len(V.version_history(ppath)) == 1
     retired = [
@@ -785,7 +781,7 @@ def test_delta_conflict_retry_in_ingest(spark, tmp_path, monkeypatch):
             return v - 1
         return v
 
-    monkeypatch.setattr(MI, "current_version", stale_once)
+    monkeypatch.setattr(V, "current_version", stale_once)
     after_b = MI.ingest_shard(
         spark, root, shard_b, "doc_id", "text", tag="base +B", **params
     )

@@ -363,3 +363,19 @@ def test_timer_expiry_chunking_invariant(spark):
     assert single, "expiry fold emitted nothing on the fixture"
     assert chunked == single
     cleanup(sf_dir)
+
+
+def test_memory_sink_drains_leave_no_tables(spark):
+    """A memory-sink drain drops its sink table: after the availableNow
+    (x1) and socket (x17) drains no ``omni_stream_sink_*`` table is
+    left in the session, and each returned frame still holds the
+    drained rows."""
+    from omniengine_spark.plans import QUERIES
+
+    for name in ("x1_stream_hourly_counts", "x17_socket_stream"):
+        assert QUERIES[name](spark, SF_SMOKE).count() > 0, name
+    assert not [
+        r.tableName
+        for r in spark.sql("SHOW TABLES").collect()
+        if r.tableName.startswith("omni_stream_sink_")
+    ]

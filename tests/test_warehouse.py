@@ -1105,3 +1105,84 @@ def test_read_version_schema_from_manifest(spark, tmp_path):
         got, want = got_fn(), want_fn()
         assert got.schema == want.schema
         assert sorted(got.collect()) == sorted(want.collect())
+
+
+def _never():
+    raise AssertionError("build called for a committed tag")
+
+
+def test_commit_once_skips_every_committed_tag(spark, tmp_path):
+    """``commit_once`` is the one build-once rule: a tag carried by any
+    manifest entry — the tip, an earlier version, or one ``vacuum``
+    retired after ``compact`` — is never rebuilt or recommitted, and
+    the skip fires no Spark job."""
+    from omniengine_spark.sources import versioned as V
+
+    tbl = str(tmp_path / "tbl")
+    a = V.commit_once(tbl, "a", lambda: spark.range(0, 3))
+    b = V.commit_once(tbl, "b", lambda: spark.range(3, 6), delta=True)
+    assert b["base"] == a["version"]
+
+    before = next_job_id(spark)
+    assert V.commit_once(tbl, "a", _never) == a  # not the tip
+    assert V.commit_once(tbl, "b", _never, delta=True) == b
+    assert next_job_id(spark) == before
+    assert [e["description"] for e in V.version_history(tbl)] == ["a", "b"]
+
+    V.compact(spark, tbl, "squash")
+    retired = V.vacuum(tbl, keep_last=1, orphan_ttl_s=0.0)
+    assert sorted(retired) == [a["version"], b["version"]]
+    seq = V._load_manifest_seq(tbl)[1]
+    assert V.commit_once(tbl, "a", _never)["version"] == a["version"]
+    assert V.commit_once(tbl, "b", _never, delta=True) == b
+    assert V._load_manifest_seq(tbl)[1] == seq
+    assert {r["id"] for r in V.read_version(spark, tbl).collect()} == set(
+        range(6)
+    )
+
+
+def test_commit_once_stale_delta_base_raises(spark, tmp_path, monkeypatch):
+    """A delta ``commit_once`` whose base is no longer the tip raises
+    ``DeltaConflictError`` and leaves its tag uncommitted; the retry
+    bases the delta on the new tip, and later calls reuse it."""
+    import pytest as _pytest
+
+    from omniengine_spark.sources import versioned as V
+
+    tbl = str(tmp_path / "tbl")
+    base = V.commit_once(tbl, "base", lambda: spark.range(0, 3))
+    other = V.commit_once(
+        tbl, "other", lambda: spark.range(3, 6), delta=True
+    )
+    with monkeypatch.context() as m:
+        m.setattr(V, "current_version", lambda path: base["version"])
+        with _pytest.raises(V.DeltaConflictError):
+            V.commit_once(tbl, "mine", lambda: spark.range(6, 9), delta=True)
+    assert "mine" not in [e["description"] for e in V.version_history(tbl)]
+
+    mine = V.commit_once(tbl, "mine", lambda: spark.range(6, 9), delta=True)
+    assert mine["base"] == other["version"]
+    assert V.commit_once(tbl, "mine", _never, delta=True) == mine
+    assert {r["id"] for r in V.read_version(spark, tbl).collect()} == set(
+        range(9)
+    )
+
+
+def test_plans_build_artifacts_only_through_commit_once():
+    """No plan or operator module compares a manifest description or
+    names an artifact root itself: ``versioned.commit_once`` is the one
+    build-once rule and ``sinks.artifact_root`` the one root naming."""
+    import re
+    from pathlib import Path
+
+    pattern = re.compile(
+        r"""\[["']description["']\]\s*(?:==|!=|not\s+in\b|in\b)"""
+        r"|\bdataset_fingerprint\(|\bstable_scratch_dir\("
+    )
+    pkg = Path(__file__).resolve().parents[1] / "omniengine_spark"
+    found = {
+        str(p.relative_to(pkg)): sorted(set(pattern.findall(p.read_text())))
+        for sub in ("plans", "operators")
+        for p in sorted((pkg / sub).rglob("*.py"))
+    }
+    assert not {k: v for k, v in found.items() if v}
