@@ -219,11 +219,13 @@ def in_cluster_drops(
 
 # ---------------------------------------------------------------------------
 # Persistent multi-probe LSH index — the serving-shaped counterpart
-# of ``similarity.lsh_ann_topk``.  The one-shot plan recomputes every
-# table's bucket keys for the WHOLE corpus inside each query (its
-# "index" and its answer are the same self-join); here the bucket
-# entries are built once, persisted as a versioned warehouse table,
-# and each query batch probes only its home + multi-probe buckets.
+# of ``similarity.lsh_ann_topk``.  Both key their vectors through
+# ``lsh_keyed`` below, the one copy of the bucket keying (plane dots,
+# home bucket, multi-probe flips).  The one-shot plan keys the WHOLE
+# corpus inside each query (its "index" and its answer are the same
+# self-join); here the bucket entries are built once, persisted as a
+# versioned warehouse table, and each query batch probes only its
+# home + multi-probe buckets.
 #
 # Two things must FREEZE with the index or every persisted key goes
 # stale:
@@ -279,14 +281,15 @@ def lsh_keyed(
     """(vec_id, vec, nrm, t, bucket, home) rows under FROZEN planes
     and a FROZEN active-bit count: the home bucket per table, plus
     the ``n_probes`` Hamming-adjacent probe buckets (lowest-|margin|
-    active bits flipped, Lv et al.) when asked.  Bit-identical to the
-    adaptive one-shot path at the same n_act: same md5 planes, same
-    zip_with/aggregate dot folds, same (|margin|, plane) sort — so a
-    SQL oracle rebuilding the keys reproduces them exactly.
+    active bits flipped, Lv et al.) when asked.  The one LSH keying:
+    the one-shot ``similarity.lsh_ann_topk``, the persisted entry
+    table and its query side all call it.  Same md5 planes, same
+    zip_with/aggregate dot folds, same (|margin|, plane) sort as the
+    SQL oracles, so they rebuild the keys exactly.
 
     ``deterministic_planes`` hashes (seed, plane, component) only, so
     generating just the first ``n_act`` planes yields the identical
-    constants the 16-plane one-shot path masks down to."""
+    constants the oracles' 16-plane keys mask down to."""
     from omniengine_spark.operators.similarity import (
         deterministic_planes,
     )
@@ -296,10 +299,15 @@ def lsh_keyed(
     vec_q = vec_col.replace("`", "``")
 
     def dots_arr(t: int) -> F.Column:
-        # one parsed string per table instead of n_act·dim F.lit()
-        # py4j calls — identical fold (zip_with → aggregate, same
-        # operand order, exactly-round-tripping double literals); see
-        # similarity.lsh_ann_topk's dots_arr for the measurement
+        # ONE parsed SQL expression per table instead of n_act·dim
+        # F.lit() py4j calls: the same fold (zip_with → aggregate,
+        # same operand order, double literals that round-trip exactly
+        # — plane components are multiples of 2^-15), but expression
+        # construction drops from ~4500 py4j round trips (measured
+        # 15-31 s of driver-side build for 4 tables × 16 planes × 64
+        # dims) to n_tables parses.  The dots land in an array column
+        # first, so each fold runs once per (vector, table) and the
+        # bucket bits (dot >= 0) and probe margins share its doubles.
         planes = deterministic_planes(seed + t, n_act, dim)
 
         def fold(p: int) -> str:
@@ -335,8 +343,9 @@ def lsh_keyed(
         dotted = dotted.withColumn(f"bkt{t}", home_bucket(t))
 
     def probe_buckets(t: int) -> F.Column:
-        # identical structs / sort key / slice / xor as the former
-        # Column-DSL form, one parse per table
+        # (|margin|, plane, mask) structs of the active planes, sorted
+        # ascending — ties impossible past the plane index, so every
+        # engine picks the identical flip set
         structs = ",".join(
             f"struct(abs(element_at(`dots{t}`, {p + 1})) AS d, "
             f"{p} AS p, CAST({1 << p} AS BIGINT) AS m)"

@@ -30,10 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
-
-from omniengine_spark.operators.dedup import md5_token_hash
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -332,12 +329,10 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    n_planes: int = 8,
+    n_act: int = 8,
     seed: int = 42,
     dim: int = 64,
     n_tables: int = 1,
-    target_occupancy: int | None = None,
-    max_planes: int = 16,
     n_probes: int = 0,
 ) -> DataFrame:
     """Approximate cosine top-k: compare only within LSH buckets,
@@ -353,18 +348,15 @@ def lsh_ann_topk(
     engine-independent: every table's planes are md5-derived, so the
     oracle rebuilds identical buckets.
 
-    With ``target_occupancy`` set, the ACTIVE bit count scales with
-    the data instead of being a constant: a fixed p means bucket
-    occupancy grows ∝ N and within-bucket pairs ∝ N² — measured
-    e≈1.34 at sf0.1→sf1, the thing that kills a 100× scale-up.  All
-    ``max_planes`` bits are computed per table, then masked down to
-    ``n_active = max(4, ceil(log2(N/64)))`` bits derived from COUNT(*)
-    with integer-portable arithmetic (``adaptive_planes_expr``) — so
-    occupancy stays ~64, candidate volume stays ∝ N·T, and the SQL
-    oracle still rebuilds identical buckets at ANY scale factor.  The
-    recall contract is per-bucket: holding recall while N grows means
-    raising ``n_tables`` (cost stays ∝ N·T); 16 max planes covers
-    N ≤ 64·2^16 ≈ 4.2M vectors per partition of the search space.
+    The bucket keys come from ``ann_index.lsh_keyed`` — the one
+    keying the persisted LSH index uses too — under ``n_act`` active
+    planes per table.  The caller picks ``n_act``: a constant, or one
+    scaled with the data (``ann_index.lsh_active_bits`` of the corpus
+    count, the Python twin of ``adaptive_planes_sql``), which pins
+    bucket occupancy instead of letting it grow ∝ N — a fixed p
+    measured e≈1.34 at sf0.1→sf1, because within-bucket pairs grow
+    ∝ N².  The recall contract is per-bucket: holding recall while N
+    grows means raising ``n_tables`` (cost stays ∝ N·T).
 
     ``n_probes`` > 0 adds MULTI-PROBE (Lv et al., VLDB'07): per table,
     each vector also probes the ``n_probes`` Hamming-adjacent buckets
@@ -381,6 +373,8 @@ def lsh_ann_topk(
     the probe set — and therefore the approximate result — remains
     exactly oracle-checkable.
     """
+    from omniengine_spark.operators import ann_index as AI
+
     # all T bucket keys in ONE scan, exploded to (table, bucket) rows,
     # then a single self-join on the composite key — one shuffle and
     # one join instead of T of each.  The VECTOR (and its precomputed
@@ -391,128 +385,16 @@ def lsh_ann_topk(
     # occupancy× more vector payload (measured 141 s / e≈+1.10 at sf5
     # vs this shape's near-linear cost: the per-pair fold is ~µs while
     # a pair-row carrying two 64-double arrays is ~1 KB of exchange).
-    p_bits = max_planes if target_occupancy else n_planes
-    # backtick-escape the caller-supplied column name before SQL-string
-    # interpolation (Spark quoted-identifier escaping: ` -> ``)
-    vec_q = vec_col.replace("`", "``")
-
-    def dots_arr(t: int) -> Column:
-        # ONE parsed SQL expression instead of ~p_bits·dim F.lit()
-        # py4j calls: the constructed tree is the same fold
-        # (zip_with → aggregate, same operand order, double literals
-        # that round-trip exactly — plane components are multiples of
-        # 2^-15), but expression CONSTRUCTION drops from ~4500 py4j
-        # round trips (measured 15-31 s of pure driver-side build for
-        # 4 tables × 16 planes × 64 dims) to n_tables expr() parses.
-        planes = deterministic_planes(seed + t, p_bits, dim)
-
-        def fold(p: int) -> str:
-            arr = ",".join(f"{c!r}D" for c in planes[p])
-            return (
-                f"aggregate(zip_with(`{vec_q}`, array({arr}), "
-                "(x, h) -> CAST(x AS DOUBLE) * h), 0.0D, "
-                "(acc, x) -> acc + x)"
-            )
-
-        return F.expr(
-            "array(" + ",".join(fold(p) for p in range(p_bits)) + ")"
-        )
-
-    # the p_bits plane dots land in an array column FIRST, so each
-    # fold runs once per (vector, table) and both the bucket bits AND
-    # the probe margins derive from the same stored doubles (the bit
-    # is dot >= 0)
-    dotted = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("nrm"),
-        *[dots_arr(t).alias(f"dots{t}") for t in range(n_tables)],
+    keyed = AI.lsh_keyed(
+        vectors,
+        id_col,
+        vec_col,
+        n_tables=n_tables,
+        n_act=n_act,
+        n_probes=n_probes,
+        seed=seed,
+        dim=dim,
     )
-    if target_occupancy:
-        n_active = adaptive_planes_sql("cnt", target_occupancy)
-        nfr = vectors.agg(F.count(F.lit(1)).alias("cnt")).select(
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST({n_active} AS INT))"
-            ).alias("two_p")
-        )
-        dotted = dotted.crossJoin(F.broadcast(nfr))
-    else:
-        dotted = dotted.withColumn(
-            "two_p",
-            F.lit(1 << p_bits).cast("long"),
-        )
-    # n_active bits = popcount of the mask (two_p - 1 is n_active ones)
-    dotted = dotted.withColumn(
-        "n_act", F.length(F.bin(F.col("two_p") - 1)).cast("int")
-    )
-
-    def home_bucket(t: int) -> Column:
-        # same OR-of-sign-bits integer expression as the former
-        # Column-DSL loop (p_bits whens + bitwiseORs per table), built
-        # as one parsed string — integer ops, so "same bits set" is
-        # "same value"; construction drops from ~p_bits·n_tables py4j
-        # round trips to n_tables parses.
-        ors = " | ".join(
-            f"(CASE WHEN element_at(`dots{t}`, {p + 1}) >= 0 "
-            f"THEN CAST({1 << p} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END)"
-            for p in range(p_bits)
-        )
-        return F.expr(f"({ors}) & (`two_p` - 1)")
-
-    for t in range(n_tables):
-        dotted = dotted.withColumn(f"bkt{t}", home_bucket(t))
-
-    def probe_buckets(t: int) -> Column:
-        # (|margin|, plane, mask) structs for the ACTIVE planes only,
-        # sorted ascending — ties impossible past the plane index, so
-        # both engines pick the identical flip set.  One parsed
-        # string per table (construction cost), identical structs,
-        # sort key, slice, and xor as the former Column-DSL form.
-        structs = ",".join(
-            f"struct(abs(element_at(`dots{t}`, {p + 1})) AS d, "
-            f"{p} AS p, CAST({1 << p} AS BIGINT) AS m)"
-            for p in range(p_bits)
-        )
-        return F.expr(
-            f"transform(slice(array_sort(filter(array({structs}), "
-            f"x -> x.p < `n_act`)), 1, {n_probes}), "
-            f"x -> `bkt{t}` ^ x.m)"
-        )
-
-    tb_arrays = [
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("t"),
-                    F.col(f"bkt{t}").alias("bucket"),
-                    F.lit(True).alias("home"),
-                )
-                for t in range(n_tables)
-            ]
-        )
-    ]
-    if n_probes > 0:
-        # closure factory, NOT `lambda b, t=t`: F.transform treats a
-        # two-parameter lambda as (element, index) and would pass the
-        # ARRAY INDEX as t — mislabeling every probe's table
-        def probe_struct(tt: int):
-            return lambda b: F.struct(
-                F.lit(tt).alias("t"),
-                b.alias("bucket"),
-                F.lit(False).alias("home"),
-            )
-
-        tb_arrays += [
-            F.transform(probe_buckets(t), probe_struct(t))
-            for t in range(n_tables)
-        ]
-    keyed = dotted.select(
-        "vec_id",
-        "vec",
-        "nrm",
-        F.explode(F.concat(*tb_arrays)).alias("tb"),
-    ).select("vec_id", "vec", "nrm", "tb.t", "tb.bucket", "tb.home")
     # the index side is a FILTERED projection of the same lineage —
     # rename its payload columns so the self-join below is
     # unambiguous by construction (alias-qualified refs against a
@@ -641,16 +523,12 @@ def pq_build_index(
     re-encoding.  At scale this is the whole point of PQ: encoding is
     an offline pass over the corpus, serving touches only the M-code
     table plus a per-query LUT."""
+    from omniengine_spark.operators import ann_index as AI
+
     subdim = dim // m
     nv = _normalized(vectors, id_col, vec_col)
-
-    h = md5_token_hash(F.col("vec_id").cast("string"))
-    seeds = (
-        nv.select(F.col("vec_id").alias("c"), F.col("nv").alias("cv"),
-                  h.alias("h"))
-        .orderBy("h", "c")
-        .limit(n_codewords)
-        .select("c", "cv")
+    seeds = AI.seeded_centroids(nv, "vec_id", "nv", n_codewords).select(
+        F.col("cluster").alias("c"), F.col("cvec").alias("cv")
     )
     ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
     seeds_sub = seeds.select("c", "cv", ms).select(
@@ -860,7 +738,7 @@ def semantic_prune(
     costs O(N²/B); clustering first makes it Σ|cluster|² — with
     n_clusters grown ∝ N (fixed expected list size) that's O(N·c̄).
     The quantizer is the portable md5-seeded one
-    (``ivf_ann_topk_portable``), so the whole prune — assignment,
+    (``ann_index.seeded_centroids``), so the whole prune — assignment,
     in-cluster pairs, keep/drop — is exactly reproducible by a SQL
     oracle.
 
@@ -962,19 +840,9 @@ def semantic_prune(
 
     kc = max(4, math.ceil(math.sqrt(n_clusters)))
 
-    h = md5_token_hash(F.col(id_col).cast("string"))
-    seeds = (
-        vectors.select(
-            F.col(id_col).alias("cluster"),
-            F.col(vec_col).alias("cvec"),
-            h.alias("h"),
-        )
-        .orderBy("h", "cluster")
-        .limit(n_clusters)
-        .select(
-            "cluster", "cvec", "h", _norm(F.col("cvec")).alias("cnrm")
-        )
-    )
+    from omniengine_spark.operators import ann_index as AI
+
+    seeds = AI.seeded_centroids(vectors, id_col, vec_col, n_clusters)
     v = vectors.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
@@ -998,9 +866,8 @@ def semantic_prune(
     # trade (a vector may refine in a cell that doesn't hold its
     # globally-nearest fine centroid) is standard IVF practice and
     # SemDeDup's in-cluster scan is itself a recall heuristic.
-    srows = sorted(
-        seeds.collect(), key=lambda r: (r["h"], r["cluster"])
-    )
+    # collected, an ordered top-k comes back in its (md5, id) seed rank
+    srows = seeds.collect()
     coarse = srows[:kc]
     co_ids = [int(r["cluster"]) for r in coarse]
     co_raw = [list(map(float, r["cvec"])) for r in coarse]

@@ -719,10 +719,10 @@ def dedup_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ANSWER is split-independent either way — a pair lands when
     # its later member ingests, wherever the split put it)
     incoming = f"{root}/incoming"
+    feed = docs.filter(F.col("doc_id") % _STREAM_MOD == _STREAM_REM)
     if not os.path.isdir(incoming):
         (
-            docs.filter(F.col("doc_id") % _STREAM_MOD == _STREAM_REM)
-            .repartition(_STREAM_BATCHES, "doc_id")
+            feed.repartition(_STREAM_BATCHES, "doc_id")
             .write.mode("overwrite")
             .parquet(incoming)
         )
@@ -741,7 +741,9 @@ def dedup_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     (
-        spark.readStream.schema(spark.read.parquet(incoming).schema)
+        # the schema of the frame that wrote the feed: re-reading the
+        # feed's footers would fire a job on every call
+        spark.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(incoming)
         .writeStream.foreachBatch(_ingest)

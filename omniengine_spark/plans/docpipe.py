@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from omniengine_spark.operators.dedup import md5_token_hash
 from omniengine_spark.plans.registry import query
 from omniengine_spark.plans.textstats import _STOPWORDS, _tokens
 from omniengine_spark.sources import load_table
@@ -246,13 +247,8 @@ def docpipe_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sqrt(F.col("n_l").cast("double")),
         ).alias("keep_rate"),
     )
-    frac = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(float(2**52))
+    frac = md5_token_hash(F.col("doc_id").cast("string"), 52) / F.lit(
+        float(2**52)
     )
     return (
         docs.join(F.broadcast(rates), "lang")
@@ -354,9 +350,7 @@ def docpipe_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs).  One hash-partition shuffle + per-shard sort; shards stay
     balanced because md5 is uniform."""
     docs = load_table(spark, sf_dir, "documents")
-    hv = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    hv = md5_token_hash(F.col("doc_id").cast("string"))
     h = docs.select("doc_id", hv.alias("hv"))
     w = Window.partitionBy(F.col("hv") % _N_SHARDS).orderBy(
         "hv", "doc_id"

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omniengine_spark.functions.scalars import DEC_18_4, dec_18_4
+from omniengine_spark.operators.dedup import md5_token_hash
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import fan_out, load_table
 
@@ -183,10 +184,7 @@ def quality_column_profile_approx(
 
     hashed = pairs.select(
         "column_name",
-        F.conv(F.substring(F.md5("v"), 1, 15), 16, 10)
-        .cast("decimal(38,0)")
-        .cast("long")
-        .alias("h"),
+        md5_token_hash(F.col("v")).alias("h"),
     ).distinct()
 
     # local prune: each salt bucket yields its own K smallest, so the
@@ -598,20 +596,10 @@ def stats_countmin_heavy_hitters(
 
     def h(j: int) -> F.Column:
         return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"{j}:"),
-                            F.col("user_id").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            md5_token_hash(
+                F.concat(F.lit(f"{j}:"), F.col("user_id").cast("string")),
+                32,
+            )
             % _CM_W
         )
 

@@ -76,6 +76,9 @@ def test_node_metrics_reads_the_scan_of_the_action(spark):
         "x15_ivm_rollup_merge",
         "stats_countmin_heavy_hitters",
         "j12_range_join",
+        "sim_lsh_ann_topk",
+        "sim_pq_ann_topk",
+        "sim_ivfpq_ann_topk",
     ],
 )
 def test_checksum_stable_across_runs_and_partitionings(spark, name):

@@ -31,7 +31,7 @@ def _recall(approx, exact):
 
 def test_lsh_ann_subset_of_universe(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    out = S.lsh_ann_topk(emb, "vec_id", "embedding", k=K, n_planes=8)
+    out = S.lsh_ann_topk(emb, "vec_id", "embedding", k=K, n_act=8)
     rows = out.collect()
     ids = {r["vec_id"] for r in emb.select("vec_id").collect()}
     assert all(r["nbr_id"] in ids and r["query_id"] in ids for r in rows)
@@ -366,3 +366,25 @@ def test_lsh_index_append_equals_rebuild(spark):
         rows(QUERIES["sim_lsh_index_query"](spark, SF_SMOKE))
         == direct_rows
     )
+
+
+def test_ann_mechanisms_have_one_copy():
+    """The LSH bucket keying lives only in ``ann_index.lsh_keyed`` (no
+    other module builds an ``element_at(`dots…`` key), and the
+    similarity plans hold no cached storage: their index state is
+    committed through ``versioned.commit_once``."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "omniengine_spark"
+    keying = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "element_at(`dots" in p.read_text()
+    )
+    assert keying == ["operators/ann_index.py"]
+    cached = re.findall(
+        r"\bpersist\(|\bStorageLevel\b",
+        (pkg / "plans" / "similarity.py").read_text(),
+    )
+    assert not cached
