@@ -18,7 +18,7 @@ Two layers:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -242,30 +242,48 @@ except ImportError:
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(data))
+        + tag
+        + data
+        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
+    )
+
+
+def _ihdr(width: int, height: int) -> bytes:
+    """IHDR body of an 8-bit grayscale, non-interlaced image."""
+    return struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+
+
+def _png(width: int, height: int, idat: bytes) -> bytes:
+    """Magic, CRC'd IHDR, one IDAT of ``idat`` (zlib stream), IEND."""
+    return (
+        _PNG_MAGIC
+        + _png_chunk(b"IHDR", _ihdr(width, height))
+        + _png_chunk(b"IDAT", idat)
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def _frame_scanlines(width: int, height: int, f: int) -> bytes:
+    """Deterministic per-frame pixel pattern (filter-0 scanlines):
+    pixel(x, y, f) = (7x + 13y + 29f) mod 256 — the arithmetic the
+    plan oracles restate symbolically."""
+    return b"".join(
+        b"\x00"
+        + bytes(((x * 7 + y * 13 + f * 29) % 256) for x in range(width))
+        for y in range(height)
+    )
+
+
 def make_png(width: int, height: int) -> bytes:
     """A real, spec-valid 8-bit grayscale PNG (magic, CRC'd IHDR,
     zlib-compressed scanlines, IEND) with a deterministic pixel
-    pattern — viewable by any image tool."""
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    raw = b"".join(
-        b"\x00"
-        + bytes(((x * 7 + y * 13) % 256) for x in range(width))
-        for y in range(height)
-    )
-    return (
-        _PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
+    pattern (frame 0 of ``_frame_scanlines``) — viewable by any image
+    tool."""
+    return _png(
+        width, height, zlib.compress(_frame_scanlines(width, height, 0))
     )
 
 
@@ -351,12 +369,13 @@ def _variant_params(v: int) -> dict:
     }
 
 
-def attach_real_payload(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload) where payload is REAL media bytes — a valid
-    PNG or WAV built from variant ``doc_id % 40`` parameters.  Docs
-    sharing a variant share byte-identical payloads (the fixture for
-    content-addressed dedup); the encode runs Arrow-batched on
-    executors, with the 40 variants memoized per batch."""
+def _variant_payloads(
+    docs: DataFrame, build: Callable[[int], bytes]
+) -> DataFrame:
+    """(doc_id, payload) with payload ``build(doc_id % 40)``: docs
+    sharing a variant share byte-identical payloads.  The encode runs
+    Arrow-batched on executors, with the 40 variants memoized per
+    batch."""
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -369,14 +388,7 @@ def attach_real_payload(docs: DataFrame) -> DataFrame:
 
         def payload_for(v: int) -> bytes:
             if v not in cache:
-                p = _variant_params(v)
-                cache[v] = (
-                    make_png(p["width"], p["height"])
-                    if p["container"] == "png"
-                    else make_wav(
-                        p["sample_rate"], p["n_channels"], p["n_frames"]
-                    )
-                )
+                cache[v] = build(v)
             return cache[v]
 
         for pdf in batches:
@@ -391,6 +403,20 @@ def attach_real_payload(docs: DataFrame) -> DataFrame:
             )
 
     return docs.select("doc_id").mapInPandas(encode, schema=schema)
+
+
+def _real_variant(v: int) -> bytes:
+    p = _variant_params(v)
+    if p["container"] == "png":
+        return make_png(p["width"], p["height"])
+    return make_wav(p["sample_rate"], p["n_channels"], p["n_frames"])
+
+
+def attach_real_payload(docs: DataFrame) -> DataFrame:
+    """(doc_id, payload) where payload is REAL media bytes — a valid
+    PNG or WAV built from variant ``doc_id % 40`` parameters (the
+    fixture for content-addressed dedup)."""
+    return _variant_payloads(docs, _real_variant)
 
 
 def probe_media(media: DataFrame) -> DataFrame:
@@ -548,26 +574,6 @@ def image_features(media: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-def _png_chunk(tag: bytes, data: bytes) -> bytes:
-    return (
-        struct.pack(">I", len(data))
-        + tag
-        + data
-        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-    )
-
-
-def _frame_scanlines(width: int, height: int, f: int) -> bytes:
-    """Deterministic per-frame pixel pattern (filter-0 scanlines):
-    pixel(x, y, f) = (7x + 13y + 29f) mod 256 — the arithmetic the
-    plan oracles restate symbolically."""
-    return b"".join(
-        b"\x00"
-        + bytes(((x * 7 + y * 13 + f * 29) % 256) for x in range(width))
-        for y in range(height)
-    )
-
-
 def make_apng(width: int, height: int, n_frames: int) -> bytes:
     """A real, spec-valid animated PNG: magic, CRC'd IHDR, acTL with
     the frame count, then per frame an fcTL control chunk and the
@@ -575,9 +581,8 @@ def make_apng(width: int, height: int, n_frames: int) -> bytes:
     fdAT after) — viewable in any browser."""
     if n_frames < 1:
         raise ValueError("n_frames must be >= 1")
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
     actl = struct.pack(">II", n_frames, 0)  # num_frames, loop forever
-    out = [_PNG_MAGIC, _png_chunk(b"IHDR", ihdr),
+    out = [_PNG_MAGIC, _png_chunk(b"IHDR", _ihdr(width, height)),
            _png_chunk(b"acTL", actl)]
     seq = 0
     for f in range(n_frames):
@@ -635,17 +640,10 @@ def extract_frames(payload: bytes) -> list[tuple[int, int, int, bytes]]:
         raise ValueError(
             f"acTL declares {declared} frames, found {len(frames)}"
         )
-    out = []
-    for i, fr in enumerate(frames):
-        ihdr = struct.pack(">IIBBBBB", fr["w"], fr["h"], 8, 0, 0, 0, 0)
-        png = (
-            _PNG_MAGIC
-            + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", b"".join(fr["data"]))
-            + _png_chunk(b"IEND", b"")
-        )
-        out.append((i, fr["w"], fr["h"], png))
-    return out
+    return [
+        (i, fr["w"], fr["h"], _png(fr["w"], fr["h"], b"".join(fr["data"])))
+        for i, fr in enumerate(frames)
+    ]
 
 
 def _apng_params(v: int) -> dict:
@@ -658,41 +656,16 @@ def _apng_params(v: int) -> dict:
     }
 
 
+def _video_variant(v: int) -> bytes:
+    p = _apng_params(v)
+    return make_apng(p["width"], p["height"], p["n_frames"])
+
+
 def attach_video_payload(docs: DataFrame) -> DataFrame:
     """(doc_id, payload) where payload is a REAL animated PNG built
-    from variant ``doc_id % 40`` parameters; Arrow-batched encode with
-    the 40 variants memoized per batch (same shape as
+    from variant ``doc_id % 40`` parameters (same encoder as
     ``attach_real_payload``)."""
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, bytes] = {}
-
-        def payload_for(v: int) -> bytes:
-            if v not in cache:
-                p = _apng_params(v)
-                cache[v] = make_apng(
-                    p["width"], p["height"], p["n_frames"]
-                )
-            return cache[v]
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(),
-                    "payload": [
-                        payload_for(int(d) % _N_VARIANTS)
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(encode, schema=schema)
+    return _variant_payloads(docs, _video_variant)
 
 
 def sample_frames_real(media: DataFrame, stride: int = 2) -> DataFrame:

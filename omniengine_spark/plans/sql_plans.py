@@ -1,7 +1,9 @@
-"""SQL front-end plans: the engine's tables registered as views and
-queried through ``spark.sql`` — proving the full SQL surface (the
-reference's hand-written SQL strings, ``sql.py`` passim) works
-against the same warehouse with the same oracle discipline.
+"""SQL front-end plans: one SQL text per plan, run by ``spark.sql``
+over the engine's tables and by DuckDB as the oracle — proving the
+full SQL surface (the reference's hand-written SQL strings, ``sql.py``
+passim) works against the same warehouse with the same oracle
+discipline.  Tables are bound as ``spark.sql`` DataFrame arguments,
+so a plan leaves no temporary view in the session.
 
 Besides the TPC-H shapes (Q18 is A15/J13) it holds the subquery
 surface: correlated scalar subqueries and EXISTS + NOT EXISTS.
@@ -9,25 +11,73 @@ surface: correlated scalar subqueries and EXISTS + NOT EXISTS.
 
 from __future__ import annotations
 
+import functools
+from string import Formatter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omniengine_spark.functions.scalars import DEC_18_4, dec_18_4
 from omniengine_spark.plans.registry import query
-from omniengine_spark.sources import load_table
+from omniengine_spark.sources import TABLES, load_table
 
-# {rev} differs per engine: DuckDB's DECIMAL→DOUBLE cast double-rounds
-# (hugeint then /10^s), so the oracle routes through VARCHAR (strtod is
-# correctly rounded, matching Spark's BigDecimal.doubleValue).
+
+def _as_double(decimal_sql: str) -> tuple[str, str]:
+    """(oracle, Spark) SQL of the DECIMAL ``decimal_sql`` cast to
+    DOUBLE.  DuckDB's DECIMAL→DOUBLE cast double-rounds (hugeint then
+    /10^s), so the oracle routes through VARCHAR (strtod is correctly
+    rounded, matching Spark's BigDecimal.doubleValue)."""
+    return (
+        f"CAST(CAST({decimal_sql} AS VARCHAR) AS DOUBLE)",
+        f"CAST({decimal_sql} AS DOUBLE)",
+    )
+
+
+def sql_query(name: str, template: str, **measures: str | tuple[str, str]):
+    """Register the decorated ``def`` (its name and docstring; its body
+    is never run) as plan ``name``: ``template`` run through
+    ``spark.sql``, with ``template`` itself as the DuckDB oracle.
+
+    A catalog-table placeholder (``{customer}``, ``{lineitem}``, …)
+    reads that table: the oracle names it, the plan binds its
+    ``load_table`` frame as a ``spark.sql`` argument — Spark registers
+    it as a view for the call only, and a table referenced twice binds
+    once.  Any other placeholder is a measure: a ``str`` is the same
+    SQL on both engines, an ``_as_double`` pair differs per engine.
+    Measures are substituted with plain ``str.format`` first, because
+    ``spark.sql`` would render a ``str`` argument as a quoted literal."""
+
+    def side(i: int) -> dict[str, str]:
+        return {k: v if isinstance(v, str) else v[i]
+                for k, v in measures.items()}
+
+    oracle = template.format(**{t: t for t in TABLES}, **side(0))
+    text = template.format(**{t: f"{{{t}}}" for t in TABLES}, **side(1))
+    tables = list(dict.fromkeys(
+        field for _, field, _, _ in Formatter().parse(text) if field
+    ))
+
+    def deco(fn):
+        @functools.wraps(fn)
+        def plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return spark.sql(
+                text, **{t: load_table(spark, sf_dir, t) for t in tables}
+            )
+
+        return query(name, oracle=oracle)(plan)
+
+    return deco
+
+
 _Q3 = """
 SELECT
   l_orderkey,
   {rev} AS revenue,
   o_orderdate,
   o_orderpriority
-FROM {cust} c
+FROM {customer} c
 JOIN {orders} o ON c.c_custkey = o.o_custkey
-JOIN {li} l ON l.l_orderkey = o.o_orderkey
+JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
 WHERE c.c_mktsegment = 'BUILDING'
   AND o.o_orderdate < TIMESTAMP '2001-03-15 00:00:00'
   AND l.l_shipdate > TIMESTAMP '2001-03-15 00:00:00'
@@ -48,12 +98,12 @@ SELECT
   n_name,
   {rev} AS revenue,
   COUNT(*) AS n_items
-FROM {cust} c
+FROM {customer} c
 JOIN {orders} o ON c.c_custkey = o.o_custkey
-JOIN {li} l ON l.l_orderkey = o.o_orderkey
-JOIN {supp} s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-JOIN {nat} n ON s.s_nationkey = n.n_nationkey
-JOIN {reg} r ON n.n_regionkey = r.r_regionkey
+JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
+JOIN {supplier} s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
+JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+JOIN {region} r ON n.n_regionkey = r.r_regionkey
 WHERE r.r_name = 'ASIA'
   AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
@@ -61,48 +111,14 @@ GROUP BY n_name
 """
 
 
-@query(
-    "sql_q3_shipping_priority",
-    oracle=_Q3.format(
-        cust="customer",
-        orders="orders",
-        li="lineitem",
-        rev=f"CAST(CAST({_REV_SUM} AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q3_shipping_priority", _Q3, rev=_as_double(_REV_SUM))
 def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape submitted as a SQL string over registered views —
+    """TPC-H Q3 shape submitted as a SQL string over bound tables —
     Catalyst plans it identically to the DataFrame formulation
     (broadcast dims, partial agg, top-k)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "v_customer"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    return spark.sql(
-        _Q3.format(
-            cust="v_customer",
-            orders="v_orders",
-            li="v_lineitem",
-            rev=f"CAST({_REV_SUM} AS DOUBLE)",
-        )
-    )
 
 
-@query(
-    "sql_q5_local_supplier_volume",
-    oracle=_Q5.format(
-        cust="customer",
-        orders="orders",
-        li="lineitem",
-        supp="supplier",
-        nat="nation",
-        reg="region",
-        rev=f"CAST(CAST({_REV_SUM} AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q5_local_supplier_volume", _Q5, rev=_as_double(_REV_SUM))
 def sql_q5_local_supplier_volume(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -112,19 +128,6 @@ def sql_q5_local_supplier_volume(
     three dims (supplier/nation/region) so the only wide shuffle is
     lineitem joining orders joining customer; the reference never
     exceeds a 3-way comma join (``sql.py:270-274``)."""
-    for name in ("customer", "orders", "lineitem", "supplier", "nation", "region"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q5.format(
-            cust="v_customer",
-            orders="v_orders",
-            li="v_lineitem",
-            supp="v_supplier",
-            nat="v_nation",
-            reg="v_region",
-            rev=f"CAST({_REV_SUM} AS DOUBLE)",
-        )
-    )
 
 
 _Q10 = """
@@ -135,10 +138,10 @@ SELECT
   c.c_acctbal,
   n.n_name,
   COUNT(*) AS n_items
-FROM {cust} c
+FROM {customer} c
 JOIN {orders} o ON c.c_custkey = o.o_custkey
-JOIN {li} l ON l.l_orderkey = o.o_orderkey
-JOIN {nat} n ON c.c_nationkey = n.n_nationkey
+JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
+JOIN {nation} n ON c.c_nationkey = n.n_nationkey
 WHERE l.l_returnflag = 'R'
   AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
   AND o.o_orderdate <  TIMESTAMP '1997-07-01 00:00:00'
@@ -148,33 +151,13 @@ LIMIT 20
 """
 
 
-@query(
-    "sql_q10_returned_items",
-    oracle=_Q10.format(
-        cust="customer",
-        orders="orders",
-        li="lineitem",
-        nat="nation",
-        rev=f"CAST(CAST({_REV_SUM} AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q10_returned_items", _Q10, rev=_as_double(_REV_SUM))
 def sql_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: lost-revenue report over returned items —
     fact⋈fact (lineitem⋈orders) with a broadcast customer/nation
     enrichment and a top-20 TakeOrderedAndProject, the serving-layer
     "worst customers" query the reference answers with AddressStats
     (``sql.py:1644-1656``)."""
-    for name in ("customer", "orders", "lineitem", "nation"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q10.format(
-            cust="v_customer",
-            orders="v_orders",
-            li="v_lineitem",
-            nat="v_nation",
-            rev=f"CAST({_REV_SUM} AS DOUBLE)",
-        )
-    )
 
 
 _Q7 = """
@@ -186,12 +169,12 @@ WITH flows AS (
     CAST(l.l_extendedprice AS DECIMAL(18,4))
       * (CAST(1 AS DECIMAL(5,4)) - CAST(l.l_discount AS DECIMAL(5,4)))
       AS volume
-  FROM {supp} s
-  JOIN {li} l ON s.s_suppkey = l.l_suppkey
+  FROM {supplier} s
+  JOIN {lineitem} l ON s.s_suppkey = l.l_suppkey
   JOIN {orders} o ON o.o_orderkey = l.l_orderkey
-  JOIN {cust} c ON c.c_custkey = o.o_custkey
-  JOIN {nat} sn ON s.s_nationkey = sn.n_nationkey
-  JOIN {nat} cn ON c.c_nationkey = cn.n_nationkey
+  JOIN {customer} c ON c.c_custkey = o.o_custkey
+  JOIN {nation} sn ON s.s_nationkey = sn.n_nationkey
+  JOIN {nation} cn ON c.c_nationkey = cn.n_nationkey
   WHERE ((sn.n_name = 'NATION_1' AND cn.n_name = 'NATION_2')
       OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1'))
     AND l.l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
@@ -205,35 +188,13 @@ GROUP BY supp_nation, cust_nation, l_year
 """
 
 
-@query(
-    "sql_q7_volume_shipping",
-    oracle=_Q7.format(
-        cust="customer",
-        orders="orders",
-        li="lineitem",
-        supp="supplier",
-        nat="nation",
-        rev="CAST(CAST(SUM(volume) AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q7_volume_shipping", _Q7, rev=_as_double("SUM(volume)"))
 def sql_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: six-way join where the interesting predicate is
     a symmetric OR over a broadcast dim joined TWICE under different
     aliases (supplier's nation vs customer's nation) — proves alias
     resolution and that the disjunction is pushed into the two
     broadcast hash joins rather than materializing the cross flow."""
-    for name in ("customer", "orders", "lineitem", "supplier", "nation"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q7.format(
-            cust="v_customer",
-            orders="v_orders",
-            li="v_lineitem",
-            supp="v_supplier",
-            nat="v_nation",
-            rev="CAST(SUM(volume) AS DOUBLE)",
-        )
-    )
 
 
 # Q4 shape, adapted to the available lineitem columns (the generator
@@ -249,7 +210,7 @@ FROM {orders} o
 WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND o.o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
   AND EXISTS (
-    SELECT 1 FROM {li} l
+    SELECT 1 FROM {lineitem} l
     WHERE l.l_orderkey = o.o_orderkey
       AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
   )
@@ -257,19 +218,11 @@ GROUP BY o_orderpriority
 """
 
 
-@query(
-    "sql_q4_late_orders",
-    oracle=_Q4.format(orders="orders", li="lineitem"),
-)
+@sql_query("sql_q4_late_orders", _Q4)
 def sql_q4_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS decorrelated to a left-semi hash join on
     l_orderkey with the date residual evaluated at the join — no
     distinct/aggregate subquery materialization."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    return spark.sql(_Q4.format(orders="v_orders", li="v_lineitem"))
 
 
 # Q12 shape, adapted (no l_shipmode column): group by l_linestatus,
@@ -283,26 +236,18 @@ SELECT
   CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
            THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
 FROM {orders} o
-JOIN {li} l ON l.l_orderkey = o.o_orderkey
+JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
 WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
 GROUP BY l.l_linestatus
 """
 
 
-@query(
-    "sql_q12_priority_buckets",
-    oracle=_Q12.format(orders="orders", li="lineitem"),
-)
+@sql_query("sql_q12_priority_buckets", _Q12)
 def sql_q12_priority_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: fact⋈fact equi-join with the filter pushed to
     the lineitem scan and both CASE-sums computed in one partial
     aggregate."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    return spark.sql(_Q12.format(orders="v_orders", li="v_lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -316,7 +261,7 @@ _Q6 = """
 SELECT
   {rev} AS revenue,
   COUNT(*) AS n_items
-FROM {li} l
+FROM {lineitem} l
 WHERE l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l.l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
   AND l.l_discount BETWEEN 0.03 AND 0.07
@@ -329,25 +274,13 @@ _DISC_REV_SUM = (
 )
 
 
-@query(
-    "sql_q6_forecast_revenue",
-    oracle=_Q6.format(
-        li="lineitem",
-        rev=f"CAST(CAST({_DISC_REV_SUM} AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q6_forecast_revenue", _Q6, rev=_as_double(_DISC_REV_SUM))
 def sql_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: the pure-scan aggregate — every predicate is
     pushed into the parquet scan (shipdate min/max stats prune row
     groups) and the whole query is one partial+final agg with no
     shuffle key at all.  The simplest possible plan; anything more
     (a sort, an exchange beyond the single-row gather) is a bug."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    return spark.sql(
-        _Q6.format(li="v_lineitem", rev=f"CAST({_DISC_REV_SUM} AS DOUBLE)")
-    )
 
 
 _Q8 = """
@@ -359,13 +292,13 @@ WITH volumes AS (
       AS volume,
     sn.n_name AS supp_nation
   FROM {part} p
-  JOIN {li} l ON p.p_partkey = l.l_partkey
-  JOIN {supp} s ON s.s_suppkey = l.l_suppkey
+  JOIN {lineitem} l ON p.p_partkey = l.l_partkey
+  JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
   JOIN {orders} o ON o.o_orderkey = l.l_orderkey
-  JOIN {cust} c ON c.c_custkey = o.o_custkey
-  JOIN {nat} cn ON c.c_nationkey = cn.n_nationkey
-  JOIN {nat} sn ON s.s_nationkey = sn.n_nationkey
-  JOIN {reg} r ON cn.n_regionkey = r.r_regionkey
+  JOIN {customer} c ON c.c_custkey = o.o_custkey
+  JOIN {nation} cn ON c.c_nationkey = cn.n_nationkey
+  JOIN {nation} sn ON s.s_nationkey = sn.n_nationkey
+  JOIN {region} r ON cn.n_regionkey = r.r_regionkey
   WHERE r.r_name = 'ASIA'
     AND p.p_type = 'PROMO'
     AND o.o_orderdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
@@ -373,31 +306,21 @@ WITH volumes AS (
 )
 SELECT
   o_year,
-  {share} AS mkt_share,
+  {nation_volume} / {volume} AS mkt_share,
   COUNT(*) AS n_items
 FROM volumes
 GROUP BY o_year
 """
 
-_Q8_NUM = "SUM(CASE WHEN supp_nation = 'NATION_3' THEN volume ELSE CAST(0 AS DECIMAL(18,4)) END)"
-_Q8_DEN = "SUM(volume)"
 
-
-@query(
+@sql_query(
     "sql_q8_market_share",
-    oracle=_Q8.format(
-        part="part",
-        li="lineitem",
-        supp="supplier",
-        orders="orders",
-        cust="customer",
-        nat="nation",
-        reg="region",
-        share=(
-            f"CAST(CAST({_Q8_NUM} AS VARCHAR) AS DOUBLE)"
-            f" / CAST(CAST({_Q8_DEN} AS VARCHAR) AS DOUBLE)"
-        ),
+    _Q8,
+    nation_volume=_as_double(
+        "SUM(CASE WHEN supp_nation = 'NATION_3' THEN volume "
+        "ELSE CAST(0 AS DECIMAL(18,4)) END)"
     ),
+    volume=_as_double("SUM(volume)"),
 )
 def sql_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (market share): eight-way join where nation is
@@ -409,25 +332,6 @@ def sql_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are the three fact-side joins.  Both sums stay DECIMAL
     (exact) until the final ratio, so the double division is the same
     correctly-rounded IEEE op in both engines."""
-    for name in (
-        "part", "lineitem", "supplier", "orders", "customer", "nation",
-        "region",
-    ):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q8.format(
-            part="v_part",
-            li="v_lineitem",
-            supp="v_supplier",
-            orders="v_orders",
-            cust="v_customer",
-            nat="v_nation",
-            reg="v_region",
-            share=(
-                f"CAST({_Q8_NUM} AS DOUBLE) / CAST({_Q8_DEN} AS DOUBLE)"
-            ),
-        )
-    )
 
 
 # Q9 shape, adapted: the generator has no partsupp/ps_supplycost, so
@@ -450,27 +354,17 @@ FROM (
     - CAST(p.p_retailprice AS DECIMAL(18,4))
       * CAST(l.l_quantity AS DECIMAL(18,4)) AS amount
   FROM {part} p
-  JOIN {li} l ON p.p_partkey = l.l_partkey
-  JOIN {supp} s ON s.s_suppkey = l.l_suppkey
+  JOIN {lineitem} l ON p.p_partkey = l.l_partkey
+  JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
   JOIN {orders} o ON o.o_orderkey = l.l_orderkey
-  JOIN {nat} sn ON s.s_nationkey = sn.n_nationkey
+  JOIN {nation} sn ON s.s_nationkey = sn.n_nationkey
   WHERE p.p_name LIKE '%red%'
 ) profit
 GROUP BY nation, o_year
 """
 
 
-@query(
-    "sql_q9_product_profit",
-    oracle=_Q9.format(
-        part="part",
-        li="lineitem",
-        supp="supplier",
-        orders="orders",
-        nat="nation",
-        profit="CAST(CAST(SUM(amount) AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q9_product_profit", _Q9, profit=_as_double("SUM(amount)"))
 def sql_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit): LIKE-filtered part dim
     (broadcast, filter applied before the join so only matching
@@ -478,18 +372,6 @@ def sql_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed DECIMAL measure — revenue minus cost — summed exactly.
     Mixed-sign sums are where floating-point drifts; DECIMAL keeps the
     fold associative and engine-independent."""
-    for name in ("part", "lineitem", "supplier", "orders", "nation"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q9.format(
-            part="v_part",
-            li="v_lineitem",
-            supp="v_supplier",
-            orders="v_orders",
-            nat="v_nation",
-            profit="CAST(SUM(amount) AS DOUBLE)",
-        )
-    )
 
 
 # Q13 shape, adapted: the comment-pattern exclusion becomes a priority
@@ -502,7 +384,7 @@ FROM (
   SELECT
     c.c_custkey AS c_custkey,
     COUNT(o.o_orderkey) AS c_count
-  FROM {cust} c
+  FROM {customer} c
   LEFT JOIN {orders} o
     ON c.c_custkey = o.o_custkey
    AND o.o_orderpriority <> '1-URGENT'
@@ -512,10 +394,7 @@ GROUP BY c_count
 """
 
 
-@query(
-    "sql_q13_order_count_distribution",
-    oracle=_Q13.format(cust="customer", orders="orders"),
-)
+@sql_query("sql_q13_order_count_distribution", _Q13)
 def sql_q13_order_count_distribution(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -524,11 +403,6 @@ def sql_q13_order_count_distribution(
     which would change the semantics), double aggregation — per-key
     count then count-of-counts.  The second groupBy keys on ~dozens of
     values, so AQE coalesces its shuffle to almost nothing."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "v_customer"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(_Q13.format(cust="v_customer", orders="v_orders"))
 
 
 _Q15 = """
@@ -536,7 +410,7 @@ WITH revenue AS (
   SELECT
     l_suppkey AS supplier_no,
     {rev_sum} AS total_revenue
-  FROM {li}
+  FROM {lineitem}
   WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
     AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
   GROUP BY l_suppkey
@@ -545,20 +419,17 @@ SELECT
   s.s_suppkey,
   s.s_name,
   {rev_out} AS total_revenue
-FROM {supp} s
+FROM {supplier} s
 JOIN revenue r ON s.s_suppkey = r.supplier_no
 WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM revenue)
 """
 
 
-@query(
+@sql_query(
     "sql_q15_top_supplier",
-    oracle=_Q15.format(
-        li="lineitem",
-        supp="supplier",
-        rev_sum=_REV_SUM,
-        rev_out="CAST(CAST(r.total_revenue AS VARCHAR) AS DOUBLE)",
-    ),
+    _Q15,
+    rev_sum=_REV_SUM,
+    rev_out=_as_double("r.total_revenue"),
 )
 def sql_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 (top supplier): a named subresult referenced twice —
@@ -566,20 +437,6 @@ def sql_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery.  total_revenue stays DECIMAL through the MAX comparison
     (exact equality is only sane in fixed-point; a double `=` here
     would be engine-dependent) and becomes DOUBLE at output only."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView(
-        "v_supplier"
-    )
-    return spark.sql(
-        _Q15.format(
-            li="v_lineitem",
-            supp="v_supplier",
-            rev_sum=_REV_SUM,
-            rev_out="CAST(r.total_revenue AS DOUBLE)",
-        )
-    )
 
 
 # Q17 shape, adapted (no p_container): brand+type select the part
@@ -587,30 +444,24 @@ def sql_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both engines (exact integer sum / exact count, one IEEE divide).
 _Q17 = """
 SELECT
-  {rev} AS avg_yearly,
+  {rev} / 7.0 AS avg_yearly,
   COUNT(*) AS n_items
-FROM {li} l
+FROM {lineitem} l
 JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE p.p_brand = 'Brand#3'
   AND p.p_type = 'PROMO'
   AND l.l_quantity < (
     SELECT 0.2 * AVG(l2.l_quantity)
-    FROM {li} l2
+    FROM {lineitem} l2
     WHERE l2.l_partkey = l.l_partkey
   )
 """
 
 
-@query(
+@sql_query(
     "sql_q17_small_quantity_revenue",
-    oracle=_Q17.format(
-        li="lineitem",
-        part="part",
-        rev=(
-            "CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) "
-            "AS VARCHAR) AS DOUBLE) / 7.0"
-        ),
-    ),
+    _Q17,
+    rev=_as_double("SUM(CAST(l_extendedprice AS DECIMAL(18,4)))"),
 )
 def sql_q17_small_quantity_revenue(
     spark: SparkSession, sf_dir: str
@@ -620,20 +471,6 @@ def sql_q17_small_quantity_revenue(
     aggregate-then-join on l_partkey, so lineitem is scanned twice but
     never nested-loop'd.  The filtered part dim broadcasts into both
     sides."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("v_part")
-    return spark.sql(
-        _Q17.format(
-            li="v_lineitem",
-            part="v_part",
-            rev=(
-                "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) "
-                "AS DOUBLE) / 7.0"
-            ),
-        )
-    )
 
 
 # Q19 shape, adapted (no p_container / l_shipmode / l_shipinstruct):
@@ -642,7 +479,7 @@ _Q19 = """
 SELECT
   {rev} AS revenue,
   COUNT(*) AS n_items
-FROM {li} l
+FROM {lineitem} l
 JOIN {part} p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
        AND l.l_quantity BETWEEN 1 AND 11)
@@ -653,14 +490,7 @@ WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
 """
 
 
-@query(
-    "sql_q19_disjunctive_revenue",
-    oracle=_Q19.format(
-        li="lineitem",
-        part="part",
-        rev=f"CAST(CAST({_REV_SUM} AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q19_disjunctive_revenue", _Q19, rev=_as_double(_REV_SUM))
 def sql_q19_disjunctive_revenue(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -670,17 +500,6 @@ def sql_q19_disjunctive_revenue(
     implied filters (p_brand IN (...), p_size <= 15, l_quantity <= 30)
     pushed below the join — constraint propagation the reference's
     hand-written SQL never needed because Postgres did it for free."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("v_part")
-    return spark.sql(
-        _Q19.format(
-            li="v_lineitem",
-            part="v_part",
-            rev=f"CAST({_REV_SUM} AS DOUBLE)",
-        )
-    )
 
 
 # Q21 shape, adapted (no commit/receipt dates): within finished
@@ -691,18 +510,18 @@ _Q21 = """
 SELECT
   s.s_name,
   COUNT(*) AS numwait
-FROM {supp} s
-JOIN {li} l1 ON s.s_suppkey = l1.l_suppkey
+FROM {supplier} s
+JOIN {lineitem} l1 ON s.s_suppkey = l1.l_suppkey
 JOIN {orders} o ON o.o_orderkey = l1.l_orderkey
 WHERE o.o_orderstatus = 'F'
   AND l1.l_returnflag = 'R'
   AND EXISTS (
-    SELECT 1 FROM {li} l2
+    SELECT 1 FROM {lineitem} l2
     WHERE l2.l_orderkey = l1.l_orderkey
       AND l2.l_suppkey <> l1.l_suppkey
   )
   AND NOT EXISTS (
-    SELECT 1 FROM {li} l3
+    SELECT 1 FROM {lineitem} l3
     WHERE l3.l_orderkey = l1.l_orderkey
       AND l3.l_suppkey <> l1.l_suppkey
       AND l3.l_returnflag = 'R'
@@ -713,10 +532,7 @@ LIMIT 20
 """
 
 
-@query(
-    "sql_q21_sole_blame_supplier",
-    oracle=_Q21.format(supp="supplier", li="lineitem", orders="orders"),
-)
+@sql_query("sql_q21_sole_blame_supplier", _Q21)
 def sql_q21_sole_blame_supplier(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -725,11 +541,6 @@ def sql_q21_sole_blame_supplier(
     an inequality on l_suppkey.  Catalyst turns them into a left-semi
     and a left-anti join against the same lineitem scan; the supplier
     dim broadcasts; top-20 is TakeOrderedAndProject."""
-    for name in ("supplier", "lineitem", "orders"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q21.format(supp="v_supplier", li="v_lineitem", orders="v_orders")
-    )
 
 
 # Q22 shape, adapted (no c_phone): country code = c_nationkey % 5.
@@ -742,7 +553,7 @@ WITH positive AS (
     CAST(c_nationkey % 5 AS BIGINT) AS cntrycode,
     c_custkey,
     CAST(c_acctbal AS DECIMAL(18,4)) AS bal
-  FROM {cust}
+  FROM {customer}
   WHERE c_acctbal > 0
 )
 SELECT
@@ -761,14 +572,7 @@ GROUP BY cntrycode
 """
 
 
-@query(
-    "sql_q22_dormant_accounts",
-    oracle=_Q22.format(
-        cust="customer",
-        orders="orders",
-        bal="CAST(CAST(SUM(bal) AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q22_dormant_accounts", _Q22, bal=_as_double("SUM(bal)"))
 def sql_q22_dormant_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): two uncorrelated
     scalar subqueries over the same CTE (count and sum — computed in
@@ -777,17 +581,6 @@ def sql_q22_dormant_accounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     into DECIMAL so no division result is ever compared — the exact
     trick the double-entry ledger uses for pro-rata cutoffs
     (``sql.py:1806-1821``)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "v_customer"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(
-        _Q22.format(
-            cust="v_customer",
-            orders="v_orders",
-            bal="CAST(SUM(bal) AS DOUBLE)",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -808,16 +601,16 @@ WITH ps AS (
     l_partkey AS ps_partkey,
     l_suppkey AS ps_suppkey,
     MIN(l_extendedprice / l_quantity) AS ps_supplycost
-  FROM {li}
+  FROM {lineitem}
   GROUP BY l_partkey, l_suppkey
 ),
 eu AS (
   SELECT ps.ps_partkey, ps.ps_supplycost,
          s.s_name, s.s_acctbal, n.n_name
   FROM ps
-  JOIN {supp} s ON ps.ps_suppkey = s.s_suppkey
-  JOIN {nat} n ON s.s_nationkey = n.n_nationkey
-  JOIN {reg} r ON n.n_regionkey = r.r_regionkey
+  JOIN {supplier} s ON ps.ps_suppkey = s.s_suppkey
+  JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+  JOIN {region} r ON n.n_regionkey = r.r_regionkey
   WHERE r.r_name = 'EUROPE'
 )
 SELECT e.s_acctbal, e.s_name, e.n_name, p.p_partkey, p.p_name,
@@ -835,13 +628,7 @@ LIMIT 100
 """
 
 
-@query(
-    "sql_q2_min_cost_supplier",
-    oracle=_Q2.format(
-        li="lineitem", supp="supplier", nat="nation", reg="region",
-        part="part",
-    ),
-)
+@sql_query("sql_q2_min_cost_supplier", _Q2)
 def sql_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated scalar MIN over the region-filtered
     part-supplier relation, equality-joined back to pick the cheapest
@@ -850,14 +637,6 @@ def sql_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     is built once per side and never nested-loop'd; supplier/nation/
     region broadcast.  The reference serves the analogous cheapest-
     offer lookup from its DEx views (``sql.py:270-274``)."""
-    for name in ("lineitem", "supplier", "nation", "region", "part"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q2.format(
-            li="v_lineitem", supp="v_supplier", nat="v_nation",
-            reg="v_region", part="v_part",
-        )
-    )
 
 
 # Q11 shape: parts representing a significant fraction of one nation's
@@ -872,9 +651,9 @@ WITH value AS (
   SELECT
     l.l_partkey AS ps_partkey,
     SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))) AS val
-  FROM {li} l
-  JOIN {supp} s ON l.l_suppkey = s.s_suppkey
-  JOIN {nat} n ON s.s_nationkey = n.n_nationkey
+  FROM {lineitem} l
+  JOIN {supplier} s ON l.l_suppkey = s.s_suppkey
+  JOIN {nation} n ON s.s_nationkey = n.n_nationkey
   WHERE n.n_name = 'NATION_7'
   GROUP BY l.l_partkey
 )
@@ -886,13 +665,7 @@ LIMIT 50
 """
 
 
-@query(
-    "sql_q11_important_stock",
-    oracle=_Q11.format(
-        li="lineitem", supp="supplier", nat="nation",
-        val="CAST(CAST(val AS VARCHAR) AS DOUBLE)",
-    ),
-)
+@sql_query("sql_q11_important_stock", _Q11, val=_as_double("val"))
 def sql_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: grouped aggregate HAVING'd against an
     uncorrelated scalar subquery over the SAME derived table — the
@@ -901,14 +674,6 @@ def sql_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a literal via a subquery broadcast, and the fraction test is
     cross-multiplied into DECIMAL exactly like the pro-rata cutoff in
     the STO fold (``sql.py:1806-1821``)."""
-    for name in ("lineitem", "supplier", "nation"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q11.format(
-            li="v_lineitem", supp="v_supplier", nat="v_nation",
-            val="CAST(val AS DOUBLE)",
-        )
-    )
 
 
 # Q16 shape: supplier diversity per part attribute, excluding a
@@ -916,7 +681,7 @@ def sql_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q16 = """
 WITH ps AS (
   SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
-  FROM {li}
+  FROM {lineitem}
 )
 SELECT p.p_brand, p.p_type, p.p_size,
        COUNT(DISTINCT ps.ps_suppkey) AS supplier_cnt
@@ -926,7 +691,7 @@ WHERE p.p_brand <> 'Brand#5'
   AND p.p_type NOT LIKE 'MEDIUM%'
   AND p.p_size IN (1, 4, 9, 16, 25, 36, 49)
   AND ps.ps_suppkey NOT IN (
-    SELECT s_suppkey FROM {supp} WHERE s_name LIKE '%7%'
+    SELECT s_suppkey FROM {supplier} WHERE s_name LIKE '%7%'
   )
 GROUP BY p.p_brand, p.p_type, p.p_size
 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
@@ -934,10 +699,7 @@ LIMIT 40
 """
 
 
-@query(
-    "sql_q16_supplier_diversity",
-    oracle=_Q16.format(li="lineitem", part="part", supp="supplier"),
-)
+@sql_query("sql_q16_supplier_diversity", _Q16)
 def sql_q16_supplier_diversity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -946,11 +708,6 @@ def sql_q16_supplier_diversity(
     plans a plain left-anti), and COUNT(DISTINCT) per three grouping
     columns.  The denylist broadcasts; the distinct-pair shuffle is
     the only wide exchange."""
-    for name in ("lineitem", "part", "supplier"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q16.format(li="v_lineitem", part="v_part", supp="v_supplier")
-    )
 
 
 # Q20 shape: suppliers in one nation who shipped more than half of a
@@ -963,12 +720,12 @@ WITH ps AS (
     l_partkey AS ps_partkey,
     l_suppkey AS ps_suppkey,
     SUM(CAST(l_quantity AS DECIMAL(18,4))) AS ps_availqty
-  FROM {li}
+  FROM {lineitem}
   GROUP BY l_partkey, l_suppkey
 )
 SELECT s.s_name, s.s_acctbal
-FROM {supp} s
-JOIN {nat} n ON s.s_nationkey = n.n_nationkey
+FROM {supplier} s
+JOIN {nation} n ON s.s_nationkey = n.n_nationkey
 WHERE n.n_name = 'NATION_3'
   AND s.s_suppkey IN (
     SELECT ps.ps_suppkey FROM ps
@@ -977,7 +734,7 @@ WHERE n.n_name = 'NATION_3'
     )
     AND (
       SELECT COALESCE(SUM(CAST(l.l_quantity AS DECIMAL(18,4))), 0)
-      FROM {li} l
+      FROM {lineitem} l
       WHERE l.l_partkey = ps.ps_partkey
         AND l.l_suppkey = ps.ps_suppkey
         AND l.l_shipdate >= TIMESTAMP '1999-01-01 00:00:00'
@@ -988,12 +745,7 @@ ORDER BY s.s_name
 """
 
 
-@query(
-    "sql_q20_recent_volume_suppliers",
-    oracle=_Q20.format(
-        li="lineitem", supp="supplier", nat="nation", part="part",
-    ),
-)
+@sql_query("sql_q20_recent_volume_suppliers", _Q20)
 def sql_q20_recent_volume_suppliers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1003,14 +755,6 @@ def sql_q20_recent_volume_suppliers(
     pair).  Catalyst decorrelates the scalar into a grouped aggregate
     joined on (partkey, suppkey) and turns both INs into left-semi
     joins; the nation-filtered supplier dim broadcasts."""
-    for name in ("lineitem", "supplier", "nation", "part"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
-    return spark.sql(
-        _Q20.format(
-            li="v_lineitem", supp="v_supplier", nat="v_nation",
-            part="v_part",
-        )
-    )
 
 
 # --------------------------------------------------------------------
@@ -1074,33 +818,20 @@ def sql_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The predicate is the avg-comparison rewritten decimal-exact:
 # bal > avg  ⟺  bal·n > sum, so no float avg crosses engines.
 # --------------------------------------------------------------------
-@query(
+@sql_query(
     "sql_correlated_above_avg",
-    oracle="""
+    """
     SELECT c_custkey, c_acctbal, c_nationkey
-    FROM customer c
+    FROM {customer} c
     WHERE CAST(c_acctbal AS DECIMAL(18,4))
-          * (SELECT COUNT(*) FROM customer c2
+          * (SELECT COUNT(*) FROM {customer} c2
              WHERE c2.c_nationkey = c.c_nationkey)
           > (SELECT SUM(CAST(c2.c_acctbal AS DECIMAL(18,4)))
-             FROM customer c2 WHERE c2.c_nationkey = c.c_nationkey)
+             FROM {customer} c2 WHERE c2.c_nationkey = c.c_nationkey)
     """,
 )
 def sql_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "v_customer"
-    )
-    return spark.sql(
-        """
-        SELECT c_custkey, c_acctbal, c_nationkey
-        FROM v_customer c
-        WHERE CAST(c_acctbal AS DECIMAL(18,4))
-              * (SELECT COUNT(*) FROM v_customer c2
-                 WHERE c2.c_nationkey = c.c_nationkey)
-              > (SELECT SUM(CAST(c2.c_acctbal AS DECIMAL(18,4)))
-                 FROM v_customer c2 WHERE c2.c_nationkey = c.c_nationkey)
-        """
-    )
+    """Customers whose balance is above their nation's average."""
 
 
 # --------------------------------------------------------------------
@@ -1110,44 +841,25 @@ def sql_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pre-filtered orders slices, never a per-row probe like the
 # reference's existence checks (sql.py:382-384).
 # --------------------------------------------------------------------
-@query(
+@sql_query(
     "sql_churned_customers",
-    oracle="""
+    """
     SELECT c_custkey, c_name
-    FROM customer c
+    FROM {customer} c
     WHERE EXISTS (
-        SELECT 1 FROM orders o
+        SELECT 1 FROM {orders} o
         WHERE o.o_custkey = c.c_custkey
           AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
           AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00')
       AND NOT EXISTS (
-        SELECT 1 FROM orders o
+        SELECT 1 FROM {orders} o
         WHERE o.o_custkey = c.c_custkey
           AND o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
           AND o.o_orderdate <  TIMESTAMP '1999-01-01 00:00:00')
     """,
 )
 def sql_churned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "v_customer"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name
-        FROM v_customer c
-        WHERE EXISTS (
-            SELECT 1 FROM v_orders o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-              AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00')
-          AND NOT EXISTS (
-            SELECT 1 FROM v_orders o
-            WHERE o.o_custkey = c.c_custkey
-              AND o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
-              AND o.o_orderdate <  TIMESTAMP '1999-01-01 00:00:00')
-        """
-    )
+    """Customers who ordered in 1997 and not in 1998."""
 
 
 # --------------------------------------------------------------------

@@ -6,6 +6,9 @@ silent slowdown at 100 TB.
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 from omniengine_spark.plans import QUERIES
 
 from .conftest import SF_SMOKE
@@ -271,6 +274,36 @@ def test_q20_nested_in_becomes_semi_joins(spark):
     assert "LeftSemi" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_sql_plans_leave_no_temp_views(spark):
+    """Every ``sql_*`` plan binds its tables as ``spark.sql``
+    arguments, so running them all leaves the session's temporary
+    views as they were."""
+    before = _temp_views(spark)
+    for name in sorted(k for k in QUERIES if k.startswith("sql_")):
+        QUERIES[name](spark, SF_SMOKE).count()
+    assert _temp_views(spark) == before
+
+
+def test_package_registers_no_temp_views():
+    """No module under ``omniengine_spark/`` registers a session
+    temporary view: SQL text binds its frames as ``spark.sql``
+    arguments (``sql_plans.sql_query``), which Spark drops before the
+    call returns."""
+    pattern = re.compile(
+        r"\b(?:create(?:OrReplace)?(?:Global)?TempView|registerTempTable)\("
+    )
+    pkg = Path(__file__).resolve().parents[1] / "omniengine_spark"
+    found = {
+        str(p.relative_to(pkg)): sorted(set(pattern.findall(p.read_text())))
+        for p in sorted(pkg.rglob("*.py"))
+    }
+    assert not {k: v for k, v in found.items() if v}
 
 
 def test_runtime_bloom_filter_reaches_probe_side(spark):
