@@ -105,22 +105,28 @@ def s17_schema_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``patches/omniDB.v*.patch``): seed a v0 warehouse from orders,
     apply v1 (add backfilled ``prio_class``, the add-column-default
     patch shape) and v2 (rename to ``priority_class``, the
-    txsubmittime→txrecvtime patch shape), then aggregate the migrated
-    table.  The oracle recomputes the same result straight from the
-    original orders — equality proves the two rewrites were lossless
-    and the backfill expression matched."""
+    txsubmittime→txrecvtime patch shape), each committed as a version
+    of the table, then aggregate the migrated head, read with the
+    schema its manifest recorded.  The oracle recomputes the same
+    result straight from the original orders — equality proves the
+    two rewrites were lossless and the backfill expression matched."""
     from omniengine_spark.sources.migrate import (
         Migration,
         add_column,
         migrate,
         rename_column,
     )
+    from omniengine_spark.sources.versioned import (
+        commit,
+        read_version,
+        vacuum,
+    )
 
     path = scratch_dir("migrate-wh")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    orders.write.mode("overwrite").parquet(path)
+    commit(orders, path, "seed")
     migrations = [
         Migration(
             1,
@@ -137,7 +143,9 @@ def s17_schema_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
     migrate(spark, path, migrations)
-    wh = spark.read.parquet(path)
+    # the superseded versions' files go; their tags stay in the manifest
+    vacuum(path, keep_last=1)
+    wh = read_version(spark, path)
     return wh.groupBy("priority_class").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))

@@ -4,19 +4,13 @@ The reference polls fiat-rate / market / fee / supply HTTP APIs from
 cron scripts (``updatePrices.py:113-236``, ``updateFees.py:27-93``,
 ``sql.py:1460-1467``) and upserts rows one at a time.  Here each
 adapter is a *pure function* from a parsed JSON response to rows, so
-it is unit-testable with fixtures and network-free; the driver-side
-fetch is a thin wrapper, and the rows land as a small DataFrame that
-joins broadcast-style against facts.
-
-No network calls happen in this module unless ``fetch_json`` is
-invoked explicitly by a deployment.
+it is unit-testable with fixtures and network-free; a deployment
+fetches the JSON itself, and the rows land as a small DataFrame that
+joins broadcast-style against facts.  This module makes no network
+calls.
 """
 
 from __future__ import annotations
-
-import json
-import urllib.request
-from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -38,13 +32,6 @@ FEE_SCHEMA = T.StructType(
         T.StructField("fee_per_kb", T.LongType(), False),
     ]
 )
-
-
-def fetch_json(url: str, timeout_s: int = 15) -> dict:
-    """Driver-side fetch (reference 15 s API timeout,
-    updatePrices.py:116).  Kept out of every test path."""
-    with urllib.request.urlopen(url, timeout=timeout_s) as resp:
-        return json.loads(resp.read())
 
 
 # ---- pure response normalizers -------------------------------------
@@ -73,16 +60,6 @@ def normalize_fee_estimates(payload: dict, provider: str) -> list[tuple]:
     if "feePerKb" in payload:
         rows.append((provider, "feePerKb", int(payload["feePerKb"])))
     return rows
-
-
-def vwap(trades: Iterable[tuple[float, float]]) -> float | None:
-    """Volume-weighted average price over (amount, rate) pairs
-    (reference updatePrices.py:215-222)."""
-    num = den = 0.0
-    for amount, rate in trades:
-        num += amount * rate
-        den += amount
-    return num / den if den else None
 
 
 # ---- DataFrame constructors ----------------------------------------

@@ -4,34 +4,45 @@ The reference evolves its Postgres schema with numbered patch files
 applied transactionally (``upgrade.py:17-36``,
 ``patches/omniDB.v26.patch`` … ``v32.patch`` — add-column-with-
 default, rename, backfill UPDATEs).  A parquet warehouse has no ALTER
-TABLE, so a migration here is a declared DataFrame transform applied
-as a whole-table rewrite behind a crash-safe rename swap, with the
-current version recorded in a ``_schema_version.json`` sidecar.
+TABLE, so a migration here is a declared DataFrame transform whose
+result is committed as the table's next version with
+``versioned.commit_once``, tagged ``migration <n>: <description>``.
+The table is a ``versioned`` table (seed it with ``versioned.commit``)
+and is read back with ``versioned.read_version``.
 
 Properties the reference's patch runner has, kept:
-- ordered: migrations apply strictly by ascending version;
-- idempotent: re-running ``migrate`` at the current version is a
-  no-op, and a crash mid-rewrite leaves either the old or the new
-  complete table on disk (never a partial) so a re-run converges;
-- recorded: the sidecar keeps the applied history for audit.
+- ordered: migrations apply strictly by ascending version, and a gap
+  in the versions is an error;
+- transactional: the manifest CAS publishes the migrated rows and the
+  tag at once.  A crash before it leaves an orphan version dir that
+  readers never see; a crash after it leaves the tag committed, so a
+  re-run skips that migration.  Either way a re-run converges, and a
+  re-run at the current version commits nothing and fires no job;
+- recorded: the schema version and history are the migration tags of
+  the manifest, those ``vacuum`` retired included.
 
 At scale the rewrite is the honest cost model: adding a backfilled
 column IS a full scan+write of the table (same as Postgres rewriting
-the heap for a non-default backfill), parallelized across executors;
-partitioned tables keep their layout via ``partition_cols``.
+the heap for a non-default backfill), parallelized across executors.
+Each migration writes a new version dir, so it never overwrites the
+files it reads.
 """
 
 from __future__ import annotations
 
-import json
-import shutil
+import re
 from dataclasses import dataclass
-from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_VERSION_FILE = "_schema_version.json"
+from omniengine_spark.sources.versioned import (
+    commit_once,
+    committed_entries,
+    read_version,
+)
+
+_TAG = re.compile(r"migration (\d+): (.*)", re.DOTALL)
 
 
 @dataclass(frozen=True)
@@ -44,46 +55,22 @@ class Migration:
     apply: Callable[[DataFrame], DataFrame]
 
 
+def migration_history(path: str) -> list[dict]:
+    """``{"version", "description"}`` of every applied migration,
+    ascending, read from the manifest's tags."""
+    history = []
+    for e in committed_entries(path):
+        m = _TAG.fullmatch(e["description"])
+        if m:
+            history.append(
+                {"version": int(m.group(1)), "description": m.group(2)}
+            )
+    return sorted(history, key=lambda h: h["version"])
+
+
 def schema_version(path: str) -> int:
     """Current warehouse schema version (0 = never migrated)."""
-    vf = Path(path) / _VERSION_FILE
-    if not vf.exists():
-        return 0
-    return int(json.loads(vf.read_text())["version"])
-
-
-def migration_history(path: str) -> list[dict]:
-    vf = Path(path) / _VERSION_FILE
-    if not vf.exists():
-        return []
-    return json.loads(vf.read_text())["history"]
-
-
-def _write_version(path: str, version: int, history: list[dict]) -> None:
-    (Path(path) / _VERSION_FILE).write_text(
-        json.dumps({"version": version, "history": history})
-    )
-
-
-def _recover(path: str) -> None:
-    """Heal the one non-atomic instant of the swap: a crash between
-    'original moved aside' and 'staged moved in' leaves no table at
-    ``path``.  A staged dir already CONTAINS its sidecar (written
-    before the swap), so it is a complete committed table — promote
-    it; otherwise restore the set-aside original.  Idempotent."""
-    p = Path(path)
-    if p.exists():
-        return
-    staged = sorted(
-        p.parent.glob(p.name + "__v*"),
-        key=lambda d: int(d.name.rsplit("__v", 1)[1]),
-    )
-    complete = [d for d in staged if (d / _VERSION_FILE).exists()]
-    old = Path(path + "__old")
-    if complete:
-        complete[-1].rename(p)
-    elif old.exists():
-        old.rename(p)
+    return max((h["version"] for h in migration_history(path)), default=0)
 
 
 def migrate(
@@ -91,19 +78,11 @@ def migrate(
     path: str,
     migrations: list[Migration],
     to_version: int | None = None,
-    partition_cols: list[str] | None = None,
 ) -> int:
     """Apply every pending migration ≤ ``to_version`` in version
-    order; returns the resulting version.  Each step is one rewrite:
-    read → transform → write sibling → stamp the sidecar INTO the
-    staged dir → crash-safe swap.  The sidecar travels inside the
-    table dir it describes, so the rename that publishes the data
-    also publishes the version — there is no window where a migrated
-    table carries a stale version.
-    """
-    _recover(path)
+    order; returns the resulting version.  Each step is one
+    ``commit_once`` of the migrated head under the migration's tag."""
     current = schema_version(path)
-    history = migration_history(path)
     pending = sorted(
         (
             m
@@ -119,33 +98,12 @@ def migrate(
                 f"non-contiguous migration: at v{current}, "
                 f"next patch is v{m.version}"
             )
-        df = m.apply(spark.read.parquet(path))
-        staged = path + f"__v{m.version}"
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staged)
-        # commit point: the staged dir becomes self-describing BEFORE
-        # any rename (underscore-prefixed files are invisible to the
-        # parquet reader, like _SUCCESS)
+        commit_once(
+            path,
+            f"migration {m.version}: {m.description}",
+            lambda m=m: m.apply(read_version(spark, path)),
+        )
         current = m.version
-        history = history + [
-            {"version": m.version, "description": m.description}
-        ]
-        _write_version(staged, current, history)
-        old = Path(path + "__old")
-        shutil.rmtree(old, ignore_errors=True)
-        Path(path).rename(old)
-        try:
-            Path(staged).rename(path)
-        except OSError:
-            old.rename(path)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-    if current == 0:
-        # record the baseline so re-runs are version-aware even when
-        # nothing was pending
-        _write_version(path, 0, history)
     return current
 
 

@@ -19,7 +19,6 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from omniengine_spark.sources.catalog import path_signature
 
@@ -170,9 +169,8 @@ def write_partitioned(
     partition overwrite), and (b) each partition gets one output file
     instead of one per task×value — the many-small-files guard at
     scale.  The explicit partition count pins the exchange against
-    AQE coalescing it back to one task on a small batch; a caller
-    with a single giant partition value compacts/salts afterwards
-    (``compact_partitions``).
+    AQE coalescing it back to one task on a small batch.  A single
+    giant partition value still lands in one writer task.
     """
     if partition_cols:
         n = df.sparkSession.sparkContext.defaultParallelism
@@ -190,85 +188,6 @@ def write_partitioned(
 
 def read_warehouse(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_cols: list[str],
-    target_file_bytes: int = 128 << 20,
-) -> dict[str, int]:
-    """Small-file compaction: rewrite the warehouse so each partition
-    holds ~``target_file_bytes`` files instead of one file per
-    micro-batch append.
-
-    Streaming sinks (foreachBatch appends, X14) accrete a file per
-    batch per partition; at 100 TB that is millions of tiny files and
-    the scan's bottleneck becomes file-opening overhead, not bytes.
-    Compaction = read → repartition by (partition, size-derived file
-    count) → write to a sibling → rename swap.  Contents are
-    byte-identical (same rows), only the file layout changes.  The
-    swap keeps the original intact until the compacted copy is in
-    place (rename aside, rename in, then delete), so a crash at any
-    point leaves a complete copy on disk; run it between incremental
-    batches — a reader holding a cached file listing across the swap
-    window must re-list.
-
-    Returns {"files_before": n, "files_after": m} for observability.
-    """
-    root = Path(path)
-    before = sum(1 for p in root.rglob("*.parquet"))
-    df = spark.read.parquet(path)
-    total_bytes = sum(
-        p.stat().st_size for p in root.rglob("*.parquet")
-    )
-    n_files = max(1, int(total_bytes // target_file_bytes) + 1)
-    # The repartition key needs a SIZE-DERIVED salt per partition:
-    # hashing on the partition columns alone routes every row of a
-    # partition value to ONE task → one output file per partition no
-    # matter its size (a 10 GB hot day would compact into a single
-    # unsplittable file).  Per-partition file counts come from row
-    # counts × the measured bytes/row; the salt itself is a content
-    # hash (deterministic under stage retries, see operators/skew.py).
-    sizes = df.groupBy(*partition_cols).agg(
-        F.count(F.lit(1)).alias("__rows")
-    )
-    total_rows = df.count()
-    bytes_per_row = (total_bytes / total_rows) if total_rows else 1.0
-    sizes = sizes.withColumn(
-        "__files",
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.col("__rows") * F.lit(bytes_per_row)
-                   / F.lit(float(target_file_bytes))),
-        ),
-    )
-    data_cols = [c for c in df.columns if c not in partition_cols]
-    salted = df.join(F.broadcast(sizes), list(partition_cols)).withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in data_cols]),
-               F.col("__files")),
-    )
-    (
-        salted.repartition(n_files, *partition_cols, F.col("__salt"))
-        .drop("__rows", "__files", "__salt")
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(path + "__compact")
-    )
-    # crash-safe swap: move the original aside first so a complete
-    # copy exists on disk at every instant, then delete the old one
-    old_path = Path(path + "__old")
-    shutil.rmtree(old_path, ignore_errors=True)
-    Path(path).rename(old_path)
-    try:
-        Path(path + "__compact").rename(path)
-    except OSError:
-        old_path.rename(path)  # roll back — original restored
-        raise
-    shutil.rmtree(old_path, ignore_errors=True)
-    after = sum(1 for p in Path(path).rglob("*.parquet"))
-    return {"files_before": before, "files_after": after}
 
 
 def jdbc_publish(

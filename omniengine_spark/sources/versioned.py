@@ -42,8 +42,10 @@ Properties:
   only manifest-listed versions); later commits skip past it and
   ``vacuum`` retires it;
 - migration history travels in the manifest: ``commit`` records a
-  description per version, so schema patches (``sources.migrate``)
-  and reorg rewrites are the same audit trail;
+  description per version, and ``sources.migrate`` commits each schema
+  patch as a version tagged ``migration <n>: …``, so schema patches
+  and reorg rewrites are the same audit trail and ``commit`` is the
+  one publish of a rewritten table;
 - the manifest entry also carries the version's DATA schema (the
   committed frame's columns minus ``partition_cols``, all nullable),
   so ``read_version`` hands Spark the schema instead of inferring it
@@ -652,14 +654,16 @@ def commit(
     return version
 
 
-def _tagged(path: str, tag: str) -> dict | None:
+def committed_entries(path: str) -> list[dict]:
+    """Every manifest entry ever published: the live versions, then
+    those ``vacuum`` moved to ``retired``."""
     manifest = _load_manifest(path)
+    return manifest["versions"] + manifest.get("retired", [])
+
+
+def _tagged(path: str, tag: str) -> dict | None:
     return next(
-        (
-            e
-            for e in manifest["versions"] + manifest.get("retired", [])
-            if e["description"] == tag
-        ),
+        (e for e in committed_entries(path) if e["description"] == tag),
         None,
     )
 

@@ -1,6 +1,5 @@
 """S9-S12 HTTP adapters: pure normalizers over fixture payloads, then
-small-DataFrame construction — network-free (the fetch wrapper is the
-only networked function and is never called here).
+small-DataFrame construction — network-free.
 """
 
 from __future__ import annotations
@@ -36,11 +35,6 @@ def test_fee_normalizer_both_shapes():
     assert H.normalize_fee_estimates(BITGO_FIXTURE, "bitgo") == [
         ("bitgo", "feePerKb", 61440)
     ]
-
-
-def test_vwap():
-    assert H.vwap([(2.0, 10.0), (1.0, 40.0)]) == 20.0
-    assert H.vwap([]) is None
 
 
 def test_frames_build_and_join(spark):

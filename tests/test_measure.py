@@ -81,6 +81,7 @@ def test_node_metrics_reads_the_scan_of_the_action(spark):
         "sim_ivfpq_ann_topk",
         "sql_q21_sole_blame_supplier",
         "sql_q8_market_share",
+        "s17_schema_migration",
     ],
 )
 def test_checksum_stable_across_runs_and_partitionings(spark, name):

@@ -115,24 +115,36 @@ def test_dynamic_overwrite_preserves_other_partitions(spark):
         cleanup(path)
 
 
-def test_compaction_preserves_content_and_shrinks_files(spark):
-    from omniengine_spark.sources.sinks import compact_partitions
+def _parquet_files(tbl):
+    """Parquet files of the versioned table's current content."""
+    from omniengine_spark.sources import versioned as V
+
+    return V.pruned_files(tbl, {})[0]
+
+
+def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
+    from omniengine_spark.sources import versioned as V
 
     ev = _events_with_day(spark).select(
         "event_id", "user_id", "day"
     )
-    path = scratch_dir("wh-compact")
-    # simulate per-batch appends: 6 small writes into the same layout
+    tbl = str(tmp_path / "tbl")
+    # per-batch appends: a seed and 5 deltas, each partitioned by day
     for i in range(6):
-        ev.filter(F.col("event_id") % 6 == i).write.mode(
-            "append"
-        ).partitionBy("day").parquet(path)
-    fp_before = _fingerprint(spark.read.parquet(path))
+        V.commit(
+            ev.filter(F.col("event_id") % 6 == i), tbl, f"batch{i}",
+            partition_cols=["day"],
+            base_version=V.current_version(tbl) if i else None,
+        )
+    fp_before = _fingerprint(V.read_version(spark, tbl))
+    files_before = len(_parquet_files(tbl))
 
-    stats = compact_partitions(spark, path, ["day"])
-    assert stats["files_after"] < stats["files_before"]
-    assert _fingerprint(spark.read.parquet(path)) == fp_before
-    cleanup(path)
+    V.compact(
+        spark, tbl, partition_cols=["day"], cluster_by=["event_id"],
+        n_files=4,
+    )
+    assert len(_parquet_files(tbl)) < files_before
+    assert _fingerprint(V.read_version(spark, tbl)) == fp_before
 
 
 def test_consensus_hash_recompute_stable(spark):
@@ -168,10 +180,18 @@ def test_consensus_hash_recompute_stable(spark):
     assert all(fp3[b] != fp1[b] for b in (12, 13))
 
 
+def _seed(spark, tbl, rows, cols):
+    from omniengine_spark.sources import versioned as V
+
+    V.commit(spark.createDataFrame(rows, cols), tbl, "seed")
+
+
 def test_schema_migration_roundtrip(spark, tmp_path):
-    """Migration runner: ordered apply, version sidecar, idempotent
-    re-run, non-contiguous patch rejected (upgrade.py's patch-file
-    discipline on a parquet warehouse)."""
+    """Migration runner: ordered apply, history in the manifest tags,
+    idempotent re-run, non-contiguous patch rejected (upgrade.py's
+    patch-file discipline on a parquet warehouse)."""
+    import pytest as _pytest
+
     from omniengine_spark.sources.migrate import (
         Migration,
         add_column,
@@ -180,12 +200,11 @@ def test_schema_migration_roundtrip(spark, tmp_path):
         rename_column,
         schema_version,
     )
+    from omniengine_spark.sources.versioned import read_version, vacuum
 
     path = str(tmp_path / "wh")
-    spark.createDataFrame(
-        [(1, "HIGH", 10.0), (2, "LOW", 20.0)],
-        ["k", "prio", "amt"],
-    ).write.parquet(path)
+    _seed(spark, path, [(1, "HIGH", 10.0), (2, "LOW", 20.0)],
+          ["k", "prio", "amt"])
     assert schema_version(path) == 0
 
     migs = [
@@ -195,88 +214,124 @@ def test_schema_migration_roundtrip(spark, tmp_path):
     ]
     assert migrate(spark, path, migs) == 2
     assert schema_version(path) == 2
-    assert [h["version"] for h in migration_history(path)] == [1, 2]
+    assert migration_history(path) == [
+        {"version": 1, "description": "add cents"},
+        {"version": 2, "description": "rename prio"},
+    ]
     got = {r["k"]: (r["priority"], r["cents"])
-           for r in spark.read.parquet(path).collect()}
+           for r in read_version(spark, path).collect()}
     assert got == {1: ("HIGH", 1000), 2: ("LOW", 2000)}
 
-    # idempotent: nothing pending, content untouched
+    # history counts retired tags: vacuum leaves the version at 2, and
+    # the re-run finds nothing pending, fires no job, leaves content
+    vacuum(path, keep_last=1, orphan_ttl_s=0.0)
+    assert schema_version(path) == 2
+    assert [h["version"] for h in migration_history(path)] == [1, 2]
+    before = next_job_id(spark)
     assert migrate(spark, path, migs) == 2
-    assert {r["k"] for r in spark.read.parquet(path).collect()} == {1, 2}
+    assert next_job_id(spark) == before
+    assert {r["k"] for r in read_version(spark, path).collect()} == {1, 2}
 
     # partial upgrade honors to_version; resuming applies the rest
     path2 = str(tmp_path / "wh2")
-    spark.createDataFrame([(1, "X", 1.0)], ["k", "prio", "amt"]).write.parquet(path2)
+    _seed(spark, path2, [(1, "X", 1.0)], ["k", "prio", "amt"])
     assert migrate(spark, path2, migs, to_version=1) == 1
-    assert "cents" in spark.read.parquet(path2).columns
-    assert "priority" not in spark.read.parquet(path2).columns
+    assert "cents" in read_version(spark, path2).columns
+    assert "priority" not in read_version(spark, path2).columns
     assert migrate(spark, path2, migs) == 2
-    assert "priority" in spark.read.parquet(path2).columns
+    assert "priority" in read_version(spark, path2).columns
 
     # a gap in versions is a hard error, not a silent skip
-    import pytest as _pytest
     path3 = str(tmp_path / "wh3")
-    spark.createDataFrame([(1,)], ["k"]).write.parquet(path3)
+    _seed(spark, path3, [(1,)], ["k"])
     with _pytest.raises(ValueError, match="non-contiguous"):
         migrate(spark, path3, [Migration(2, "skip", add_column("z", F.lit(0)))])
 
 
-def test_migration_crash_windows_recover(spark, tmp_path):
-    """The two crash windows of the swap heal on re-run: (a) killed
-    after the original moved aside but before the staged table moved
-    in — the staged dir is already self-describing (sidecar written
-    pre-swap) and gets promoted; (b) killed after staging but before
-    any rename — re-run restores nothing, just re-applies.  In both
-    cases the version recorded always matches the data on disk."""
-    import shutil as _sh
-    from pathlib import Path as _P
+def test_migration_crash_before_and_after_publish_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A migration is a ``commit_once``, so its crash windows are the
+    commit protocol's: (a) killed after the version dir is claimed and
+    filled but before the manifest CAS — the orphan holds migrated rows
+    no reader resolves, and the re-run commits past it; (b) killed
+    after a publish but before ``migrate`` returns — the tag is
+    committed, so the re-run applies only what is still pending.  Both
+    converge to the right version and content, with each tag committed
+    once."""
+    import os
 
-    from omniengine_spark.sources.migrate import (
-        Migration,
-        add_column,
-        migrate,
-        schema_version,
-    )
+    import pytest as _pytest
+
+    from omniengine_spark.sources import migrate as M
+    from omniengine_spark.sources import versioned as V
 
     migs = [
-        Migration(1, "add flag", add_column("flag", F.lit(1))),
+        M.Migration(1, "add flag", M.add_column("flag", F.lit(1))),
+        M.Migration(2, "rename k", M.rename_column("k", "key")),
     ]
 
-    # (a) simulate: staged written WITH sidecar, original moved aside,
-    # crash before staged.rename(path)
-    path = str(tmp_path / "wha")
-    spark.createDataFrame([(1,), (2,)], ["k"]).write.parquet(path)
-    migrate(spark, path, migs)  # produce a real migrated table
-    # now rebuild the crash scene from it
-    _P(path).rename(_P(path + "__v1"))  # completed staged dir
-    spark.createDataFrame([(1,), (2,)], ["k"]).write.parquet(path)
-    _P(path).rename(_P(path + "__old"))  # original moved aside
-    # path is now missing entirely; re-run must promote the staged dir
-    assert migrate(spark, path, migs) == 1
-    assert schema_version(path) == 1
-    assert {r["flag"] for r in spark.read.parquet(path).collect()} == {1}
-    assert not _P(path + "__v1").exists()
+    def converged(tbl, keys):
+        assert M.schema_version(tbl) == 2
+        df = V.read_version(spark, tbl)
+        assert sorted((r["key"], r["flag"]) for r in df.collect()) == [
+            (k, 1) for k in keys
+        ]
+        tags = [e["description"] for e in V.committed_entries(tbl)]
+        assert sorted(tags) == [
+            "migration 1: add flag", "migration 2: rename k", "seed",
+        ]
+        return df
 
-    # (b) crash scene: only __old remains (staged incomplete, deleted)
-    path2 = str(tmp_path / "whb")
-    spark.createDataFrame([(3,)], ["k"]).write.parquet(path2)
-    _P(path2).rename(_P(path2 + "__old"))
-    assert migrate(spark, path2, migs) == 1
-    assert {r["k"] for r in spark.read.parquet(path2).collect()} == {3}
-    _sh.rmtree(path2 + "__old", ignore_errors=True)
+    # (a) crash between claim and manifest CAS
+    tbl = str(tmp_path / "wha")
+    _seed(spark, tbl, [(1,), (2,)], ["k"])
+
+    def crash(*a, **kw):
+        raise RuntimeError("crash before the manifest CAS")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(V, "_publish_version", crash)
+        with _pytest.raises(RuntimeError, match="manifest CAS"):
+            M.migrate(spark, tbl, migs)
+    orphan = os.path.join(tbl, "v=2")
+    assert {r["flag"] for r in spark.read.parquet(orphan).collect()} == {1}
+    assert M.schema_version(tbl) == 0
+    assert V.current_version(tbl) == 1
+
+    assert M.migrate(spark, tbl, migs) == 2
+    df = converged(tbl, [1, 2])
+    assert 2 not in [e["version"] for e in V.version_history(tbl)]
+    assert not any(f"{os.sep}v=2{os.sep}" in f for f in df.inputFiles())
+
+    # (b) crash after migration 1 is published
+    tbl2 = str(tmp_path / "whb")
+    _seed(spark, tbl2, [(3,)], ["k"])
+    real = M.commit_once
+
+    def publish_then_crash(*a, **kw):
+        real(*a, **kw)
+        raise RuntimeError("crash after the publish")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "commit_once", publish_then_crash)
+        with _pytest.raises(RuntimeError, match="after the publish"):
+            M.migrate(spark, tbl2, migs)
+    assert M.schema_version(tbl2) == 1
+    assert M.migrate(spark, tbl2, migs) == 2
+    converged(tbl2, [3])
+    before = next_job_id(spark)
+    assert M.migrate(spark, tbl2, migs) == 2
+    assert next_job_id(spark) == before
 
 
-def test_compaction_splits_oversized_partition(spark):
-    """A hot partition bigger than target_file_bytes must compact
-    into MULTIPLE files (size-derived salt), not one unsplittable
-    file per partition value."""
-    from omniengine_spark.sources.sinks import (
-        cleanup,
-        compact_partitions,
-        scratch_dir,
-    )
+def test_compaction_splits_oversized_partition(spark, tmp_path):
+    """A hot partition must compact into MULTIPLE files (range-
+    clustered output), not one unsplittable file per partition
+    value, while a cold partition stays one file."""
+    from omniengine_spark.sources import versioned as V
 
-    path = scratch_dir("wh-hotpart")
+    tbl = str(tmp_path / "tbl")
     # hot partition day=1 (50k rows), cold day=2 (100 rows)
     df = (
         spark.range(50_000)
@@ -293,22 +348,18 @@ def test_compaction_splits_oversized_partition(spark):
             )
         )
     )
-    df.write.partitionBy("day").mode("overwrite").parquet(path)
-    before = spark.read.parquet(path).count()
-    # tiny target so day=1 must split into several files
-    compact_partitions(spark, path, ["day"], target_file_bytes=256 << 10)
-    from pathlib import Path as _P
+    V.commit(df, tbl, "seed", partition_cols=["day"])
+    fp_before = _fingerprint(V.read_version(spark, tbl))
 
-    hot_files = sum(
-        1 for p in _P(path).glob("day=1/*.parquet")
+    V.compact(
+        spark, tbl, partition_cols=["day"], cluster_by=["id"], n_files=4
     )
-    cold_files = sum(
-        1 for p in _P(path).glob("day=2/*.parquet")
-    )
+    files = _parquet_files(tbl)
+    hot_files = sum(1 for f in files if "/day=1/" in f)
+    cold_files = sum(1 for f in files if "/day=2/" in f)
     assert hot_files > 1, hot_files
     assert cold_files == 1, cold_files
-    assert spark.read.parquet(path).count() == before
-    cleanup(path)
+    assert _fingerprint(V.read_version(spark, tbl)) == fp_before
 
 
 def test_incremental_lifecycle_converges_and_reorg_matters(spark):
@@ -1186,3 +1237,21 @@ def test_plans_build_artifacts_only_through_commit_once():
         for p in sorted((pkg / sub).rglob("*.py"))
     }
     assert not {k: v for k, v in found.items() if v}
+
+
+def test_only_versioned_renames_table_dirs():
+    """No package module but ``sources/versioned.py`` renames a path:
+    ``versioned.commit`` (claim a new version dir, CAS the manifest) is
+    the one publish of a rewritten table, so no second rename-swap
+    protocol with its own crash windows can come back."""
+    import re
+    from pathlib import Path
+
+    pattern = re.compile(r"\.rename\(")
+    pkg = Path(__file__).resolve().parents[1] / "omniengine_spark"
+    found = {
+        str(p.relative_to(pkg)): len(pattern.findall(p.read_text()))
+        for p in sorted(pkg.rglob("*.py"))
+        if p.relative_to(pkg) != Path("sources/versioned.py")
+    }
+    assert not {k: n for k, n in found.items() if n}
