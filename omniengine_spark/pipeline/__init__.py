@@ -9,7 +9,6 @@ from omniengine_spark.pipeline.omni import (
     expand_btc_deltas,
     expand_deltas,
     genesis_deltas,
-    stamp_serials,
     stamp_serials_distributed,
     with_after_balances,
 )
@@ -22,7 +21,6 @@ __all__ = [
     "expand_btc_deltas",
     "expand_deltas",
     "genesis_deltas",
-    "stamp_serials",
     "stamp_serials_distributed",
     "with_after_balances",
 ]

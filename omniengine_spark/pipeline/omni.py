@@ -5,9 +5,10 @@ stages.
 
 Stage map (reference site → here):
 
-1. ``stamp_serials``   — TxDBSerialNum sequence (``omniEngine.py:
-   104-106``, ``sql.py:2411-2504``) → deterministic ``row_number``
-   over (block, position): replayable, no mutable sequence (W3).
+1. ``stamp_serials_distributed`` — TxDBSerialNum sequence
+   (``omniEngine.py:104-106``, ``sql.py:2411-2504``) → deterministic
+   dense serial over (block, position): replayable, no mutable
+   sequence (W3), and no single-partition global sort.
 2. ``expand_deltas``   — the 25-way ``insertTxAddr`` dispatch
    (``sql.py:1664-2409``) → per-type column expressions producing
    1..N double-entry delta rows per tx via ``inline``/``explode``
@@ -178,23 +179,10 @@ RAW_TX_SCHEMA = T.StructType(
 )
 
 
-def stamp_serials(txs: DataFrame) -> DataFrame:
-    """Deterministic global serial per tx: dense row_number over
-    (block, position_in_block).  Applied per incremental batch (the
-    reference's per-block unit of work), offset by the batch's base
-    serial at scale.
-
-    The global window funnels the batch through ONE partition — fine
-    for a per-block micro-batch, fatal for a 100 TB backfill; use
-    ``stamp_serials_distributed`` there.
-    """
-    w = Window.orderBy("block", "position_in_block")
-    return txs.withColumn("serial", F.row_number().over(w).cast("long"))
-
-
 def stamp_serials_distributed(txs: DataFrame) -> DataFrame:
-    """W3 at scale: the same dense (block, position_in_block) serial
-    without the single-partition global sort.
+    """W3: the dense serial per tx, ``row_number() OVER (ORDER BY
+    block, position_in_block)``, without that single-partition global
+    sort.
 
     Two-level decomposition: (1) per-block row counts — one row per
     block — prefix-summed into block start offsets with a window over

@@ -1,8 +1,8 @@
 """Driver-facing omni-pipeline plans: a deterministic tx stream is
 derived from the events table (signup → fixed issuance type 50,
 purchase → simple send type 0), run through the real pipeline stages
-(stamp_serials → expand_deltas → build_balances), and the oracle
-re-states the expansion + fold declaratively in SQL.
+(stamp_serials_distributed → expand_deltas → build_balances), and the
+oracle re-states the expansion + fold declaratively in SQL.
 
 Around the pipeline sit its incremental-processing shapes: resume
 points (A1/A2), the consensus check against a snapshot (X7/§5), the

@@ -277,9 +277,9 @@ def test_lm_fluency_mass_conservation(spark):
 
 # ---- seeded generator sweep over the REAL pipeline ------------------
 # The fixed fixtures upstream exercise one event shape; this sweep
-# feeds ≥20 seeded random tx streams through stamp_serials →
-# expand_deltas → build_balances and checks the algebra the engine
-# rests on.  Pure-python expected state keeps each seed to a couple
+# feeds ≥20 seeded random tx streams through
+# stamp_serials_distributed → expand_deltas → build_balances and
+# checks the algebra the engine rests on.  Pure-python expected state keeps each seed to a couple
 # of Spark actions (CI budget); order-dependence bugs (serial
 # stamping, reorg batching, consensus difference-trick) are exactly
 # what random interleavings catch and fixtures cannot.

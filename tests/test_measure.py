@@ -7,7 +7,11 @@ module importable."""
 from __future__ import annotations
 
 import importlib
+import json
+import os
 import re
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -102,6 +106,59 @@ def test_checksum_stable_across_runs_and_partitionings(spark, name):
 
 _REPO = Path(__file__).parents[1]
 _TOOLS = sorted((_REPO / "tools").glob("*.py"))
+
+# the 13 plans above, the money folds, connected components, PageRank
+# and three stream drains
+_PARALLELISM_SAMPLE = [
+    "omni_genesis_fold",
+    "btc_wallet_clusters",
+    "d7c_freeze_pipeline",
+    "a10_salted_balance_fold",
+    "x15_ivm_rollup_merge",
+    "stats_countmin_heavy_hitters",
+    "j12_range_join",
+    "sim_lsh_ann_topk",
+    "sim_pq_ann_topk",
+    "sim_ivfpq_ann_topk",
+    "sql_q21_sole_blame_supplier",
+    "sql_q8_market_share",
+    "s17_schema_migration",
+    "dedup_clusters",
+    "graph_pagerank",
+    "w2b_running_value_chunked",
+    "a10_user_balance_fold",
+    "x10_stream_stream_join",
+    "x12_stream_timer_expiry",
+    "x14_stream_exactly_once_sink",
+]
+
+
+def test_checksums_equal_across_jvms_of_different_parallelism(tmp_path):
+    """README: results do not depend on parallelism.  ``tools/sweep.py``
+    runs the sample in two fresh JVMs: one core and one shuffle
+    partition, against every core, 200 shuffle partitions and 64 KB
+    scan splits.  AQE would coalesce this data's 200 partitions back
+    into one, so the wide JVM turns coalescing off."""
+    out = tmp_path / "sweep.json"
+    wide = (f"cpus={len(os.sched_getaffinity(0))},"
+            "conf.spark.sql.shuffle.partitions=200,"
+            "conf.spark.sql.adaptive.coalescePartitions.enabled=false,"
+            "conf.spark.sql.files.maxPartitionBytes=64k,"
+            "conf.spark.sql.files.openCostInBytes=0")
+    proc = subprocess.run(
+        [sys.executable, str(_REPO / "tools" / "sweep.py"),
+         "--compare", "checksum", "--runs", "1", "--out", str(out),
+         "--variant", f"p1={SF_SMOKE},cpus=1,heap=2g,"
+                      "conf.spark.sql.shuffle.partitions=1",
+         "--variant", f"pN={SF_SMOKE},heap=2g,{wide}",
+         *_PARALLELISM_SAMPLE],
+        capture_output=True, text=True, timeout=1500,
+    )
+    assert proc.returncode == 0, proc.stdout[-6000:] + proc.stderr[-3000:]
+    rows = json.loads(out.read_text())["compare"]["checksum"]
+    assert sorted(rows) == sorted(_PARALLELISM_SAMPLE)
+    for plan, row in rows.items():
+        assert row["p1"][1] > 0 and row["p1"] == row["pN"], (plan, row)
 
 
 def test_run_phase_returns_the_child_record_with_loadavg(tmp_path):

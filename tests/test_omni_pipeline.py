@@ -14,7 +14,7 @@ from omniengine_spark.pipeline import (
     RAW_TX_SCHEMA,
     build_balances,
     expand_deltas,
-    stamp_serials,
+    stamp_serials_distributed,
     with_after_balances,
 )
 
@@ -112,7 +112,7 @@ EXPECTED_RESERVED = {
 
 def _pipeline(spark):
     raw = spark.createDataFrame(FIXTURE, RAW_TX_SCHEMA)
-    return expand_deltas(stamp_serials(raw))
+    return expand_deltas(stamp_serials_distributed(raw))
 
 
 def test_golden_balances(spark):
@@ -199,7 +199,7 @@ def test_after_balances_telescope(spark):
 def test_serials_are_dense_and_ordered(spark):
     raw = spark.createDataFrame(FIXTURE, RAW_TX_SCHEMA)
     rows = sorted(
-        stamp_serials(raw).select(
+        stamp_serials_distributed(raw).select(
             "serial", "block", "position_in_block"
         ).collect(),
         key=lambda r: r["serial"],
@@ -292,11 +292,12 @@ def test_tx_class_from_scripts(spark):
 
 
 def test_distributed_serials_match_global(spark):
-    """stamp_serials_distributed must assign the identical dense
-    serial as the single-partition global window, on a frame with
-    many blocks, uneven block sizes, and shuffled input order."""
-    from omniengine_spark.pipeline import stamp_serials_distributed
-
+    """stamp_serials_distributed must assign the dense serial of
+    ``ROW_NUMBER() OVER (ORDER BY block, position_in_block)`` on a
+    frame with many blocks, uneven block sizes, repeated (block,
+    position) keys and shuffled input order.  Tied keys may take
+    their serials in either order, so (block, position, serial)
+    triples are compared."""
     rows = []
     eid = 0
     for block in [7, 3, 11, 3, 5, 100, 2]:
@@ -307,25 +308,19 @@ def test_distributed_serials_match_global(spark):
         rows, ["txid", "block", "position_in_block"]
     ).repartition(5)
 
-    base = {
-        r["txid"]: r["serial"]
-        for r in stamp_serials(raw.select("txid", "block",
-                                          "position_in_block")).collect()
-    }
-    dist = {
-        r["txid"]: r["serial"]
+    keys = sorted((b, p) for _, b, p in rows)
+    expected = [(b, p, i + 1) for i, (b, p) in enumerate(keys)]
+    got = sorted(
+        (r["block"], r["position_in_block"], r["serial"])
         for r in stamp_serials_distributed(raw).collect()
-    }
-    assert dist == base
-    assert sorted(dist.values()) == list(range(1, len(rows) + 1))
+    )
+    assert got == expected
 
 
 def test_distributed_serials_avoid_single_partition_sort(spark):
     """The wide side must not pass through a global (non-partitioned)
     window: every Window node in the plan carries a partition spec,
     except over the one-row-per-block offsets frame."""
-    from omniengine_spark.pipeline import stamp_serials_distributed
-
     raw = spark.createDataFrame(
         [(f"t{i}", i % 10, i) for i in range(100)],
         ["txid", "block", "position_in_block"],
@@ -377,7 +372,7 @@ def test_dex1_lifecycle_golden(spark):
         (r["address"], r["propertyid"]):
             (r["available"], r["reserved"], r["accepted"])
         for r in build_full_balances(
-            expand_deltas(stamp_serials(raw))
+            expand_deltas(stamp_serials_distributed(raw))
         ).collect()
     }
     E8 = 100_000_000
@@ -405,7 +400,7 @@ def test_metadex_cancel_golden(spark):
     )
     got = {
         (r["propertyid"]): (r["delta_base_units"], r["delta_reserved"])
-        for r in expand_deltas(stamp_serials(raw)).collect()
+        for r in expand_deltas(stamp_serials_distributed(raw)).collect()
     }
     assert got[31] == (Decimal(700_000_000), Decimal(-700_000_000))
     assert got[32] == (Decimal(3), Decimal(-3))
@@ -426,7 +421,7 @@ def test_crowdsale_participation_golden(spark):
         ],
         RAW_TX_SCHEMA,
     )
-    rows = expand_deltas(stamp_serials(raw)).collect()
+    rows = expand_deltas(stamp_serials_distributed(raw)).collect()
     got = {}
     for r in rows:
         key = (r["address"], r["propertyid"])
@@ -449,7 +444,7 @@ def test_sto_fee_burn_golden(spark):
         ],
         RAW_TX_SCHEMA,
     )
-    rows = expand_deltas(stamp_serials(raw)).collect()
+    rows = expand_deltas(stamp_serials_distributed(raw)).collect()
     fee_rows = [r for r in rows if r["role"] == "feepayer"]
     assert len(fee_rows) == 1
     # fee burned from sender in the production fee property (pid 1)
@@ -489,7 +484,7 @@ def test_freeze_pipeline_golden(spark):
         (r["address"], r["propertyid"]):
             (r["available"], r["frozen"])
         for r in build_full_balances(
-            expand_deltas(stamp_serials(raw))
+            expand_deltas(stamp_serials_distributed(raw))
         ).collect()
     }
     E8 = 100_000_000
@@ -512,7 +507,7 @@ def test_freeze_pipeline_golden(spark):
         (r["address"], r["propertyid"]):
             (r["available"], r["frozen"])
         for r in build_full_balances(
-            expand_deltas(stamp_serials(raw2))
+            expand_deltas(stamp_serials_distributed(raw2))
         ).collect()
     }
     assert out2[("v", 31)] == (0, 24 * E8)
@@ -533,7 +528,7 @@ def test_zero_delta_bookkeeping_types(spark):
         _tx("z8", 800, 8, 21, sender="a", pid=1, amount="1.0"),
     ]
     raw = spark.createDataFrame(fixtures, RAW_TX_SCHEMA)
-    rows = expand_deltas(stamp_serials(raw)).collect()
+    rows = expand_deltas(stamp_serials_distributed(raw)).collect()
     by_tx = {}
     for r in rows:
         by_tx.setdefault(r["txid"], []).append(r)

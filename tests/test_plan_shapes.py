@@ -414,9 +414,10 @@ def test_shuffle_bytes_ratchet():
     (+8 MB slack) at the smoke sf.  Seconds hide movement; this fails
     the build when a plan starts shuffling more than it used to —
     re-record tools/shuffle_census.json deliberately if the growth is
-    intended.  Runs in a subprocess because the census needs its own
-    JVM: the recorded figures were taken with 32 shuffle partitions,
-    and the shared test session runs 8."""
+    intended.  Runs ``tools/sweep.py --compare ratchet`` in a
+    subprocess because the check needs its own JVM: the recorded
+    figures were taken with 32 shuffle partitions, and the shared
+    test session runs 8."""
     import json
     import subprocess
     import sys
@@ -424,7 +425,7 @@ def test_shuffle_bytes_ratchet():
 
     repo = Path(__file__).resolve().parents[1]
     census = repo / "tools" / "shuffle_census.json"
-    if not census.exists() or "/root/testdata/sf0.001" not in json.loads(
+    if not census.exists() or SF_SMOKE not in json.loads(
         census.read_text()
     ):
         import pytest
@@ -444,8 +445,10 @@ def test_shuffle_bytes_ratchet():
         "omni_genesis_fold",
     ]
     proc = subprocess.run(
-        [sys.executable, str(repo / "tools" / "shuffle_census.py"),
-         "--check", "/root/testdata/sf0.001", *top],
+        [sys.executable, str(repo / "tools" / "sweep.py"),
+         "--compare", "ratchet", "--runs", "1",
+         "--variant", f"smoke={SF_SMOKE},"
+                      "conf.spark.sql.shuffle.partitions=32", *top],
         capture_output=True,
         text=True,
         timeout=900,

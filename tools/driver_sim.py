@@ -28,6 +28,19 @@ SF = "/root/testdata/sf0.01"
 TABLES = list(_CATALOG)
 
 
+def make_duck(sf_dir: str):
+    """DuckDB connection with the warehouse tables of ``sf_dir``
+    registered as views: the driver's oracle setup."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
 def canon(df):
     df = df.reindex(sorted(df.columns), axis=1)
     return df.sort_values(by=list(df.columns), ignore_index=True)
@@ -59,7 +72,6 @@ def frames_match(a, b) -> list[str]:
 
 
 def main() -> int:
-    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -72,12 +84,7 @@ def main() -> int:
 
     from omniengine_spark.plans import ORACLES, QUERIES
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'"
-        )
-
+    con = make_duck(SF)
     names = sys.argv[1:] or sorted(ORACLES)
     bad = 0
     for name in names:

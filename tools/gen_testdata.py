@@ -6,8 +6,13 @@ The driver ships read-only parquet at sf0.001/0.01/0.1
 decade more data than the bench sf.  This generator reproduces the
 same schema, key relationships, and value distributions (measured
 from the driver's sf0.01/sf0.1 files) at ANY scale factor, seeded, so
-``tools/scale_soak.py`` can compare e.g. sf0.1 -> sf1 apples-to-apples
-within one generator family.
+``tools/sweep.py --compare exponent`` can compare e.g. sf0.1 -> sf1
+apples-to-apples within one generator family.  Tables are written in
+65,536-row groups (the driver's files hold one row group per table),
+so a small ``spark.sql.files.maxPartitionBytes`` splits their scans:
+lineitem has 10 row groups at sf0.1.  ``--zipf`` skews
+``events.user_id`` for ``--compare straggler``; a Z-ordered layout is
+the sweep's ``zorder=N`` variant key.
 
 Row-count rules (inferred by diffing the three driver sfs):
   lineitem 6M*sf   orders 1.5M*sf   events 1M*sf (15k*sf users)

@@ -2,8 +2,8 @@
 """Shard-ingest vs one-shot dedup at rv scale — the number the
 incremental MinHash index exists to make small.
 
-Three phases, each in its OWN subprocess (fresh JVM, same rationale
-as scale_soak --fresh):
+Three phases, each in its OWN subprocess (a fresh JVM: shuffle state
+and old-gen pressure left by one phase slow whichever runs later):
 
     build    corpus-day index build over doc_id % 10 != 7 (the one
              full-corpus scan the lifecycle ever performs)

@@ -171,13 +171,15 @@ def measured(spark, fn) -> dict:
     }
 
 
-def tool_session(app_name: str):
-    """The tools' session: ``get_spark`` at 32 shuffle partitions,
-    with one tiny job so the first measured phase is not charged for
-    JVM start-up."""
+def tool_session(app_name: str, master: str | None = None,
+                 extra_conf: dict[str, str] | None = None):
+    """The tools' session: ``get_spark`` at 32 shuffle partitions
+    (``master`` and ``extra_conf`` passed through), with one tiny job
+    so the first measured phase is not charged for JVM start-up."""
     from omniengine_spark.session import get_spark
 
-    spark = get_spark(app_name=app_name, shuffle_partitions=32)
+    spark = get_spark(app_name=app_name, master=master,
+                      shuffle_partitions=32, extra_conf=extra_conf)
     spark.range(1000).selectExpr("sum(id)").collect()
     return spark
 

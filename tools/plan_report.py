@@ -118,12 +118,12 @@ def main() -> None:
         for sfd, rows in blob.items():
             lines += [
                 "",
-                f"## Shuffle-bytes census (tools/shuffle_census.py @ {sfd})",
+                f"## Shuffle-bytes census (tools/shuffle_census.json @ {sfd})",
                 "",
                 "Measured data movement per plan (status-store stage counters).",
-                "Seconds hide movement; the ratchet test",
-                "(tests/test_plan_shapes.py) fails a plan whose write",
-                "bytes grow past 1.5× + 8 MB of this record.",
+                "Seconds hide movement; the ratchet",
+                "(tools/sweep.py --compare ratchet) fails a plan whose",
+                "write bytes grow past 1.5× + 8 MB of this record.",
                 "",
                 "| plan | sec | shuffle write MB | shuffle read MB "
                 "| spill MB | input MB | stages |",
