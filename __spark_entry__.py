@@ -4,6 +4,14 @@ Exposes the engine's registered plans (omniengine_spark.plans) to the
 driver: ``entry`` smoke-runs the flagship query at sf0.001,
 ``queries`` maps plan name → callable, ``oracle_sql`` maps plan name →
 DuckDB-equivalent SQL for the correctness gate.
+
+Each ``queries()`` callable runs one plan call, the unit of session
+state (``sources.catalog.plan_call``): a frame a call returns stays
+readable until the next call of the same plan ends its build, which
+releases the scratch files, cached frames and checkpoints the earlier
+frame reads.  Collect a result before calling its plan again; no
+caller needs ``spark.catalog.clearCache()``.  Drive a session from one
+thread.
 """
 
 from __future__ import annotations

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omniengine_spark.sources.catalog import checkpoint, persist
+
 
 def normalize_text(col: Column) -> Column:
     """Canonical form for exact dedup: trimmed, lowercased,
@@ -209,12 +211,8 @@ def jaccard_similarity_join(
     # fails the job instead of recomputing lineage.  On a long-lived
     # 100 TB cluster prefer reliable ``checkpoint()`` to an HDFS dir;
     # locally the job-restart cost is trivial and the 7× win stands.
-    inst = (
+    inst = checkpoint(
         docs.select("doc_id", F.explode_outer("hs").alias("h"))
-        # eager=False: the plan is still cut HERE (checkpoint planning
-        # happens at the call), but the materialization job folds into
-        # the first downstream action instead of running at build time
-        .localCheckpoint(eager=False)
     )
     dfreq = inst.groupBy("h").agg(F.count(F.lit(1)).alias("dfr"))
     ranked = (
@@ -237,14 +235,12 @@ def jaccard_similarity_join(
         - F.expr(f"({t_num} * size(hs_ord) + {t_den} - 1) div {t_den}")
         + 3
     )
-    pre = (
+    pre = checkpoint(
         ranked.select(
             "doc_id",
             "n_sh",
             F.posexplode_outer(F.slice("hs_ord", F.lit(1), prefix_len3o)),
-        )
-        .select("doc_id", "n_sh", "pos", F.col("col").alias("h"))
-        .localCheckpoint(eager=False)
+        ).select("doc_id", "n_sh", "pos", F.col("col").alias("h"))
     )
 
     # Prefix arity.  q=2 (hash-PAIR join key) is the default and the
@@ -528,13 +524,6 @@ def minhash_lsh_pairs(
     probability (1−0.8²)³² ≈ 6·10⁻¹⁵ — candidates are then verified
     exactly, so the output equals the exact similarity join with
     overwhelming probability while only ever shuffling signatures.
-
-    CACHE CONTRACT: the hashed-shingle frame below is ``persist()``ed
-    and stays referenced by the returned lazy frame, so it cannot be
-    unpersisted here.  Callers release it after consuming the result
-    (``spark.catalog.clearCache()`` between invocations — the
-    bench/oracle harness already does); a long-lived serving session
-    that skips this accumulates one cached copy per invocation.
     """
     # ONE shingle+hash scan, cached: signatures (via the exploded hs
     # multiset — the same xxhash64-of-shingle values minhash posting
@@ -542,7 +531,7 @@ def minhash_lsh_pairs(
     # verify join read the cached frame.  Unpersisted, the full
     # tokenize → shingle → hash subtree executed 3× per pairs build
     # (once for the signature posting, once per verify side).
-    docs = hashed_shingle_docs(df, id_col, text_col, n).persist()
+    docs = persist(hashed_shingle_docs(df, id_col, text_col, n))
     posting = docs.select(
         "doc_id", F.explode_outer("hs").alias("shash")
     )
@@ -685,7 +674,10 @@ def connected_components(
     broadcasts into the edge join) instead of re-shuffling the whole
     corpus per round.
     """
-    edges = (
+    # materialize once: the pair-generation pipeline (LSH etc.) must
+    # not re-execute on every propagation round; round 1's fingerprint
+    # job saves the checkpoint
+    edges = checkpoint(
         pairs.select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         )
@@ -695,21 +687,13 @@ def connected_components(
             )
         )
         .distinct()
-        # materialize once: the pair-generation pipeline (LSH etc.)
-        # must not re-execute on every propagation round.  LAZY: the
-        # checkpoint is saved by round 1's fingerprint job (its first
-        # action); an eager checkpoint here plus an eager labels
-        # checkpoint plus the old isEmpty probe cost three whole job
-        # barriers before the first round even started.
-        .localCheckpoint(eager=False)
     )
     # both edge directions are present, so src alone covers every
     # endpoint of the graph
-    labels = (
+    labels = checkpoint(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=False)
     )
     numeric_ids = isinstance(
         labels.schema["label"].dataType,
@@ -758,7 +742,7 @@ def connected_components(
             # round's fingerprint below (an eager checkpoint here cost
             # one extra job barrier per jump round).
             for _ in range(2):
-                stepped = stepped.localCheckpoint(eager=False)
+                stepped = checkpoint(stepped)
                 via = stepped.select(
                     F.col("node").alias("label"),
                     F.col("label").alias("label2"),
@@ -775,7 +759,7 @@ def connected_components(
         # checkpoint for the sum — per round.  The lineage cut is
         # identical (the RDD is checkpointed at the first action —
         # the agg below for numeric ids, the diff probe otherwise).
-        new_labels = stepped.localCheckpoint(eager=False)
+        new_labels = checkpoint(stepped)
         if numeric_ids:
             fp = new_labels.agg(
                 F.sum(F.col("label").cast("decimal(38,0)"))

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from omniengine_spark.sources.catalog import checkpoint
+
 
 def k_hop_reachability(
     edges: DataFrame, seeds: DataFrame, max_hops: int
@@ -57,13 +59,10 @@ def k_hop_reachability(
             .join(visited, "node", "left_anti")
             .select("node", F.lit(h).alias("hops"))
         )
-        # LAZY checkpoint materialized by the emptiness probe's count
-        # below — ONE job per hop instead of two (the eager checkpoint
-        # job plus an isEmpty job).  count() is the probe because it
-        # computes every partition, so the checkpoint is fully saved
-        # inside the same job (isEmpty's limit(1) short-circuit would
-        # leave partitions to a trailing doCheckpoint recomputation).
-        nxt = nxt.localCheckpoint(eager=False)
+        # the emptiness probe's count below saves the checkpoint in
+        # the same job: it computes every partition (isEmpty's limit(1)
+        # would leave partitions to a trailing doCheckpoint recompute)
+        nxt = checkpoint(nxt)
         # frontier exhausted before max_hops (diameter reached):
         # further rounds would be empty-frame jobs
         if nxt.count() == 0:

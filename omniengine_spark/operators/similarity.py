@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omniengine_spark.sources.catalog import checkpoint, persist
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -420,8 +422,12 @@ def lsh_ann_topk(
     # computes the IDENTICAL double (same arrays, same fold order),
     # so the distinct on (query, nbr, score) still collapses it to
     # one row and the oracle — the symmetric closure of probe∪home
-    # containment — is unchanged.
-    scored = (
+    # containment — is unchanged.  The checkpoint materializes it once:
+    # the mirror union below would otherwise duplicate the whole
+    # scan→bucket→join→score subtree into both branches (AQE exchange
+    # reuse is not guaranteed across union arms).  Bounded: one skinny
+    # (id, id, score) row per candidate pair — ∝ N·T·occupancy/2.
+    scored = checkpoint(
         keyed.join(index_side, ["t", "bucket"])
         .filter(
             (
@@ -446,14 +452,6 @@ def lsh_ann_topk(
             ).alias("score"),
         )
         .distinct()
-        # materialize once: the mirror union below would otherwise
-        # duplicate the whole scan→bucket→join→score subtree into
-        # both branches (AQE exchange reuse is not guaranteed across
-        # union arms).  Bounded: one skinny (id, id, score) row per
-        # candidate pair — ∝ N·T·occupancy/2.  Lazy: the block-level
-        # cache underneath the checkpoint serializes the two union
-        # arms' reads anyway, and eager cost a build-time job.
-        .localCheckpoint(eager=False)
     )
     both = scored.unionByName(
         scored.select(
@@ -727,7 +725,6 @@ def semantic_prune(
     threshold: float = 0.4,
     min_clusters: int = 16,
     max_cluster: int | None = None,
-    debug_frames: dict | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: bucket embeddings by nearest
     centroid, compare pairs ONLY within a bucket, drop every vector
@@ -800,16 +797,6 @@ def semantic_prune(
     round 7 measured that the earlier ∝N/k cap merely tracked the
     √N-SemDeDup design's own N^1.5 pair mass (e=+1.58 sf5→sf25);
     a constant cap bounds it at cap·N — see the inline comment.
-
-    CACHE CONTRACT: this operator ``persist()``s three interior
-    frames (the assignment output, the assigned vectors, the pair
-    candidates) that the RETURNED lazy frame keeps referencing — the
-    function cannot unpersist them itself.  The caller releases them
-    after consuming the result: ``spark.catalog.clearCache()``
-    between invocations (the bench/oracle harness already does), or
-    unpersist via the frames exposed in ``debug_frames``.  A
-    long-lived serving session that skips this accumulates one
-    cached copy per invocation.
 
     EAGER-PROBE CONTRACT: construction runs one driver-side
     emptiness probe (``unc.isEmpty()``) over the cached assignment to
@@ -973,11 +960,9 @@ def semantic_prune(
     # fan-out exchange → Arrow mapInPandas assignment subtree into
     # EVERY downstream reference (measured at sf0.1: the assignment
     # ran 6× inside one 305-node/130-Exchange plan, 4–8 s of action
-    # for 2000 vectors).  One cached copy is N skinny rows; the
-    # bench's clearCache() before each cold run keeps the timing
-    # honest (the cache is rebuilt inside the timed region).
-    rough = (
-        v.select("vid", "vec").mapInPandas(assign, asg_schema).persist()
+    # for 2000 vectors).  One cached copy is N skinny rows.
+    rough = persist(
+        v.select("vid", "vec").mapInPandas(assign, asg_schema)
     )
     certain = rough.filter(F.col("certain")).select("vid", "cluster")
     # near-tie rows (measure-zero on continuous data): exact fold
@@ -1065,7 +1050,7 @@ def semantic_prune(
     # re-executions of scan+join+window without it.  MEMORY_AND_DISK:
     # the frame carries the vector payload, so it spills rather than
     # OOMs on a hot executor.
-    assigned = assigned.persist()
+    assigned = persist(assigned)
 
     # In-cluster pair scan: one gemm per (cluster, sub), row-blocked
     # so a hot cluster's sims tile stays ≤ block·|c| doubles per
@@ -1142,9 +1127,9 @@ def semantic_prune(
     # persist: ``cand`` (skinny id pairs) fans out to the sure-drop
     # filter and the border-verify join; unpersisted, the whole
     # applyInPandas pair scan runs twice.
-    cand = assigned.select("vid", "vec", "cluster", "sub").groupBy(
+    cand = persist(assigned.select("vid", "vec", "cluster", "sub").groupBy(
         "cluster", "sub"
-    ).applyInPandas(cluster_pairs, pair_schema).persist()
+    ).applyInPandas(cluster_pairs, pair_schema))
     sure_drops = cand.filter(F.col("b_vid").isNull()).select(
         F.col("vid").alias("drop_vid")
     )
@@ -1172,11 +1157,6 @@ def semantic_prune(
         .select(F.col("vid").alias("drop_vid"))
     )
     droppers = sure_drops.unionByName(border_drops).distinct()
-    if debug_frames is not None:
-        debug_frames.update(
-            rough=rough, best=best, assigned=assigned, cand=cand,
-            droppers=droppers,
-        )
     return assigned.join(
         droppers, assigned["vid"] == droppers["drop_vid"], "left"
     ).select(

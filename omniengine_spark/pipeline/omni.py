@@ -56,7 +56,7 @@ from pyspark.sql import types as T
 
 from omniengine_spark.functions import scale_base_units
 from omniengine_spark.functions.scalars import DEC_19_0
-from omniengine_spark.sources.catalog import session_memo
+from omniengine_spark.sources.catalog import checkpoint, session_memo
 
 # Decoded Omni tx (the reference's gettransaction_MP JSON, S2) —
 # one struct per tx, recipients/subsends arrays for the 1→N types.
@@ -805,15 +805,12 @@ def build_full_balances(
     # the two branches would re-expand it twice more.  The checkpoint
     # materializes the tagged stream once for both branches (at
     # warehouse scale: persist(DISK_ONLY) instead).
-    tagged = deltas.withColumn(
+    tagged = checkpoint(deltas.withColumn(
         "__frozen_key",
         F.max((F.col("kind") != "delta").cast("int")).over(
             Window.partitionBy("address", "propertyid")
         ),
-    ).localCheckpoint(eager=False)
-    # lazy: materialized by the caller's first action (both branches
-    # share the cached blocks); eager ran a whole job at plan-BUILD
-    # time — 2.0 s of every d4/d7c construction, measured
+    ))
     plain = tagged.filter(F.col("__frozen_key") == 0)
     plain_out = plain.groupBy("address", "propertyid").agg(
         F.sum("delta_base_units").cast("long").alias("available"),

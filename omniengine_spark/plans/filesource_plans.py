@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from omniengine_spark.functions.scalars import CENTS_SQL, DEC_18_4
 from omniengine_spark.plans.registry import query
-from omniengine_spark.sources import load_table
+from omniengine_spark.sources.catalog import load_table, persist
 from omniengine_spark.sources.http import (
     fees_frame,
     normalize_fee_estimates,
@@ -238,7 +238,7 @@ def s13b_corrupt_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark refuses queries that touch only the internal corrupt
     # column of an in-flight parse; cache materializes the parsed
     # rows first (documented CSV-source limitation).
-    back = back.cache()
+    back = persist(back)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("o_orderkey").alias("n_good"),

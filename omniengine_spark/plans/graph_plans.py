@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from omniengine_spark.plans.registry import query
-from omniengine_spark.sources import load_table
+from omniengine_spark.sources.catalog import checkpoint, load_table, persist
 
 _SCALE = 100_000_000  # rank fixed-point scale (1e8, F1's convention)
 _TELEPORT = 15_000_000  # 0.15 · scale
@@ -129,8 +129,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here, 4.6-4.9 s vs 4.9-5.3 s: AQE re-plans the join exchanges
     # regardless of the cache's partitioning, so the extra up-front
     # exchange is pure cost.  Kept as-is.)
-    edges = edges.persist(StorageLevel.DISK_ONLY)
-    deg = deg.persist(StorageLevel.DISK_ONLY)
+    edges = persist(edges, StorageLevel.DISK_ONLY)
+    deg = persist(deg, StorageLevel.DISK_ONLY)
 
     ranks = deg.select(
         "node", F.lit(_SCALE).cast("long").alias("rank")
@@ -213,13 +213,11 @@ def graph_taint_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = pairs.select(
+    edges = checkpoint(pairs.select(
         F.col("cust").alias("src"), F.col("supp").alias("dst")
     ).unionAll(
         pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))
-    # lazy: hop 1's frontier job materializes the edge checkpoint —
-    # an eager checkpoint here is one whole extra job barrier
-    ).localCheckpoint(eager=False)
+    ))
     seeds = spark.range(_SEED_CUST, _SEED_CUST + 1).select(
         F.col("id").alias("node")
     )

@@ -24,7 +24,7 @@ from omniengine_spark.pipeline import (
 )
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
-from omniengine_spark.sources.catalog import session_memo
+from omniengine_spark.sources.catalog import persist, session_memo
 from omniengine_spark.sources.sinks import (
     read_warehouse,
     scratch_dir,
@@ -383,20 +383,17 @@ def omni_incremental_lifecycle(
     from omniengine_spark.pipeline import genesis_deltas
     from omniengine_spark.sources.genesis import synthetic_genesis
 
-    deltas = _stamped_deltas(spark, sf_dir).select(
+    deltas = persist(_stamped_deltas(spark, sf_dir).select(
         "address",
         "propertyid",
         F.col("block").cast("long").alias("block"),
         F.col("delta_base_units").cast("decimal(38,0)").alias("delta"),
-    ).persist()
+    ))
     # persist: the four batch writes, the mempool overlay and the
     # min/max boundary agg below all filter THIS one computed stream;
     # unpersisted, the full serial-stamp + delta-expansion pipeline
     # re-ran once per write (measured 5 executions per bench run).
-    # The min/max collect right below materializes it once.  Cache
-    # contract: the returned frame's mempool arm still reads this
-    # cache, so it is released by the CALLER (clearCache between
-    # invocations — the bench/oracle harness already does).
+    # The min/max collect right below materializes it once.
     gen = genesis_deltas(synthetic_genesis(spark, sf_dir)).select(
         "address",
         "propertyid",

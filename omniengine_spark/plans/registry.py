@@ -7,11 +7,7 @@ next to each other and cannot drift apart silently.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
+from omniengine_spark.sources.catalog import QueryFn, plan_call
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
@@ -30,12 +26,13 @@ def query(name: str, oracle: str | None = None, artifact: bool = False):
     ``artifact=True`` marks a plan whose run splits into a build phase
     (train/commit an index usable across runs) and a serve phase; the
     bench measures them separately (see ``bench.py``).  A name can be
-    registered once: a second plan under it raises ``ValueError``."""
+    registered once: a second plan under it raises ``ValueError``.
+    ``QUERIES`` holds ``plan_call(name, fn)``; the decorator returns ``fn``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"plan {name!r} is already registered")
-        QUERIES[name] = fn
+        QUERIES[name] = plan_call(name, fn)
         if oracle is not None:
             ORACLES[name] = oracle
         if artifact:

@@ -17,6 +17,7 @@ cluster while remaining correct on ``local[*]``:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -58,6 +59,11 @@ def get_spark(
             driver_mem = f"{max(2, min(48, int(phys_gb * 0.6)))}g"
         except (ValueError, OSError, AttributeError):
             driver_mem = "8g"
+    # broadcast limit: 1/16 of the heap above its first GiB, at most
+    # 64m (so 64m from a 2g heap up).  At a 1g heap on sf1, q18 failed
+    # with "Not enough memory to build and broadcast" at 16m and more
+    num, unit = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_mem.lower()).groups()
+    heap_mib = int(num) * 1024 ** "kmgt".index(unit or "m") // 1024
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -93,7 +99,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # broadcast threshold: generous — every dim table in this
         # engine (region/nation/properties/rates) is tiny vs facts
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        .config("spark.sql.autoBroadcastJoinThreshold",
+                f"{min(64, max(0, heap_mib - 1024) // 16)}m")
         # quieter driver on the harness
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

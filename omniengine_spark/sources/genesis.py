@@ -12,12 +12,14 @@ see the snapshot as the opening balance.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from omniengine_spark.sources.catalog import load_table, session_memo
-from omniengine_spark.sources.sinks import scratch_dir
+from omniengine_spark.sources.catalog import load_table
+from omniengine_spark.sources.sinks import artifact_root
 
 # Reference CSV header (database/balances.csv:1): address, protocol,
 # propertyid, ecosystem, balanceavailable, balancereserved,
@@ -63,25 +65,23 @@ def synthetic_genesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises the real ingest path (write → schema'd read), not just
     an in-memory frame.
 
-    The CSV is written once per ``customer.parquet`` signature (a
-    ``session_memo`` entry holding its scratch dir); later calls only
-    read it, and a rewritten ``customer.parquet`` writes a new one.
+    The CSV is written once under an ``artifact_root`` named by the
+    ``customer.parquet`` fingerprint (Spark's ``_SUCCESS`` marker ends
+    the write); later calls only read it, and a rewritten
+    ``customer.parquet`` gets a new root.
 
     Mapping (integer-exact on both engines): address ``'u'||custkey``
     (overlaps the tx stream's address space so the fold genuinely
     merges snapshot and deltas), propertyid ``custkey % 5``,
     available = acctbal in cents as base units.
     """
-    path = session_memo(
-        spark,
-        "genesis",
-        f"{sf_dir}/customer.parquet",
-        lambda: _write_genesis_csv(spark, sf_dir),
-    )
+    path = artifact_root("genesis", sf_dir, "customer.parquet")
+    if not os.path.exists(f"{path}/_SUCCESS"):
+        _write_genesis_csv(spark, sf_dir, path)
     return read_genesis_csv(spark, path)
 
 
-def _write_genesis_csv(spark: SparkSession, sf_dir: str) -> str:
+def _write_genesis_csv(spark: SparkSession, sf_dir: str, path: str) -> None:
     cust = load_table(spark, sf_dir, "customer")
     snap = cust.select(
         F.concat(F.lit("u"), F.col("c_custkey").cast("string")).alias(
@@ -97,6 +97,4 @@ def _write_genesis_csv(spark: SparkSession, sf_dir: str) -> str:
         F.lit(0).cast("long").alias("balanceaccepted"),
         F.lit(None).cast("long").alias("lasttxdbserialnum"),
     )
-    path = scratch_dir("genesis")
     snap.write.mode("overwrite").option("header", "true").csv(path)
-    return path

@@ -20,7 +20,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from omniengine_spark.sources.catalog import path_signature
+from omniengine_spark.sources.catalog import hold, path_signature
 
 _SCRATCH = Path(__file__).resolve().parents[2] / ".scratch"
 _PRUNE_AGE_S = 7200
@@ -40,13 +40,13 @@ def _allocate(base: Path, prefix: str, label: str) -> str:
     """``base/{prefix}p{pid}-{label}``, the one naming of this process's
     scratch and checkpoint dirs.
 
-    A plan cannot remove its own output (the DataFrame it returns reads
-    it lazily) and a failed drain skips its checkpoint cleanup, so each
-    allocation prunes the siblings that carry ``prefix``: one is removed
-    only when its owner pid is DEAD and it is >2 h old (age alone would
-    delete the live output of a concurrent run that started earlier).
-    Names without the prefix are never touched: ``base`` may be shared,
-    e.g. ``/dev/shm``.
+    While a process lives, ``catalog.plan_call`` frees the dirs its
+    plan calls allocate; the prune covers crashed processes: each
+    allocation removes a sibling that carries ``prefix`` only when its
+    owner pid is DEAD and it is >2 h old (age alone would delete the
+    live output of a concurrent run that started earlier).  Names
+    without the prefix are never touched: ``base`` may be shared, e.g.
+    ``/dev/shm``.
     """
     owned = re.compile(rf"{re.escape(prefix)}p(\d+)-")
     cutoff = time.time() - _PRUNE_AGE_S
@@ -79,15 +79,16 @@ def artifact_root(label: str, sf_dir: str, *tables: str) -> str:
     ``sf_dir``: this process's stable scratch dir named by ``label``
     and the input's ``dataset_fingerprint``.  The root names the input
     content, so the tags committed under it need not."""
-    return stable_scratch_dir(
+    return hold("paths", stable_scratch_dir(
         f"{label}-{dataset_fingerprint(sf_dir, *tables)}"
-    )
+    ))
 
 
 def scratch_dir(label: str) -> str:
     """Fresh unique scratch directory under the repo (the stable name
     plus a uuid)."""
-    return f"{stable_scratch_dir(label)}-{uuid.uuid4().hex[:12]}"
+    path = f"{stable_scratch_dir(label)}-{uuid.uuid4().hex[:12]}"
+    return hold("paths", path)
 
 
 def stream_checkpoint_dir(label: str) -> str:
@@ -111,7 +112,7 @@ def stream_checkpoint_dir(label: str) -> str:
         "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     )
     ckpt = _allocate(Path(base), "omni-ckpt-", label)
-    return f"{ckpt}-{uuid.uuid4().hex[:12]}"
+    return hold("paths", f"{ckpt}-{uuid.uuid4().hex[:12]}")
 
 
 def dataset_fingerprint(sf_dir: str, *tables: str) -> str:
@@ -126,10 +127,6 @@ def dataset_fingerprint(sf_dir: str, *tables: str) -> str:
     for t in sorted(tables):
         h.update(repr(path_signature(os.path.join(sf_dir, t))).encode())
     return h.hexdigest()[:16]
-
-
-def cleanup(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def csv_roundtrip(df: DataFrame, label: str = "csv") -> DataFrame:

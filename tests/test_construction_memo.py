@@ -1,13 +1,16 @@
-"""Session state: the memo store, the scratch-dir allocator, and the
-partition-distributed write layout.
+"""Session state: the memo store, the plan-call scope, the scratch-dir
+allocator, and the partition-distributed write layout.
 
 The memo store reuses UNEXECUTED logical plans and session-built
-artifacts — these tests pin the properties that keep that safe and
+artifacts, and each plan call releases what its plan's previous call
+held — these tests pin the properties that keep that safe and
 bounded: same-session/same-file hits, file-identity invalidation (a
 rewritten table replaces its entry and is never served a stale plan),
-a new application id dropping every entry, zero result caching
-(actions recompute from parquet), and trained index state that holds
-no cached storage.  The allocator tests pin its one pruning rule.
+a new application id dropping every entry and call record, zero result
+caching (actions recompute from parquet), trained index state that
+holds no cached storage, and a session that runs its plans on one
+dataset copy and then another holding no more than after the first and
+nothing of it.  The allocator tests pin its one pruning rule.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import functions as F
 
 from omniengine_spark.sources import sinks
 from omniengine_spark.sources.catalog import (
+    _CALLS,
     _SESSION_MEMO,
     load_table,
     path_signature,
@@ -101,21 +105,26 @@ def test_rewrites_replace_memo_entries(spark, tmp_path):
 
 
 def test_new_application_id_clears_every_entry(spark):
-    load_table(spark, SF_SMOKE, "region")
-    saved = dict(_SESSION_MEMO)
-    assert len(saved) >= 2
+    """The memo and the plan-call records go together."""
+    from omniengine_spark.plans import QUERIES
+
+    QUERIES["a15_address_stats"](spark, SF_SMOKE)
+    saved, saved_calls = dict(_SESSION_MEMO), dict(_CALLS)
+    assert len(saved) >= 2 and "a15_address_stats" in saved_calls
     other = SimpleNamespace(
         sparkContext=SimpleNamespace(applicationId="app-other")
     )
     try:
         assert session_memo(other, "probe", None, lambda: 1) == 1
         assert list(_SESSION_MEMO) == [("probe", None)]
+        assert not _CALLS
         # and back: the live session drops the foreign entry too
         assert session_memo(spark, "probe", None, lambda: 2) == 2
         assert list(_SESSION_MEMO) == [("probe", None)]
     finally:
         _SESSION_MEMO.clear()
         _SESSION_MEMO.update(saved)
+        _CALLS.update(saved_calls)
 
 
 def test_trained_artifacts_hold_no_cached_storage(spark):
@@ -133,6 +142,103 @@ def test_trained_artifacts_hold_no_cached_storage(spark):
         for _ in range(2):
             QUERIES[name](spark, SF_SMOKE).collect()
             assert persistent_rdds() == baseline, name
+
+
+# plans whose calls hold each kind of state: cached and DISK_ONLY frames,
+# checkpoints, memo entries, artifact roots, fresh scratch dirs, a
+# stream checkpoint
+_STATE_SAMPLE = [
+    "s13b_corrupt_ingest",
+    "omni_incremental_lifecycle",
+    "graph_pagerank",
+    "sim_lsh_ann_topk",
+    "btc_wallet_clusters",
+    "x2_reorg_recompute",
+    "serve_cached_rates",
+    "sim_ivf_index_append",
+    "serve_address_portfolio",
+    "x14_stream_exactly_once_sink",
+]
+# graph_pagerank's warm calls reuse its DISK_ONLY edges and degrees
+_PAGERANK_WARM_JOBS = 13
+
+
+def _session_state(spark) -> dict:
+    """Counts of what the session holds, read after Python and JVM
+    collections, so checkpoints no frame reads are already freed."""
+    import gc
+
+    jsc = spark.sparkContext._jsc
+    counts = []
+    while len(counts) < 3 or (counts[-3:] != counts[-1:] * 3
+                                and len(counts) < 20):
+        gc.collect()
+        spark.sparkContext._jvm.java.lang.System.gc()
+        time.sleep(0.3)
+        counts.append(jsc.getPersistentRDDs().size())
+    return {
+        "persistent_rdds": counts[-1],
+        "cached_rdds": len(jsc.sc().getRDDStorageInfo()),
+        "catalog_tables": len(spark.catalog.listTables()),
+        "memo_entries": len(_SESSION_MEMO),
+        "scratch": {p.name for p in sinks._SCRATCH.glob(f"p{os.getpid()}-*")},
+    }
+
+
+def test_plan_calls_keep_session_state_bounded(spark, tmp_path):
+    """Without ``clearCache``, three passes of the sample on a copy of
+    the data and three on a second copy leave the session holding no
+    more than after the first copy, and nothing of the first copy:
+    each plan call releases what its plan's previous call held that no
+    plan's latest call holds.  Checksums are equal across all six
+    calls, and the warm PageRank calls still reuse its cached frames."""
+    from omniengine_spark.plans import QUERIES
+    from tools.measure import run_measured
+
+    copies = [tmp_path / "a", tmp_path / "b"]
+    for c in copies:
+        shutil.copytree(SF_SMOKE, c)
+    before = _session_state(spark)["scratch"]
+    sums, jobs, after = {}, [], []
+    for copy in copies:
+        for _ in range(3):
+            for name in _STATE_SAMPLE:
+                rec = run_measured(spark, QUERIES[name], str(copy),
+                                   clear=False)
+                sums.setdefault(name, set()).add(rec["checksum"])
+                if name == "graph_pagerank":
+                    jobs.append(rec["jobs"])
+                del rec
+        after.append(_session_state(spark))
+    a, b = after
+    assert {n: s for n, s in sums.items() if len(s) != 1} == {}
+    for key in ("persistent_rdds", "cached_rdds", "catalog_tables",
+                "memo_entries"):
+        assert b[key] <= a[key], (key, a, b)
+    assert len(b["scratch"]) <= len(a["scratch"])
+    assert not (a["scratch"] - before) & b["scratch"]
+    assert not [k for k in _SESSION_MEMO
+                if str(k[1]).startswith(str(copies[0]))]
+    assert jobs[1:3] == jobs[4:6] == [_PAGERANK_WARM_JOBS] * 2, jobs
+
+
+def test_plan_frame_lives_until_the_plans_next_call(spark):
+    """A frame a plan call returned stays readable while other plans
+    are called; the plan's next call removes its scratch input."""
+    from omniengine_spark.plans import QUERIES
+
+    def feeds() -> set[str]:
+        return {p.name for p in
+                sinks._SCRATCH.glob(f"p{os.getpid()}-corrupt_feed-*")}
+
+    first = QUERIES["s13b_corrupt_ingest"](spark, SF_SMOKE)
+    rows, held = first.collect(), feeds()
+    QUERIES["graph_pagerank"](spark, SF_SMOKE).collect()
+    assert first.collect() == rows
+    assert len(held) == 1
+    second = QUERIES["s13b_corrupt_ingest"](spark, SF_SMOKE)
+    assert second.collect() == rows
+    assert len(feeds()) == 1 and feeds().isdisjoint(held)
 
 
 def test_stamped_deltas_memo_and_equivalence(spark):
@@ -192,7 +298,9 @@ def test_genesis_csv_written_once_per_customer_file(spark, tmp_path):
     cust.to_parquet(src)
     third = synthetic_genesis(spark, sf)
     assert set(third.inputFiles()).isdisjoint(first.inputFiles())
-    fresh = read_genesis_csv(spark, _write_genesis_csv(spark, sf))
+    fresh_path = str(tmp_path / "fresh.csv")
+    _write_genesis_csv(spark, sf, fresh_path)
+    fresh = read_genesis_csv(spark, fresh_path)
     assert balances(third) == balances(fresh) != old
 
 

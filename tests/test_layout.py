@@ -5,13 +5,14 @@ sort on the OTHER dimension."""
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 import pyarrow.parquet as pq
 
 from omniengine_spark.operators.layout import write_zordered, zorder_key
 from omniengine_spark.sources import load_table
-from omniengine_spark.sources.sinks import cleanup, scratch_dir
+from omniengine_spark.sources.sinks import scratch_dir
 
 from .conftest import SF_CORRECT
 
@@ -68,8 +69,8 @@ def test_zorder_prunes_both_dimensions(spark):
             spark.read.parquet(z_path).count() == ev.count()
         )
     finally:
-        cleanup(z_path)
-        cleanup(s_path)
+        shutil.rmtree(z_path, ignore_errors=True)
+        shutil.rmtree(s_path, ignore_errors=True)
 
 
 def test_zorder_key_is_pure_codegen(spark):

@@ -89,17 +89,23 @@ def test_node_metrics_reads_the_scan_of_the_action(spark):
     ],
 )
 def test_checksum_stable_across_runs_and_partitionings(spark, name):
-    """README: results are bit-stable under any partitioning."""
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    """README: results are bit-stable under any partitioning.  AQE
+    partition coalescing is off, so 8 shuffle partitions stay 8.  No
+    ``clearCache`` runs between the calls: each call releases what the
+    previous one held, which must not change the next checksum."""
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
     sums = []
     try:
-        for parts in (before, before, "1", "8"):
-            spark.conf.set(key, parts)
-            rec = run_measured(spark, QUERIES[name], SF_SMOKE, clear=True)
+        spark.conf.set(keys[1], "false")
+        for parts in (before[keys[0]], before[keys[0]], "1", "8"):
+            spark.conf.set(keys[0], parts)
+            rec = run_measured(spark, QUERIES[name], SF_SMOKE, clear=False)
             sums.append(rec["checksum"])
     finally:
-        spark.conf.set(key, before)
+        for k, v in before.items():
+            spark.conf.set(k, v)
     assert sums[0][1] > 0
     assert len(set(sums)) == 1, sums
 

@@ -4,6 +4,7 @@ see: stub dispatch, empty/degenerate inputs, exact-arithmetic rules.
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 import pytest
@@ -419,7 +420,7 @@ def test_fan_out_detects_single_row_group_files(spark):
         _effective_parquet_splits,
         fan_out,
     )
-    from omniengine_spark.sources.sinks import cleanup, scratch_dir
+    from omniengine_spark.sources.sinks import scratch_dir
 
     d = scratch_dir("fanout-rg")
     Path(d).mkdir(parents=True, exist_ok=True)
@@ -440,7 +441,7 @@ def test_fan_out_detects_single_row_group_files(spark):
     assert out.rdd.getNumPartitions() >= min(target, 2)
     # the repartitioned frame still carries every row exactly once
     assert out.count() == n
-    cleanup(d)
+    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_crash_between_table_commits_converges(spark, tmp_path, monkeypatch):

@@ -7,6 +7,7 @@ silent slowdown at 100 TB.
 from __future__ import annotations
 
 import re
+import shutil
 from pathlib import Path
 
 from omniengine_spark.plans import QUERIES
@@ -102,7 +103,6 @@ def test_dynamic_partition_pruning_on_warehouse_join(spark):
 
     from omniengine_spark.sources import load_table
     from omniengine_spark.sources.sinks import (
-        cleanup,
         scratch_dir,
         write_partitioned,
     )
@@ -128,7 +128,7 @@ def test_dynamic_partition_pruning_on_warehouse_join(spark):
             or "PartitionFilters: [" in plan
         ), plan[:2000]
     finally:
-        cleanup(path)
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_serving_filter_pushes_below_fold(spark):
@@ -302,6 +302,24 @@ def test_package_registers_no_temp_views():
     found = {
         str(p.relative_to(pkg)): sorted(set(pattern.findall(p.read_text())))
         for p in sorted(pkg.rglob("*.py"))
+    }
+    assert not {k: v for k, v in found.items() if v}
+
+
+def test_package_caches_only_through_plan_calls():
+    """``.persist(``, ``.cache()``, ``.localCheckpoint(`` and
+    ``clearCache`` appear in the package only in ``sources/catalog.py``:
+    its ``persist`` and ``checkpoint`` hold what they make for the plan
+    call being built, which ``plan_call`` releases, so no caller has to
+    clear a cache."""
+    pattern = re.compile(
+        r"\.persist\(|\.cache\(\)|\.localCheckpoint\(|clearCache"
+    )
+    pkg = Path(__file__).resolve().parents[1] / "omniengine_spark"
+    found = {
+        str(p.relative_to(pkg)): sorted(set(pattern.findall(p.read_text())))
+        for p in sorted(pkg.rglob("*.py"))
+        if p.relative_to(pkg) != Path("sources/catalog.py")
     }
     assert not {k: v for k, v in found.items() if v}
 

@@ -10,6 +10,7 @@ boundaries to produce the batch-equivalent answer.
 
 from __future__ import annotations
 
+import shutil
 import time
 
 import pytest
@@ -17,7 +18,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from omniengine_spark.sources import load_table
-from omniengine_spark.sources.sinks import cleanup, scratch_dir
+from omniengine_spark.sources.sinks import scratch_dir
 from omniengine_spark.streaming.jobs import run_available_now
 
 from .conftest import SF_SMOKE
@@ -45,7 +46,7 @@ def split_events_dir(spark):
         part.coalesce(1).write.mode("append").parquet(path)
         time.sleep(1.1)  # distinct mtimes → deterministic file order
     yield path
-    cleanup(path)
+    shutil.rmtree(path, ignore_errors=True)
 
 
 def _stream(spark, path):
@@ -311,7 +312,7 @@ def test_exactly_once_sink_survives_multiple_batches(
     q.awaitTermination()
     total = read_warehouse(spark, path).count()
     expected = load_table(spark, SF_SMOKE, "events").count()
-    cleanup(path)
+    shutil.rmtree(path, ignore_errors=True)
     assert total == expected
 
 
@@ -362,7 +363,7 @@ def test_timer_expiry_chunking_invariant(spark):
         os.environ.pop("SPARK_GRAFT_STREAM_MAX_FILES", None)
     assert single, "expiry fold emitted nothing on the fixture"
     assert chunked == single
-    cleanup(sf_dir)
+    shutil.rmtree(sf_dir, ignore_errors=True)
 
 
 def test_memory_sink_drains_leave_no_tables(spark):

@@ -9,11 +9,12 @@ and rewriting a suffix of partitions converges to the same state.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import functions as F
 
 from omniengine_spark.sources import load_table
 from omniengine_spark.sources.sinks import (
-    cleanup,
     read_warehouse,
     scratch_dir,
     write_partitioned,
@@ -58,8 +59,8 @@ def test_incremental_equals_full(spark):
         assert _fingerprint(read_warehouse(spark, full_path)) == \
             _fingerprint(read_warehouse(spark, incr_path))
     finally:
-        cleanup(full_path)
-        cleanup(incr_path)
+        shutil.rmtree(full_path, ignore_errors=True)
+        shutil.rmtree(incr_path, ignore_errors=True)
 
 
 def test_reorg_overwrite_converges(spark):
@@ -90,12 +91,12 @@ def test_reorg_overwrite_converges(spark):
             write_partitioned(ev, truth_path, ["day"])
             truth = _fingerprint(read_warehouse(spark, truth_path))
         finally:
-            cleanup(truth_path)
+            shutil.rmtree(truth_path, ignore_errors=True)
 
         assert wrong != truth
         assert fixed == truth
     finally:
-        cleanup(path)
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_dynamic_overwrite_preserves_other_partitions(spark):
@@ -112,7 +113,7 @@ def test_dynamic_overwrite_preserves_other_partitions(spark):
         write_partitioned(one_day, path, ["day"])
         assert read_warehouse(spark, path).count() == before
     finally:
-        cleanup(path)
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _parquet_files(tbl):
