@@ -62,6 +62,7 @@ from omniengine_spark.operators.dedup import (
 from omniengine_spark.sources.versioned import (
     DeltaConflictError,
     commit_once,
+    read_commit,
     read_version,
     version_history,
 )
@@ -183,7 +184,7 @@ def _commit_shard_frames(
         ),
         delta=True,
     )
-    return spark.read.parquet(f"{epath}/v={mine['version']}"), mine["base"]
+    return read_commit(spark, epath, mine), mine["base"]
 
 
 def _ingest_plan(

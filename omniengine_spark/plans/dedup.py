@@ -575,7 +575,11 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from omniengine_spark.operators import ann_index as AI
     from omniengine_spark.sources.sinks import artifact_root
-    from omniengine_spark.sources.versioned import commit_once, read_version
+    from omniengine_spark.sources.versioned import (
+        commit_once,
+        read_commit,
+        read_version,
+    )
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     base, shard = _base_shard(emb)
@@ -620,9 +624,7 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_once(
         dpath, shard_tag,
         lambda: AI.in_cluster_drops(
-            F.broadcast(
-                spark.read.parquet(f"{lpath}/v={shard_lists['version']}")
-            ),
+            F.broadcast(read_commit(spark, lpath, shard_lists)),
             read_version(spark, lpath),
             _SEMI_TAU,
         ).join(read_version(spark, dpath), "vec_id", "left_anti"),

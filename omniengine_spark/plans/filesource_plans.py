@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from omniengine_spark.functions.scalars import CENTS_SQL, DEC_18_4
 from omniengine_spark.plans.registry import query
-from omniengine_spark.sources.catalog import load_table, persist
+from omniengine_spark.sources.catalog import cutoff_day, load_table, persist
 from omniengine_spark.sources.http import (
     fees_frame,
     normalize_fee_estimates,
@@ -180,7 +180,9 @@ def s18_zorder_pointscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = scratch_dir("zorder")
     write_zordered(ev, path, "user_id", "event_id", n_files=16)
-    return spark.read.parquet(path).filter(F.col("user_id") == 42)
+    return read_warehouse(spark, path, ev.schema).filter(
+        F.col("user_id") == 42
+    )
 
 
 @query(
@@ -928,7 +930,7 @@ def s14_warehouse_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     write_partitioned(patched, path, ["event_type"])
     return (
-        read_warehouse(spark, path)
+        read_warehouse(spark, path, ev.schema)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -987,9 +989,7 @@ def x16_cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    split = ev.agg(
-        F.date_add(F.min("day"), 10).alias("s")
-    ).collect()[0]["s"]
+    split = cutoff_day(spark, sf_dir, 10)
     v1 = (
         ev.filter(F.col("day") <= F.lit(split))
         .groupBy("user_id")
@@ -1105,9 +1105,7 @@ def s19_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    split = ev.agg(
-        F.date_add(F.min("day"), 14).alias("s")
-    ).collect()[0]["s"]
+    split = cutoff_day(spark, sf_dir, 14)
     book = lambda f: (  # noqa: E731
         f.groupBy("user_id").agg(
             F.sum("cents").cast("long").alias("cents")

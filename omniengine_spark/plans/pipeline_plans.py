@@ -24,7 +24,7 @@ from omniengine_spark.pipeline import (
 )
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
-from omniengine_spark.sources.catalog import persist, session_memo
+from omniengine_spark.sources.catalog import cutoff_day, persist, session_memo
 from omniengine_spark.sources.sinks import (
     read_warehouse,
     scratch_dir,
@@ -415,8 +415,8 @@ def omni_incremental_lifecycle(
     )
     # 3: resume strictly from the warehouse's own watermark
     watermark = (
-        read_warehouse(spark, path)
-        .agg(F.max(F.col("block").cast("long")))
+        read_warehouse(spark, path, deltas.schema)
+        .agg(F.max("block"))
         .collect()[0][0]
     )
     write_partitioned(
@@ -433,10 +433,10 @@ def omni_incremental_lifecycle(
     )
 
     # 5+6: mempool overlay at read time, then consensus fingerprints
-    confirmed = read_warehouse(spark, path).select(
+    confirmed = read_warehouse(spark, path, deltas.schema).select(
         "address",
         "propertyid",
-        F.col("block").cast("long").alias("block"),
+        "block",
         F.col("delta").cast("decimal(38,0)").alias("delta"),
     )
     mempool = deltas.filter(blk == hi)
@@ -674,9 +674,7 @@ def x2_reorg_recompute(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("block_range") >= fork), path, ["block_range"]
     )
     return (
-        read_warehouse(spark, path)
-        # partition-column values are re-inferred as int on read
-        .withColumn("block_range", F.col("block_range").cast("long"))
+        read_warehouse(spark, path, ev.schema)
         .groupBy("block_range")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -711,17 +709,15 @@ def x1b_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    split = ev.agg(
-        F.date_add(F.min("day"), 10).alias("s")
-    ).collect()[0]["s"]
+    split = cutoff_day(spark, sf_dir, 10)
 
     path = scratch_dir("warehouse-x1b")
     write_partitioned(ev.filter(F.col("day") <= F.lit(split)), path, ["day"])
 
     # resume point read back from the warehouse itself (A1)
     watermark = (
-        read_warehouse(spark, path)
-        .agg(F.max(F.col("day").cast("date")).alias("w"))
+        read_warehouse(spark, path, ev.schema)
+        .agg(F.max("day").alias("w"))
         .collect()[0]["w"]
     )
     write_partitioned(
@@ -729,10 +725,8 @@ def x1b_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return (
-        read_warehouse(spark, path)
-        .withColumn(
-            "day", F.col("day").cast("date").cast("timestamp_ntz")
-        )
+        read_warehouse(spark, path, ev.schema)
+        .withColumn("day", F.col("day").cast("timestamp_ntz"))
         .groupBy("day")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -771,9 +765,7 @@ def x15_ivm_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_date("ts").alias("day"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    split = ev.agg(
-        F.date_add(F.min("day"), 10).alias("s")
-    ).collect()[0]["s"]
+    split = cutoff_day(spark, sf_dir, 10)
 
     def partials(df):
         return df.groupBy("user_id").agg(
@@ -784,14 +776,13 @@ def x15_ivm_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = scratch_dir("warehouse-x15")
     # v1: rollup over the historical prefix, materialized
-    write_partitioned(
-        partials(ev.filter(F.col("day") <= F.lit(split))), path, []
-    )
+    v1 = partials(ev.filter(F.col("day") <= F.lit(split)))
+    write_partitioned(v1, path, [])
 
     # v2: merge stored state with the new batch's partials — the
     # stored rollup rows re-enter the same aggregation as partials
     merged = (
-        read_warehouse(spark, path)
+        read_warehouse(spark, path, v1.schema)
         .select("user_id", "n_events", "total_cents", "max_cents")
         .unionByName(partials(ev.filter(F.col("day") > F.lit(split))))
         .groupBy("user_id")
@@ -802,7 +793,7 @@ def x15_ivm_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     write_partitioned(merged, path, [])
-    return read_warehouse(spark, path).select(
+    return read_warehouse(spark, path, merged.schema).select(
         "user_id",
         F.col("n_events").cast("long").alias("n_events"),
         "total_cents",

@@ -26,7 +26,7 @@ from omniengine_spark.functions.scalars import DEC_18_4, dec_18_4, epoch_us
 from omniengine_spark.operators.rangejoin import bucketed_range_join
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
-from omniengine_spark.sources.sinks import scratch_dir
+from omniengine_spark.sources.sinks import read_warehouse, scratch_dir
 
 # Exact decimal intermediate for rates in [0,1]; money is DEC_18_4
 # (see functions.scalars for rationale).
@@ -547,7 +547,7 @@ def a19_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = scratch_dir("rollup-hourly")
     hourly.write.mode("overwrite").parquet(path)
-    hourly_m = spark.read.parquet(path)  # the materialized partials
+    hourly_m = read_warehouse(spark, path, hourly.schema)  # the partials
 
     daily = hourly_m.groupBy(
         F.date_trunc("day", F.col("hour"))

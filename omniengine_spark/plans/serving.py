@@ -26,6 +26,7 @@ from omniengine_spark.plans.pipeline_plans import (
 )
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
+from omniengine_spark.sources.catalog import day_range
 from omniengine_spark.sources.genesis import synthetic_genesis
 
 SERVE_ADDRESS = "u42"  # the fixed lookup key for the named plan
@@ -380,25 +381,26 @@ def serve_cached_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
       time travel.
 
     Scale: the refresh is one partition-pruned aggregation + one
-    versioned commit; readers never block (snapshot isolation), and
-    the staleness decision reads only the manifest + one max().
+    versioned commit; readers never block (snapshot isolation).  The
+    first day and the clock come from ``day_range`` (the events
+    footers), and the staleness decision reads only the manifest's
+    ``as_of_day`` stats: building the plan fires no probe job.
     """
     from omniengine_spark.sources.sinks import scratch_dir
     from omniengine_spark.sources.versioned import (
         commit,
         current_version,
         read_version,
+        stats_minmax,
     )
 
+    first, last = day_range(spark, sf_dir)
+    clock = (last - first).days
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 5).alias("propertyid"),
-        F.datediff(
-            F.to_date("ts"),
-            F.min(F.to_date("ts")).over(Window.partitionBy()),
-        ).cast("long").alias("day"),
+        F.datediff(F.to_date("ts"), F.lit(first)).cast("long").alias("day"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    clock = ev.agg(F.max("day")).collect()[0][0]
 
     def rates_as_of(day: int) -> DataFrame:
         return (
@@ -409,14 +411,22 @@ def serve_cached_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = scratch_dir("serve-rate-cache")
-    commit(rates_as_of(clock - 10), path, f"rates as of {clock - 10}")
+    stats = ["as_of_day"]
+    commit(
+        rates_as_of(clock - 10), path, f"rates as of {clock - 10}",
+        stats_cols=stats,
+    )
 
     def serve(now: int, label: str) -> DataFrame:
         cached = read_version(spark, path)
-        as_of = cached.agg(F.max("as_of_day")).collect()[0][0]
+        rng = stats_minmax(path, "as_of_day")
+        as_of = rng[1] if rng else (
+            cached.agg(F.max("as_of_day")).collect()[0][0]
+        )
         refreshed = now - as_of > _TTL_DAYS
         if refreshed:  # the SETEX path: recompute, commit, serve new
-            commit(rates_as_of(now), path, f"refresh at {now}")
+            commit(rates_as_of(now), path, f"refresh at {now}",
+                   stats_cols=stats)
             cached = read_version(spark, path)
         return cached.agg(
             F.lit(label).alias("lookup"),

@@ -19,7 +19,7 @@ from omniengine_spark.operators import ann_index as AI
 from omniengine_spark.operators import similarity as S
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import fan_out, load_table
-from omniengine_spark.sources.catalog import session_memo
+from omniengine_spark.sources.catalog import footers, session_memo
 
 _N_QUERIES = 20  # first N vec_ids serve as the query set
 _K = 5
@@ -34,12 +34,10 @@ _K = 5
 # oracle recomputes at query time.
 def _emb_count(emb: DataFrame, sf_dir: str) -> int:
     try:
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(
-            f"{sf_dir}/embeddings.parquet"
-        ).metadata.num_rows
-    except Exception:  # noqa: BLE001 — dir table / foreign layout
+        return sum(
+            md.num_rows for _, md in footers(f"{sf_dir}/embeddings.parquet")
+        )
+    except (OSError, ValueError):  # missing path, not parquet
         return emb.count()
 
 

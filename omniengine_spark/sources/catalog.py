@@ -8,6 +8,7 @@ single choke point so partition layout / format changes stay local.
 
 from __future__ import annotations
 
+import datetime as _dt
 import functools
 import hashlib
 import os
@@ -202,13 +203,170 @@ def session_memo(
     return hit[1]
 
 
+def footers(path: str) -> list[tuple[str, object]]:
+    """(path relative to ``path``, pyarrow ``FileMetaData``) of the
+    parquet file ``path``, or of every data file below the directory
+    ``path`` in name order, skipping the ``_``/``.`` names Spark
+    treats as hidden.  Footer reads only: no data page is touched."""
+    import pyarrow.parquet as pq
+
+    root = Path(path)
+    if not root.is_dir():
+        return [("", pq.read_metadata(root))]
+    return [
+        (str(p.relative_to(root)), pq.read_metadata(p))
+        for p in sorted(root.rglob("*.parquet"))
+        if not any(
+            part.startswith(("_", "."))
+            for part in p.relative_to(root).parts
+        )
+    ]
+
+
+def _footer_field(at, ntz: bool, physical: str | None):
+    """The Spark type a schema-inferring parquet read gives the arrow
+    column type ``at``, or None where this mapping does not cover it.
+    ``physical`` is the column's parquet physical type when it is a
+    top-level leaf, else None: only top-level timestamps are mapped."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pa.types.is_timestamp(at):
+        if physical != "INT64":
+            return None  # nested, or INT96 that arrow shows as ns
+        if at.unit == "ns":
+            return T.LongType()  # spark.sql.legacy.parquet.nanosAsLong
+        if at.unit != "us":
+            return None
+        if at.tz is None and ntz:
+            return T.TimestampNTZType()
+        return T.TimestampType()
+    if pa.types.is_list(at):
+        elem = _footer_field(at.value_type, ntz, None)
+        return None if elem is None else T.ArrayType(elem, True)
+    if (
+        pa.types.is_boolean(at) or pa.types.is_signed_integer(at)
+        or pa.types.is_float32(at) or pa.types.is_float64(at)
+        or pa.types.is_decimal128(at) or pa.types.is_string(at)
+        or pa.types.is_date32(at)
+    ):
+        return from_arrow_type(at)
+    return None
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema an inferring parquet read of ``path`` gives, read from
+    the parquet footers on the driver instead of by Spark's schema-
+    inference job.  TIMESTAMP(NANOS) maps to LongType, as with
+    ``nanosAsLong``; naive TIMESTAMP(MICROS) follows the session's
+    ``inferTimestampNTZ``.  None (infer with Spark) for a type the
+    mapping does not cover, a file Spark wrote (its stored schema
+    wins there), a partitioned layout, files whose schemas differ,
+    or a path without readable footers."""
+    try:
+        files = footers(path)
+    except (OSError, ValueError):  # missing path, not parquet
+        return None
+    ntz = spark.conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+    ) == "true"
+    schema = None
+    for rel, md in files:
+        if "=" in rel or b"org.apache.spark.sql.parquet.row.metadata" in (
+            md.metadata or {}
+        ):
+            return None
+        leaves = {
+            md.schema.column(j).path: md.schema.column(j).physical_type
+            for j in range(md.num_columns)
+        }
+        fields = []
+        for f in md.schema.to_arrow_schema():
+            st = _footer_field(f.type, ntz, leaves.get(f.name))
+            if st is None:
+                return None
+            fields.append(T.StructField(f.name, st, True))
+        if schema is not None and T.StructType(fields) != schema:
+            return None
+        schema = T.StructType(fields)
+    return schema
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """``footer_schema``, or Spark's inferred schema (one job) where
+    the footers cannot give it."""
+    return footer_schema(spark, path) or spark.read.parquet(path).schema
+
+
+def footer_minmax(
+    path: str, col: str, *, witnessed: bool = True
+) -> tuple | None:
+    """(min, max) of column ``col`` (a leaf path, e.g. ``ts``) over the
+    parquet file or directory ``path``, from footer statistics alone,
+    as pyarrow decodes them.  None unless every row group of every
+    file has min/max statistics for the column, or when no file has a
+    row.  ``witnessed`` (the default) also returns None for BYTE_ARRAY
+    columns: their footer bounds may be truncated, so a string "max"
+    can be a value no row holds; pruning passes ``witnessed=False``,
+    since a bound is all it needs.  Integer, date and timestamp
+    statistics are exact."""
+    try:
+        files = footers(path)
+    except (OSError, ValueError):  # missing path, not parquet
+        return None
+    lo = hi = None
+    for _rel, md in files:
+        leaves = [md.schema.column(j).path for j in range(md.num_columns)]
+        if col not in leaves:
+            return None
+        j = leaves.index(col)
+        if witnessed and md.schema.column(j).physical_type == "BYTE_ARRAY":
+            return None
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(j).statistics
+            if st is None or not st.has_min_max:
+                return None
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (lo, hi)
+
+
+def day_range(spark: SparkSession, sf_dir: str) -> tuple[_dt.date, _dt.date]:
+    """(first, last) UTC day of ``events.ts``: the anchor the split
+    plans place their cutoff from.  Read from the footers when they
+    prove it (``to_date`` is monotone and INT64 timestamp statistics
+    are exact), else one Spark aggregate over ``load_table``."""
+    rng = footer_minmax(f"{sf_dir}/events.parquet", "ts")
+    if rng is not None and all(isinstance(v, _dt.datetime) for v in rng):
+        # the session is UTC; a naive statistic is UTC wall clock
+        return tuple(
+            (v.astimezone(_dt.timezone.utc) if v.tzinfo else v).date()
+            for v in rng
+        )
+    day = F.to_date("ts")
+    return tuple(
+        load_table(spark, sf_dir, "events").agg(F.min(day), F.max(day))
+        .collect()[0]
+    )
+
+
+def cutoff_day(spark: SparkSession, sf_dir: str, days: int) -> _dt.date | None:
+    """The split plans' cutoff: ``days`` after the first day of
+    ``events.ts`` (``day_range``), or None for an empty table, which a
+    ``day <= lit(None)`` filter reads as "no day"."""
+    first = day_range(spark, sf_dir)[0]
+    return None if first is None else first + _dt.timedelta(days=days)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table from the warehouse dir as a DataFrame.
 
     The harness parquet stores timestamps as TIMESTAMP(NANOS), which
     Spark's vectorized reader rejects; we read them as raw nano longs
     (``nanosAsLong``) and truncate to microsecond TimestampType — the
-    same truncation DuckDB applies, so oracles agree.
+    same truncation DuckDB applies, so oracles agree.  The schema comes
+    from the footers (``parquet_schema``), so building the frame fires
+    no Spark job.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Driver sessions are not built by our factory; pin the timezone
@@ -218,7 +376,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
 
     def build() -> DataFrame:
-        df = spark.read.parquet(path)
+        df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
         for c in TABLES.get(name, {}).get("ts_cols", []):
             if isinstance(df.schema[c].dataType, T.LongType):
                 df = df.withColumn(
@@ -236,17 +394,14 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     File-stream over the same parquet the batch path reads (the
     reference's per-block poll loop, ``omniEngine.py:109-232``,
-    becomes a real incremental source).  Schema comes from a batch
-    probe of the same file; the nano→micro timestamp fix matches
-    ``load_table`` so stream and batch plans agree.
+    becomes a real incremental source).  Schema comes from the same
+    file's footers (``parquet_schema``); the nano→micro timestamp fix
+    matches ``load_table`` so stream and batch plans agree.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    raw_schema = session_memo(
-        spark, "raw-schema", path, lambda: spark.read.parquet(path).schema
-    )
-    reader = spark.readStream.schema(raw_schema)
+    reader = spark.readStream.schema(parquet_schema(spark, path))
     # SPARK_GRAFT_STREAM_MAX_FILES caps files per micro-batch — the
     # throughput-bench knob (tools/stream_bench.py): availableNow
     # honors source rate limits, so a chunked table drains as a
@@ -306,8 +461,6 @@ def _effective_parquet_splits(df: DataFrame) -> int | None:
         return None
     import urllib.parse
 
-    import pyarrow.parquet as pq
-
     total = 0
     for f in files:
         if not f.startswith("file:") or not f.endswith(".parquet"):
@@ -317,8 +470,8 @@ def _effective_parquet_splits(df: DataFrame) -> int | None:
         # silently deactivates for exactly the files it should fix
         path = urllib.parse.unquote(urllib.parse.urlparse(f).path)
         try:
-            total += pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:  # noqa: BLE001 — unreadable footer
+            total += sum(md.num_row_groups for _, md in footers(path))
+        except (OSError, ValueError):  # unreadable footer
             return None
     return total
 

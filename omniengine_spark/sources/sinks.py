@@ -19,6 +19,7 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from omniengine_spark.sources.catalog import hold, path_signature
 
@@ -183,8 +184,14 @@ def write_partitioned(
     )
 
 
-def read_warehouse(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_warehouse(
+    spark: SparkSession, path: str, schema: StructType
+) -> DataFrame:
+    """The warehouse at ``path`` read with ``schema``, the schema of the
+    frame written there: Spark neither fires a schema-inference job
+    nor re-infers partition-column types from the ``col=value`` paths
+    (a long ``block_range`` would come back as an int)."""
+    return spark.read.schema(schema).parquet(path)
 
 
 def jdbc_publish(

@@ -75,6 +75,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from omniengine_spark.sources.catalog import footer_minmax
+
 # legacy single-file manifest (pre-CAS tables): read-only fallback
 _MANIFEST = "_manifest.json"
 _SEQ_RE = re.compile(r"^_manifest\.(\d+)\.json$")
@@ -285,8 +287,8 @@ def _norm_bound(v, *, col: str, side: str):
 
 def _scrape_stats(version_dir: Path, cols: list[str]) -> dict:
     """Per-file min/max for ``cols`` from the parquet footers under
-    ``version_dir`` (recursive — partitionBy layouts nest).  Footer
-    metadata-only reads: no data pages are touched.
+    ``version_dir`` (recursive — partitionBy layouts nest), through
+    ``catalog.footer_minmax``: no data pages are touched.
 
     The manifest records EVERY parquet file in the dir — files
     without usable stats carry an empty column map — and sets
@@ -295,38 +297,16 @@ def _scrape_stats(version_dir: Path, cols: list[str]) -> dict:
     at 100 TB the O(files) listing is itself the planning cost worth
     skipping.  Each stat is ``[lo, hi, domain]`` (see ``_norm_stat``)
     so prune bounds only ever compare within their value domain."""
-    import pyarrow.parquet as pq
-
     files: dict[str, dict] = {}
     for p in sorted(version_dir.rglob("*.parquet")):
-        md = pq.ParquetFile(p).metadata
-        names = [
-            md.schema.column(j).path for j in range(md.num_columns)
-        ]
         per_col: dict[str, list] = {}
         for col in cols:
-            if col not in names:
-                continue  # partition col or absent: no footer stats
-            j = names.index(col)
-            lo = hi = None
-            dom = None
-            ok = True
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(j).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                (mn, dmn), (mx, _dmx) = (
-                    _norm_stat(st.min),
-                    _norm_stat(st.max),
-                )
-                if mn is None or mx is None:
-                    ok = False
-                    break
-                dom = dmn
-                lo = mn if lo is None else min(lo, mn)
-                hi = mx if hi is None else max(hi, mx)
-            if ok and lo is not None:
+            # a partition col or an absent one has no footer stats
+            rng = footer_minmax(str(p), col, witnessed=False)
+            if rng is None:
+                continue
+            (lo, dom), (hi, _) = _norm_stat(rng[0]), _norm_stat(rng[1])
+            if lo is not None and hi is not None:
                 per_col[col] = [lo, hi, dom]
         files[str(p.relative_to(version_dir))] = per_col
     return {"cols": cols, "files": files, "complete": True}
@@ -723,6 +703,22 @@ def _stored_schema(manifest: dict, v: int) -> T.StructType | None:
     return T.StructType.fromJson(schemas[0])
 
 
+def _reader(spark: SparkSession, schema: T.StructType | None):
+    # a legacy manifest entry stores no schema: Spark infers it (a job)
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
+def read_commit(spark: SparkSession, path: str, entry: dict) -> DataFrame:
+    """The rows the commit of manifest ``entry`` wrote: its own data
+    dir, without its delta base chain, read with the schema it
+    stored (partition columns still come from the ``col=value``
+    paths)."""
+    schema = entry.get("schema")
+    return _reader(
+        spark, None if schema is None else T.StructType.fromJson(schema)
+    ).parquet(f"{path}/v={entry['version']}")
+
+
 def read_version(
     spark: SparkSession,
     path: str,
@@ -751,8 +747,7 @@ def read_version(
     manifest = _load_manifest(path)
     v = manifest["current"] if version is None else version
     dirs = _version_dirs(path, manifest, v)
-    schema = _stored_schema(manifest, v)
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    reader = _reader(spark, _stored_schema(manifest, v))
     if prune:
         kept, _total = pruned_files(path, prune, version=v)
         if not kept:

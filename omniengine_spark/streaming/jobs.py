@@ -527,9 +527,12 @@ def exactly_once_warehouse_sink(
         q.awaitTermination()
     shutil.rmtree(ckpt, ignore_errors=True)
 
+    # the written frame: a batch of ``ev`` stamped with an int batch_id
+    written = T.StructType(
+        ev.schema.fields + [T.StructField("batch_id", T.IntegerType())]
+    )
     return (
-        read_warehouse(spark, path)
-        .withColumn("shard", F.col("shard").cast("long"))
+        read_warehouse(spark, path, written)
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -66,3 +66,37 @@ def test_all_queries_have_runnable_plans(spark):
     for name, q in QUERIES.items():
         df = q(spark, SF_CORRECT)
         assert df.columns, f"{name}: empty schema"
+
+
+def test_j8_finds_customers_whose_orders_are_dropped(spark, tmp_path):
+    """At sf0.001 and sf0.01 every customer has orders, so j8's parity
+    compares two empty frames.  On a copy whose ``orders`` loses every
+    row of three customers, j8 returns exactly those three and matches
+    its oracle."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tools.driver_sim import make_duck
+
+    from .conftest import SF_SMOKE
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMOKE, sf)
+    orders = pq.read_table(sf / "orders.parquet")
+    gone = sorted(set(orders.column("o_custkey").to_pylist()))[:3]
+    keep = pc.invert(pc.is_in(orders.column("o_custkey"),
+                              value_set=pa.array(gone, pa.int64())))
+    pq.write_table(orders.filter(keep), sf / "orders.parquet")
+
+    got = QUERIES["j8_customers_without_orders"](spark, str(sf)).toPandas()
+    duck = make_duck(str(sf))
+    try:
+        want = duck.execute(ORACLES["j8_customers_without_orders"]).fetchdf()
+    finally:
+        duck.close()
+    assert sorted(got["c_custkey"]) == gone
+    problems = _frame_problems(got, want)
+    assert not problems, "; ".join(problems)

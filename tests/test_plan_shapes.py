@@ -324,6 +324,25 @@ def test_package_caches_only_through_plan_calls():
     assert not {k: v for k, v in found.items() if v}
 
 
+def test_package_reads_parquet_only_with_a_schema():
+    """A parquet read without a schema fires Spark's schema-inference
+    job while the plan is built.  The package has two: the fallback of
+    ``catalog.parquet_schema`` when the footers cannot give the schema,
+    and ``versioned._reader`` for a legacy manifest entry that stores
+    none.  Every other read passes ``.schema(...)`` (``.read.format``
+    and ``.read.jdbc`` are not parquet reads)."""
+    pattern = re.compile(r"\.read\b(?!\(|\.(?:schema|format|jdbc)\b)")
+    pkg = Path(__file__).resolve().parents[1] / "omniengine_spark"
+    found = {
+        str(p.relative_to(pkg)): len(pattern.findall(p.read_text()))
+        for p in sorted(pkg.rglob("*.py"))
+    }
+    assert {k: n for k, n in found.items() if n} == {
+        "sources/catalog.py": 1,
+        "sources/versioned.py": 1,
+    }
+
+
 def test_runtime_bloom_filter_reaches_probe_side(spark):
     """Runtime-filter capability pin: with a selective dim filter and
     a shuffle join, the optimizer injects a bloom_filter_agg built

@@ -16,6 +16,7 @@ import time
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from omniengine_spark.sources import load_table
 from omniengine_spark.sources.sinks import scratch_dir
@@ -310,7 +311,10 @@ def test_exactly_once_sink_survives_multiple_batches(
         .start()
     )
     q.awaitTermination()
-    total = read_warehouse(spark, path).count()
+    written = T.StructType(
+        ev.schema.fields + [T.StructField("batch_id", T.IntegerType())]
+    )
+    total = read_warehouse(spark, path, written).count()
     expected = load_table(spark, SF_SMOKE, "events").count()
     shutil.rmtree(path, ignore_errors=True)
     assert total == expected

@@ -56,8 +56,8 @@ def test_incremental_equals_full(spark):
         write_partitioned(
             ev.filter(F.col("day") > F.lit(cut)), incr_path, ["day"]
         )
-        assert _fingerprint(read_warehouse(spark, full_path)) == \
-            _fingerprint(read_warehouse(spark, incr_path))
+        assert _fingerprint(read_warehouse(spark, full_path, ev.schema)) == \
+            _fingerprint(read_warehouse(spark, incr_path, ev.schema))
     finally:
         shutil.rmtree(full_path, ignore_errors=True)
         shutil.rmtree(incr_path, ignore_errors=True)
@@ -78,18 +78,18 @@ def test_reorg_overwrite_converges(spark):
         )
         write_partitioned(ev.filter(F.col("day") < F.lit(fork)), path, ["day"])
         write_partitioned(bad_tail, path, ["day"])
-        wrong = _fingerprint(read_warehouse(spark, path))
+        wrong = _fingerprint(read_warehouse(spark, path, ev.schema))
 
         # reorg: recompute partitions ≥ fork from the canonical stream
         write_partitioned(
             ev.filter(F.col("day") >= F.lit(fork)), path, ["day"]
         )
-        fixed = _fingerprint(read_warehouse(spark, path))
+        fixed = _fingerprint(read_warehouse(spark, path, ev.schema))
 
         truth_path = scratch_dir("wh-truth")
         try:
             write_partitioned(ev, truth_path, ["day"])
-            truth = _fingerprint(read_warehouse(spark, truth_path))
+            truth = _fingerprint(read_warehouse(spark, truth_path, ev.schema))
         finally:
             shutil.rmtree(truth_path, ignore_errors=True)
 
@@ -107,11 +107,11 @@ def test_dynamic_overwrite_preserves_other_partitions(spark):
     path = scratch_dir("wh-dyn")
     try:
         write_partitioned(ev, path, ["day"])
-        before = read_warehouse(spark, path).count()
+        before = read_warehouse(spark, path, ev.schema).count()
         # rewriting one day must not drop the others
         one_day = ev.filter(F.col("day") == F.lit(days[0]))
         write_partitioned(one_day, path, ["day"])
-        assert read_warehouse(spark, path).count() == before
+        assert read_warehouse(spark, path, ev.schema).count() == before
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
