@@ -11,13 +11,14 @@ from __future__ import annotations
 import datetime as _dt
 import functools
 import hashlib
+import json
 import os
 import shutil
 import stat
 import tempfile
 import zipfile
 from pathlib import Path
-from typing import Callable, TypeVar
+from typing import Callable, Iterator, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +27,8 @@ from pyspark.sql import types as T
 _V = TypeVar("_V")
 QueryFn = Callable[[SparkSession, str], DataFrame]
 _PKG_ROOT = Path(__file__).resolve().parents[1]
+# the key under which Spark stores its schema in a parquet footer
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _ensure_package_shipped(spark: SparkSession) -> None:
@@ -203,24 +206,24 @@ def session_memo(
     return hit[1]
 
 
-def footers(path: str) -> list[tuple[str, object]]:
+def footers(path: str) -> Iterator[tuple[str, object]]:
     """(path relative to ``path``, pyarrow ``FileMetaData``) of the
-    parquet file ``path``, or of every data file below the directory
+    parquet file ``path``, or of each data file below the directory
     ``path`` in name order, skipping the ``_``/``.`` names Spark
-    treats as hidden.  Footer reads only: no data page is touched."""
+    treats as hidden.  Lazy, one footer per step, so a caller that
+    stops early reads no further footer; no data page is touched.
+    Raises ``OSError``/``ValueError`` (missing path, not parquet)
+    while iterated."""
     import pyarrow.parquet as pq
 
     root = Path(path)
     if not root.is_dir():
-        return [("", pq.read_metadata(root))]
-    return [
-        (str(p.relative_to(root)), pq.read_metadata(p))
-        for p in sorted(root.rglob("*.parquet"))
-        if not any(
-            part.startswith(("_", "."))
-            for part in p.relative_to(root).parts
-        )
-    ]
+        yield "", pq.read_metadata(root)
+        return
+    for p in sorted(root.rglob("*.parquet")):
+        rel = p.relative_to(root)
+        if not any(part.startswith(("_", ".")) for part in rel.parts):
+            yield str(rel), pq.read_metadata(p)
 
 
 def _footer_field(at, ntz: bool, physical: str | None):
@@ -254,89 +257,104 @@ def _footer_field(at, ntz: bool, physical: str | None):
     return None
 
 
-def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+def _as_nullable(js):
+    """A Spark type's JSON with every field, array element and map
+    value made nullable, as a file source reads a stored schema."""
+    if isinstance(js, dict):
+        js = {k: _as_nullable(v) for k, v in js.items()}
+        for key in ("nullable", "containsNull", "valueContainsNull"):
+            if key in js:
+                js[key] = True
+    elif isinstance(js, list):
+        js = [_as_nullable(v) for v in js]
+    return js
+
+
+def _footer_struct(md, ntz: bool) -> T.StructType | None:
+    """The schema an inferring read takes from one file's footer: the
+    schema Spark stored there when Spark wrote the file, else the
+    arrow schema through ``_footer_field``; None where that does not
+    cover a type."""
+    stored = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        return T.StructType.fromJson(_as_nullable(json.loads(stored)))
+    leaves = {
+        md.schema.column(j).path: md.schema.column(j).physical_type
+        for j in range(md.num_columns)
+    }
+    fields = []
+    for f in md.schema.to_arrow_schema():
+        st = _footer_field(f.type, ntz, leaves.get(f.name))
+        if st is None:
+            return None
+        fields.append(T.StructField(f.name, st, True))
+    return T.StructType(fields)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
     """The schema an inferring parquet read of ``path`` gives, read from
     the parquet footers on the driver instead of by Spark's schema-
     inference job.  TIMESTAMP(NANOS) maps to LongType, as with
     ``nanosAsLong``; naive TIMESTAMP(MICROS) follows the session's
-    ``inferTimestampNTZ``.  None (infer with Spark) for a type the
-    mapping does not cover, a file Spark wrote (its stored schema
-    wins there), a partitioned layout, files whose schemas differ,
-    or a path without readable footers."""
-    try:
-        files = footers(path)
-    except (OSError, ValueError):  # missing path, not parquet
-        return None
+    ``inferTimestampNTZ``; a file Spark wrote gives the schema Spark
+    stored in it.  Spark infers the schema (one job) where the footers
+    cannot give it: a type the mapping does not cover, a partitioned
+    layout, files whose schemas differ, or no readable footer."""
     ntz = spark.conf.get(
         "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
     ) == "true"
     schema = None
-    for rel, md in files:
-        if "=" in rel or b"org.apache.spark.sql.parquet.row.metadata" in (
-            md.metadata or {}
-        ):
-            return None
-        leaves = {
-            md.schema.column(j).path: md.schema.column(j).physical_type
-            for j in range(md.num_columns)
-        }
-        fields = []
-        for f in md.schema.to_arrow_schema():
-            st = _footer_field(f.type, ntz, leaves.get(f.name))
-            if st is None:
-                return None
-            fields.append(T.StructField(f.name, st, True))
-        if schema is not None and T.StructType(fields) != schema:
-            return None
-        schema = T.StructType(fields)
-    return schema
-
-
-def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
-    """``footer_schema``, or Spark's inferred schema (one job) where
-    the footers cannot give it."""
-    return footer_schema(spark, path) or spark.read.parquet(path).schema
-
-
-def footer_minmax(
-    path: str, col: str, *, witnessed: bool = True
-) -> tuple | None:
-    """(min, max) of column ``col`` (a leaf path, e.g. ``ts``) over the
-    parquet file or directory ``path``, from footer statistics alone,
-    as pyarrow decodes them.  None unless every row group of every
-    file has min/max statistics for the column, or when no file has a
-    row.  ``witnessed`` (the default) also returns None for BYTE_ARRAY
-    columns: their footer bounds may be truncated, so a string "max"
-    can be a value no row holds; pruning passes ``witnessed=False``,
-    since a bound is all it needs.  Integer, date and timestamp
-    statistics are exact."""
     try:
-        files = footers(path)
+        for rel, md in footers(path):
+            st = None if "=" in rel else _footer_struct(md, ntz)
+            if st is None or (schema is not None and st != schema):
+                schema = None
+                break
+            schema = st
     except (OSError, ValueError):  # missing path, not parquet
-        return None
-    lo = hi = None
-    for _rel, md in files:
-        leaves = [md.schema.column(j).path for j in range(md.num_columns)]
-        if col not in leaves:
-            return None
-        j = leaves.index(col)
-        if witnessed and md.schema.column(j).physical_type == "BYTE_ARRAY":
-            return None
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(j).statistics
-            if st is None or not st.has_min_max:
-                return None
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (lo, hi)
+        schema = None
+    return schema or spark.read.parquet(path).schema
+
+
+def footer_minmax(path: str, cols: list[str]) -> dict[str, tuple]:
+    """(min, max) of each column of ``cols`` (leaf paths, e.g. ``ts``)
+    over the parquet file or directory ``path``, from footer
+    statistics alone, as pyarrow decodes them, reading each footer
+    once.  A column is left out unless every row group of every file
+    has min/max statistics for it; empty when no file has a row or
+    the footers cannot be read.  Integer, date and timestamp bounds
+    are exact; a BYTE_ARRAY (string) bound may be truncated, so a
+    caller that needs a value some row holds must check the type."""
+    out: dict[str, tuple] = {}
+    proven = set(cols)
+    try:
+        for _rel, md in footers(path):
+            leaves = {
+                md.schema.column(j).path: j for j in range(md.num_columns)
+            }
+            proven &= leaves.keys()
+            for col in list(proven):
+                j = leaves[col]
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(j).statistics
+                    if st is None or not st.has_min_max:
+                        proven.discard(col)
+                        break
+                    lo, hi = out.get(col, (st.min, st.max))
+                    out[col] = (min(lo, st.min), max(hi, st.max))
+    except (OSError, ValueError):  # missing path, not parquet
+        return {}
+    return {c: out[c] for c in cols if c in proven and c in out}
 
 
 def day_range(spark: SparkSession, sf_dir: str) -> tuple[_dt.date, _dt.date]:
     """(first, last) UTC day of ``events.ts``: the anchor the split
     plans place their cutoff from.  Read from the footers when they
     prove it (``to_date`` is monotone and INT64 timestamp statistics
-    are exact), else one Spark aggregate over ``load_table``."""
-    rng = footer_minmax(f"{sf_dir}/events.parquet", "ts")
+    are exact), else one Spark aggregate over ``load_table``.  Only
+    datetime bounds are taken: a ``ts`` stored as a string could carry
+    truncated bounds that no row holds."""
+    rng = footer_minmax(f"{sf_dir}/events.parquet", ["ts"]).get("ts")
     if rng is not None and all(isinstance(v, _dt.datetime) for v in rng):
         # the session is UTC; a naive statistic is UTC wall clock
         return tuple(

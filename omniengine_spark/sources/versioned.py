@@ -288,7 +288,8 @@ def _norm_bound(v, *, col: str, side: str):
 def _scrape_stats(version_dir: Path, cols: list[str]) -> dict:
     """Per-file min/max for ``cols`` from the parquet footers under
     ``version_dir`` (recursive — partitionBy layouts nest), through
-    ``catalog.footer_minmax``: no data pages are touched.
+    ``catalog.footer_minmax``: one footer read per file, no data page
+    touched.
 
     The manifest records EVERY parquet file in the dir — files
     without usable stats carry an empty column map — and sets
@@ -300,11 +301,8 @@ def _scrape_stats(version_dir: Path, cols: list[str]) -> dict:
     files: dict[str, dict] = {}
     for p in sorted(version_dir.rglob("*.parquet")):
         per_col: dict[str, list] = {}
-        for col in cols:
-            # a partition col or an absent one has no footer stats
-            rng = footer_minmax(str(p), col, witnessed=False)
-            if rng is None:
-                continue
+        # a partition col or an absent one has no footer stats
+        for col, rng in footer_minmax(str(p), cols).items():
             (lo, dom), (hi, _) = _norm_stat(rng[0]), _norm_stat(rng[1])
             if lo is not None and hi is not None:
                 per_col[col] = [lo, hi, dom]

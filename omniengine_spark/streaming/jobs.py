@@ -475,6 +475,12 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def stamp_batch(df: DataFrame, batch_id: int) -> DataFrame:
+    """A micro-batch of ``exactly_once_warehouse_sink`` stamped with
+    its id, the leading partition key of the warehouse it writes."""
+    return df.withColumn("batch_id", F.lit(batch_id))
+
+
 def exactly_once_warehouse_sink(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -510,7 +516,7 @@ def exactly_once_warehouse_sink(
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        stamped = batch_df.withColumn("batch_id", F.lit(batch_id))
+        stamped = stamp_batch(batch_df, batch_id)
         write_partitioned(stamped, path, ["batch_id", "shard"])
         # idempotence probe: re-deliver the same batch — the dynamic
         # overwrite must leave the warehouse unchanged
@@ -527,12 +533,8 @@ def exactly_once_warehouse_sink(
         q.awaitTermination()
     shutil.rmtree(ckpt, ignore_errors=True)
 
-    # the written frame: a batch of ``ev`` stamped with an int batch_id
-    written = T.StructType(
-        ev.schema.fields + [T.StructField("batch_id", T.IntegerType())]
-    )
     return (
-        read_warehouse(spark, path, written)
+        read_warehouse(spark, path, stamp_batch(ev, 0).schema)
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

@@ -19,6 +19,8 @@ from omniengine_spark.sources.catalog import (
     day_range,
     footer_minmax,
     load_table,
+    parquet_schema,
+    stream_table,
 )
 from tools.driver_sim import frames_match, make_duck
 
@@ -62,10 +64,47 @@ def test_load_table_fires_no_job_and_matches_inferred_read(
         spark.conf.set(key, old)
 
 
+@pytest.mark.parametrize("ntz", ["false", "true"])
+def test_spark_written_directory_fires_no_job(spark, tmp_path, ntz):
+    """A directory Spark wrote (the chunked stream source
+    ``tools/stream_bench.py`` stages) stores Spark's schema in each
+    footer: ``load_table`` and ``stream_table`` read it with no job,
+    and, made nullable, it is the schema Spark's inference gives, also
+    for nested and non-nullable columns."""
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, ntz)
+    try:
+        sf = str(tmp_path)
+        load_table(spark, SF_SMOKE, "events").repartition(3).write.parquet(
+            f"{sf}/events.parquet"
+        )
+        spark.sql(
+            "SELECT id, timestamp_micros(id) AS ts,"
+            " CAST(timestamp_micros(id) AS timestamp_ntz) AS ntz,"
+            " array(id, NULL) AS arr, map('k', id) AS m,"
+            " named_struct('x', id, 'y', array(named_struct('z', 1))) AS st,"
+            " CAST(id AS decimal(12, 2)) AS d FROM range(10)"
+        ).repartition(2).write.parquet(f"{sf}/nested.parquet")
+        lo = next_job_id(spark)
+        batch = load_table(spark, sf, "events")
+        stream_table(spark, sf, "events")
+        nested = parquet_schema(spark, f"{sf}/nested.parquet")
+        assert next_job_id(spark) == lo
+        inferred = spark.read.parquet(f"{sf}/events.parquet")
+        assert batch.schema == inferred.schema
+        assert _checksum(batch) == _checksum(inferred)
+        assert nested == spark.read.parquet(f"{sf}/nested.parquet").schema
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_footer_minmax_of_ts_matches_spark(spark, tmp_path):
     sf = _copy(tmp_path / "sf")
     ev = load_table(spark, sf, "events")
-    rng = footer_minmax(f"{sf}/events.parquet", "ts")
+    rngs = footer_minmax(f"{sf}/events.parquet", ["ts", "no_such_col"])
+    assert rngs.keys() == {"ts"}
+    rng = rngs["ts"]
     # naive footer values are UTC wall clock; the session is UTC
     micros = tuple(
         (v - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
@@ -77,8 +116,6 @@ def test_footer_minmax_of_ts_matches_spark(spark, tmp_path):
     assert day_range(spark, sf) == tuple(
         ev.agg(F.min(day), F.max(day)).collect()[0]
     )
-    # a string column's footer bounds may be truncated: no witness
-    assert footer_minmax(f"{sf}/events.parquet", "event_type") is None
 
 
 def test_statistics_free_copy_falls_back_and_s19_matches_oracle(
@@ -90,7 +127,7 @@ def test_statistics_free_copy_falls_back_and_s19_matches_oracle(
     path = f"{sf}/events.parquet"
     table = pq.read_table(path)
     pq.write_table(table, path, write_statistics=False)
-    assert footer_minmax(path, "ts") is None
+    assert footer_minmax(path, ["ts"]) == {}
     ev = load_table(spark, sf, "events")
     day = F.to_date("ts")
     assert day_range(spark, sf) == tuple(

@@ -16,11 +16,10 @@ import time
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from omniengine_spark.sources import load_table
 from omniengine_spark.sources.sinks import scratch_dir
-from omniengine_spark.streaming.jobs import run_available_now
+from omniengine_spark.streaming.jobs import run_available_now, stamp_batch
 
 from .conftest import SF_SMOKE
 
@@ -299,7 +298,7 @@ def test_exactly_once_sink_survives_multiple_batches(
     path = scratch_dir("stream-wh-multibatch")
 
     def write_batch(batch_df, batch_id):
-        stamped = batch_df.withColumn("batch_id", F.lit(batch_id))
+        stamped = stamp_batch(batch_df, batch_id)
         write_partitioned(stamped, path, ["batch_id", "shard"])
         if batch_id == 1:  # replay probe mid-stream
             write_partitioned(stamped, path, ["batch_id", "shard"])
@@ -311,10 +310,7 @@ def test_exactly_once_sink_survives_multiple_batches(
         .start()
     )
     q.awaitTermination()
-    written = T.StructType(
-        ev.schema.fields + [T.StructField("batch_id", T.IntegerType())]
-    )
-    total = read_warehouse(spark, path, written).count()
+    total = read_warehouse(spark, path, stamp_batch(ev, 0).schema).count()
     expected = load_table(spark, SF_SMOKE, "events").count()
     shutil.rmtree(path, ignore_errors=True)
     assert total == expected
