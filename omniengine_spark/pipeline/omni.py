@@ -192,7 +192,20 @@ def stamp_serials_distributed(txs: DataFrame) -> DataFrame:
     rows, not |txs| — the same trick the reference plays by
     pre-assigning sequence ranges per block (``omniEngine.py:
     104-106``) instead of a nextval per row.
+
+    A tx without a block (a null ``ts``) has no place in the order:
+    it is dropped before the counts, so it takes no serial and shifts
+    no offset.  The offsets join is then a LEFT join, not an inner
+    one: the rows are the same (every block left has exactly one
+    offsets row), but Catalyst never removes an inner join.  A left
+    join whose right side is unique on its key and contributes no
+    referenced column is removed by ``EliminateOuterJoin``, so a plan
+    that never reads ``serial`` drops the join and the whole offsets
+    subtree (its second scan of the input, the shuffle of its
+    blocks, the window and the broadcast).  Plans that read
+    ``serial`` keep the broadcast join.
     """
+    txs = txs.filter(F.col("block").isNotNull())
     counts = txs.groupBy("block").agg(F.count(F.lit(1)).alias("__n"))
     w_off = (
         Window.orderBy("block")
@@ -204,7 +217,7 @@ def stamp_serials_distributed(txs: DataFrame) -> DataFrame:
     )
     w_blk = Window.partitionBy("block").orderBy("position_in_block")
     return (
-        txs.join(F.broadcast(offsets), "block")
+        txs.join(F.broadcast(offsets), "block", "left")
         .withColumn(
             "serial",
             (F.col("__off") + F.row_number().over(w_blk)).cast("long"),

@@ -395,7 +395,9 @@ def serve_cached_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     first, last = day_range(spark, sf_dir)
-    clock = (last - first).days
+    # an empty events table has no day: every version is then empty,
+    # and any clock gives the oracle's hit/refresh pair
+    clock = 0 if first is None else (last - first).days
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 5).alias("propertyid"),
         F.datediff(F.to_date("ts"), F.lit(first)).cast("long").alias("day"),
@@ -412,22 +414,24 @@ def serve_cached_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = scratch_dir("serve-rate-cache")
     stats = ["as_of_day"]
+    watermark = clock - 10
     commit(
-        rates_as_of(clock - 10), path, f"rates as of {clock - 10}",
+        rates_as_of(watermark), path, f"rates as of {watermark}",
         stats_cols=stats,
     )
 
     def serve(now: int, label: str) -> DataFrame:
-        cached = read_version(spark, path)
+        nonlocal watermark
+        # the cached version's stats carry its watermark; a version
+        # without rows has none, and its watermark is the day it was
+        # committed as of
         rng = stats_minmax(path, "as_of_day")
-        as_of = rng[1] if rng else (
-            cached.agg(F.max("as_of_day")).collect()[0][0]
-        )
-        refreshed = now - as_of > _TTL_DAYS
+        refreshed = now - (rng[1] if rng else watermark) > _TTL_DAYS
         if refreshed:  # the SETEX path: recompute, commit, serve new
+            watermark = now
             commit(rates_as_of(now), path, f"refresh at {now}",
                    stats_cols=stats)
-            cached = read_version(spark, path)
+        cached = read_version(spark, path)
         return cached.agg(
             F.lit(label).alias("lookup"),
             F.lit(current_version(path)).cast("int").alias(

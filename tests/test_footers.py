@@ -141,3 +141,31 @@ def test_statistics_free_copy_falls_back_and_s19_matches_oracle(
         duck.close()
     assert len(got) > 0
     assert not frames_match(got, want)
+
+
+_SPLIT_PLANS = [
+    "serve_cached_rates",
+    "s19_time_travel_diff",
+    "x15_ivm_rollup_merge",
+    "x16_cdc_snapshot_diff",
+    "x1b_incremental_batch",
+]
+
+
+def test_empty_events_split_plans_match_oracles(spark, tmp_path):
+    """An ``events`` table with no rows has no first day: ``day_range``
+    gives (None, None), and each plan that anchors on it still returns
+    its oracle's result."""
+    sf = _copy(tmp_path / "sf")
+    path = f"{sf}/events.parquet"
+    pq.write_table(pq.read_table(path).slice(0, 0), path)
+    assert day_range(spark, sf) == (None, None)
+    duck = make_duck(sf)
+    try:
+        for name in _SPLIT_PLANS:
+            got = QUERIES[name](spark, sf).toPandas()
+            want = duck.execute(ORACLES[name]).fetchdf()
+            problems = frames_match(got, want)
+            assert not problems, f"{name}: {'; '.join(problems)}"
+    finally:
+        duck.close()

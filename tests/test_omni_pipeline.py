@@ -304,8 +304,11 @@ def test_distributed_serials_match_global(spark):
         for pos in range(block % 4 + 1):
             rows.append((f"t{eid}", block, pos))
             eid += 1
+    # a tx whose ts is null has a null block (``_tx_projection``): it
+    # takes no serial and shifts no other tx's serial
     raw = spark.createDataFrame(
-        rows, ["txid", "block", "position_in_block"]
+        rows + [("t_null_ts", None, 0)],
+        "txid string, block long, position_in_block long",
     ).repartition(5)
 
     keys = sorted((b, p) for _, b, p in rows)
@@ -331,6 +334,39 @@ def test_distributed_serials_avoid_single_partition_sort(spark):
     )
     # the block-partitioned rank over the wide data
     assert "windowspecdefinition(block" in plan
+
+
+def test_unread_serial_plans_no_offsets_join(spark):
+    """A plan over the tx→delta chain that never reads ``serial`` plans
+    no offsets join: the optimizer removes it with the whole offsets
+    subtree, so ``events`` is scanned once."""
+    from omniengine_spark.plans.pipeline_plans import _stamped_deltas
+
+    from .conftest import SF_SMOKE
+
+    deltas = _stamped_deltas(spark, SF_SMOKE)
+    text = (
+        deltas.select([c for c in deltas.columns if c != "serial"])
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert "Join" not in text
+    assert text.count("Relation [event_id") == 1
+    assert "Join" in deltas._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_warm_address_portfolio_fires_at_most_four_jobs(spark):
+    """A warm ``serve_address_portfolio`` call (build and collect)
+    reads no ``serial``, so none of its Spark jobs computes the block
+    offsets: at most 4 jobs, where computing them costs 2 more."""
+    from omniengine_spark.plans import QUERIES
+
+    from .conftest import SF_SMOKE, next_job_id
+
+    plan = QUERIES["serve_address_portfolio"]
+    plan(spark, SF_SMOKE).collect()
+    lo = next_job_id(spark)
+    plan(spark, SF_SMOKE).collect()
+    assert next_job_id(spark) - lo <= 4
 
 
 # ---------------------------------------------------------------------------
