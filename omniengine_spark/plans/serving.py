@@ -383,15 +383,15 @@ def serve_cached_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the refresh is one partition-pruned aggregation + one
     versioned commit; readers never block (snapshot isolation).  The
     first day and the clock come from ``day_range`` (the events
-    footers), and the staleness decision reads only the manifest's
-    ``as_of_day`` stats: building the plan fires no probe job.
+    footers), and the staleness decision compares the clock with the
+    watermark the plan last committed: building the plan fires no
+    probe job.
     """
     from omniengine_spark.sources.sinks import scratch_dir
     from omniengine_spark.sources.versioned import (
         commit,
         current_version,
         read_version,
-        stats_minmax,
     )
 
     first, last = day_range(spark, sf_dir)
@@ -413,24 +413,15 @@ def serve_cached_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     path = scratch_dir("serve-rate-cache")
-    stats = ["as_of_day"]
     watermark = clock - 10
-    commit(
-        rates_as_of(watermark), path, f"rates as of {watermark}",
-        stats_cols=stats,
-    )
+    commit(rates_as_of(watermark), path, f"rates as of {watermark}")
 
     def serve(now: int, label: str) -> DataFrame:
         nonlocal watermark
-        # the cached version's stats carry its watermark; a version
-        # without rows has none, and its watermark is the day it was
-        # committed as of
-        rng = stats_minmax(path, "as_of_day")
-        refreshed = now - (rng[1] if rng else watermark) > _TTL_DAYS
+        refreshed = now - watermark > _TTL_DAYS
         if refreshed:  # the SETEX path: recompute, commit, serve new
             watermark = now
-            commit(rates_as_of(now), path, f"refresh at {now}",
-                   stats_cols=stats)
+            commit(rates_as_of(now), path, f"refresh at {now}")
         cached = read_version(spark, path)
         return cached.agg(
             F.lit(label).alias("lookup"),
