@@ -446,15 +446,14 @@ def lsh_query_index(
     shard_bits: int = 4,
     seed: int = 42,
     dim: int = 64,
-    prune_shards: bool = True,
 ) -> DataFrame:
     """Top-k over a persisted LSH entry table: each query probes its
     home + ``n_probes`` buckets per table, candidates are the entries
     in those buckets (asymmetric — the serving form: the index stores
     home keys only), exact cosine rescore, rank.
 
-    ``prune_shards`` collapses the query batch's probe set to its
-    distinct (t, shard, bucket) triples — a k-bounded collect,
+    The query batch's probe set collapses to its distinct (t, shard,
+    bucket) triples — a k-bounded collect,
     <= T·(1+n_probes)·|batch| rows — and pushes them as TWO static
     predicates: the (t, shard) disjunction prunes partition
     DIRECTORIES at planning time, and the per-table bucket IN-list is
@@ -483,30 +482,29 @@ def lsh_query_index(
         _shard_of(F.col("bucket"), n_act, shard_bits).alias("shard"),
         "bucket",
     )
-    if prune_shards:
-        probed: dict[int, set[int]] = {}
-        all_buckets: set[int] = set()
-        for r in qk.select("t", "shard", "bucket").distinct().collect():
-            probed.setdefault(r["t"], set()).add(r["shard"])
-            all_buckets.add(r["bucket"])
-        # two SEPARATE predicates on purpose: a disjunct mixing
-        # partition and data columns cannot be split by the planner
-        # and would fall through to post-scan data filters, losing
-        # the directory pruning.  Pure partition-column disjunction
-        # -> PartitionFilters (dir pruning); pure single-column
-        # bucket IN-list -> PushedFilters (parquet row-group stats;
-        # union across tables is looser than per-table sets, but the
-        # bucket equi-join re-filters exactly).
-        pred = None
-        for t, shards in sorted(probed.items()):
-            clause = (F.col("t") == t) & F.col("shard").isin(
-                *sorted(shards)
-            )
-            pred = clause if pred is None else (pred | clause)
-        if pred is not None:
-            entries = entries.filter(pred).filter(
-                F.col("bucket").isin(*sorted(all_buckets))
-            )
+    probed: dict[int, set[int]] = {}
+    all_buckets: set[int] = set()
+    for r in qk.select("t", "shard", "bucket").distinct().collect():
+        probed.setdefault(r["t"], set()).add(r["shard"])
+        all_buckets.add(r["bucket"])
+    # two SEPARATE predicates on purpose: a disjunct mixing
+    # partition and data columns cannot be split by the planner
+    # and would fall through to post-scan data filters, losing
+    # the directory pruning.  Pure partition-column disjunction
+    # -> PartitionFilters (dir pruning); pure single-column
+    # bucket IN-list -> PushedFilters (parquet row-group stats;
+    # union across tables is looser than per-table sets, but the
+    # bucket equi-join re-filters exactly).
+    pred = None
+    for t, shards in sorted(probed.items()):
+        clause = (F.col("t") == t) & F.col("shard").isin(
+            *sorted(shards)
+        )
+        pred = clause if pred is None else (pred | clause)
+    if pred is not None:
+        entries = entries.filter(pred).filter(
+            F.col("bucket").isin(*sorted(all_buckets))
+        )
     scored = (
         qk.join(entries, ["t", "shard", "bucket"])
         .filter(F.col("query_id") != F.col("nbr_id"))

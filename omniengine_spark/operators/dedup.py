@@ -126,7 +126,6 @@ def jaccard_similarity_join(
     text_col: str,
     n: int = 3,
     threshold: Fraction = Fraction(4, 5),
-    force_q: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs Jaccard ≥ threshold over n-gram shingle sets,
     via prefix filtering.
@@ -191,9 +190,8 @@ def jaccard_similarity_join(
     # Per-doc
     # o ≥ ⌈t·|X|⌉ bounds the pair-level o = ⌈t·max(|A|,|B|)⌉ from
     # below, so per-doc prefix lengths stay valid.
-    # ``pre`` carries the q=3 prefix — ONE element longer than q=2's
-    # (n − ⌈t·n⌉ + 3); the q=2/q=1 layers filter down to their own
-    # lengths, so one frame serves every layer.
+    # ``pre`` carries the q=2 prefix (n − ⌈t·n⌉ + 2); the q=1 layer
+    # filters it down to its own length, so one frame serves both.
     # localCheckpoint: ``pre`` feeds every join branch below.  Left
     # lazy, Catalyst re-inlines the interpreted shingle HOF into
     # every branch — and worse, pushes derived filters beneath the
@@ -230,147 +228,57 @@ def jaccard_similarity_join(
             ),
         )
     )
-    prefix_len3o = (
+    prefix_len2 = (
         F.size("hs_ord")
         - F.expr(f"({t_num} * size(hs_ord) + {t_den} - 1) div {t_den}")
-        + 3
+        + 2
     )
     pre = checkpoint(
         ranked.select(
             "doc_id",
             "n_sh",
-            F.posexplode_outer(F.slice("hs_ord", F.lit(1), prefix_len3o)),
+            F.posexplode_outer(F.slice("hs_ord", F.lit(1), prefix_len2)),
         ).select("doc_id", "n_sh", "pos", F.col("col").alias("h"))
     )
 
-    # Prefix arity.  q=2 (hash-PAIR join key) is the default and the
-    # measured optimum.  On shingle-saturated corpora (the synthetic
-    # 31-word vocabulary realizes all 31³ shingle types; prefix-hash
-    # occupancy measured 49 → 196 → 834 across sf1/sf5/sf25 while
-    # distinct prefix hashes stay flat) candidates go quadratic
-    # (e=+1.58 at sf5→sf25) and a TRIPLE key (q=3) looks like the
-    # fix — its key space cubes.  MEASURED: it does not pay.  Prefix
-    # postings are biased toward the globally-smallest hashes, so the
-    # q=3 key distribution concentrates exactly like q=2's while
-    # emission costs C(L,3)/C(L,2) ≈ L/3 more posting rows — sf5
-    # 24.1s→109.6s, sf25 304.5s→655.1s (exponent 1.58→1.11, absolute
-    # time 2-4.5× worse).  q=3 is kept as a capability (``force_q``,
-    # brute-force-equality-tested — EITHER arity is a provable
-    # candidate superset via the prefix lemma, so the exact verify
-    # and the oracle are untouched by the choice), not as a default.
-    q = force_q if force_q is not None else 2
-
-    # per-row q=2 prefix bound: pos < n − ⌈t·n⌉ + 2
-    in_l2 = F.col("y.pos") < (
-        F.col("x.n_sh")
-        - F.expr(f"({t_num} * x.n_sh + {t_den} - 1) div {t_den}")
-        + 2
-    )
+    # A TRIPLE key (q=3) was measured 2-4.5× slower than q=2 at sf5
+    # and sf25 (COVERAGE.md), so the pair key is the one arity.
     # C(L,2) ordered hash pairs per doc via a doc-local self-join:
     # codegen'd SMJ on doc_id (an interpreted HOF nested-transform
     # emitting the same pairs measured ~7 µs per element — the join
     # keeps pair emission JVM-side and shuffle-bounded).
-    def _doc_pairs(limit_to_l2: bool) -> DataFrame:
-        cond = (F.col("x.doc_id") == F.col("y.doc_id")) & (
-            F.col("x.pos") < F.col("y.pos")
+    pairs = (
+        pre.alias("x")
+        .join(
+            pre.alias("y"),
+            (F.col("x.doc_id") == F.col("y.doc_id"))
+            & (F.col("x.pos") < F.col("y.pos")),
         )
-        if limit_to_l2:
-            cond = cond & in_l2
-        return (
-            pre.alias("x")
-            .join(pre.alias("y"), cond)
-            .select(
-                F.col("x.doc_id").alias("doc_id"),
-                F.col("x.n_sh").alias("n_sh"),
-                F.col("x.h").alias("h1"),
-                F.col("y.h").alias("h2"),
-                F.col("y.pos").alias("pos2"),
-            )
+        .select(
+            F.col("x.doc_id").alias("doc_id"),
+            F.col("x.n_sh").alias("n_sh"),
+            F.col("x.h").alias("h1"),
+            F.col("y.h").alias("h2"),
         )
-
+    )
     # length filter (PPJoin): J(A,B) ≥ t ⟹ t·|B| ≤ |A| — pairs whose
     # set sizes differ by more than 1/t can never qualify, so the
     # residual prunes them at the join instead of at exact-verify.
-    def _length_ok(a: str, b: str):
-        return (
-            F.col(f"{a}.n_sh") * t_num <= F.col(f"{b}.n_sh") * t_den
-        ) & (F.col(f"{b}.n_sh") * t_num <= F.col(f"{a}.n_sh") * t_den)
-
-    if q == 2:
-        pairs = _doc_pairs(limit_to_l2=True)
-        cand_top = (
-            pairs.alias("a")
-            .join(
-                pairs.alias("b"),
-                (F.col("a.h1") == F.col("b.h1"))
-                & (F.col("a.h2") == F.col("b.h2"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & _length_ok("a", "b"),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
+    cand2 = (
+        pairs.alias("a")
+        .join(
+            pairs.alias("b"),
+            (F.col("a.h1") == F.col("b.h1"))
+            & (F.col("a.h2") == F.col("b.h2"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.col("a.n_sh") * t_num <= F.col("b.n_sh") * t_den)
+            & (F.col("b.n_sh") * t_num <= F.col("a.n_sh") * t_den),
         )
-    else:
-        # q=3 top layer: C(L3,3) ordered hash TRIPLES per doc (pair
-        # frame ⋈ third element), joined on the triple.  Complete for
-        # every qualifying pair with overlap o ≥ 3 — and any o ≥ 3
-        # pair has both set sizes ≥ 3, so restricting to docs the
-        # triple emission naturally covers loses nothing.
-        p3 = _doc_pairs(limit_to_l2=False)
-        triples = (
-            p3.alias("xy")
-            .join(
-                pre.alias("z"),
-                (F.col("xy.doc_id") == F.col("z.doc_id"))
-                & (F.col("z.pos") > F.col("xy.pos2")),
-            )
-            .select(
-                F.col("xy.doc_id").alias("doc_id"),
-                F.col("xy.n_sh").alias("n_sh"),
-                F.col("xy.h1").alias("h1"),
-                F.col("xy.h2").alias("h2"),
-                F.col("z.h").alias("h3"),
-            )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
         )
-        cand3 = (
-            triples.alias("a")
-            .join(
-                triples.alias("b"),
-                (F.col("a.h1") == F.col("b.h1"))
-                & (F.col("a.h2") == F.col("b.h2"))
-                & (F.col("a.h3") == F.col("b.h3"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & _length_ok("a", "b"),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-        )
-        # pairs with overlap o == 2 have ⌈t·max⌉ = 2, i.e. BOTH sizes
-        # ≤ 2/t: the q=2 pair join over just those small docs is the
-        # complete middle layer (usually empty at n-gram settings)
-        small2 = _doc_pairs(limit_to_l2=True).filter(
-            F.col("n_sh") * t_num <= 2 * t_den
-        )
-        cand2_small = (
-            small2.alias("a")
-            .join(
-                small2.alias("b"),
-                (F.col("a.h1") == F.col("b.h1"))
-                & (F.col("a.h2") == F.col("b.h2"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & _length_ok("a", "b"),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-        )
-        cand_top = cand3.unionByName(cand2_small)
-    cand2 = cand_top
+    )
     # q=2 needs pair overlap o = ⌈t·max⌉ ≥ 2.  o = 1 forces BOTH set
     # sizes ≤ ⌊1/t⌋ (and the length filter already confines such pairs
     # to each other), so the classic q=1 single-hash join over just

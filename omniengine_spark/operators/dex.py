@@ -7,16 +7,10 @@ itself has ended).
 
 The reference mutates ActiveOffers/OfferAccepts row by row and undoes
 an expiry on reorg by re-running the loop with a negative block
-(``sql.py:540-545``).  Here both directions are pure column
-expressions over the accepts frame, so:
-
-* ``accept_expiry_deltas(accepts, B)`` is deterministic and
-  idempotent — recomputing at any height IS the reorg story (X2);
-* ``unexpire_deltas(accepts, B0, B1)`` returns exactly the negated
-  delta rows of the expiries that happened in ``(B0, B1]``, matching
-  the reference's inverted arithmetic (``amountaccepted*-1``,
-  ``sql.py:556-558``) — proven equal to recompute in
-  ``tests/test_dex_expiry.py``.
+(``sql.py:540-545``).  Here ``accept_expiry_deltas(accepts, B)`` is a
+pure column expression over the accepts frame, deterministic and
+idempotent, so recomputing at the reorg height IS the undo (X2): there
+is no inverse path.
 
 Scale: one narrow projection + filter over the accepts frame, no
 shuffle, no state; the frame arrives pre-aggregated (one row per
@@ -36,16 +30,28 @@ from omniengine_spark.functions.scalars import DEC_19_0
 EXPIRY_SERIAL_BASE = 1 << 40
 
 
-def _expiry_rows(accepts: DataFrame, sign: int) -> DataFrame:
-    """Delta rows for expiring (sign=+1) or un-expiring (sign=-1)
-    accepts.  Expects columns: accept_id, seller, propertyid,
-    amount_accepted, amount_paid, expire_block, offer_state."""
+def accept_expiry_deltas(accepts: DataFrame, as_of_block) -> DataFrame:
+    """Expiry delta rows as of ``as_of_block``: one row per accept
+    with ``expire_block <= as_of_block`` and an unpaid remainder,
+    in the same shape ``expand_deltas`` emits — union them into the
+    delta stream before the balance fold.
+
+    ``as_of_block`` may be a literal or a Column (e.g. a scalar
+    subquery of the current chain tip).  Expects columns: accept_id,
+    seller, propertyid, amount_accepted, amount_paid, expire_block,
+    offer_state.
+    """
+    blk = as_of_block if isinstance(as_of_block, F.Column) else F.lit(
+        as_of_block
+    )
     remaining = (
         F.col("amount_accepted") - F.coalesce(F.col("amount_paid"), F.lit(0))
     ).cast(DEC_19_0)
     sale_ended = F.col("offer_state").isin("replaced", "cancelled")
-    s = F.lit(sign).cast(DEC_19_0)
-    return accepts.filter(remaining > 0).select(
+    zero = F.lit(0).cast(DEC_19_0)
+    return accepts.filter(
+        (F.col("expire_block") <= blk) & (remaining > 0)
+    ).select(
         F.concat(
             F.lit("expiry:"), F.col("accept_id").cast("string")
         ).alias("txid"),
@@ -56,53 +62,13 @@ def _expiry_rows(accepts: DataFrame, sign: int) -> DataFrame:
         # sale ended → remainder returns to the seller's available
         # balance out of reserve (sql.py:568-575); still active → only
         # the accepted tally drops (sql.py:576-582)
-        F.when(sale_ended, s * remaining)
-        .otherwise(F.lit(0).cast(DEC_19_0))
+        F.when(sale_ended, remaining).otherwise(zero)
         .alias("delta_base_units"),
-        F.when(sale_ended, -s * remaining)
-        .otherwise(F.lit(0).cast(DEC_19_0))
+        F.when(sale_ended, -remaining).otherwise(zero)
         .alias("delta_reserved"),
-        (-s * remaining).cast(DEC_19_0).alias("delta_accepted"),
+        (-remaining).cast(DEC_19_0).alias("delta_accepted"),
         F.lit("delta").alias("kind"),
-        F.lit("accept_expired" if sign > 0 else "accept_unexpired").alias(
-            "role"
-        ),
-    )
-
-
-def accept_expiry_deltas(accepts: DataFrame, as_of_block) -> DataFrame:
-    """Expiry delta rows as of ``as_of_block``: one row per accept
-    with ``expire_block <= as_of_block`` and an unpaid remainder,
-    in the same shape ``expand_deltas`` emits — union them into the
-    delta stream before the balance fold.
-
-    ``as_of_block`` may be a literal or a Column (e.g. a scalar
-    subquery of the current chain tip).
-    """
-    blk = as_of_block if isinstance(as_of_block, F.Column) else F.lit(
-        as_of_block
-    )
-    return _expiry_rows(
-        accepts.filter(F.col("expire_block") <= blk), sign=1
-    )
-
-
-def unexpire_deltas(
-    accepts: DataFrame, from_block, to_block
-) -> DataFrame:
-    """Reorg undo (reference negative-Block path, ``sql.py:540-545``):
-    the negated delta rows of every expiry that fired in
-    ``(from_block, to_block]``.  Applying them on top of the
-    ``to_block`` state yields exactly the ``from_block`` state —
-    equivalently, recompute at ``from_block``; both hold by
-    construction and are pinned by test.
-    """
-    return _expiry_rows(
-        accepts.filter(
-            (F.col("expire_block") > F.lit(from_block))
-            & (F.col("expire_block") <= F.lit(to_block))
-        ),
-        sign=-1,
+        F.lit("accept_expired").alias("role"),
     )
 
 

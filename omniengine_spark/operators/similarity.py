@@ -517,10 +517,10 @@ def pq_build_index(
     run (and persist) ONCE per corpus: normalize → seed codebooks
     (md5-smallest ids' subvectors) → per-subspace argmin encode.
     Returns ``(nv, seeds_sub, codes)`` — the index state
-    ``pq_seeded_topk(index=...)`` serves queries from without
-    re-encoding.  At scale this is the whole point of PQ: encoding is
-    an offline pass over the corpus, serving touches only the M-code
-    table plus a per-query LUT."""
+    ``pq_seeded_topk`` serves queries from without re-encoding.  At
+    scale this is the whole point of PQ: encoding is an offline pass
+    over the corpus, serving touches only the M-code table plus a
+    per-query LUT."""
     from omniengine_spark.operators import ann_index as AI
 
     subdim = dim // m
@@ -557,24 +557,22 @@ def pq_build_index(
 
 
 def pq_seeded_topk(
-    vectors: DataFrame,
+    index: tuple[DataFrame, DataFrame, DataFrame],
     queries: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     knn: int = 5,
-    n_codewords: int = 16,
     m: int = 8,
     dim: int = 64,
     shortlist: int = 100,
     probes: DataFrame | None = None,
     lists: DataFrame | None = None,
-    index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """ADC top-k over data-seeded PQ codes with exact re-rank.
 
-    Pipeline: normalize → seed codebooks (md5-smallest ids'
-    subvectors) → per-subspace argmin encode (one narrow shuffle on
-    (vec_id, m)) → ADC via a broadcast lookup table
+    ``index`` is the trained ``(nv, seeds_sub, codes)`` state of
+    ``pq_build_index`` (possibly persisted), so serving never pays the
+    corpus encode.  Pipeline: ADC via a broadcast lookup table
     (|queries|·M·K partial dot products, computed once) joined to the
     codes on (m, codeword) → per-query shortlist → exact cosine
     re-rank of the shortlist only.  When ``probes``/``lists`` are
@@ -591,20 +589,12 @@ def pq_seeded_topk(
     as a left-to-right expression — so the score is bit-identical
     across engines with no float-order ambiguity.
 
-    ``index`` (from ``pq_build_index``, possibly persisted) skips the
-    normalize/seed/encode phase: serving reuses the trained state, so
-    query latency stops paying the corpus encode.
-
     At scale: per-vector scan state is M small ints; the LUT is
     |queries|·M·K rows (broadcast); the exact pass touches
     |queries|·shortlist raw vectors.  All stages are codegen
     DataFrame ops.
     """
     subdim = dim // m
-    if index is None:
-        index = pq_build_index(
-            vectors, id_col, vec_col, n_codewords, m, dim
-        )
     nv, seeds_sub, codes = index
 
     qn = _normalized(queries, id_col, vec_col).select(

@@ -7,10 +7,8 @@ over ``n_salts`` reducers, phase 2 merges the partials.  Algebraic
 (sum/count/min/max-style) aggregates commute with this split, so the
 result is exactly the unsalted plan's.
 
-``salted_join`` is the pre-AQE pattern for a hot join key: salt the
-big side, replicate the small side across all salts.  Kept for
-engines/configs without AQE and as the building block for bounded
-replication joins.
+A hot JOIN key needs no salting here: ``session.get_spark`` turns on
+AQE skew-join, which splits the skewed partitions at runtime.
 
 **The salt must be DETERMINISTIC per row.**  A tempting
 monotonically_increasing_id() in the hash routes the same row to
@@ -21,10 +19,9 @@ SPARK-23207 bug class).  So the salt is a hash of row CONTENT
 (deterministic under any retry).  Fully identical duplicate rows
 therefore share a salt — harmless for aggregation, where map-side
 partial aggregation already collapses duplicates before the shuffle
-(the reducer sees at most one partial per map task either way); for
-joins, a hot key whose rows are bit-identical needs a real
-discriminator column — pass ``salt_from`` pointing at one (an id
-stamped upstream), never a nondeterministic expression.
+(the reducer sees at most one partial per map task either way).  To
+salt on a real discriminator instead, pass ``salt_from`` pointing at
+one (an id stamped upstream), never a nondeterministic expression.
 """
 
 from __future__ import annotations
@@ -81,38 +78,6 @@ def salted_agg(
             for out, (fn, _) in aggs.items()
         ]
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    how: str = "inner",
-    salt_from: str | None = None,
-) -> DataFrame:
-    """Equi-join with the big side salted and the small side
-    replicated ``n_salts`` times, so a hot key spreads over
-    ``n_salts`` reducers instead of one.
-
-    Only big-side-preserving joins are correct under replication:
-    each small row exists ``n_salts`` times, and in a right/full
-    join the ≤ n_salts-1 unmatched replicas would survive as phantom
-    null-extended rows.  ``how`` is therefore restricted.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter", "left_semi",
-                   "leftsemi", "left_anti", "leftanti"):
-        raise ValueError(
-            f"salted_join only supports big-side-preserving joins, "
-            f"got how={how!r} (small side is replicated {n_salts}×; "
-            f"right/full would emit phantom unmatched replicas)"
-        )
-    big_s = big.withColumn("_salt", _salt_expr(big, salt_from, n_salts))
-    small_r = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("long"))
-    out = big_s.join(small_r, [key, "_salt"], how)
-    return out.drop("_salt")
 
 
 def chunked_running_sum(

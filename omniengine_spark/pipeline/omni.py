@@ -785,16 +785,11 @@ def build_balances(deltas: DataFrame) -> DataFrame:
     )
 
 
-def build_full_balances(
-    deltas: DataFrame, genesis: DataFrame | None = None
-) -> DataFrame:
+def build_full_balances(deltas: DataFrame) -> DataFrame:
     """Materialized AddressBalances with all four reference columns
     (available, reserved, accepted, frozen — ``sql.py:1320-1418``).
-
-    ``genesis`` (optional): a snapshot frame (address, propertyid,
-    available, reserved, accepted) unioned under the fold as serial
-    ``-1`` deltas, so a full-history rebuild starts from the seeded
-    opening state (``database/balances.csv``), not zero.
+    A genesis-seeded rebuild unions ``genesis_deltas`` (serial ``-1``)
+    into ``deltas`` first.
 
     The frozen-funds rule (``sql.py:1408-1414``) is order-dependent,
     but only for keys that ever see a freeze/unfreeze marker.  Split
@@ -805,11 +800,6 @@ def build_full_balances(
     the wide side is never reshuffled twice.
     """
     from omniengine_spark.operators.replay import full_balance_replay
-
-    if genesis is not None:
-        deltas = genesis_deltas(genesis).select(
-            *deltas.columns
-        ).unionByName(deltas)
 
     # Tag marker-bearing keys with ONE unordered window over the same
     # shuffle the fold needs anyway — a separate distinct pass +

@@ -1031,19 +1031,8 @@ def d5_metadex_net_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(25).cast("int").alias("type_int"),
         F.lit(True).alias("valid"),
         F.concat(F.lit("u"), user.cast("string")).alias("sending_address"),
-        F.lit(None).cast("string").alias("reference_address"),
         (user % 5).alias("propertyid"),
         (user % 2 == 0).alias("divisible"),
-        F.lit(None).cast("string").alias("amount"),
-        F.lit(None)
-        .cast("array<struct<address:string,amount:string>>")
-        .alias("recipients"),
-        F.lit(None)
-        .cast(
-            "array<struct<propertyid:bigint,divisible:boolean,"
-            "amount:string>>"
-        )
-        .alias("subsends"),
         (user % 3 + 5).cast("long").alias("propertyid_desired"),
         (user % 3 == 0).alias("divisible_desired"),
         F.array(

@@ -20,11 +20,13 @@ from omniengine_spark.operators.reconcile import reconcile
 from omniengine_spark.pipeline import (
     build_balances,
     expand_deltas,
+    genesis_deltas,
     stamp_serials_distributed,
 )
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
 from omniengine_spark.sources.catalog import cutoff_day, persist, session_memo
+from omniengine_spark.sources.genesis import synthetic_genesis
 from omniengine_spark.sources.sinks import (
     read_warehouse,
     scratch_dir,
@@ -54,9 +56,20 @@ def _stamped_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _genesis_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``build_balances`` over the genesis snapshot's serial -1 deltas
+    unioned with the tx stream's: the seeded fold of
+    ``omni_genesis_fold`` and the ``serve_*`` lookups."""
+    deltas = _stamped_deltas(spark, sf_dir)
+    gen = genesis_deltas(synthetic_genesis(spark, sf_dir))
+    return build_balances(gen.select(*deltas.columns).unionByName(deltas))
+
+
 def _tx_projection(ev: DataFrame) -> DataFrame:
     """signup → fixed issuance (50), purchase → simple send (0) —
-    works over a batch OR streaming events frame (pure projection)."""
+    works over a batch OR streaming events frame (pure projection).
+    ``expand_deltas`` adds the optional fields these types leave
+    unset as typed nulls."""
     ev = ev.filter(F.col("event_type").isin("signup", "purchase"))
     user = F.col("user_id")
     return ev.select(
@@ -81,25 +94,6 @@ def _tx_projection(ev: DataFrame) -> DataFrame:
         F.col("value").cast("decimal(38,8)").cast("string").alias(
             "amount"
         ),
-        F.lit(None)
-        .cast(
-            "array<struct<address:string,amount:string>>"
-        )
-        .alias("recipients"),
-        F.lit(None)
-        .cast(
-            "array<struct<propertyid:bigint,divisible:boolean,"
-            "amount:string>>"
-        )
-        .alias("subsends"),
-        F.lit(None).cast("bigint").alias("propertyid_desired"),
-        F.lit(None).cast("boolean").alias("divisible_desired"),
-        F.lit(None)
-        .cast(
-            "array<struct<address:string,amount_sold:string,"
-            "amount_received:string>>"
-        )
-        .alias("matches"),
     )
 
 
@@ -192,13 +186,7 @@ def omni_genesis_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream — the balance pipeline no longer folds from zero.  One
     shuffle (the fold's groupBy); the genesis union is shuffle-free.
     """
-    from omniengine_spark.pipeline import genesis_deltas
-    from omniengine_spark.sources.genesis import synthetic_genesis
-
-    deltas = _stamped_deltas(spark, sf_dir)
-    gen = genesis_deltas(synthetic_genesis(spark, sf_dir))
-    out = build_balances(gen.select(*deltas.columns).unionByName(deltas))
-    return out.select(
+    return _genesis_balances(spark, sf_dir).select(
         "address",
         "propertyid",
         F.col("balance").cast("long").alias("balance"),
@@ -380,8 +368,6 @@ def omni_incremental_lifecycle(
     no stage is O(history) per batch.
     """
     from omniengine_spark.operators.reconcile import per_block_consensus
-    from omniengine_spark.pipeline import genesis_deltas
-    from omniengine_spark.sources.genesis import synthetic_genesis
 
     deltas = persist(_stamped_deltas(spark, sf_dir).select(
         "address",

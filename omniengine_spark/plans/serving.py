@@ -15,19 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from omniengine_spark.pipeline import (
-    build_balances,
-    expand_deltas,
-    genesis_deltas,
-)
+from omniengine_spark.pipeline import expand_deltas
 from omniengine_spark.plans.pipeline_plans import (
-    _stamped_deltas,
+    _genesis_balances,
     _stamped_txs,
 )
 from omniengine_spark.plans.registry import query
 from omniengine_spark.sources import load_table
 from omniengine_spark.sources.catalog import day_range
-from omniengine_spark.sources.genesis import synthetic_genesis
 
 SERVE_ADDRESS = "u42"  # the fixed lookup key for the named plan
 
@@ -53,6 +48,28 @@ def latest_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("propertyid", "rate_cents")
+    )
+
+
+def _priced(
+    spark: SparkSession, sf_dir: str, folded: DataFrame
+) -> DataFrame:
+    """Price each (address, propertyid) balance of ``folded`` with the
+    broadcast latest-rate dim."""
+    rates = latest_rates(spark, sf_dir)
+    return folded.join(F.broadcast(rates), "propertyid").select(
+        "address",
+        "propertyid",
+        F.col("balance").cast("long").alias("available"),
+        "rate_cents",
+        # balance × rate in DECIMAL(36,0): an int64 product overflows
+        # (silently, ANSI off) about one sf beyond bench while the
+        # DuckDB oracle aborts — the decimal product is exact at any
+        # scale and surfaces as a correctly-rounded display double
+        (
+            F.col("balance").cast("decimal(18,0)")
+            * F.col("rate_cents").cast("decimal(18,0)")
+        ).cast("double").alias("value_available_cents"),
     )
 
 
@@ -116,26 +133,10 @@ def serve_address_portfolio(spark: SparkSession, sf_dir: str) -> DataFrame:
     group key, so Catalyst pushes it below the aggregation to the
     delta scan — the cluster never folds state for addresses the
     query didn't ask about; the rate dim is 5 rows, broadcast."""
-    deltas = _stamped_deltas(spark, sf_dir)
-    gen = genesis_deltas(synthetic_genesis(spark, sf_dir))
-    folded = build_balances(
-        gen.select(*deltas.columns).unionByName(deltas)
-    ).filter(F.col("address") == SERVE_ADDRESS)
-    rates = latest_rates(spark, sf_dir)
-    return folded.join(F.broadcast(rates), "propertyid").select(
-        "address",
-        "propertyid",
-        F.col("balance").cast("long").alias("available"),
-        "rate_cents",
-        # balance × rate in DECIMAL(36,0): an int64 product overflows
-        # (silently, ANSI off) about one sf beyond bench while the
-        # DuckDB oracle aborts — the decimal product is exact at any
-        # scale and surfaces as a correctly-rounded display double
-        (
-            F.col("balance").cast("decimal(18,0)")
-            * F.col("rate_cents").cast("decimal(18,0)")
-        ).cast("double").alias("value_available_cents"),
+    folded = _genesis_balances(spark, sf_dir).filter(
+        F.col("address") == SERVE_ADDRESS
     )
+    return _priced(spark, sf_dir, folded)
 
 
 @query(
@@ -249,26 +250,10 @@ def serve_wallet_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     IN-list on the fold's group key, pushed below the aggregation
     exactly like the single-address lookup — then the broadcast rate
     dim prices every holding."""
-    deltas = _stamped_deltas(spark, sf_dir)
-    gen = genesis_deltas(synthetic_genesis(spark, sf_dir))
-    folded = build_balances(
-        gen.select(*deltas.columns).unionByName(deltas)
-    ).filter(F.col("address").isin(_WALLET_ADDRS))
-    rates = latest_rates(spark, sf_dir)
-    return folded.join(F.broadcast(rates), "propertyid").select(
-        "address",
-        "propertyid",
-        F.col("balance").cast("long").alias("available"),
-        "rate_cents",
-        # balance × rate in DECIMAL(36,0): an int64 product overflows
-        # (silently, ANSI off) about one sf beyond bench while the
-        # DuckDB oracle aborts — the decimal product is exact at any
-        # scale and surfaces as a correctly-rounded display double
-        (
-            F.col("balance").cast("decimal(18,0)")
-            * F.col("rate_cents").cast("decimal(18,0)")
-        ).cast("double").alias("value_available_cents"),
+    folded = _genesis_balances(spark, sf_dir).filter(
+        F.col("address").isin(_WALLET_ADDRS)
     )
+    return _priced(spark, sf_dir, folded)
 
 
 @query(
@@ -313,11 +298,9 @@ def serve_property_holders(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes below the fold like the address lookups, and the page is
     TakeOrderedAndProject — per-partition top-25 then a 25-row merge,
     never a global sort of all holders."""
-    deltas = _stamped_deltas(spark, sf_dir)
-    gen = genesis_deltas(synthetic_genesis(spark, sf_dir))
-    folded = build_balances(
-        gen.select(*deltas.columns).unionByName(deltas)
-    ).filter(F.col("propertyid") == 2)
+    folded = _genesis_balances(spark, sf_dir).filter(
+        F.col("propertyid") == 2
+    )
     return (
         folded.select(
             "address", F.col("balance").cast("long").alias("available")

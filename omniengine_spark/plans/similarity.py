@@ -523,16 +523,14 @@ def sim_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _PQ_SHORTLIST, _emb_count(emb, sf_dir) // _PQ_SHORTLIST_DIV
     )
     return S.pq_seeded_topk(
-        emb,
+        _pq_index(spark, sf_dir),
         queries,
         "vec_id",
         "embedding",
         knn=_K,
-        n_codewords=_PQ_K,
         m=_PQ_M,
         dim=64,
         shortlist=shortlist,
-        index=_pq_index(spark, sf_dir),
     )
 
 
@@ -592,23 +590,21 @@ def sim_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("vec_id").alias("query_id"), "cluster")
     )
+    # same adaptive depth as sim_pq (and the shared oracle CTE)
+    shortlist = max(
+        _PQ_SHORTLIST, _emb_count(emb, sf_dir) // _PQ_SHORTLIST_DIV
+    )
     return S.pq_seeded_topk(
-        emb,
+        _pq_index(spark, sf_dir),
         queries,
         "vec_id",
         "embedding",
         knn=_K,
-        n_codewords=_PQ_K,
         m=_PQ_M,
         dim=64,
-        # same adaptive depth as sim_pq (and the shared oracle CTE)
-        shortlist=max(
-            _PQ_SHORTLIST,
-            _emb_count(emb, sf_dir) // _PQ_SHORTLIST_DIV,
-        ),
+        shortlist=shortlist,
         probes=probes,
         lists=lists,
-        index=_pq_index(spark, sf_dir),
     )
 
 

@@ -11,7 +11,7 @@ cluster while remaining correct on ``local[*]``:
   Arrow-batched, never row-at-a-time pickling.
 * shuffle.partitions sized for the local harness; on a real cluster
   AQE coalesces from a deliberately-high initial number, so this is
-  safe to raise with ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
+  safe to raise with the ``shuffle_partitions`` argument.
 """
 
 from __future__ import annotations
@@ -25,21 +25,17 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "omniengine-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
     Defaults respect the harness env: ``SPARK_GRAFT_CPUS`` sets local
-    parallelism, ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` overrides the
-    shuffle width.
+    parallelism.  The shuffle width is ``shuffle_partitions`` (default
+    32); ``extra_conf`` sets any other Spark conf.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-        )
 
     # local[_] runs executors inside the driver JVM, whose default 1g
     # heap OOMs around sf1 (6M-row lineitem + cached CC frontiers).

@@ -4,8 +4,7 @@ from omniengine_spark.sources.catalog import (
     fan_out,
     TABLES,
     load_table,
-    load_tables,
     stream_table,
 )
 
-__all__ = ["TABLES", "fan_out", "load_table", "load_tables", "stream_table"]
+__all__ = ["TABLES", "fan_out", "load_table", "stream_table"]

@@ -453,14 +453,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Read several tables at once; defaults to the whole catalog."""
-    names = names or list(TABLES)
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def _effective_parquet_splits(df: DataFrame) -> int | None:
     """TRUE scan parallelism of a parquet-backed frame: the total
     row-group count across its input files (footer metadata only,

@@ -77,8 +77,6 @@ from pyspark.sql import types as T
 
 from omniengine_spark.sources.catalog import footer_minmax
 
-# legacy single-file manifest (pre-CAS tables): read-only fallback
-_MANIFEST = "_manifest.json"
 _SEQ_RE = re.compile(r"^_manifest\.(\d+)\.json$")
 # manifest-log files older than the newest KEEP are GC'd after each
 # successful publish; readers that lose the (list → read-max) race
@@ -130,9 +128,6 @@ def _load_manifest_seq(path: str) -> tuple[dict, int]:
             return json.loads(p.read_text()), seq
         except (OSError, json.JSONDecodeError):
             continue
-    legacy = Path(path) / _MANIFEST
-    if legacy.exists():
-        return json.loads(legacy.read_text()), 0
     return {"current": 0, "versions": []}, 0
 
 
@@ -217,20 +212,15 @@ def _norm_stat(v):
     (amounts are int64 — float would mis-prune at 9.2e18), floats
     stay floats, Decimal → float (callers widen at the boundary) —
     all domain ``'num'``; date → ordinal day (domain ``'date'``),
-    datetime → INTEGER epoch microseconds (domain ``'tsu'`` —
-    float epoch SECONDS, the pre-round-11 ``'ts'`` encoding, loses
-    sub-µs exactness past year ~2260 where the float ulp exceeds
-    0.5 µs, so an anchor read back from the manifest could sit 1 µs
-    off the true max and flip a boundary row; integer micros are
-    exact forever and need no float widening), str → str (domain
-    ``'str'``).  Values only ever compare WITHIN a domain — a date
-    ordinal (~739000), an epoch-micros timestamp (~1.7e15), and a
-    legacy epoch-seconds one (~1.7e9) are all plain numbers, and
+    datetime → INTEGER epoch microseconds (domain ``'tsu'`` — float
+    epoch seconds would lose sub-µs exactness past year ~2260, so an
+    anchor read back from the manifest could sit 1 µs off the true
+    max and flip a boundary row; integer micros are exact forever and
+    need no float widening), str → str (domain ``'str'``).  Values
+    only ever compare WITHIN a domain — a date ordinal (~739000) and
+    an epoch-micros timestamp (~1.7e15) are both plain numbers, and
     ordering them against each other would deterministically skip
-    every file (dropping all data) instead of failing safe; legacy
-    ``'ts'`` manifest entries therefore never order against new
-    ``'tsu'`` bounds — those files are KEPT until re-committed (the
-    same safe-degradation contract as untagged legacy entries).
+    every file (dropping all data) instead of failing safe.
     Returns ``(None, None)`` for types we refuse to order (bytes,
     nested, bool) — the file is kept / the bound side is unbounded."""
     if isinstance(v, bool) or v is None:
@@ -292,9 +282,9 @@ def _scrape_stats(version_dir: Path, cols: list[str]) -> dict:
     touched.
 
     The manifest records EVERY parquet file in the dir — files
-    without usable stats carry an empty column map — and sets
-    ``"complete": true``, so a pruned read can enumerate the dir's
-    files from this one JSON instead of re-walking the filesystem:
+    without usable stats carry an empty column map — so a pruned read
+    can enumerate the dir's files from this one JSON instead of
+    re-walking the filesystem:
     at 100 TB the O(files) listing is itself the planning cost worth
     skipping.  Each stat is ``[lo, hi, domain]`` (see ``_norm_stat``)
     so prune bounds only ever compare within their value domain."""
@@ -307,15 +297,14 @@ def _scrape_stats(version_dir: Path, cols: list[str]) -> dict:
             if lo is not None and hi is not None:
                 per_col[col] = [lo, hi, dom]
         files[str(p.relative_to(version_dir))] = per_col
-    return {"cols": cols, "files": files, "complete": True}
+    return {"cols": cols, "files": files}
 
 
 def _widen(lo, hi):
-    """Decimal stats (and legacy float-seconds ts entries) pass
-    through float: widen the file interval by a relative epsilon so a
-    boundary row can never be wrongly skipped (ints — including tsu
-    epoch-micros and date ordinals — and strings pass through
-    exact)."""
+    """Decimal stats pass through float: widen the file interval by a
+    relative epsilon so a boundary row can never be wrongly skipped
+    (ints — including tsu epoch-micros and date ordinals — and
+    strings pass through exact)."""
     if isinstance(lo, float):
         eps = abs(lo) * 1e-9 + 1e-9
         lo = lo - eps
@@ -342,10 +331,10 @@ def pruned_files(
     footer gap, and silently treating it as unbounded would disable
     pruning with no signal.
 
-    When a dir's ``_stats.json`` was written by a ``complete``-aware
-    commit, its file list IS the dir listing — no filesystem walk;
-    only legacy stats dirs (or dirs committed without ``stats_cols``)
-    fall back to an ``rglob``."""
+    A dir's ``_stats.json`` lists every file of the dir, so its file
+    list IS the dir listing — no filesystem walk; only dirs committed
+    without ``stats_cols`` (or with an unreadable stats file) fall
+    back to an ``rglob``."""
     manifest = _load_manifest(path)
     v = manifest["current"] if version is None else version
     kept: list[str] = []
@@ -359,19 +348,11 @@ def pruned_files(
     }
     for d in _version_dirs(path, manifest, v):
         ddir = Path(d)
-        stats: dict = {}
-        complete = False
-        sp = ddir / _STATS
-        if sp.exists():
-            try:
-                blob = json.loads(sp.read_text())
-                stats = blob["files"]
-                complete = bool(blob.get("complete"))
-            except (OSError, json.JSONDecodeError, KeyError):
-                stats = {}
-        if complete:
+        stats = _dir_stats(ddir)
+        if stats is not None:
             rels = sorted(stats)
         else:
+            stats = {}
             rels = [
                 str(p.relative_to(ddir))
                 for p in sorted(ddir.rglob("*.parquet"))
@@ -383,6 +364,16 @@ def pruned_files(
     return kept, total
 
 
+def _dir_stats(ddir: Path) -> dict | None:
+    """The ``files`` map of a version dir's ``_stats.json`` (every
+    parquet file of the dir → its per-column ``[lo, hi, domain]``), or
+    None when the dir has no readable stats file."""
+    try:
+        return json.loads((ddir / _STATS).read_text())["files"]
+    except (OSError, json.JSONDecodeError, KeyError):
+        return None
+
+
 def _keep_file(per_col: dict, bounds: dict) -> bool:
     """The pruning kernel: may this file contain a row inside every
     queried interval?  ``per_col`` maps column → manifest stat entry,
@@ -391,29 +382,16 @@ def _keep_file(per_col: dict, bounds: dict) -> bool:
     tests/test_invariants.py): a file whose data contains ANY row
     matching the intervals is always kept — pruning may only ever
     drop provably-miss files.  Keep on every doubt: missing stats,
-    domain mismatch, legacy untagged entries."""
+    domain mismatch."""
     for col, ((qlo, dlo), (qhi, dhi)) in bounds.items():
         if col not in per_col:
             continue
-        entry = per_col[col]
-        # legacy 2-element stats carry no domain tag: only
-        # str is inferable from the value shape, so EVERY
-        # non-str legacy entry gets domain None and prunes
-        # against nothing — numeric bounds included, not just
-        # the date/ts ambiguity that motivates the rule (a
-        # legacy number could be an ordinal, an epoch, or an
-        # amount; guessing "num" would order a date-ordinal
-        # stat against an amount bound).  Safe direction:
-        # files are kept, pruning is lost until the dir is
-        # re-committed with a domain-tagged manifest.
-        fdom = entry[2] if len(entry) > 2 else (
-            "str" if isinstance(entry[0], str) else None
-        )
+        lo, hi, fdom = per_col[col]
         if qlo is not None and dlo != fdom:
             continue
         if qhi is not None and dhi != fdom:
             continue
-        flo, fhi = _widen(entry[0], entry[1])
+        flo, fhi = _widen(lo, hi)
         if (qlo is not None and fhi < qlo) or (
             qhi is not None and flo > qhi
         ):
@@ -424,16 +402,11 @@ def _keep_file(per_col: dict, bounds: dict) -> bool:
 def _denorm_stat(v, dom):
     """Inverse of ``_norm_stat`` for manifest values: back to the
     Python type a caller can hand to ``pruned_files`` bounds.
-    ``tsu`` (integer epoch micros) inverts exactly at any year;
-    ``ts`` (legacy float epoch seconds) is kept readable for
-    pre-round-11 manifests — exact only while the float ulp stays
-    under 0.5 µs (until ~2260)."""
+    ``tsu`` (integer epoch micros) inverts exactly at any year."""
     if dom == "tsu":
         return _dt.datetime(
             1970, 1, 1, tzinfo=_dt.timezone.utc
         ) + _dt.timedelta(microseconds=int(v))
-    if dom == "ts":
-        return _dt.datetime.fromtimestamp(v, tz=_dt.timezone.utc)
     if dom == "date":
         return _dt.date.fromordinal(int(v))
     return v
@@ -452,44 +425,33 @@ def stats_minmax(
     Returns ``(lo, hi)`` denormalized to the stat's domain (datetime
     values come back tz-aware UTC — exact against the UTC-normalized
     footer stats), or ``None`` whenever the chain cannot PROVE the
-    range: a dir without a complete manifest, a file without stats
+    range: a dir without a stats manifest, a file without stats
     for the column, mixed domains, or a ``str`` column — parquet
     footer min/max for string/binary may be TRUNCATED bounds, so a
     str "max" can be a value that exists in no row; bounds are fine
     for pruning (``pruned_files`` keeps anything inside them) but not
     for an anchor that must be a witnessed value.  num/date stats and
-    tsu (integer epoch-micros) stats are exact at any year; legacy
-    float-seconds ts entries stay readable.  Callers must treat ``None`` as "compute the anchor
-    from data"."""
+    tsu (integer epoch-micros) stats are exact at any year.  Callers
+    must treat ``None`` as "compute the anchor from data"."""
     manifest = _load_manifest(path)
     v = manifest["current"] if version is None else version
     lo = hi = dom = None
     for d in _version_dirs(path, manifest, v):
-        sp = Path(d) / _STATS
-        try:
-            blob = json.loads(sp.read_text())
-            stats = blob["files"]
-        except (OSError, json.JSONDecodeError, KeyError):
-            return None
-        if not bool(blob.get("complete")):
-            # legacy manifests may silently omit stat-less files, so
-            # they cannot prove full coverage of the dir
+        stats = _dir_stats(Path(d))
+        if stats is None:
             return None
         for per_col in stats.values():
-            e = per_col.get(col)
-            if not e:
+            if col not in per_col:
                 return None
-            edom = e[2] if len(e) > 2 else (
-                "str" if isinstance(e[0], str) else "num"
-            )
+            elo, ehi, edom = per_col[col]
             if edom == "str":
                 return None  # truncated bound ≠ witnessed value
             if dom is None:
                 dom = edom
             elif edom != dom:
                 return None
-            lo = e[0] if lo is None else min(lo, e[0])
-            hi = e[1] if hi is None else max(hi, e[1])
+            lo = elo if lo is None else min(lo, elo)
+            hi = ehi if hi is None else max(hi, ehi)
     if lo is None:
         return None
     return _denorm_stat(lo, dom), _denorm_stat(hi, dom)

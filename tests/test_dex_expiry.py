@@ -1,17 +1,11 @@
 """DEx-1 accept expiry (reference expireAccepts, sql.py:537-588):
 forward expiry, the sale-ended credit-back branch, and the reorg
-invariant — un-expiry deltas applied on top of a later state
-reproduce the earlier state exactly (== recompute).
+story — recompute at a height is stable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from omniengine_spark.operators.dex import (
-    accept_expiry_deltas,
-    unexpire_deltas,
-)
+from omniengine_spark.operators.dex import accept_expiry_deltas
 
 ACCEPTS = [
     # accept_id, seller, pid, accepted, paid, expire_block, offer_state
@@ -60,28 +54,6 @@ def test_expiry_is_idempotent_recompute(spark):
     a = sorted(map(tuple, accept_expiry_deltas(df, 130).collect()))
     b = sorted(map(tuple, accept_expiry_deltas(df, 130).collect()))
     assert a == b
-
-
-def test_unexpire_matches_recompute(spark):
-    """Reference negative-Block path (sql.py:540-545): rolling back
-    from B1 to B0 by applying unexpire deltas equals recomputing at
-    B0, key for key."""
-    df = spark.createDataFrame(ACCEPTS, COLS)
-    b0, b1 = 118, 250
-
-    state_b1 = _fold(accept_expiry_deltas(df, b1).collect())
-    undo = _fold(unexpire_deltas(df, b0, b1).collect())
-    state_b0 = _fold(accept_expiry_deltas(df, b0).collect())
-
-    keys = set(state_b1) | set(undo) | set(state_b0)
-    for k in keys:
-        rolled = tuple(
-            x + y
-            for x, y in zip(
-                state_b1.get(k, (0, 0, 0)), undo.get(k, (0, 0, 0))
-            )
-        )
-        assert rolled == state_b0.get(k, (0, 0, 0)), k
 
 
 def test_expiry_plan_shape(spark):

@@ -512,8 +512,8 @@ def test_frozen_rule_invariants_seeded(spark, seed):
 #
 # pruned_files may only ever drop files PROVABLY outside the queried
 # intervals: a file whose data contains any matching row must always
-# be kept, whatever the mix of value domains, legacy (untagged)
-# manifest entries, tz-aware/naive bounds, and one-sided intervals.
+# be kept, whatever the mix of value domains, tz-aware/naive bounds,
+# and one-sided intervals.
 # The kernel is pure (versioned._keep_file), so hypothesis can hammer
 # it without Spark or a filesystem.
 
@@ -551,8 +551,7 @@ def _skipping_case(draw):
     if bdom == "ts" and draw(st.booleans()):
         lo = lo.replace(tzinfo=None) if lo is not None else None
         hi = hi.replace(tzinfo=None) if hi is not None else None
-    legacy = draw(st.booleans())
-    return vals, lo, hi, legacy
+    return vals, lo, hi
 
 
 @given(_skipping_case())
@@ -560,13 +559,11 @@ def _skipping_case(draw):
 def test_file_skipping_never_drops_a_matching_file(case):
     from omniengine_spark.sources import versioned as V
 
-    vals, lo, hi, legacy = case
+    vals, lo, hi = case
     normed = [V._norm_stat(v) for v in vals]
     nvals = [nv for nv, _ in normed]
     vdom = normed[0][1]
-    entry = [min(nvals), max(nvals)]
-    if not legacy:
-        entry.append(vdom)
+    entry = [min(nvals), max(nvals), vdom]
     bounds = {
         "c": (
             V._norm_bound(lo, col="c", side="lo"),
@@ -596,9 +593,6 @@ def test_file_skipping_never_drops_a_matching_file(case):
     # stated explicitly for the reader):
     if vdom not in (dlo, dhi):
         assert keep
-    # legacy non-str entries must never prune against typed bounds
-    if legacy and vdom != "str" and (qlo is not None or qhi is not None):
-        assert keep
 
 
 @given(_skipping_case())
@@ -606,7 +600,7 @@ def test_file_skipping_never_drops_a_matching_file(case):
 def test_file_skipping_missing_stats_always_keep(case):
     from omniengine_spark.sources import versioned as V
 
-    _vals, lo, hi, _legacy = case
+    _vals, lo, hi = case
     bounds = {
         "c": (
             V._norm_bound(lo, col="c", side="lo"),
@@ -635,25 +629,3 @@ def test_ts_stat_roundtrip_exact_at_any_year(v):
     nv, dom = V._norm_stat(v)
     assert dom == "tsu" and isinstance(nv, int)
     assert V._denorm_stat(nv, dom) == v
-
-
-def test_legacy_float_ts_entries_never_prune_against_tsu_bounds():
-    """Pre-round-11 manifests stored ts stats as float epoch SECONDS
-    under domain 'ts'; new bounds normalize to integer epoch MICROS
-    under 'tsu'.  The two must never order against each other (a
-    seconds stat vs a micros bound would prune every file): domain
-    mismatch keeps the file, pruning degrades safely until the dir is
-    re-committed."""
-    import datetime as dt
-
-    from omniengine_spark.sources import versioned as V
-
-    bound = V._norm_bound(
-        dt.datetime(2024, 1, 15, tzinfo=dt.timezone.utc),
-        col="ts", side="lo",
-    )
-    # legacy entry: file range Jan 1-10 2024 in float seconds — far
-    # below the bound's micros value numerically, and provably
-    # outside the interval semantically; must be KEPT regardless
-    legacy_entry = [1704067200.0, 1704844800.0, "ts"]
-    assert V._keep_file({"ts": legacy_entry}, {"ts": (bound, (None, None))})

@@ -638,16 +638,21 @@ def test_genesis_csv_ingest(spark, tmp_path):
 
 
 def test_genesis_fold_golden(spark):
-    """build_full_balances(genesis=...) folds from the snapshot, not
+    """A fold over ``genesis_deltas`` unioned under the tx deltas (as
+    the genesis-seeded plans build it) starts from the snapshot, not
     zero: seeded balances appear as opening state for both the plain
     fold and the ordered (freeze-marker) replay path."""
-    from omniengine_spark.pipeline import build_full_balances
+    from omniengine_spark.pipeline import build_full_balances, genesis_deltas
 
     genesis = spark.createDataFrame(
         [("alice", 31, 1000, 0, 0), ("dave", 99, 77, 5, 0)],
         ["address", "propertyid", "available", "reserved", "accepted"],
     )
-    rows = build_full_balances(_pipeline(spark), genesis=genesis).collect()
+    deltas = _pipeline(spark)
+    seeded = genesis_deltas(genesis).select(*deltas.columns).unionByName(
+        deltas
+    )
+    rows = build_full_balances(seeded).collect()
     avail = {
         (r["address"], r["propertyid"]): r["available"] for r in rows
     }

@@ -325,10 +325,8 @@ def test_jaccard_join_matches_naive_across_thresholds(spark):
         )
     )
 
-    # force_q covers BOTH candidate arities at every threshold: the
-    # adaptive switch must never change the answer (prefix lemma
-    # completeness for q=2 AND the q=3 triple layer + small-doc pair
-    # layer + q=1 fallback decomposition)
+    # every threshold: prefix lemma completeness for the q=2 pair
+    # layer AND its q=1 small-doc fallback
     for t in (Fraction(4, 5), Fraction(1, 2), Fraction(1, 3)):
         want = sorted(
             (r.doc_a, r.doc_b, round(r.jaccard, 9))
@@ -337,14 +335,13 @@ def test_jaccard_join_matches_naive_across_thresholds(spark):
             ).collect()
         )
         assert want, f"threshold {t} matched nothing — fixture too weak"
-        for fq in (2, 3, None):
-            got = sorted(
-                (r.doc_a, r.doc_b, round(r.jaccard, 9))
-                for r in jaccard_similarity_join(
-                    docs, "doc_id", "text", n=3, threshold=t, force_q=fq
-                ).collect()
-            )
-            assert got == want, f"t={t} q={fq}: {got} != {want}"
+        got = sorted(
+            (r.doc_a, r.doc_b, round(r.jaccard, 9))
+            for r in jaccard_similarity_join(
+                docs, "doc_id", "text", n=3, threshold=t
+            ).collect()
+        )
+        assert got == want, f"t={t}: {got} != {want}"
 
 
 def test_simhash_topk_caps_output_and_keeps_exact_dups(spark):

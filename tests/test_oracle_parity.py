@@ -12,41 +12,21 @@ import pandas as pd
 import pytest
 
 from omniengine_spark.plans import ORACLES, QUERIES
-from tools.driver_sim import canon, frames_match
+from tools.driver_sim import frames_match
 
 from .conftest import SF_CORRECT
-
-
-def _frame_problems(spark_pd: pd.DataFrame, duck_pd: pd.DataFrame) -> list:
-    """``driver_sim.frames_match`` — rows, columns, dtype with the
-    timestamp unit normalized (the gate's value-hash is
-    dtype-sensitive: DuckDB HUGEINT sums surface as float64 while
-    Spark returns int64, so CAST the oracle aggregate, see VERDICT
-    r1), values — plus one check it leaves out: a None on one side and
-    a NaN on the other in the same cell is a mismatch here."""
-    problems = frames_match(spark_pd, duck_pd)
-    if problems:
-        return problems
-    a, b = canon(spark_pd), canon(duck_pd)
-    for col in a.columns:
-        a_none = a[col].map(lambda v: v is None)
-        b_none = b[col].map(lambda v: v is None)
-        n = int((a[col].isna() & b[col].isna() & (a_none != b_none)).sum())
-        if n:
-            problems.append(f"{col}: {n} None vs NaN mismatches")
-    return problems
 
 
 def test_parity_comparator_rejects():
     """The comparator still rejects a dtype difference, None vs NaN,
     and a single differing value."""
     base = pd.DataFrame({"k": [1, 2], "v": [1.5, 2.5], "s": ["x", None]})
-    assert _frame_problems(base, base.copy()) == []
-    assert _frame_problems(base, base.astype({"k": "float64"}))
+    assert frames_match(base, base.copy()) == []
+    assert frames_match(base, base.astype({"k": "float64"}))
     nan = base.copy()
     nan["s"] = pd.Series(["x", float("nan")], dtype=object)
-    assert _frame_problems(base, nan)
-    assert _frame_problems(base, base.assign(v=[1.5, 2.75]))
+    assert frames_match(base, nan)
+    assert frames_match(base, base.assign(v=[1.5, 2.75]))
 
 
 ORACLE_NAMES = sorted(ORACLES)
@@ -57,7 +37,7 @@ def test_oracle_parity(spark, duck, name):
     q = QUERIES[name]
     spark_pd = q(spark, SF_CORRECT).toPandas()
     duck_pd = duck.execute(ORACLES[name]).fetchdf()
-    problems = _frame_problems(spark_pd, duck_pd)
+    problems = frames_match(spark_pd, duck_pd)
     assert not problems, f"{name}: {'; '.join(problems)}"
 
 
@@ -98,5 +78,5 @@ def test_j8_finds_customers_whose_orders_are_dropped(spark, tmp_path):
     finally:
         duck.close()
     assert sorted(got["c_custkey"]) == gone
-    problems = _frame_problems(got, want)
+    problems = frames_match(got, want)
     assert not problems, "; ".join(problems)

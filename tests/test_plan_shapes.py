@@ -324,6 +324,38 @@ def test_package_caches_only_through_plan_calls():
     assert not {k: v for k, v in found.items() if v}
 
 
+def test_package_reads_only_known_environment_variables():
+    """The package reads five environment variables, each set by a
+    tool or a deployment: ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_GRAFT_DRIVER_MEM`` (perfbench and the sweep),
+    ``SPARK_GRAFT_STREAM_CHECKPOINT`` (perfbench),
+    ``SPARK_GRAFT_STREAM_MAX_FILES`` (``tools/stream_bench.py``) and
+    ``SPARK_GRAFT_STREAM_PARTITIONS`` (deployment).  Every read names
+    its variable as a literal; a setting nothing sets is an argument or
+    a Spark conf, not an environment variable."""
+    access = re.compile(r"\benviron\b|\bgetenv\b")
+    named = re.compile(
+        r"""(?:\benviron(?:\.get\(|\[)|\bgetenv\()\s*["']([A-Z0-9_]+)["']"""
+    )
+    pkg = Path(__file__).resolve().parents[1] / "omniengine_spark"
+    found: set[str] = set()
+    for p in sorted(pkg.rglob("*.py")):
+        text = p.read_text()
+        names = named.findall(text)
+        assert len(names) == len(access.findall(text)), (
+            f"{p.relative_to(pkg)}: an environment read without a "
+            "literal variable name"
+        )
+        found |= set(names)
+    assert found == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_STREAM_CHECKPOINT",
+        "SPARK_GRAFT_STREAM_MAX_FILES",
+        "SPARK_GRAFT_STREAM_PARTITIONS",
+    }
+
+
 def test_package_reads_parquet_only_with_a_schema():
     """A parquet read without a schema fires Spark's schema-inference
     job while the plan is built.  The package has two: the fallback of

@@ -1,5 +1,5 @@
-"""Salted aggregation/join must be result-identical to the unsalted
-plans — on real tables and on an adversarially skewed frame.
+"""Salted aggregation must be result-identical to the unsalted plan —
+on real tables and on an adversarially skewed frame.
 """
 
 from __future__ import annotations
@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from omniengine_spark.operators.skew import salted_agg, salted_join
+from omniengine_spark.operators.skew import salted_agg
 from omniengine_spark.sources import load_table
 
 from .conftest import SF_SMOKE
@@ -61,22 +61,6 @@ def test_salted_agg_rejects_non_mergeable(spark):
     d = spark.createDataFrame([("a", 1.0)], ["k", "v"])
     with pytest.raises(ValueError):
         salted_agg(d, ["k"], {"m": ("avg", "v")})
-
-
-def test_salted_join_equals_plain_join(spark):
-    ev = load_table(spark, SF_SMOKE, "events").select(
-        "event_id", "user_id", "event_type"
-    )
-    dims = (
-        ev.select("user_id").distinct().withColumn(
-            "segment", F.pmod(F.col("user_id"), F.lit(3))
-        )
-    )
-    plain = ev.join(dims, "user_id")
-    salted = salted_join(ev, dims, "user_id", n_salts=5)
-    assert sorted(
-        map(tuple, plain.select("event_id", "segment").collect())
-    ) == sorted(map(tuple, salted.select("event_id", "segment").collect()))
 
 
 def test_funnel_hot_user_bounded(spark, tmp_path):

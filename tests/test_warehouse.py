@@ -788,7 +788,7 @@ def test_stats_pruning_domains_and_bound_validation(spark, tmp_path):
         stats_cols=["ts", "k"],
     )
     stats = json.loads((tmp_path / "tbl" / "v=1" / "_stats.json").read_text())
-    assert stats["complete"] is True and len(stats["files"]) == 6
+    assert len(stats["files"]) == 6
     # every stat carries its domain tag
     assert all(
         e["ts"][2] == "tsu" and e["k"][2] == "num"

@@ -47,8 +47,11 @@ def canon(df):
 
 
 def frames_match(a, b) -> list[str]:
-    """NaN-aware, timestamp-unit-normalized comparison; returns a list
-    of problems (empty == match)."""
+    """Rows, columns, dtype (timestamp unit normalized) and values;
+    returns a list of problems (empty == match).  The dtype check is
+    strict: DuckDB HUGEINT sums surface as float64 while Spark returns
+    int64, so an oracle CASTs its aggregates.  Two missing values match
+    only when both are None or both are NaN."""
     problems = []
     if len(a) != len(b):
         return [f"rows {len(a)} != {len(b)}"]
@@ -64,8 +67,11 @@ def frames_match(a, b) -> list[str]:
         if da.startswith("datetime"):
             av = av.astype("datetime64[us]")
             bv = bv.astype("datetime64[us]")
-        neq = ~((av == bv) | (av.isna() & bv.isna()))
-        n = int(neq.sum())
+        same_na = (
+            av.isna() & bv.isna()
+            & (av.map(lambda v: v is None) == bv.map(lambda v: v is None))
+        )
+        n = int((~((av == bv) | same_na)).sum())
         if n:
             problems.append(f"{c}: {n} value mismatches")
     return problems
